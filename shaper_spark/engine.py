@@ -9,7 +9,9 @@ result tree of Sections → Queries → {Render, Columns, Rows}.
 Scale notes: each statement is one Catalyst-planned query; the 3000-row
 cap is applied as ``df.limit(3001)`` so it is pushed into the plan
 (CollectLimit) instead of truncating after a full materialization like
-the reference does client-side.
+the reference does client-side. Statements of one render that do not
+depend on each other collect at the same time on a shared pool; the
+tree is still assembled in script order (``_query_dashboard_loop``).
 """
 
 from __future__ import annotations
@@ -19,12 +21,14 @@ import hashlib
 import datetime as dt
 import json
 import re
+import threading
 import time
 import urllib.parse
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from . import sqltool
 from .normalize import map_wire_type, normalize_rows
@@ -43,11 +47,7 @@ from .render import (
     is_section_title,
     map_tag,
 )
-from .rewrite import (
-    find_variable_refs,
-    rewrite_statement,
-    substitute_variables,
-)
+from .rewrite import _GETVAR_RE, find_variable_refs, rewrite_statement
 
 __all__ = ["query_dashboard", "GetResult", "Section", "Query", "QUERY_MAX_ROWS"]
 
@@ -1180,9 +1180,6 @@ class _VarState:
         return set(self.raw) | set(self.lists)
 
     def substitute(self, sql: str) -> str:
-        out = substitute_variables(sql, {}, self.lists)
-        # raw literals take precedence over the NULL fallback: re-run with
-        # direct replacement.
         def repl(m: re.Match[str]) -> str:
             name = m.group(1)
             if name in self.lists:
@@ -1193,8 +1190,6 @@ class _VarState:
             if name in self.raw:
                 return f"({self.raw[name]})"
             return "NULL"
-
-        from .rewrite import _GETVAR_RE
 
         return _GETVAR_RE.sub(repl, sql)
 
@@ -1424,6 +1419,128 @@ _HEADER_RENDER_TYPES = frozenset(
     {"dropdown", "dropdownMulti", "button", "datepicker", "daterangePicker", "input"}
 )
 
+# Leading keywords of statements that take _run_query's plain query path
+# (no EXPLAIN / DESCRIBE / SHOW / SUMMARIZE / PIVOT / COPY / DDL branch).
+_PLAIN_QUERY_HEAD_RE = re.compile(
+    r"\(*\s*(SELECT|WITH|FROM|VALUES)\b", re.IGNORECASE
+)
+# Casts that can define a variable (widgets) or mark the next statement as
+# a download target. Matched as bare words anywhere in the text, so both
+# ``::DROPDOWN`` and ``CAST(x AS DROPDOWN)`` count.
+_DEFINING_CAST_RE = re.compile(
+    r"\b(?:DROPDOWN(?:_MULTI)?|DATEPICKER(?:_FROM|_TO)?|INPUT|DOWNLOAD_\w+)\b",
+    re.IGNORECASE,
+)
+# nextval/currval deal sequence values per evaluation, so their order is
+# the script order: such statements never run ahead.
+_SEQUENCE_CALL_RE = re.compile(r"\b(?:nextval|currval)\s*\(", re.IGNORECASE)
+
+
+@dataclass(frozen=True)
+class _Statement:
+    """Text-only classification of one dashboard statement, made once and
+    shared by the render loop and the prefetch walk."""
+
+    index: int  # position in the script (download links name it)
+    sql: str
+    allowed: bool
+    side_effect: bool
+    refs: tuple[str, ...]  # getvariable() names
+    sets_var: str | None  # SET VARIABLE target
+    # runs through _prepare_query + _collect_query, so it may run ahead
+    prefetchable: bool
+    # may define a variable or mark a download: nothing after it runs
+    # ahead until it is assembled
+    stops_walk: bool
+
+
+def _classify(index: int, sql: str) -> _Statement:
+    allowed = sqltool.is_allowed_statement(sql)
+    side_effect = sqltool.is_side_effect(sql)
+    m = _SET_VARIABLE_RE.match(sql)
+    return _Statement(
+        index=index,
+        sql=sql,
+        allowed=allowed,
+        side_effect=side_effect,
+        refs=tuple(find_variable_refs(sql)),
+        sets_var=(m.group(1) or m.group(2)) if m else None,
+        prefetchable=(
+            allowed
+            and not side_effect
+            and _PLAIN_QUERY_HEAD_RE.match(sql) is not None
+            and _SEQUENCE_CALL_RE.search(sql) is None
+        ),
+        stops_walk=_DEFINING_CAST_RE.search(sql) is not None,
+    )
+
+
+class _CollectPool:
+    """Process-wide executor that runs prefetched statements' collects.
+
+    Created on first use and sized from the cluster's default
+    parallelism, so session setup pays nothing for it. ``in_flight``
+    counts collects running on it (a /metrics gauge)."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._executor: ThreadPoolExecutor | None = None
+        self.in_flight = 0
+
+    def submit(self, spark: SparkSession, fn, *args) -> Future:
+        with self._lock:
+            if self._executor is None:
+                self._executor = ThreadPoolExecutor(
+                    max_workers=max(2, spark.sparkContext.defaultParallelism),
+                    thread_name_prefix="shaper-collect",
+                )
+        return self._executor.submit(self._run, fn, *args)
+
+    def _run(self, fn, *args):
+        with self._lock:
+            self.in_flight += 1
+        try:
+            return fn(*args)
+        finally:
+            with self._lock:
+                self.in_flight -= 1
+
+
+_COLLECT_POOL = _CollectPool()
+
+
+def statements_in_flight() -> int:
+    """Prefetched statements collecting on the shared pool right now."""
+    return _COLLECT_POOL.in_flight
+
+
+@dataclass(frozen=True)
+class _Launched:
+    snapshot: str  # the statement's variable-substituted text at launch
+    future: Future  # -> (columns, rows)
+    prepared: tuple[DataFrame, dict[int, str]] | None  # if prepare passed
+
+
+def _prefetch(
+    spark: SparkSession,
+    sql_string: str,
+    vars_: _VarState,
+    macros: dict[str, _Macro],
+    max_rows: int,
+) -> _Launched:
+    """Prepare on the calling thread, collect on the shared pool. A
+    prepare error is stored in the future, so it surfaces only when
+    assembly reaches the statement (and never for a skipped one)."""
+    snapshot = vars_.substitute(sql_string)
+    try:
+        prepared = _prepare_query(spark, sql_string, vars_, macros)
+    except Exception as e:
+        failed: Future = Future()
+        failed.set_exception(e)
+        return _Launched(snapshot, failed, None)
+    future = _COLLECT_POOL.submit(spark, _collect_query, *prepared, max_rows)
+    return _Launched(snapshot, future, prepared)
+
 
 def query_dashboard(
     spark: SparkSession,
@@ -1453,15 +1570,22 @@ def query_dashboard(
     # isolation from per-connection/per-request DuckDB instances,
     # app.go:238-334); dropping them afterwards restores that contract.
     created_views: list[str] = []
+    # statements launched ahead, by position among the non-empty ones
+    launched: dict[int, _Launched] = {}
 
     try:
         return _query_dashboard_loop(
             spark, statements, params, dashboard_id, max_rows, result,
             vars_, defined_vars, unset_vars, unset_seen,
             download_link_params, macros, min_ms_all, max_ms_all,
-            created_views,
+            created_views, launched,
         )
     finally:
+        # Unstarted collects are dropped; running ones read this render's
+        # temp views, so they finish before the views go.
+        for ahead in launched.values():
+            ahead.future.cancel()
+        wait([ahead.future for ahead in launched.values()])
         for view in created_views:
             try:
                 spark.catalog.dropTempView(view)
@@ -1485,6 +1609,7 @@ def _query_dashboard_loop(
     min_ms_all: int | None,
     max_ms_all: int | None,
     created_views: list[str],
+    launched: dict[int, _Launched],
 ) -> GetResult:
     next_label = ""
     hide_next_content_section = False
@@ -1493,42 +1618,73 @@ def _query_dashboard_loop(
     header_image = ""
     footer_link = ""
 
-    for query_index, sql_string in enumerate(statements):
-        sql_string = sql_string.strip()
-        if not sql_string:
-            continue
+    stmts = [
+        _classify(i, s.strip()) for i, s in enumerate(statements) if s.strip()
+    ]
+    frontier = 0  # first statement position not yet considered for launch
 
-        for var_name in find_variable_refs(sql_string):
+    def launch_ahead(pos: int) -> None:
+        """When stmts[pos] is about to run, prepare (here, in script
+        order) and submit every statement from the frontier on that
+        cannot be affected by what assembly still has to do."""
+        nonlocal frontier
+        frontier = max(frontier, pos)
+        if macros:  # a macro body can hide a widget cast
+            return
+        while frontier < len(stmts):
+            if frontier > pos and stmts[frontier - 1].stops_walk:
+                return
+            st = stmts[frontier]
+            if not st.prefetchable or not vars_.defined().issuperset(st.refs):
+                return
+            launched[frontier] = _prefetch(
+                spark, st.sql, vars_, macros, max_rows
+            )
+            frontier += 1
+
+    for pos, st in enumerate(stmts):
+        query_index, sql_string = st.index, st.sql
+
+        for var_name in st.refs:
             if var_name not in defined_vars and var_name not in unset_seen:
                 unset_seen.add(var_name)
                 unset_vars.append(var_name)
-        m = _SET_VARIABLE_RE.match(sql_string)
-        if m:
-            defined_vars.add(m.group(1) or m.group(2))
+        if st.sets_var:
+            defined_vars.add(st.sets_var)
 
-        if not sqltool.is_allowed_statement(sql_string):
+        if not st.allowed:
             raise DashboardError(
                 f"Disallowed SQL statement in query {query_index + 1}"
             )
         if next_is_download:
             next_is_download = False
             continue
-        if (
-            hide_next_content_section
-            and not sqltool.is_side_effect(sql_string)
-            and not can_start_section(sql_string)
-        ):
-            continue
-
-        if sqltool.is_side_effect(sql_string):
+        if st.side_effect:
             _execute_side_effect(
                 spark, sql_string, vars_, macros, created_views
             )
             continue
+        if hide_next_content_section and not can_start_section(sql_string):
+            continue
 
-        columns, rows = _run_query(
-            spark, sql_string, vars_, macros, max_rows
-        )
+        launch_ahead(pos)
+        # A launched statement stands only if the variables it was
+        # prepared with are still the current ones; one the pool has
+        # not started is collected here instead of waiting for a worker.
+        ahead = launched.get(pos)
+        if ahead is not None and (
+            ahead.snapshot != vars_.substitute(sql_string)
+        ):
+            ahead.future.cancel()
+            ahead = None
+        if ahead is None:
+            columns, rows = _run_query(
+                spark, sql_string, vars_, macros, max_rows
+            )
+        elif ahead.future.cancel():
+            columns, rows = _collect_query(*ahead.prepared, max_rows)
+        else:
+            columns, rows = ahead.future.result()
 
         query = Query(rows=rows)
 
@@ -2377,91 +2533,113 @@ def _run_query(
     ) is not None:
         tags = {}
     else:
-        sub = vars_.substitute(sql_string)
-        sub = _expand_macros(sub, macros)
-        from .enums import expand_enum_surface
+        df, tags = _prepare_query(spark, sql_string, vars_, macros)
+    return _collect_query(df, tags, max_rows)
 
-        sub = expand_enum_surface(spark, sub)
-        from .filefuncs import expand_file_functions
-        from .tablefuncs import (
-            expand_information_schema,
-            expand_table_functions,
-        )
 
-        sub, used_tablefuncs = expand_table_functions(spark, sub)
-        sub, used_infoschema = expand_information_schema(spark, sub)
-        used_tablefuncs = used_tablefuncs or used_infoschema
-        sub, used_filefuncs = expand_file_functions(spark, sub)
-        sub, used_posjoin = _expand_positional_joins(spark, sub)
-        used_filefuncs = used_filefuncs or used_posjoin
-        # nextval/currval deal MUTABLE registry state per evaluation —
-        # the used flag bypasses analysis memoization like file reads
-        from .sequences import expand_sequence_calls
+def _prepare_query(
+    spark: SparkSession,
+    sql_string: str,
+    vars_: _VarState,
+    macros: dict[str, _Macro],
+) -> tuple[DataFrame, dict[int, str]]:
+    """Text stage and analysis of a plain query: variables, macros, the
+    expanders, ``rewrite_statement`` and the plan cache. Returns the
+    analyzed DataFrame and its column tags; nothing is collected. The
+    expanders register temp views and bump the plan cache, so callers
+    prepare a script's statements in script order."""
+    sub = vars_.substitute(sql_string)
+    sub = _expand_macros(sub, macros)
+    from .enums import expand_enum_surface
 
-        sub, used_seq = expand_sequence_calls(spark, sub)
-        used_filefuncs = used_filefuncs or used_seq
-        # DuckDB PIVOT sugar inside a CTE body or derived table:
-        # materialize each "(PIVOT …)" group as a temp view so the
-        # enclosing query reads it like any other relation (DuckDB
-        # expands the same sugar to a macro before binding).
-        sub, used_pivot = _expand_nested_pivots(spark, sub)
-        sub, used_ubn = _expand_union_by_name(spark, sub)
-        sub, used_colmacro = _expand_columns_macro(spark, sub)
-        sub, used_replace = _expand_star_replace_ordered(spark, sub)
-        sub, used_runnest = _expand_recursive_unnest(spark, sub)
-        used_tablefuncs = (
-            used_tablefuncs
-            or used_pivot
-            or used_ubn
-            or used_colmacro
-            or used_replace
-            or used_runnest
-        )
-        sub = _reject_unsupported_duckisms(sub)
-        used_tablefuncs = used_tablefuncs or used_filefuncs
-        rw = rewrite_statement(sub)
-        if rw.asof_joins:
-            _asof_quadratic_guard(spark, rw, vars_)
-        # Memoized analysis: dashboards re-serve identical statement
-        # text every render; the cache returns the already-analyzed
-        # lazy DataFrame (execution still runs fully on collect) and
-        # every mutation path bump()s it. ONLY read-only statements are
-        # cacheable — Spark runs commands (INSERT/CREATE/…, which tasks
-        # route through here) eagerly inside spark.sql(), so a cache
-        # hit would silently skip re-executing them — and duckdb_*()
-        # catalog snapshots re-materialize per call, so they bypass the
-        # cache too. See plancache.
-        from .plancache import analyzed, bump, plan_is_command
+    sub = expand_enum_surface(spark, sub)
+    from .filefuncs import expand_file_functions
+    from .tablefuncs import (
+        expand_information_schema,
+        expand_table_functions,
+    )
 
-        head = rw.sql.lstrip("( \n\t").split(None, 1)
-        readonly_head = bool(head) and head[0].upper() in _READONLY_HEADS
-        if vars_.search_path:
-            # resolution depends on session state the cache key doesn't
-            # carry — bypass the cache while a search path is active
-            df = _sql_with_search_path(spark, rw.sql, vars_.search_path)
-            if not readonly_head or (
-                head[0].upper() == "WITH" and plan_is_command(df)
-            ):
-                bump()  # command executed eagerly under the search path
-        elif used_tablefuncs:
-            df = spark.sql(rw.sql)
-            if not readonly_head or (
-                head[0].upper() == "WITH" and plan_is_command(df)
-            ):
-                bump()
-        elif readonly_head:
-            df = analyzed(spark, rw.sql)
-            # 'WITH cte AS (...) INSERT/MERGE ...' is valid SQL whose
-            # leading keyword looks read-only: the analyzer is the
-            # authority. analyzed() never memoizes command plans (each
-            # call re-executes), but the mutation must still flush
-            # previously cached plans.
-            if head[0].upper() == "WITH" and plan_is_command(df):
-                bump()
-        else:
-            df = spark.sql(rw.sql)
-            bump()  # command statement: executed eagerly, mutates state
-        tags = rw.column_tags
+    sub, used_tablefuncs = expand_table_functions(spark, sub)
+    sub, used_infoschema = expand_information_schema(spark, sub)
+    used_tablefuncs = used_tablefuncs or used_infoschema
+    sub, used_filefuncs = expand_file_functions(spark, sub)
+    sub, used_posjoin = _expand_positional_joins(spark, sub)
+    used_filefuncs = used_filefuncs or used_posjoin
+    # nextval/currval deal MUTABLE registry state per evaluation —
+    # the used flag bypasses analysis memoization like file reads
+    from .sequences import expand_sequence_calls
+
+    sub, used_seq = expand_sequence_calls(spark, sub)
+    used_filefuncs = used_filefuncs or used_seq
+    # DuckDB PIVOT sugar inside a CTE body or derived table:
+    # materialize each "(PIVOT …)" group as a temp view so the
+    # enclosing query reads it like any other relation (DuckDB
+    # expands the same sugar to a macro before binding).
+    sub, used_pivot = _expand_nested_pivots(spark, sub)
+    sub, used_ubn = _expand_union_by_name(spark, sub)
+    sub, used_colmacro = _expand_columns_macro(spark, sub)
+    sub, used_replace = _expand_star_replace_ordered(spark, sub)
+    sub, used_runnest = _expand_recursive_unnest(spark, sub)
+    used_tablefuncs = (
+        used_tablefuncs
+        or used_pivot
+        or used_ubn
+        or used_colmacro
+        or used_replace
+        or used_runnest
+    )
+    sub = _reject_unsupported_duckisms(sub)
+    used_tablefuncs = used_tablefuncs or used_filefuncs
+    rw = rewrite_statement(sub)
+    if rw.asof_joins:
+        _asof_quadratic_guard(spark, rw, vars_)
+    # Memoized analysis: dashboards re-serve identical statement
+    # text every render; the cache returns the already-analyzed
+    # lazy DataFrame (execution still runs fully on collect) and
+    # every mutation path bump()s it. ONLY read-only statements are
+    # cacheable — Spark runs commands (INSERT/CREATE/…, which tasks
+    # route through here) eagerly inside spark.sql(), so a cache
+    # hit would silently skip re-executing them — and duckdb_*()
+    # catalog snapshots re-materialize per call, so they bypass the
+    # cache too. See plancache.
+    from .plancache import analyzed, bump, plan_is_command
+
+    head = rw.sql.lstrip("( \n\t").split(None, 1)
+    readonly_head = bool(head) and head[0].upper() in _READONLY_HEADS
+    if vars_.search_path:
+        # resolution depends on session state the cache key doesn't
+        # carry — bypass the cache while a search path is active
+        df = _sql_with_search_path(spark, rw.sql, vars_.search_path)
+        if not readonly_head or (
+            head[0].upper() == "WITH" and plan_is_command(df)
+        ):
+            bump()  # command executed eagerly under the search path
+    elif used_tablefuncs:
+        df = spark.sql(rw.sql)
+        if not readonly_head or (
+            head[0].upper() == "WITH" and plan_is_command(df)
+        ):
+            bump()
+    elif readonly_head:
+        df = analyzed(spark, rw.sql)
+        # 'WITH cte AS (...) INSERT/MERGE ...' is valid SQL whose
+        # leading keyword looks read-only: the analyzer is the
+        # authority. analyzed() never memoizes command plans (each
+        # call re-executes), but the mutation must still flush
+        # previously cached plans.
+        if head[0].upper() == "WITH" and plan_is_command(df):
+            bump()
+    else:
+        df = spark.sql(rw.sql)
+        bump()  # command statement: executed eagerly, mutates state
+    return df, rw.column_tags
+
+
+def _collect_query(
+    df: DataFrame, tags: dict[int, str], max_rows: int
+) -> tuple[list[Column], list[list[Any]]]:
+    """Run ``df`` capped at ``max_rows`` (one row more is fetched, then
+    cut) and describe its columns."""
     limited = df.limit(max_rows + 1)
     collected = limited.collect()
     truncated = collected[:max_rows]

@@ -16,6 +16,14 @@ stdlib only (no prometheus client, no gopsutil):
   first call reports usage since boot, later calls since the previous
   call)
 
+Engine families the reference has no counterpart for:
+
+* ``shaper_plancache_{hits,misses,bypasses}_total`` — counters from
+  ``plancache.stats()``; ``shaper_plancache_size`` and
+  ``shaper_plancache_generation`` (bumps so far) — gauges
+* ``shaper_statements_in_flight`` — prefetched dashboard statements
+  collecting on the engine's shared pool
+
 Exposition follows the Prometheus text format v0.0.4: ``# HELP`` /
 ``# TYPE`` per family, one sample per line, content type
 ``text/plain; version=0.0.4; charset=utf-8``.
@@ -141,7 +149,34 @@ def _cpu_lines() -> list[str]:
     ]
 
 
+def _engine_lines() -> list[str]:
+    from .engine import statements_in_flight
+    from .plancache import stats
+
+    pc = stats()
+    lines = []
+    for key in ("hits", "misses", "bypasses"):
+        name = f"shaper_plancache_{key}_total"
+        lines += [
+            f"# HELP {name} Analyzed-plan cache {key} since process start",
+            f"# TYPE {name} counter",
+            f"{name} {pc[key]}",
+        ]
+    return lines + [
+        "# HELP shaper_plancache_size Analyzed plans held in the cache",
+        "# TYPE shaper_plancache_size gauge",
+        f"shaper_plancache_size {pc['size']}",
+        "# HELP shaper_plancache_generation Plan-cache flushes (bumps) so far",
+        "# TYPE shaper_plancache_generation gauge",
+        f"shaper_plancache_generation {pc['generation']}",
+        "# HELP shaper_statements_in_flight Dashboard statements collecting "
+        "on the shared pool",
+        "# TYPE shaper_statements_in_flight gauge",
+        f"shaper_statements_in_flight {statements_in_flight()}",
+    ]
+
+
 def render_prometheus() -> bytes:
     """The full exposition body for GET /metrics."""
-    lines = _disk_lines() + _memory_lines() + _cpu_lines()
+    lines = _disk_lines() + _memory_lines() + _cpu_lines() + _engine_lines()
     return ("\n".join(lines) + "\n").encode()

@@ -1123,6 +1123,48 @@ class TestMetricsEndpoint:
         )
         assert 0.0 <= samples["system_cpu_usage_percent"] <= 100.0
 
+    def test_engine_counters(self, msrv, spark):
+        """Plan-cache counters from plancache.stats() and the gauge of
+        statements collecting on the engine's shared pool."""
+        from shaper_spark import plancache
+        from shaper_spark.engine import query_dashboard
+
+        script = (
+            "SELECT count() AS n FROM nation; "
+            "SELECT count() AS m FROM region WHERE r_regionkey > 0"
+        )
+        query_dashboard(spark, script)
+        query_dashboard(spark, script)  # second render hits the cache
+        before = plancache.stats()
+        s, body, _ = self._req(msrv, "GET", "/metrics")
+        after = plancache.stats()
+        assert s == 200
+        text = body.decode()
+        for family, typ in [
+            ("shaper_plancache_hits_total", "counter"),
+            ("shaper_plancache_misses_total", "counter"),
+            ("shaper_plancache_bypasses_total", "counter"),
+            ("shaper_plancache_size", "gauge"),
+            ("shaper_plancache_generation", "gauge"),
+            ("shaper_statements_in_flight", "gauge"),
+        ]:
+            assert f"# HELP {family} " in text
+            assert f"# TYPE {family} {typ}" in text
+        samples = dict(
+            line.rsplit(" ", 1)
+            for line in text.splitlines()
+            if line.startswith("shaper_")
+        )
+        for key in ("hits", "misses", "bypasses", "generation"):
+            name = (
+                "shaper_plancache_generation" if key == "generation"
+                else f"shaper_plancache_{key}_total"
+            )
+            assert before[key] <= int(samples[name]) <= after[key]
+        assert int(samples["shaper_plancache_hits_total"]) >= 2
+        assert 0 <= int(samples["shaper_plancache_size"]) <= 256
+        assert samples["shaper_statements_in_flight"] == "0"
+
     def test_key_gating_and_permission(self, msrv):
         # create the first user -> auth required everywhere
         s, body, _ = self._req(
