@@ -930,8 +930,8 @@ def _q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shaper_spark.operators.text import token_stats
 
     _prep(spark, sf_dir)
-    # lang rides through token_stats (exact-integer aggregates below,
-    # so the shape change cannot move any value): the old
+    # lang rides through token_stats (the passthrough keeps the row
+    # multiset, so the shape change cannot move any value): the old
     # stats ⋈ documents self-join on doc_id re-scanned the corpus and
     # hash-built one full side just to look up a column every row
     # already had — 2 scans + a corpus-wide BroadcastExchange → 1 scan,
@@ -1004,7 +1004,7 @@ def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.table("documents")
     # lang rides through the classifier (token_stats idiom, r14): the
     # old join-back on doc_id re-scanned the corpus just to attach the
-    # label; exact-integer aggregates, results identical.
+    # label; the row multiset is unchanged, so results are identical.
     pred = language_id(docs, "doc_id", "text", extra_cols=("lang",)).select(
         "doc_id", "lang_pred", "lang"
     )

@@ -17,6 +17,7 @@ tree is still assembled in script order (``_query_dashboard_loop``).
 from __future__ import annotations
 
 import base64
+import copy
 import hashlib
 import datetime as dt
 import json
@@ -24,6 +25,7 @@ import re
 import threading
 import time
 import urllib.parse
+from collections import OrderedDict
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
@@ -1179,6 +1181,14 @@ class _VarState:
     def defined(self) -> set[str]:
         return set(self.raw) | set(self.lists)
 
+    def copy(self) -> "_VarState":
+        out = _VarState()
+        out.raw = dict(self.raw)
+        out.lists = {k: list(v) for k, v in self.lists.items()}
+        out.search_path = list(self.search_path)
+        out.protected = set(self.protected)
+        return out
+
     def substitute(self, sql: str) -> str:
         def repl(m: re.Match[str]) -> str:
             name = m.group(1)
@@ -1519,6 +1529,14 @@ class _Launched:
     snapshot: str  # the statement's variable-substituted text at launch
     future: Future  # -> (columns, rows)
     prepared: tuple[DataFrame, dict[int, str]] | None  # if prepare passed
+    generation: int  # plan-cache generation read before the prepare
+    predicted: bool  # launched with predicted widget variables
+
+
+def _generation() -> int:
+    from .plancache import stats
+
+    return stats()["generation"]
 
 
 def _prefetch(
@@ -1527,19 +1545,125 @@ def _prefetch(
     vars_: _VarState,
     macros: dict[str, _Macro],
     max_rows: int,
+    predicted: bool = False,
 ) -> _Launched:
     """Prepare on the calling thread, collect on the shared pool. A
     prepare error is stored in the future, so it surfaces only when
     assembly reaches the statement (and never for a skipped one)."""
     snapshot = vars_.substitute(sql_string)
+    generation = _generation()
+    if predicted:
+        _WIDGET_RESULTS.count(predictions=1)
     try:
         prepared = _prepare_query(spark, sql_string, vars_, macros)
     except Exception as e:
         failed: Future = Future()
         failed.set_exception(e)
-        return _Launched(snapshot, failed, None)
+        return _Launched(snapshot, failed, None, generation, predicted)
     future = _COLLECT_POOL.submit(spark, _collect_query, *prepared, max_rows)
-    return _Launched(snapshot, future, prepared)
+    return _Launched(snapshot, future, prepared, generation, predicted)
+
+
+# Render types whose result defines variables in _collect_vars (download
+# buttons render as "button", so they are never remembered).
+_WIDGET_RENDER_TYPES = frozenset(
+    {"dropdown", "dropdownMulti", "datepicker", "daterangePicker", "input"}
+)
+
+
+class _WidgetResults:
+    """The last result of each widget statement, so the prefetch walk
+    can predict the variables a widget defines instead of stopping at it.
+
+    Entries are keyed by (session, variable-substituted statement text),
+    hold the session object as the plan cache does, and are stamped
+    with the plan-cache generation read before the statement ran. A
+    prediction is ``_collect_vars`` run over an entry of the current
+    generation, so a widget value reaches a launched statement only
+    after the widget's own validation accepted it against rows that
+    exactly this text returned under the same data. Nothing is served
+    from here: every statement still executes, and assembly keeps a
+    launched result only if its text equals the one the real widget
+    result gives."""
+
+    _CAPACITY = 256
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[tuple[int, str], tuple] = OrderedDict()
+        self.predictions = 0  # launches made with predicted variables
+        self.mispredictions = 0  # of those, dropped by the snapshot check
+
+    def remember(
+        self,
+        spark: SparkSession,
+        text: str,
+        generation: int,
+        render_type: str,
+        columns: list[Column],
+        rows: list[list[Any]],
+    ) -> None:
+        # copies: assembly normalizes the rows in place afterwards
+        entry = (
+            spark,
+            generation,
+            render_type,
+            [copy.copy(c) for c in columns],
+            [list(r) for r in rows],
+        )
+        key = (id(spark), text)
+        with self._lock:
+            self._entries[key] = entry
+            self._entries.move_to_end(key)
+            while len(self._entries) > self._CAPACITY:
+                self._entries.popitem(last=False)
+
+    def predict(
+        self,
+        spark: SparkSession,
+        text: str,
+        vars_: _VarState,
+        params: dict[str, Any],
+    ) -> _VarState | None:
+        """``vars_`` plus what the widget with substituted ``text``
+        would define, or None when there is no current entry or
+        ``_collect_vars`` rejects this request's params."""
+        key = (id(spark), text)
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is None or entry[0] is not spark:
+                return None
+            self._entries.move_to_end(key)
+        _, generation, render_type, columns, rows = entry
+        if generation != _generation():
+            return None
+        predicted = vars_.copy()
+        try:
+            _collect_vars(predicted, render_type, params, columns, rows)
+        except Exception:
+            return None
+        return predicted
+
+    def count(self, predictions: int = 0, mispredictions: int = 0) -> None:
+        with self._lock:
+            self.predictions += predictions
+            self.mispredictions += mispredictions
+
+    def stats(self) -> dict[str, int]:
+        with self._lock:
+            return {
+                "predictions": self.predictions,
+                "mispredictions": self.mispredictions,
+            }
+
+
+_WIDGET_RESULTS = _WidgetResults()
+
+
+def prediction_stats() -> dict[str, int]:
+    """Launches made with predicted widget variables, and how many of
+    them assembly dropped because the real variables differed."""
+    return _WIDGET_RESULTS.stats()
 
 
 def query_dashboard(
@@ -1622,23 +1746,37 @@ def _query_dashboard_loop(
         _classify(i, s.strip()) for i, s in enumerate(statements) if s.strip()
     ]
     frontier = 0  # first statement position not yet considered for launch
+    # the variables the walk launches with: vars_ itself, or a copy that
+    # adds predicted values of widgets assembly has not reached yet
+    walk_vars = vars_
 
     def launch_ahead(pos: int) -> None:
         """When stmts[pos] is about to run, prepare (here, in script
         order) and submit every statement from the frontier on that
-        cannot be affected by what assembly still has to do."""
-        nonlocal frontier
-        frontier = max(frontier, pos)
+        cannot be affected by what assembly still has to do. The walk
+        passes a widget only with a prediction of what it defines."""
+        nonlocal frontier, walk_vars
+        if frontier <= pos:  # assembly caught up: nothing is predicted
+            frontier, walk_vars = pos, vars_
         if macros:  # a macro body can hide a widget cast
             return
         while frontier < len(stmts):
             if frontier > pos and stmts[frontier - 1].stops_walk:
-                return
+                widget = stmts[frontier - 1].sql
+                predicted = _WIDGET_RESULTS.predict(
+                    spark, walk_vars.substitute(widget), walk_vars, params
+                )
+                if predicted is None:
+                    return
+                walk_vars = predicted
             st = stmts[frontier]
-            if not st.prefetchable or not vars_.defined().issuperset(st.refs):
+            if not st.prefetchable or not walk_vars.defined().issuperset(
+                st.refs
+            ):
                 return
             launched[frontier] = _prefetch(
-                spark, st.sql, vars_, macros, max_rows
+                spark, st.sql, walk_vars, macros, max_rows,
+                predicted=walk_vars is not vars_,
             )
             frontier += 1
 
@@ -1676,15 +1814,20 @@ def _query_dashboard_loop(
             ahead.snapshot != vars_.substitute(sql_string)
         ):
             ahead.future.cancel()
+            if ahead.predicted:
+                _WIDGET_RESULTS.count(mispredictions=1)
             ahead = None
         if ahead is None:
+            generation = _generation()
             columns, rows = _run_query(
                 spark, sql_string, vars_, macros, max_rows
             )
-        elif ahead.future.cancel():
-            columns, rows = _collect_query(*ahead.prepared, max_rows)
         else:
-            columns, rows = ahead.future.result()
+            generation = ahead.generation
+            if ahead.future.cancel():
+                columns, rows = _collect_query(*ahead.prepared, max_rows)
+            else:
+                columns, rows = ahead.future.result()
 
         query = Query(rows=rows)
 
@@ -1743,6 +1886,11 @@ def _query_dashboard_loop(
             query, rinfo, dashboard_id, query_index, params, download_link_params
         )
 
+        if rinfo.type in _WIDGET_RENDER_TYPES:
+            _WIDGET_RESULTS.remember(
+                spark, vars_.substitute(sql_string), generation,
+                rinfo.type, columns, rows,
+            )
         _collect_vars(vars_, rinfo.type, params, columns, rows)
         defined_vars |= vars_.defined()
         _collect_download_link_params(

@@ -21,6 +21,9 @@ Engine families the reference has no counterpart for:
 * ``shaper_plancache_{hits,misses,bypasses}_total`` — counters from
   ``plancache.stats()``; ``shaper_plancache_size`` and
   ``shaper_plancache_generation`` (bumps so far) — gauges
+* ``shaper_widget_predictions_total`` — statements launched with
+  predicted widget variables; ``shaper_widget_mispredictions_total`` —
+  of those, the ones assembly dropped (counters)
 * ``shaper_statements_in_flight`` — prefetched dashboard statements
   collecting on the engine's shared pool
 
@@ -150,7 +153,7 @@ def _cpu_lines() -> list[str]:
 
 
 def _engine_lines() -> list[str]:
-    from .engine import statements_in_flight
+    from .engine import prediction_stats, statements_in_flight
     from .plancache import stats
 
     pc = stats()
@@ -162,13 +165,26 @@ def _engine_lines() -> list[str]:
             f"# TYPE {name} counter",
             f"{name} {pc[key]}",
         ]
-    return lines + [
+    lines += [
         "# HELP shaper_plancache_size Analyzed plans held in the cache",
         "# TYPE shaper_plancache_size gauge",
         f"shaper_plancache_size {pc['size']}",
         "# HELP shaper_plancache_generation Plan-cache flushes (bumps) so far",
         "# TYPE shaper_plancache_generation gauge",
         f"shaper_plancache_generation {pc['generation']}",
+    ]
+    wp = prediction_stats()
+    for key, help_ in (
+        ("predictions", "Statements launched with predicted widget variables"),
+        ("mispredictions", "Predicted launches dropped at assembly"),
+    ):
+        name = f"shaper_widget_{key}_total"
+        lines += [
+            f"# HELP {name} {help_}",
+            f"# TYPE {name} counter",
+            f"{name} {wp[key]}",
+        ]
+    return lines + [
         "# HELP shaper_statements_in_flight Dashboard statements collecting "
         "on the shared pool",
         "# TYPE shaper_statements_in_flight gauge",

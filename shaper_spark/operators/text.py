@@ -62,6 +62,17 @@ __all__ = [
 ]
 
 
+def _check_extra_cols(extra_cols: tuple[str, ...], fixed: list[str]) -> None:
+    """Refuse an ``extra_cols`` passthrough that would sit next to an
+    output column of the same name (an ambiguous reference later)."""
+    taken = {c.lower() for c in fixed}
+    for c in extra_cols:
+        if c.lower() in taken:
+            raise ValueError(
+                f"extra column {c!r} collides with an output column"
+            )
+
+
 def token_stats(
     df: DataFrame,
     id_col: str,
@@ -85,6 +96,10 @@ def token_stats(
     corpus-wide broadcast for a lang lookup the row already had)."""
     from ..session import spread_for_compute
 
+    _check_extra_cols(
+        extra_cols,
+        [id_col, "n_tokens", "n_chars", "n_pieces", "avg_word_len"],
+    )
     df = spread_for_compute(df)
     words = F.split(F.col(text_col), " ")
     n_tokens = F.size(words)
@@ -366,6 +381,10 @@ def language_id(
     from ..session import spread_for_compute
 
     langs = sorted(LANG_STOPWORDS)
+    _check_extra_cols(
+        extra_cols,
+        [id_col, "__pad", "lang_pred", *[f"score_{lang}" for lang in langs]],
+    )
     staged = spread_for_compute(df).select(
         F.col(id_col),
         F.expr(folded_padded_sql(text_col)).alias("__pad"),
@@ -2072,7 +2091,8 @@ def tfidf_top_terms(
     # ran a SECOND time (the dsir isNotNull idiom, same reason;
     # plans/r14/tfidf_top_terms_{audit,after}.txt: 2 Generates → 1).
     # count(tf) alone does not survive: Catalyst rewrites count over a
-    # provably non-null column back to count(1).
+    # provably non-null column back to count(1).  Checked on Spark
+    # 4.1.2; re-check the plan (one Generate) after a Spark upgrade.
     dfreq = tf.groupBy("term").agg(
         F.count(F.when(F.col("tf") >= 1, 1)).alias("df")
     )
@@ -2914,12 +2934,17 @@ def langid_confusion(
     broadcast back.  Engine-proof by construction — the votes are the
     byte-explicit stopword counts, ties and the 'und' floor replay
     identically in the oracle."""
+    # the label rides under a private name, so a label column named
+    # like one of language_id's outputs (lang_pred, score_en) works
     labeled = language_id(
-        df, id_col, text_col, extra_cols=(label_col,)
+        df.withColumn("__label", F.col(label_col)),
+        id_col,
+        text_col,
+        extra_cols=("__label",),
     ).select(
         F.col(id_col),
         F.col("lang_pred"),
-        F.col(label_col).alias("label"),
+        F.col("__label").alias("label"),
     )
     cells = labeled.groupBy("label", "lang_pred").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")

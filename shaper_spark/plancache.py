@@ -125,7 +125,9 @@ def plan_is_command(df) -> bool:
 
 
 def _check_probes() -> None:
-    """Poll registered multi-host staleness probes; flush on change."""
+    """Poll registered multi-host staleness probes; flush on change.
+    A flush advances the generation like a local ``bump()``."""
+    global _GEN
     if not _PROBES:
         return
     stale = False
@@ -139,6 +141,7 @@ def _check_probes() -> None:
                 _PROBES[name] = (fn, token)
                 stale = True
         if stale:
+            _GEN += 1
             _CACHE.clear()
 
 

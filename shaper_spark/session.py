@@ -194,11 +194,26 @@ def register_sf_tables(spark: SparkSession, sf_dir: str) -> None:
     Uses ``spark.read.parquet`` directly — scans stay columnar with
     predicate pushdown and column pruning (verify via
     ``df.explain('formatted')`` → PushedFilters/ReadSchema).
+
+    On the serving profile (AQE off, see :func:`interactive_session`) a
+    table whose scan is one partition is registered as ``coalesce(1)``
+    of it: ``CoalesceExec(1)`` reports ``SinglePartition``, which
+    already satisfies the distribution an aggregate, distinct or sort
+    requires, so its statements plan as one stage instead of one scan
+    task plus an exchange into ``spark.sql.shuffle.partitions`` reduce
+    tasks. Filters and column pruning still push into the scan below
+    it. The batch profile keeps its exchanges: its corpus operators
+    share work between plan branches through ``ReusedExchange``, which
+    needs an exchange to reuse.
     """
+    serving = spark.conf.get("spark.sql.adaptive.enabled") == "false"
     for name in TPCH_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            load_parquet(spark, path).createOrReplaceTempView(name)
+            df = load_parquet(spark, path)
+            if serving and _one_split(spark, path):
+                df = df.coalesce(1)
+            df.createOrReplaceTempView(name)
     from .plancache import bump
 
     bump()  # view targets may have changed: flush memoized plans
@@ -224,6 +239,25 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
         if str(t).startswith("timestamp[ns"):
             out.append(field_.name)
     return out
+
+
+def _one_split(spark: SparkSession, path: str) -> bool:
+    """True when one scan task reads all of the parquet file at
+    ``path`` under any configuration: it has one row group (a row
+    group is never split across tasks), or it is no larger than
+    ``min(maxPartitionBytes, openCostInBytes)``, which Spark's split
+    size is never below. Decided from the footer, because planning the
+    scan to count its partitions slows registration down."""
+    try:
+        import pyarrow.parquet as pq
+
+        if pq.read_metadata(path).num_row_groups <= 1:
+            return True
+    except Exception:
+        return False
+    conf = spark._jsparkSession.sessionState().conf()
+    limit = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+    return os.path.getsize(path) <= limit
 
 
 def load_parquet(spark: SparkSession, path: str, spread: bool = False):

@@ -1124,10 +1124,11 @@ class TestMetricsEndpoint:
         assert 0.0 <= samples["system_cpu_usage_percent"] <= 100.0
 
     def test_engine_counters(self, msrv, spark):
-        """Plan-cache counters from plancache.stats() and the gauge of
-        statements collecting on the engine's shared pool."""
+        """Plan-cache counters from plancache.stats(), the widget
+        prediction counters and the gauge of statements collecting on
+        the engine's shared pool."""
         from shaper_spark import plancache
-        from shaper_spark.engine import query_dashboard
+        from shaper_spark.engine import prediction_stats, query_dashboard
 
         script = (
             "SELECT count() AS n FROM nation; "
@@ -1135,6 +1136,14 @@ class TestMetricsEndpoint:
         )
         query_dashboard(spark, script)
         query_dashboard(spark, script)  # second render hits the cache
+        widget = (
+            "SELECT r_name::DROPDOWN AS rn FROM region ORDER BY 1; "
+            "SELECT count() AS k FROM nation JOIN region "
+            "ON n_regionkey = r_regionkey WHERE r_name = getvariable('rn')"
+        )
+        query_dashboard(spark, widget)
+        query_dashboard(spark, widget)  # predicted from the first render
+        predicted = prediction_stats()
         before = plancache.stats()
         s, body, _ = self._req(msrv, "GET", "/metrics")
         after = plancache.stats()
@@ -1146,6 +1155,8 @@ class TestMetricsEndpoint:
             ("shaper_plancache_bypasses_total", "counter"),
             ("shaper_plancache_size", "gauge"),
             ("shaper_plancache_generation", "gauge"),
+            ("shaper_widget_predictions_total", "counter"),
+            ("shaper_widget_mispredictions_total", "counter"),
             ("shaper_statements_in_flight", "gauge"),
         ]:
             assert f"# HELP {family} " in text
@@ -1164,6 +1175,9 @@ class TestMetricsEndpoint:
         assert int(samples["shaper_plancache_hits_total"]) >= 2
         assert 0 <= int(samples["shaper_plancache_size"]) <= 256
         assert samples["shaper_statements_in_flight"] == "0"
+        assert predicted["predictions"] >= 1
+        for key in ("predictions", "mispredictions"):
+            assert int(samples[f"shaper_widget_{key}_total"]) == predicted[key]
 
     def test_key_gating_and_permission(self, msrv):
         # create the first user -> auth required everywhere

@@ -196,6 +196,15 @@ class TestTokenStats:
         assert extra == plain
         assert plain[1]["n_tokens"] == 3 and plain[1]["n_chars"] == 8
 
+    def test_extra_col_colliding_with_output_raises(self, spark):
+        from shaper_spark.operators.text import token_stats
+
+        df = spark.createDataFrame(
+            [(1, "a bb", 7)], ["id", "text", "n_chars"]
+        )
+        with pytest.raises(ValueError, match="'n_chars'"):
+            token_stats(df, "id", "text", extra_cols=("n_chars",))
+
 
 class TestTfidf:
     def test_known_values(self, spark):
@@ -1962,6 +1971,43 @@ class TestLangidConfusion:
         assert extra == plain
         assert plain[1]["lang_pred"] == "en"
         assert plain[2]["lang_pred"] == "und"
+
+    def test_language_id_extra_col_collision_raises(self, spark):
+        from shaper_spark.operators.text import language_id
+
+        docs = spark.createDataFrame(
+            [(1, "the cat", "en")],
+            "doc_id long, text string, lang_pred string",
+        )
+        with pytest.raises(ValueError, match="'lang_pred'"):
+            language_id(docs, "doc_id", "text", extra_cols=("lang_pred",))
+
+    def test_label_column_named_like_an_output(self, spark):
+        # the label rides through under a private alias, so a label
+        # column called lang_pred gives the same matrix as one called lang
+        from shaper_spark.operators.text import langid_confusion
+
+        rows = [
+            (1, "the cat and the dog of it", "en"),
+            (2, "der hund und die katze das", "en"),
+            (3, "zzz qqq xxx", "de"),
+        ]
+        by_lang = langid_confusion(
+            spark.createDataFrame(
+                rows, "doc_id long, text string, lang string"
+            ),
+            "doc_id", "text", "lang",
+        ).collect()
+        by_pred = langid_confusion(
+            spark.createDataFrame(
+                rows, "doc_id long, text string, lang_pred string"
+            ),
+            "doc_id", "text", "lang_pred",
+        ).collect()
+        assert by_pred == by_lang
+        assert {(r.label, r.lang_pred) for r in by_pred} == {
+            ("en", "en"), ("en", "de"), ("de", "und"),
+        }
 
     def test_shares_sum_to_one_per_label(self, spark):
         from shaper_spark.operators.text import langid_confusion

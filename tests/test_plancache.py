@@ -254,6 +254,25 @@ class TestMultiHostStaleness:
             plancache.remove_probe(db)
             spark.catalog.dropTempView("pc_mh_src")
 
+    def test_probe_flush_advances_generation(self, spark):
+        """A flush another host's token change causes counts as a
+        generation step, like a local bump()."""
+        token = [0]
+        plancache.set_staleness_probe("pc_gen_probe", lambda: token[0])
+        try:
+            sql = "SELECT count(*) AS n FROM region"
+            plancache.analyzed(spark, sql)
+            g0 = plancache.stats()["generation"]
+            plancache.analyzed(spark, sql)  # token unchanged: no flush
+            assert plancache.stats()["generation"] == g0
+            token[0] = 1
+            plancache.analyzed(spark, sql)
+            after = plancache.stats()
+            assert after["generation"] == g0 + 1
+            assert after["size"] == 1  # flushed, then re-memoized
+        finally:
+            plancache.remove_probe("pc_gen_probe")
+
     def test_local_bump_broadcasts_to_shared_store(self, tmp_path):
         from shaper_spark.metastore import Metastore
 

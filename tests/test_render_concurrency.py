@@ -270,3 +270,169 @@ def test_concurrent_renders_share_the_pool(spark):
     assert not any(t.is_alive() for t in threads)
     assert all(got[k] == want[k % len(jobs)] for k in range(8))
     assert engine.statements_in_flight() == 0
+
+
+# ---------------------------------------------------------------------------
+# Widget prediction: a second render launches the statements after a
+# widget from the widget's remembered result.
+# ---------------------------------------------------------------------------
+
+DATE_AND_INPUT = """
+SELECT min(o_orderdate)::DATEPICKER AS since FROM orders;
+SELECT 'customer name'::INPUT AS who;
+SELECT count() AS n FROM orders WHERE o_orderdate >= getvariable('since');
+SELECT count() AS m FROM orders JOIN customer ON o_custkey = c_custkey
+WHERE c_name LIKE '%' || getvariable('who') || '%'
+AND o_orderdate >= getvariable('since');
+"""
+
+PREDICTED = {
+    "hot_orders": CASES["hot_orders"],
+    "hot_events": CASES["hot_events"],
+    "hot_lineitem": CASES["hot_lineitem"],
+    "dropdown_chain": CASES["dropdown_chain"],
+    "date_and_input": (
+        DATE_AND_INPUT, {"since": "1995-06-01", "who": "Customer#00000001"}
+    ),
+    "rejected_param": (HOT_ORDERS, {"prio": "9-REJECTED"}),
+}
+
+
+@pytest.fixture
+def widgets(monkeypatch):
+    """A fresh, test-local store of widget results."""
+    store = engine._WidgetResults()
+    monkeypatch.setattr(engine, "_WIDGET_RESULTS", store)
+    return store
+
+
+def _substituted_spy(monkeypatch):
+    """Record the variable-substituted text of every prepared statement."""
+    texts = []
+    fn = engine._prepare_query
+
+    def wrapper(spark, sql, vars_, macros):
+        texts.append(vars_.substitute(sql))
+        return fn(spark, sql, vars_, macros)
+
+    monkeypatch.setattr(engine, "_prepare_query", wrapper)
+    return texts
+
+
+@pytest.mark.parametrize("case", sorted(PREDICTED))
+def test_second_render_predicts_widgets(spark, monkeypatch, widgets, case):
+    script, params = PREDICTED[case]
+    with monkeypatch.context() as m:
+        _sequential(m)
+        sequential = _outcome(spark, script, params)
+    assert sequential[0] == "ok"
+    widgets._entries.clear()
+    first = _outcome(spark, script, params)  # remembers the widgets
+    assert widgets.predictions == 0
+    prefetched = _spy(monkeypatch, "_prefetch")
+    events = []
+    remember = widgets.remember
+    monkeypatch.setattr(
+        widgets, "remember",
+        lambda *a: (events.append(len(prefetched)), remember(*a)),
+    )
+    second = _outcome(spark, script, params)
+    assert first == second == sequential
+    assert widgets.predictions > 0 and widgets.mispredictions == 0
+    # one wave: every statement was launched before the first widget
+    # was assembled
+    statements = [s for s in script.split(";") if s.strip()]
+    assert len(prefetched) == len(statements)
+    assert events and events[0] == len(statements)
+    assert engine.statements_in_flight() == 0
+
+
+def test_rejected_param_is_never_executed(spark, monkeypatch, widgets):
+    """A dropdown param that is not among the widget's rows falls back
+    to the first row, in the prediction as in assembly: the rejected
+    value never reaches a prepared statement, in either render."""
+    params = {"prio": "9-REJECTED"}
+    texts = _substituted_spy(monkeypatch)
+    _outcome(spark, HOT_ORDERS, params)
+    _outcome(spark, HOT_ORDERS, params)
+    assert widgets.predictions > 0
+    assert texts and not any("9-REJECTED" in t for t in texts)
+    assert any("'1-URGENT'" in t for t in texts)
+
+
+def test_stale_entry_mispredicts_and_runs_inline(spark, monkeypatch, widgets):
+    """An entry whose rows no longer match what the widget returns
+    predicts a wrong value: the launched statements are dropped at
+    assembly and run inline with the real one, same output."""
+    with monkeypatch.context() as m:
+        _sequential(m)
+        sequential = _outcome(spark, HOT_ORDERS, {})
+    _outcome(spark, HOT_ORDERS, {})
+    (key,) = [k for k in widgets._entries if "DROPDOWN AS prio" in k[1]]
+    sess, generation, render_type, columns, rows = widgets._entries[key]
+    assert rows[0] == ["1-URGENT"]
+    widgets._entries[key] = (
+        sess, generation, render_type, columns, [["5-LOW"]]
+    )
+    inline = _spy(monkeypatch, "_run_query")
+    predictions, mispredictions = widgets.predictions, widgets.mispredictions
+    built = _outcome(spark, HOT_ORDERS, {})
+    assert built == sequential
+    # the four statements reading prio were dropped and ran inline; the
+    # LABEL launched past the widget reads nothing and stands
+    assert widgets.mispredictions - mispredictions == 4
+    assert widgets.predictions - predictions == 5
+    assert sum("getvariable('prio')" in sql for sql in inline) == 4
+
+
+def test_entry_of_another_generation_is_not_used(spark, widgets):
+    from shaper_spark import plancache
+
+    _outcome(spark, HOT_ORDERS, {})
+    plancache.bump()
+    _outcome(spark, HOT_ORDERS, {})
+    assert widgets.predictions == 0
+
+
+def test_protected_variables_keep_entries_apart(spark, monkeypatch, widgets):
+    """A widget that reads a protected (JWT) variable is remembered per
+    value of it: renders for one tenant never look up, let alone use,
+    the other tenant's entry."""
+    script = """
+    SELECT DISTINCT o_orderpriority::DROPDOWN AS prio FROM orders
+    WHERE o_orderstatus = getvariable('tenant') ORDER BY 1;
+    SELECT count() AS n FROM orders WHERE o_orderpriority = getvariable('prio')
+    AND o_orderstatus = getvariable('tenant');
+    SELECT sum(o_totalprice) AS total FROM orders
+    WHERE o_orderpriority = getvariable('prio')
+    AND o_orderstatus = getvariable('tenant');
+    """
+    looked_up = []
+    predict = widgets.predict
+
+    def spy(spark_, text, *args):
+        got = predict(spark_, text, *args)
+        looked_up.append((text, got is not None))
+        return got
+
+    monkeypatch.setattr(widgets, "predict", spy)
+
+    def render(tenant):
+        r = query_dashboard(
+            spark, script, params={"prio": "2-HIGH"},
+            variables={"tenant": tenant}, dashboard_id="rc",
+        )
+        return json.dumps(r.to_dict(), sort_keys=True)
+
+    with monkeypatch.context() as m:
+        _sequential(m)
+        want = {t: render(t) for t in ("F", "O")}
+    for tenant, other in (("F", "O"), ("O", "F"), ("F", "O"), ("O", "F")):
+        del looked_up[:]
+        assert render(tenant) == want[tenant]
+        assert looked_up
+        assert all(f"('{tenant}')" in text for text, _ in looked_up)
+        assert not any(f"('{other}')" in text for text, _ in looked_up)
+    assert want["F"] != want["O"]
+    assert widgets.predictions > 0 and widgets.mispredictions == 0
+    assert len(widgets._entries) == 2

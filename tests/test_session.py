@@ -108,3 +108,66 @@ class TestInteractiveProfile:
         assert sess.conf.get("spark.sql.adaptive.enabled") == "false"
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "AdaptiveSparkPlan" not in plan
+
+
+class TestOneSplitViews:
+    """On the serving profile, register_sf_tables registers a table Spark
+    scans as one partition as coalesce(1) of the scan, so its aggregates
+    plan as one stage."""
+
+    @staticmethod
+    def _plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_one_row_group_view_aggregates_without_exchange(
+        self, spark, sf_dir
+    ):
+        from shaper_spark.session import interactive_session, register_sf_tables
+
+        child = interactive_session(spark)  # own temp views
+        register_sf_tables(child, sf_dir)
+        sql = (
+            "SELECT o_orderpriority, count(*) AS n, max(o_totalprice) AS top "
+            "FROM orders WHERE o_orderstatus = 'F' GROUP BY 1"
+        )
+        df = child.sql(sql)
+        rows = sorted(df.collect())
+        plan = self._plan(df)
+        assert "Coalesce 1" in plan
+        assert "Exchange" not in plan
+        assert "EqualTo(o_orderstatus,F)" in plan  # still pushed down
+        # the batch profile (AQE on) keeps the plain scan
+        assert "Coalesce" not in self._plan(spark.sql(sql))
+        load_parquet(child, os.path.join(sf_dir, "orders.parquet")) \
+            .createOrReplaceTempView("orders")
+        unwrapped = child.sql(sql)
+        assert "Exchange" in self._plan(unwrapped)
+        assert sorted(unwrapped.collect()) == rows
+
+    def test_multi_split_view_keeps_its_exchange(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from shaper_spark.session import interactive_session, register_sf_tables
+
+        rng = __import__("random").Random(0)
+        n = 1_000_000
+        table = pa.table({
+            "k": pa.array([i % 7 for i in range(n)], pa.int64()),
+            "v": pa.array([rng.getrandbits(40) for _ in range(n)], pa.int64()),
+        })
+        path = tmp_path / "lineitem.parquet"
+        pq.write_table(table, path, row_group_size=n // 4)
+        assert pq.read_metadata(path).num_row_groups == 4
+        child = interactive_session(spark)
+        open_cost = child._jsparkSession.sessionState().conf() \
+            .filesOpenCostInBytes()
+        assert os.path.getsize(path) > open_cost
+        register_sf_tables(child, str(tmp_path))
+        sql = "SELECT k, count(*) AS n, sum(v) AS s FROM lineitem GROUP BY k"
+        df = child.sql(sql)
+        plan = self._plan(df)
+        assert "Coalesce" not in plan and "Exchange" in plan
+        child.read.parquet(str(path)).createOrReplaceTempView("lineitem_raw")
+        raw = child.sql(sql.replace("lineitem", "lineitem_raw"))
+        assert sorted(df.collect()) == sorted(raw.collect())
