@@ -31,7 +31,7 @@ def _prep(spark: SparkSession, sf_dir: str) -> None:
     from shaper_spark.session import configure_runtime, register_sf_tables
 
     if id(spark) in _CHILD_IDS:
-        # Serving child: interactive_session already applied the engine
+        # Serving child: low_latency_session already applied the engine
         # confs and then overrode AQE off / static shuffle partitions —
         # re-running configure_runtime here would re-enable AQE on the
         # serving profile.  Only the temp views need (re)registering.
@@ -54,11 +54,12 @@ _CHILD_IDS: set[int] = set()
 
 
 def _serving(spark: SparkSession) -> SparkSession:
-    """The interactive serving profile for these entries: a
-    newSession() child of the driver's session — same SparkContext,
-    same catalog, own SQLConf with AQE off (see
-    shaper_spark.session.interactive_session for the measured
-    rationale).  Every read-only report entry here serves from it: at
+    """The low-latency profile for these entries: a newSession() child
+    of the driver's session — same SparkContext, same catalog, own
+    SQLConf with AQE off (see shaper_spark.session.low_latency_session
+    for the measured rationale).  Not the dashboard-serving
+    interactive_session: its one-stage views drop the exchanges that
+    operators like tf-idf and DSIR reuse across plan branches.  Every read-only report entry here serves from it: at
     sf-bench scale AQE's per-exchange stage barriers are a uniform tax
     (interleaved same-process A/B across the heavy operator entries:
     every one faster without AQE, e.g. dup_span_stats 1.80→0.95 s,
@@ -74,9 +75,9 @@ def _serving(spark: SparkSession) -> SparkSession:
     pair = _INTERACTIVE.get(id(spark))
     if pair is not None and pair[0] is spark:
         return pair[1]
-    from shaper_spark.session import interactive_session
+    from shaper_spark.session import low_latency_session
 
-    child = interactive_session(spark)
+    child = low_latency_session(spark)
     _INTERACTIVE[id(spark)] = (spark, child)
     _CHILD_IDS.add(id(child))
     return child

@@ -1534,9 +1534,9 @@ class _Launched:
 
 
 def _generation() -> int:
-    from .plancache import stats
+    from .plancache import generation
 
-    return stats()["generation"]
+    return generation()
 
 
 def _prefetch(
@@ -1969,10 +1969,10 @@ def _asof_quadratic_guard(spark: SparkSession, rw, vars_: "_VarState") -> None:
             pass
     if limit <= 0:
         return
-    from .plancache import stats as _pc_stats
+    from .plancache import generation
     from .rewrite import with_prologue
 
-    key = (_pc_stats()["generation"], limit, rw.sql)
+    key = (generation(), limit, rw.sql)
     if _asof_guard_ok.get(key):
         return
     prologue = with_prologue(rw.sql)

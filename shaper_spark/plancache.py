@@ -235,6 +235,14 @@ def remove_probe(name: str) -> None:
         _BROADCASTERS.pop(name, None)
 
 
+def generation() -> int:
+    """The current data generation, after polling the multi-host probes,
+    so a change on another host counts even when no ``analyzed()`` call
+    has seen it yet."""
+    _check_probes()
+    return _GEN
+
+
 def stats() -> dict[str, int]:
     with _LOCK:
         return {

@@ -9,12 +9,15 @@ session startup costs seconds; dashboard isolation instead uses
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
 __all__ = [
     "get_spark",
     "configure_runtime",
+    "low_latency_session",
+    "interactive_session",
     "register_sf_tables",
     "spread_for_compute",
     "TPCH_TABLES",
@@ -140,8 +143,8 @@ def get_spark(app_name: str = "shaper_spark", cpus: int | None = None) -> SparkS
     return spark
 
 
-def interactive_session(spark: SparkSession) -> SparkSession:
-    """Derive the *interactive serving profile* from a batch session: a
+def low_latency_session(spark: SparkSession) -> SparkSession:
+    """Derive a low-latency profile from a batch session: a
     ``newSession()`` child sharing the same SparkContext, catalog of
     managed tables, and cached data — but its OWN SQLConf with adaptive
     execution off.
@@ -160,6 +163,8 @@ def interactive_session(spark: SparkSession) -> SparkSession:
     Temp views are per-session in Spark: register the tables the
     serving layer needs on the child (``register_sf_tables(child,…)``).
     The child inherits every other engine conf via configure_runtime.
+    Dashboards are served from :func:`interactive_session`, this profile
+    plus one-stage plans over one-split tables.
     """
     child = spark.newSession()
     configure_runtime(child)
@@ -188,6 +193,21 @@ def interactive_session(spark: SparkSession) -> SparkSession:
     return child
 
 
+# Sessions made by interactive_session (weakly held).
+_DASHBOARD_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+
+
+def interactive_session(spark: SparkSession) -> SparkSession:
+    """The dashboard-serving profile: a :func:`low_latency_session`
+    child on which :func:`register_sf_tables` plans one-split tables as
+    one stage. Corpus operators that share work between plan branches
+    through ``ReusedExchange`` (tf-idf, DSIR) lose that sharing on such
+    a view, so they run on a plain :func:`low_latency_session`."""
+    child = low_latency_session(spark)
+    _DASHBOARD_SESSIONS.add(child)
+    return child
+
+
 def register_sf_tables(spark: SparkSession, sf_dir: str) -> None:
     """Register every parquet table under ``sf_dir`` as a temp view.
 
@@ -195,23 +215,24 @@ def register_sf_tables(spark: SparkSession, sf_dir: str) -> None:
     predicate pushdown and column pruning (verify via
     ``df.explain('formatted')`` → PushedFilters/ReadSchema).
 
-    On the serving profile (AQE off, see :func:`interactive_session`) a
-    table whose scan is one partition is registered as ``coalesce(1)``
-    of it: ``CoalesceExec(1)`` reports ``SinglePartition``, which
-    already satisfies the distribution an aggregate, distinct or sort
-    requires, so its statements plan as one stage instead of one scan
-    task plus an exchange into ``spark.sql.shuffle.partitions`` reduce
-    tasks. Filters and column pruning still push into the scan below
-    it. The batch profile keeps its exchanges: its corpus operators
-    share work between plan branches through ``ReusedExchange``, which
-    needs an exchange to reuse.
+    On a dashboard-serving session (made by
+    :func:`interactive_session`) a table whose scan is one partition is
+    registered as ``coalesce(1)`` of it: ``CoalesceExec(1)`` reports
+    ``SinglePartition``, which already satisfies the distribution an
+    aggregate, distinct or sort requires, so its statements plan as one
+    stage instead of one scan task plus an exchange into
+    ``spark.sql.shuffle.partitions`` reduce tasks. Filters and column
+    pruning still push into the scan below it. Every other session
+    keeps its exchanges: corpus operators share work between plan
+    branches through ``ReusedExchange``, which needs an exchange to
+    reuse.
     """
-    serving = spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    one_stage = spark in _DASHBOARD_SESSIONS
     for name in TPCH_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             df = load_parquet(spark, path)
-            if serving and _one_split(spark, path):
+            if one_stage and _one_split(spark, path):
                 df = df.coalesce(1)
             df.createOrReplaceTempView(name)
     from .plancache import bump

@@ -394,6 +394,33 @@ def test_entry_of_another_generation_is_not_used(spark, widgets):
     assert widgets.predictions == 0
 
 
+def test_probe_change_makes_entries_stale(spark, widgets):
+    """Table-function statements bypass the plan cache, so in this
+    script only the generation read polls the multi-host probes: a
+    token that changed on another host still makes the remembered
+    widget result stale."""
+    from shaper_spark import plancache
+
+    script = """
+    SELECT DISTINCT database_name::DROPDOWN AS db FROM duckdb_databases()
+    ORDER BY 1;
+    SELECT count() AS n FROM duckdb_tables()
+    WHERE database_name = getvariable('db');
+    """
+    token = [0]
+    plancache.set_staleness_probe("remote-host", lambda: token[0])
+    try:
+        assert _outcome(spark, script, {})[0] == "ok"
+        _outcome(spark, script, {})
+        predictions = widgets.predictions
+        assert predictions > 0
+        token[0] += 1
+        _outcome(spark, script, {})
+    finally:
+        plancache.remove_probe("remote-host")
+    assert widgets.predictions == predictions
+
+
 def test_protected_variables_keep_entries_apart(spark, monkeypatch, widgets):
     """A widget that reads a protected (JWT) variable is remembered per
     value of it: renders for one tenant never look up, let alone use,

@@ -109,11 +109,32 @@ class TestInteractiveProfile:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "AdaptiveSparkPlan" not in plan
 
+    def test_entry_child_keeps_shared_exchanges(self, spark, sf_dir):
+        """tf-idf and DSIR share the corpus explode between plan branches
+        through a ReusedExchange, which a one-stage view has no exchange
+        for: on the child the operator entries run on, both still do."""
+        import __spark_entry__ as entry
+        from shaper_spark.operators.sampling import dsir_importance_weights
+        from shaper_spark.operators.text import tfidf_top_terms
+
+        entry._prep(spark, sf_dir)
+        docs = entry._serving(spark).table("documents")
+        for df in (
+            tfidf_top_terms(docs, "doc_id", "text"),
+            dsir_importance_weights(
+                docs, "doc_id", "text", "source", "src0", n_buckets=64
+            ),
+        ):
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("ReusedExchange") >= 1
+            assert plan.count("Generate") == 1
+
 
 class TestOneSplitViews:
-    """On the serving profile, register_sf_tables registers a table Spark
-    scans as one partition as coalesce(1) of the scan, so its aggregates
-    plan as one stage."""
+    """On a dashboard-serving session, register_sf_tables registers a
+    table Spark scans as one partition as coalesce(1) of the scan, so its
+    aggregates plan as one stage."""
 
     @staticmethod
     def _plan(df):
@@ -136,7 +157,7 @@ class TestOneSplitViews:
         assert "Coalesce 1" in plan
         assert "Exchange" not in plan
         assert "EqualTo(o_orderstatus,F)" in plan  # still pushed down
-        # the batch profile (AQE on) keeps the plain scan
+        # the batch session keeps the plain scan
         assert "Coalesce" not in self._plan(spark.sql(sql))
         load_parquet(child, os.path.join(sf_dir, "orders.parquet")) \
             .createOrReplaceTempView("orders")
@@ -171,3 +192,17 @@ class TestOneSplitViews:
         child.read.parquet(str(path)).createOrReplaceTempView("lineitem_raw")
         raw = child.sql(sql.replace("lineitem", "lineitem_raw"))
         assert sorted(df.collect()) == sorted(raw.collect())
+
+    def test_other_sessions_register_the_plain_scan(self, spark, sf_dir):
+        """The choice follows the session's profile, not its AQE
+        setting: a low-latency child (what the operator entries use) and
+        a plain child with AQE turned off keep the exchange."""
+        from shaper_spark.session import low_latency_session, register_sf_tables
+
+        plain = spark.newSession()
+        plain.conf.set("spark.sql.adaptive.enabled", "false")
+        sql = "SELECT o_orderpriority, count(*) AS n FROM orders GROUP BY 1"
+        for child in (low_latency_session(spark), plain):
+            register_sf_tables(child, sf_dir)
+            plan = self._plan(child.sql(sql))
+            assert "Coalesce" not in plan and "Exchange" in plan
