@@ -60,13 +60,12 @@ from pyspark.sql import SparkSession
 
 from . import sqltool, ui
 from .auth import Actor, AuthError, AuthInfo, AuthService
-from .engine import query_dashboard
+from .engine import _prepare_query, _VarState, query_dashboard
 from .folders import FolderService
 from .exports import stream_csv, stream_dashboard_export
 from .ingest import IngestBuffer
 from .introspect import get_schema
 from .metastore import Metastore
-from .rewrite import rewrite_statement
 from .tasks import TaskScheduler
 
 __all__ = ["ShaperServer"]
@@ -1221,22 +1220,11 @@ class ShaperServer:
                 fmt = filename.rsplit(".", 1)[-1].lower()
                 if fmt not in ("csv", "json", "xlsx"):
                     return self._json(400, {"error": f"unsupported format {fmt}"})
-                statements = [
-                    s
-                    for s in sqltool.split_sql_queries(
-                        sqltool.strip_sql_comments(sql)
-                    )
-                    if s.strip()
-                ]
-                if len(statements) != 1:
-                    return self._json(
-                        400, {"error": "exactly one SQL statement required"}
-                    )
-                if not sqltool.is_allowed_statement(statements[0]):
-                    return self._json(403, {"error": "statement not allowed"})
+                df = self._adhoc_frame(sql)
+                if df is None:
+                    return None
                 from .exports import stream_json, write_xlsx
 
-                df = outer.spark.sql(rewrite_statement(statements[0]).sql)
                 out: Any = io.BytesIO() if fmt == "xlsx" else io.StringIO()
                 {"csv": stream_csv, "json": stream_json, "xlsx": write_xlsx}[
                     fmt
@@ -1259,11 +1247,10 @@ class ShaperServer:
                 self.end_headers()
                 self.wfile.write(data)
 
-            def _sql(self):
-                """POST /api/sql: exactly one read-only statement → CSV
-                (reference server/web/handler/sql.go:44-76)."""
-                body = json.loads(self._read_body() or b"{}")
-                sql = str(body.get("sql") or "")
+            def _adhoc_frame(self, sql: str):
+                """The DataFrame of an ad-hoc request's one read-only
+                statement, prepared as a dashboard statement is; None
+                once a 400 or 403 is answered."""
                 statements = [
                     s
                     for s in sqltool.split_sql_queries(
@@ -1272,12 +1259,25 @@ class ShaperServer:
                     if s.strip()
                 ]
                 if len(statements) != 1:
-                    return self._json(
+                    self._json(
                         400, {"error": "exactly one SQL statement required"}
                     )
+                    return None
                 if not sqltool.is_allowed_statement(statements[0]):
-                    return self._json(403, {"error": "statement not allowed"})
-                df = outer.spark.sql(rewrite_statement(statements[0]).sql)
+                    self._json(403, {"error": "statement not allowed"})
+                    return None
+                df, _ = _prepare_query(
+                    outer.spark, statements[0].strip(), _VarState(), {}
+                )
+                return df
+
+            def _sql(self):
+                """POST /api/sql: exactly one read-only statement → CSV
+                (reference server/web/handler/sql.go:44-76)."""
+                body = json.loads(self._read_body() or b"{}")
+                df = self._adhoc_frame(str(body.get("sql") or ""))
+                if df is None:
+                    return None
                 buf = io.StringIO()
                 stream_csv(df, buf)
                 data = buf.getvalue().encode()

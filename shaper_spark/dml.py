@@ -27,6 +27,8 @@ import re
 
 from pyspark.sql import SparkSession, functions as F
 
+from .rewrite import _split_top_level_args
+
 __all__ = ["try_execute_dml", "alter_rename_column"]
 
 _DELETE_RE = re.compile(
@@ -37,29 +39,6 @@ _UPDATE_RE = re.compile(
     r"^\s*UPDATE\s+(`[^`]+`|[A-Za-z_][\w.]*)\s+SET\s+(.*)$",
     re.IGNORECASE | re.DOTALL,
 )
-
-
-def _split_top_level(text: str, sep: str) -> list[str]:
-    """Split on a separator at paren/quote depth zero."""
-    parts, depth, start, i = [], 0, 0, 0
-    in_str: str | None = None
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch == sep:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return parts
 
 
 def _find_top_level_word(text: str, word: str) -> int:
@@ -189,7 +168,7 @@ def try_execute_dml(
                 cond = rest[wi + len("WHERE") :].strip()
                 rest = rest[:wi].strip()
         assignments: dict[str, str] = {}
-        for part in _split_top_level(rest, ","):
+        for part in _split_top_level_args(rest):
             eq = part.find("=")
             if eq < 0:
                 return None

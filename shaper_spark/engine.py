@@ -27,8 +27,9 @@ import time
 import urllib.parse
 from collections import OrderedDict
 from concurrent.futures import Future, ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1434,11 +1435,13 @@ _HEADER_RENDER_TYPES = frozenset(
 _PLAIN_QUERY_HEAD_RE = re.compile(
     r"\(*\s*(SELECT|WITH|FROM|VALUES)\b", re.IGNORECASE
 )
-# Casts that can define a variable (widgets) or mark the next statement as
-# a download target. Matched as bare words anywhere in the text, so both
+# Casts that can define a variable (widgets), mark the next statement as
+# a download target or hide the statements after them (an empty section
+# title). Matched as bare words anywhere in the text, so both
 # ``::DROPDOWN`` and ``CAST(x AS DROPDOWN)`` count.
 _DEFINING_CAST_RE = re.compile(
-    r"\b(?:DROPDOWN(?:_MULTI)?|DATEPICKER(?:_FROM|_TO)?|INPUT|DOWNLOAD_\w+)\b",
+    r"\b(?:DROPDOWN(?:_MULTI)?|DATEPICKER(?:_FROM|_TO)?|INPUT|DOWNLOAD_\w+"
+    r"|SECTION)\b",
     re.IGNORECASE,
 )
 # nextval/currval deal sequence values per evaluation, so their order is
@@ -1459,8 +1462,8 @@ class _Statement:
     sets_var: str | None  # SET VARIABLE target
     # runs through _prepare_query + _collect_query, so it may run ahead
     prefetchable: bool
-    # may define a variable or mark a download: nothing after it runs
-    # ahead until it is assembled
+    # may define a variable, mark a download or hide a section: nothing
+    # after it runs ahead until it is assembled or predicted
     stops_walk: bool
 
 
@@ -1572,8 +1575,9 @@ _WIDGET_RENDER_TYPES = frozenset(
 
 
 class _WidgetResults:
-    """The last result of each widget statement, so the prefetch walk
-    can predict the variables a widget defines instead of stopping at it.
+    """The last result of each widget statement and section title, so
+    the prefetch walk can predict the variables a widget defines, and
+    whether a title shows the statements after it, instead of stopping.
 
     Entries are keyed by (session, variable-substituted statement text),
     hold the session object as the plan cache does, and are stamped
@@ -1627,7 +1631,8 @@ class _WidgetResults:
     ) -> _VarState | None:
         """``vars_`` plus what the widget with substituted ``text``
         would define, or None when there is no current entry or
-        ``_collect_vars`` rejects this request's params."""
+        ``_collect_vars`` rejects this request's params. A section
+        title predicts ``vars_`` itself if its entry had a row."""
         key = (id(spark), text)
         with self._lock:
             entry = self._entries.get(key)
@@ -1637,6 +1642,8 @@ class _WidgetResults:
         _, generation, render_type, columns, rows = entry
         if generation != _generation():
             return None
+        if render_type == "section":
+            return vars_ if rows else None
         predicted = vars_.copy()
         try:
             _collect_vars(predicted, render_type, params, columns, rows)
@@ -1675,42 +1682,57 @@ def query_dashboard(
     max_rows: int = QUERY_MAX_ROWS,
 ) -> GetResult:
     """Execute a ``;``-separated dashboard script and build the render tree."""
-    params = params or {}
-    result = GetResult()
+    statements = sqltool.split_sql_queries(sqltool.strip_sql_comments(content))
+    with _rendering(
+        spark, statements, params, variables, dashboard_id, max_rows
+    ) as walk:
+        return walk.result
 
-    clean = sqltool.strip_sql_comments(content)
-    statements = sqltool.split_sql_queries(clean)
 
-    vars_ = _VarState(variables)
-    defined_vars = vars_.defined()
-    unset_vars: list[str] = []
-    unset_seen: set[str] = set()
-    download_link_params: dict[str, Any] = {}
-    macros: dict[str, _Macro] = {}
-    min_ms_all: int | None = None
-    max_ms_all: int | None = None
+@dataclass
+class _Walk:
+    """What one render walk over a script leaves for its caller: the
+    render tree, the variables and macros after the last statement, and
+    the dashboards its PDF download links point at."""
+
+    vars: _VarState
+    result: GetResult = field(default_factory=GetResult)
+    macros: dict[str, _Macro] = field(default_factory=dict)
+    pdf_targets: list[str] = field(default_factory=list)
     # Temp views a dashboard creates are session-scoped and would leak
     # into later renders on the shared session (the reference gets
     # isolation from per-connection/per-request DuckDB instances,
     # app.go:238-334); dropping them afterwards restores that contract.
-    created_views: list[str] = []
+    created_views: list[str] = field(default_factory=list)
     # statements launched ahead, by position among the non-empty ones
-    launched: dict[int, _Launched] = {}
+    launched: dict[int, _Launched] = field(default_factory=dict)
 
+
+@contextmanager
+def _rendering(
+    spark: SparkSession,
+    statements: list[str],
+    params: dict[str, Any] | None,
+    variables: dict[str, Any] | None,
+    dashboard_id: str,
+    max_rows: int,
+) -> Iterator[_Walk]:
+    """Walk ``statements`` as a render does and yield the walk. The temp
+    views it created stay until the block exits, so a caller can still
+    prepare a statement that reads them (an export target)."""
+    walk = _Walk(_VarState(variables))
     try:
-        return _query_dashboard_loop(
-            spark, statements, params, dashboard_id, max_rows, result,
-            vars_, defined_vars, unset_vars, unset_seen,
-            download_link_params, macros, min_ms_all, max_ms_all,
-            created_views, launched,
+        _query_dashboard_loop(
+            spark, statements, params or {}, dashboard_id, max_rows, walk
         )
+        yield walk
     finally:
         # Unstarted collects are dropped; running ones read this render's
         # temp views, so they finish before the views go.
-        for ahead in launched.values():
+        for ahead in walk.launched.values():
             ahead.future.cancel()
-        wait([ahead.future for ahead in launched.values()])
-        for view in created_views:
+        wait([ahead.future for ahead in walk.launched.values()])
+        for view in walk.created_views:
             try:
                 spark.catalog.dropTempView(view)
             except Exception:
@@ -1723,18 +1745,16 @@ def _query_dashboard_loop(
     params: dict[str, Any],
     dashboard_id: str,
     max_rows: int,
-    result: GetResult,
-    vars_: _VarState,
-    defined_vars: set[str],
-    unset_vars: list[str],
-    unset_seen: set[str],
-    download_link_params: dict[str, Any],
-    macros: dict[str, _Macro],
-    min_ms_all: int | None,
-    max_ms_all: int | None,
-    created_views: list[str],
-    launched: dict[int, _Launched],
-) -> GetResult:
+    walk: _Walk,
+) -> None:
+    result, vars_, macros = walk.result, walk.vars, walk.macros
+    created_views, launched = walk.created_views, walk.launched
+    defined_vars = vars_.defined()
+    unset_vars: list[str] = []
+    unset_seen: set[str] = set()
+    download_link_params: dict[str, Any] = {}
+    min_ms_all: int | None = None
+    max_ms_all: int | None = None
     next_label = ""
     hide_next_content_section = False
     next_is_download = False
@@ -1754,17 +1774,21 @@ def _query_dashboard_loop(
         """When stmts[pos] is about to run, prepare (here, in script
         order) and submit every statement from the frontier on that
         cannot be affected by what assembly still has to do. The walk
-        passes a widget only with a prediction of what it defines."""
+        passes a widget only with a prediction of what it defines, and a
+        section title only if its last result showed the section."""
         nonlocal frontier, walk_vars
         if frontier <= pos:  # assembly caught up: nothing is predicted
             frontier, walk_vars = pos, vars_
-        if macros:  # a macro body can hide a widget cast
+        # A macro body can hide a widget or section cast. In a hidden
+        # section the statements that pass the can_start_section text
+        # test include plain ones, which do not end it.
+        if macros or hide_next_content_section:
             return
         while frontier < len(stmts):
             if frontier > pos and stmts[frontier - 1].stops_walk:
-                widget = stmts[frontier - 1].sql
+                stop = stmts[frontier - 1].sql
                 predicted = _WIDGET_RESULTS.predict(
-                    spark, walk_vars.substitute(widget), walk_vars, params
+                    spark, walk_vars.substitute(stop), walk_vars, params
                 )
                 if predicted is None:
                     return
@@ -1837,6 +1861,10 @@ def _query_dashboard_loop(
             continue
 
         if is_section_title(columns, rows):
+            _WIDGET_RESULTS.remember(
+                spark, vars_.substitute(sql_string), generation,
+                "section", columns, rows,
+            )
             if (
                 not result.sections
                 or result.sections[-1].type != "header"
@@ -1882,9 +1910,11 @@ def _query_dashboard_loop(
             col.type = map_wire_type(col, rows, ci)
         query.columns = columns
 
-        _build_download_links(
+        pdf_target = _build_download_links(
             query, rinfo, dashboard_id, query_index, params, download_link_params
         )
+        if pdf_target is not None:
+            walk.pdf_targets.append(pdf_target)
 
         if rinfo.type in _WIDGET_RENDER_TYPES:
             _WIDGET_RESULTS.remember(
@@ -1922,7 +1952,6 @@ def _query_dashboard_loop(
     result.header_image = header_image or None
     result.footer_link = footer_link or None
     result.unset_variables = unset_vars
-    return result
 
 
 def _render_to_dict(r: RenderInfo) -> dict[str, Any]:
@@ -2663,10 +2692,13 @@ def _run_query(
     if upper.startswith(("UPDATE", "DELETE")):
         # Task DML on warehouse tables — copy-on-write rewrite (the
         # statement gate already confines these to tasks; reference
-        # tasks run arbitrary DML, run_task.go:67-258).
+        # tasks run arbitrary DML, run_task.go:67-258). The SET and WHERE
+        # expressions are DuckDB dialect like any other statement's.
         from .dml import try_execute_dml
 
-        dml_result = try_execute_dml(spark, vars_.substitute(sql_string))
+        dml_result = try_execute_dml(
+            spark, rewrite_statement(vars_.substitute(sql_string)).sql
+        )
         if dml_result is not None:
             names, rows = dml_result
             return [
@@ -2693,9 +2725,11 @@ def _prepare_query(
 ) -> tuple[DataFrame, dict[int, str]]:
     """Text stage and analysis of a plain query: variables, macros, the
     expanders, ``rewrite_statement`` and the plan cache. Returns the
-    analyzed DataFrame and its column tags; nothing is collected. The
-    expanders register temp views and bump the plan cache, so callers
-    prepare a script's statements in script order."""
+    analyzed DataFrame and its column tags; nothing is collected. Every
+    read-only statement takes this path: rendered, exported or sent to
+    an ad-hoc route. The expanders register temp views and bump the
+    plan cache, so callers prepare a script's statements in script
+    order."""
     sub = vars_.substitute(sql_string)
     sub = _expand_macros(sub, macros)
     from .enums import expand_enum_surface
@@ -2811,9 +2845,15 @@ def _build_download_links(
     query_index: int,
     params: dict[str, Any],
     download_link_params: dict[str, Any],
-) -> None:
+) -> str | None:
+    """Turn the download column into a link; returns the dashboard a PDF
+    link points at (an ``::ID`` column, else this one)."""
     if not rinfo.download or not query.rows:
-        return
+        return None
+    target_id = dashboard_id
+    if rinfo.download == "pdf" and rinfo.download_id_index is not None:
+        idv = query.rows[0][rinfo.download_id_index]
+        target_id = idv if isinstance(idv, str) else ""
     for ci, col in enumerate(query.columns):
         if col.tag != "download":
             continue
@@ -2831,14 +2871,11 @@ def _build_download_links(
             ).decode()
             link_params["query_id"] = str(query_index + 1)
         qs = "?" + urllib.parse.urlencode(link_params) if link_params else ""
-        target_id = dashboard_id
-        if rinfo.download == "pdf" and rinfo.download_id_index is not None:
-            idv = query.rows[0][rinfo.download_id_index]
-            target_id = idv if isinstance(idv, str) else ""
         query.rows[0][ci] = (
             f"api/dashboards/{target_id}/download/"
             f"{urllib.parse.quote(filename)}.{rinfo.download}{qs}"
         )
+    return target_id if rinfo.download == "pdf" else None
 
 
 def _collect_download_link_params(

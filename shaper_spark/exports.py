@@ -1,5 +1,7 @@
 """Exports: streaming CSV / JSON, in-memory XLSX, and the download-query
-resolution + variable-replay protocol around them.
+resolution + variable-replay protocol around them. Replay is the render
+walk itself (``engine._rendering``) over the statements before the
+target, and the target is prepared like any dashboard statement.
 
 Reference behavior being re-expressed (not copied):
   * resolveDownloadQueryID — server/core/stream_query.go:29-65
@@ -30,20 +32,7 @@ from typing import IO, Any, Iterable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import sqltool
-from .engine import (
-    _collect_vars,
-    _execute_side_effect,
-    _Macro,
-    _run_query,
-    _VarState,
-)
-from .render import (
-    can_start_section,
-    get_render_info,
-    is_label,
-    is_section_title,
-    map_tag,
-)
+from .engine import QUERY_MAX_ROWS, _prepare_query, _rendering, _VarState
 
 __all__ = [
     "resolve_download_query_id",
@@ -105,50 +94,13 @@ def replay_var_state(
     statements: list[str],
     params: dict[str, Any] | None = None,
     variables: dict[str, Any] | None = None,
-    max_rows: int = 3000,
+    max_rows: int = QUERY_MAX_ROWS,
 ) -> _VarState:
-    """Re-execute the statements *before* a download target so its
-    variables (dropdown selections, datepickers, SET VARIABLE, …) are in
-    place — the reference's getVarPrefix loop."""
-    params = params or {}
-    vars_ = _VarState(variables)
-    macros: dict[str, _Macro] = {}
-    next_is_download = False
-    hide_next_content_section = False
-    for query_index, sql_string in enumerate(statements):
-        sql_string = sql_string.strip()
-        if not sql_string:
-            continue
-        if not sqltool.is_allowed_statement(sql_string):
-            raise ValueError(f"disallowed SQL statement in query {query_index + 1}")
-        if next_is_download:
-            next_is_download = False
-            continue
-        # Queries under an empty SECTION TITLE never run in the
-        # reference (get_dashboard.go:443-467) — their variables must
-        # not be collected here either.
-        if (
-            hide_next_content_section
-            and not sqltool.is_side_effect(sql_string)
-            and not can_start_section(sql_string)
-        ):
-            continue
-        if sqltool.is_side_effect(sql_string):
-            _execute_side_effect(spark, sql_string, vars_, macros)
-            continue
-        columns, rows = _run_query(spark, sql_string, vars_, macros, max_rows)
-        if is_label(columns, rows):
-            continue
-        if is_section_title(columns, rows):
-            hide_next_content_section = len(rows) == 0
-            continue
-        rinfo = get_render_info(columns, rows, "", [])
-        if rinfo.download:
-            next_is_download = True
-        for ci, col in enumerate(columns):
-            col.tag = map_tag(ci, rinfo)
-        _collect_vars(vars_, rinfo.type, params, columns, rows)
-    return vars_
+    """The variables (dropdown selections, datepickers, SET VARIABLE, …)
+    after rendering ``statements`` — the reference's getVarPrefix
+    replay. Temp views the statements create are gone on return."""
+    with _rendering(spark, statements, params, variables, "", max_rows) as walk:
+        return walk.vars
 
 
 def validate_dashboard_download(
@@ -159,58 +111,18 @@ def validate_dashboard_download(
     params: dict[str, Any] | None = None,
     variables: dict[str, Any] | None = None,
 ) -> bool:
-    """Does this dashboard contain a PDF-download button pointing at
+    """Does this dashboard render a PDF-download button pointing at
     ``target_dashboard_id``? (reference ValidateDashboardDownload,
     get_dashboard.go:402-519 — gates minting download JWTs for other
     dashboards). A DOWNLOAD_PDF with an ``::ID`` column targets that id;
-    without one it targets the source dashboard itself."""
-    params = params or {}
-    vars_ = _VarState(variables)
-    macros: dict[str, _Macro] = {}
-    next_is_download = False
-    hide_next_content_section = False
-    clean = sqltool.strip_sql_comments(content)
-    for query_index, sql_string in enumerate(sqltool.split_sql_queries(clean)):
-        sql_string = sql_string.strip()
-        if not sql_string:
-            continue
-        if not sqltool.is_allowed_statement(sql_string):
-            raise ValueError(f"disallowed SQL statement in query {query_index + 1}")
-        if next_is_download:
-            next_is_download = False
-            continue
-        # A DOWNLOAD_PDF inside a hidden (empty-SECTION-TITLE) section is
-        # never rendered by the reference, so it must not validate as a
-        # download target either (get_dashboard.go:443-467).
-        if (
-            hide_next_content_section
-            and not sqltool.is_side_effect(sql_string)
-            and not can_start_section(sql_string)
-        ):
-            continue
-        if sqltool.is_side_effect(sql_string):
-            _execute_side_effect(spark, sql_string, vars_, macros)
-            continue
-        columns, rows = _run_query(spark, sql_string, vars_, macros, 3000)
-        if is_label(columns, rows):
-            continue
-        if is_section_title(columns, rows):
-            hide_next_content_section = len(rows) == 0
-            continue
-        rinfo = get_render_info(columns, rows, "", [])
-        if rinfo.download == "pdf":
-            target = source_dashboard_id
-            if rinfo.download_id_index is not None and rows:
-                v = rows[0][rinfo.download_id_index]
-                target = v if isinstance(v, str) else ""
-            if target == target_dashboard_id:
-                return True
-        if rinfo.download in ("csv", "xlsx", "json"):
-            next_is_download = True
-        for ci, col in enumerate(columns):
-            col.tag = map_tag(ci, rinfo)
-        _collect_vars(vars_, rinfo.type, params, columns, rows)
-    return False
+    without one it targets the source dashboard itself. The script is
+    rendered in full, so one whose render fails validates nothing."""
+    statements = sqltool.split_sql_queries(sqltool.strip_sql_comments(content))
+    with _rendering(
+        spark, statements, params, variables, source_dashboard_id,
+        QUERY_MAX_ROWS,
+    ) as walk:
+        return target_dashboard_id in walk.pdf_targets
 
 
 # ---------------------------------------------------------------------------
@@ -491,12 +403,13 @@ def stream_dashboard_export(
     variables: dict[str, Any] | None = None,
 ) -> int:
     """Export one query of a dashboard script as csv/json/xlsx: split the
-    script, resolve the target statement, replay preceding statements for
-    variables, then stream. Returns row count."""
-    from .rewrite import rewrite_statement
-
-    clean = sqltool.strip_sql_comments(content)
-    statements = sqltool.split_sql_queries(clean)
+    script, resolve the target statement, render the statements before
+    it for their variables, then prepare and stream the target while
+    the temp views they created still exist. Returns row count."""
+    streamers = {"csv": stream_csv, "json": stream_json, "xlsx": write_xlsx}
+    if fmt not in streamers:
+        raise ValueError(f"unsupported export format: {fmt}")
+    statements = sqltool.split_sql_queries(sqltool.strip_sql_comments(content))
     if query_id == -1:
         query_id = resolve_download_query_id(statements, fmt)
     if not 0 <= query_id < len(statements):
@@ -505,13 +418,8 @@ def stream_dashboard_export(
     if not sqltool.is_allowed_statement(target):
         raise ValueError(f"disallowed SQL statement in query {query_id + 1}")
 
-    vars_ = replay_var_state(spark, statements[:query_id], params, variables)
-    rewritten = rewrite_statement(vars_.substitute(target)).sql
-    df = spark.sql(rewritten)
-    if fmt == "csv":
-        return stream_csv(df, writer)
-    if fmt == "json":
-        return stream_json(df, writer)
-    if fmt == "xlsx":
-        return write_xlsx(df, writer)
-    raise ValueError(f"unsupported export format: {fmt}")
+    with _rendering(
+        spark, statements[:query_id], params, variables, "", QUERY_MAX_ROWS
+    ) as walk:
+        df, _ = _prepare_query(spark, target.strip(), walk.vars, walk.macros)
+        return streamers[fmt](df, writer)

@@ -41,6 +41,7 @@ import re
 
 from pyspark.sql import SparkSession
 
+from .rewrite import _split_top_level_args
 from .tablefuncs import _quoted_spans
 
 __all__ = ["expand_file_functions"]
@@ -128,41 +129,6 @@ def _spark_type(duck_type: str) -> str:
     return _TYPE_MAP.get(duck_type.strip().lower(), duck_type)
 
 
-def _split_args(argstr: str) -> list[str]:
-    """Split a call's argument list on top-level commas (quote- and
-    bracket-aware)."""
-    parts: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    i, n = 0, len(argstr)
-    while i < n:
-        c = argstr[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if argstr[j] == "'" and not (
-                    j + 1 < n and argstr[j + 1] == "'"
-                ):
-                    break
-                j += 2 if argstr[j] == "'" else 1
-            cur.append(argstr[i : j + 1])
-            i = j + 1
-            continue
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        if c == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur and "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def _find_close(sql: str, open_pos: int) -> int:
     """Index of the ')' closing the '(' at open_pos (quote-aware)."""
     depth = 0
@@ -199,14 +165,12 @@ def _unquote(lit: str) -> str:
 
 
 def _parse_call(fn: str, argstr: str) -> tuple[list[str], dict[str, str]]:
-    args = _split_args(argstr)
+    args = _split_top_level_args(argstr)
     if not args:
         raise FileFunctionError(f"{fn}() needs a file path")
     first = args[0].strip()
     if first.startswith("["):
-        paths = [
-            _unquote(p) for p in _split_args(first[1:-1]) if p.strip()
-        ]
+        paths = [_unquote(p) for p in _split_top_level_args(first[1:-1])]
     else:
         paths = [_unquote(first)]
     opts: dict[str, str] = {}

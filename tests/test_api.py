@@ -243,6 +243,21 @@ class TestCrudRoutes:
         assert status == 200
         assert json.loads(body) == [{"n": 7}]
 
+    @pytest.mark.parametrize("route", ["/api/sql", "/api/download/out.csv"])
+    def test_adhoc_sql_prepared_like_a_dashboard(self, server, spark, route):
+        """The ad-hoc routes run the dashboard text stage: UNION ALL BY
+        NAME returns the rows a dashboard renders."""
+        from shaper_spark.engine import query_dashboard
+
+        sql = "SELECT 1 AS a, 'x' AS b UNION ALL BY NAME SELECT 'y' AS b, 2 AS a"
+        (query,) = query_dashboard(spark, sql).sections[0].queries
+        assert sorted(query.rows) == [[1, "x"], [2, "y"]]
+        status, body = _post(server, route, {"sql": sql})
+        assert status == 200
+        header, *lines = body.decode().strip().splitlines()
+        assert header == "a,b"
+        assert sorted(lines) == ["1,x", "2,y"]
+
     def test_adhoc_download_gated(self, server):
         assert _post(server, "/api/download/x.csv", {"sql": "DROP TABLE t"})[0] == 403
         assert _post(server, "/api/download/x.csv", {"sql": "SELECT 1; SELECT 2"})[0] == 400

@@ -4,6 +4,7 @@
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
 import io
 import json
@@ -235,6 +236,71 @@ class TestValidateDashboardDownload:
             )
             is True
         )
+
+
+class TestExportReplaysLikeRender:
+    """An export replays the statements before its target through the
+    render walk and prepares the target the way a render prepares a
+    statement, so it shows what the render shows."""
+
+    def _csv(self, spark, content, query_id, params=None):
+        buf = io.StringIO()
+        stream_dashboard_export(
+            spark, content, "csv", buf, query_id=query_id, params=params
+        )
+        return buf.getvalue()
+
+    def test_pdf_button_does_not_skip_the_next_statement(self, spark):
+        content = """
+        SELECT 'R'::DOWNLOAD_PDF;
+        SELECT x::DROPDOWN AS pick FROM (VALUES ('aa'), ('bb')) t(x) ORDER BY 1;
+        SELECT getvariable('pick') AS chosen;
+        """
+        assert self._csv(spark, content, 2, {"pick": "bb"}) == "chosen\nbb\n"
+
+    def test_temp_views_are_dropped(self, spark):
+        from shaper_spark.engine import query_dashboard
+
+        content = """
+        CREATE TEMP VIEW probe_v AS SELECT 1 AS x;
+        SELECT x FROM probe_v;
+        """
+        assert self._csv(spark, content, 1) == "x\n1\n"
+        assert not spark.catalog.tableExists("probe_v")
+        r = query_dashboard(spark, content)
+        assert r.sections[0].queries[0].rows == [[1]]
+
+    @pytest.mark.parametrize(
+        "target",
+        [
+            "SELECT COLUMNS('r_regionkey|r_name') FROM region",
+            "SELECT r_name AS name, r_regionkey AS k FROM region "
+            "UNION ALL BY NAME SELECT 9 AS k, 'x' AS name",
+        ],
+        ids=["columns", "union_by_name"],
+    )
+    def test_target_prepared_like_render(self, spark, target):
+        from shaper_spark.engine import query_dashboard
+
+        (query,) = query_dashboard(spark, target).sections[0].queries
+        header, *rows = csv.reader(io.StringIO(self._csv(spark, target, 0)))
+        assert header == [c.name for c in query.columns]
+        assert len(query.rows) == 5 + target.count("UNION")
+        assert sorted(rows) == sorted(
+            [format_value(v) for v in row] for row in query.rows
+        )
+
+    def test_validation_needs_a_rendering_script(self, spark):
+        from pyspark.errors import AnalysisException
+
+        from shaper_spark.exports import validate_dashboard_download
+
+        content = """
+        SELECT 'target-dash'::ID, 'Download'::DOWNLOAD_PDF;
+        SELECT * FROM table_that_does_not_exist;
+        """
+        with pytest.raises(AnalysisException, match="table_that_does_not_exist"):
+            validate_dashboard_download(spark, content, "target-dash")
 
 
 class TestStdlibXlsx:

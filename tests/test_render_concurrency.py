@@ -7,7 +7,9 @@ loop). Both must give the same ``to_dict()`` JSON, or raise the same
 exception type with the same message.
 """
 
+import csv
 import dataclasses
+import io
 import json
 import re
 import sys
@@ -17,6 +19,7 @@ import pytest
 
 from shaper_spark import engine
 from shaper_spark.engine import query_dashboard
+from shaper_spark.exports import format_value, stream_dashboard_export
 
 HOT_ORDERS = """
 SELECT 'Orders by priority'::SECTION;
@@ -463,3 +466,84 @@ def test_protected_variables_keep_entries_apart(spark, monkeypatch, widgets):
     assert want["F"] != want["O"]
     assert widgets.predictions > 0 and widgets.mispredictions == 0
     assert len(widgets._entries) == 2
+
+
+# ---------------------------------------------------------------------------
+# Exports replay the statements before their target through the render
+# walk, and prepare the target the way a render prepares a statement.
+# ---------------------------------------------------------------------------
+
+HIDDEN = """
+SELECT 'Hidden'::SECTION WHERE 1 = 0;
+SELECT count() AS rc_hidden FROM orders;
+SELECT 1 AS input_flag;
+SELECT max(o_totalprice) AS rc_hidden_too FROM orders;
+SELECT 'Visible'::SECTION;
+SELECT count() AS shown FROM nation;
+"""
+
+
+def test_hidden_section_is_never_prepared(spark, monkeypatch, widgets):
+    """Statements under an empty section title are never prepared: not
+    on a first or a repeated render, and not when an export replays
+    them. ``input_flag`` passes the can_start_section text test, so it
+    runs, but nothing runs ahead of it."""
+    prepared = _spy(monkeypatch, "_prepare_query")
+    first = _outcome(spark, HIDDEN, {})
+    second = _outcome(spark, HIDDEN, {})
+    buf = io.StringIO()
+    stream_dashboard_export(spark, HIDDEN, "csv", buf, query_id=5)
+    assert first[0] == "ok" and first == second
+    assert buf.getvalue() == "shown\n25\n"
+    assert any("input_flag" in sql for sql in prepared)
+    assert not any("rc_hidden" in sql for sql in prepared)
+    assert engine.statements_in_flight() == 0
+
+
+def _rendered_tables(spark, monkeypatch, script, params):
+    """(statement index, Query) of every table the render shows."""
+    built = []
+    build = engine._build_download_links
+
+    def spy(query, rinfo, dashboard_id, query_index, *args):
+        built.append((query_index, query))
+        return build(query, rinfo, dashboard_id, query_index, *args)
+
+    with monkeypatch.context() as m:
+        m.setattr(engine, "_build_download_links", spy)
+        tree = query_dashboard(spark, script, params=params, dashboard_id="rc")
+    shown = {
+        id(q)
+        for s in tree.sections
+        for q in s.queries
+        if q.render["type"] == "table"
+    }
+    return [(i, q) for i, q in built if id(q) in shown]
+
+
+def _same_cell(text, value):
+    if isinstance(value, (int, float)) and not isinstance(value, bool):
+        return float(text) == pytest.approx(value)
+    return text == format_value(value)
+
+
+def test_exports_equal_rendered_tables(spark, monkeypatch):
+    """Drift guard: every table a render of these scripts shows exports
+    to the same header and rows."""
+    checked = []
+    for case, (script, params) in sorted(CASES.items()):
+        if case.startswith("failing_"):
+            continue
+        for index, query in _rendered_tables(spark, monkeypatch, script, params):
+            buf = io.StringIO()
+            stream_dashboard_export(
+                spark, script, "csv", buf, query_id=index, params=params
+            )
+            header, *rows = csv.reader(io.StringIO(buf.getvalue()))
+            assert header == [c.name for c in query.columns], case
+            assert len(rows) == len(query.rows), case
+            for got, want in zip(rows, query.rows):
+                assert len(got) == len(want), case
+                assert all(map(_same_cell, got, want)), (case, got, want)
+            checked.append(case)
+    assert {"hot_events", "macro", "set_variable", "temp_view"} <= set(checked)

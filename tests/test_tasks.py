@@ -204,6 +204,22 @@ class TestExecuteTask:
         assert r.queries[-1].result_rows == [[1, None], [10, 0]]
 
 
+    def test_update_list_literal_with_commas(self, spark):
+        # the SET list splits at top-level commas only, not inside [...]
+        _fresh(spark, "task_dml4")
+        r = execute_task(
+            spark,
+            """
+            CREATE TABLE task_dml4 (id INT, n INT, tags ARRAY<INT>);
+            INSERT INTO task_dml4 VALUES (1, 1, array(1)), (2, 2, array(2));
+            UPDATE task_dml4 SET n = 4, tags = [5, 6] WHERE id = 1;
+            SELECT id, n, tags FROM task_dml4 ORDER BY id;
+            """,
+        )
+        assert r.success is True
+        assert r.queries[2].result_rows == [[1]]
+        assert r.queries[-1].result_rows == [[1, 4, [5, 6]], [2, 2, [2]]]
+
 class TestGetNextTaskRun:
     def test_interval_schedule(self, spark):
         next_run, stype = get_next_task_run(
