@@ -1617,19 +1617,20 @@ def _ann_recall_duck() -> str:
 
 
 def _q_summarize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUMMARIZE emulation — dialect statement handler (engine.py
-    ``_run_summarize``).  For the differential gate we project the
-    deterministic column subset shared with DuckDB's native SUMMARIZE:
+    """SUMMARIZE emulation — the statement as the engine prepares it
+    (engine.py ``_prepare_query`` → ``_run_summarize``).  For the
+    differential gate we project the deterministic column subset
+    shared with DuckDB's native SUMMARIZE:
     approx_unique (HLL vs DuckDB's sketch) and q25/q50/q75
     (percentile_approx vs quantile_cont) are approximation-specific by
     design and are excluded; min/max/avg/count/null_percentage are exact
     on both engines."""
     from pyspark.sql import functions as F
 
-    from shaper_spark.engine import _run_summarize
+    from shaper_spark.engine import _prepare_query, _VarState
 
     _prep(spark, sf_dir)
-    df = _run_summarize(spark, "SUMMARIZE nation")
+    df, _ = _prepare_query(spark, "SUMMARIZE nation", _VarState(), {})
     return df.select(
         "column_name",
         "min",

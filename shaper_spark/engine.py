@@ -34,6 +34,8 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from . import sqltool
+from .enums import expand_enum_surface
+from .filefuncs import expand_file_functions
 from .normalize import map_wire_type, normalize_rows
 from .render import (
     Column,
@@ -51,6 +53,8 @@ from .render import (
     map_tag,
 )
 from .rewrite import _GETVAR_RE, find_variable_refs, rewrite_statement
+from .sequences import expand_sequence_calls
+from .tablefuncs import expand_information_schema, expand_table_functions
 
 __all__ = ["query_dashboard", "GetResult", "Section", "Query", "QUERY_MAX_ROWS"]
 
@@ -1054,25 +1058,10 @@ def _expand_union_by_name_level(spark: SparkSession, sql: str):
     return op.join(selects) + tail, True
 
 
-def _run_summarize(spark: SparkSession, sql: str):
-    """Emulate DuckDB ``SUMMARIZE`` with a single distributed aggregate
-    pass, reshaped to one output row per column on the driver."""
-    target = sql.strip()[len("SUMMARIZE"):].strip()
-    # SUMMARIZE read_parquet('…') / SUMMARIZE 'file.parquet' — expand
-    # the file surface first (DuckDB admits both forms).
-    from .filefuncs import _CALL_RE, expand_file_functions
-
-    if _CALL_RE.match(target) or (
-        target.startswith("'") and target.rstrip(";").endswith("'")
-    ):
-        expanded, used = expand_file_functions(
-            spark, f"FROM {target}" if target.startswith("'") else target
-        )
-        target = expanded[5:] if expanded.upper().startswith("FROM ") else expanded
-    if target.upper().startswith(("SELECT", "FROM", "WITH", "VALUES")):
-        df = spark.sql(rewrite_statement(target).sql)
-    else:
-        df = spark.table(target)
+def _run_summarize(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Emulate DuckDB ``SUMMARIZE`` of ``df`` with a single distributed
+    aggregate pass, reshaped to one output row per column on the
+    driver."""
     from pyspark.sql import functions as F
 
     aggs = [F.count(F.lit(1)).alias("__total")]
@@ -1203,11 +1192,6 @@ class _VarState:
             return "NULL"
 
         return _GETVAR_RE.sub(repl, sql)
-
-
-def _eval_scalar(spark: SparkSession, expr: str) -> Any:
-    rows = spark.sql(f"SELECT {expr} AS v").collect()
-    return rows[0][0] if rows else None
 
 
 # ---------------------------------------------------------------------------
@@ -2061,9 +2045,9 @@ def _execute_side_effect(
     m = _SET_VARIABLE_RE.match(sql_string)
     if m:
         name = m.group(1) or m.group(2)
-        expr = vars_.substitute(m.group(3).strip())
-        expr = _expand_macros(expr, macros)
-        value = _eval_scalar(spark, rewrite_statement("SELECT " + expr).sql[7:])
+        df, _ = _prepare_query(spark, "SELECT " + m.group(3).strip(), vars_, macros)
+        rows = df.limit(1).collect()
+        value = rows[0][0] if rows else None
         if isinstance(value, list):
             vars_.lists[name] = [str(v) for v in value]
             vars_.raw.pop(name, None)
@@ -2097,34 +2081,19 @@ def _execute_side_effect(
 
         if try_execute_secret(spark, vars_.substitute(sql_string)):
             return
-    if upper.startswith(("ATTACH", "DETACH")):
-        from .attach import try_execute_attach
-        from .plancache import bump as _bump_attach
-
-        if try_execute_attach(spark, vars_.substitute(sql_string)):
-            _bump_attach()  # new/removed catalog entries
-            return
-        raise ValueError(f"Unsupported ATTACH/DETACH syntax: {sql_string!r}")
     if upper.startswith(("BEGIN", "COMMIT", "ROLLBACK", "ABORT")):
         return  # no transactions on Spark; per-statement atomicity only
-    from .plancache import bump
-
-    if _CREATE_TEMP_TABLE_RE.match(sql_string):
-        # Spark has no temp tables — a temp view gives the same
-        # statement-scoped namespace (lazily recomputed; CACHE TABLE would
-        # materialize it if a dashboard needs it hot).
-        sql_string = _CREATE_TEMP_TABLE_RE.sub(
-            lambda m2: "CREATE OR REPLACE TEMPORARY VIEW ", sql_string
-        )
-        rewritten = rewrite_statement(vars_.substitute(sql_string)).sql
-        spark.sql(rewritten)
-        bump()  # catalog changed: memoized analyzed plans are stale
-        return
-    # USE / CALL / CREATE TEMP VIEW — run through Spark directly.
-    rewritten = rewrite_statement(vars_.substitute(sql_string)).sql
-    rewritten = _expand_macros(rewritten, macros)
-    spark.sql(rewritten)
-    bump()  # side-effect statement: flush memoized analyzed plans
+    # USE / CALL / CREATE TEMP VIEW / CREATE TEMP TABLE. Spark has no
+    # temp tables — a temp view gives the same statement-scoped
+    # namespace (lazily recomputed; CACHE TABLE would materialize it if
+    # a dashboard needs it hot). _prepare_query runs the command and
+    # flushes memoized analyzed plans.
+    _prepare_query(
+        spark,
+        _CREATE_TEMP_TABLE_RE.sub("CREATE OR REPLACE TEMPORARY VIEW ", sql_string),
+        vars_,
+        macros,
+    )
 
 
 def _parse_search_path(raw: str) -> list[str]:
@@ -2181,7 +2150,7 @@ _COPY_EXT_FMT = {"parquet": "parquet", "csv": "csv", "json": "json",
 
 
 def _run_copy_to(
-    spark: SparkSession, text: str, macros: dict[str, _Macro]
+    spark: SparkSession, text: str, vars_: _VarState, macros: dict[str, _Macro]
 ) -> tuple[list[Column], list[list[Any]]]:
     """COPY <table|(query)> TO '<path>' (FORMAT …, HEADER …, DELIMITER
     …, COMPRESSION …) — single-file semantics like DuckDB (the path IS
@@ -2212,8 +2181,7 @@ def _run_copy_to(
         raise DashboardError(f"COPY: unsupported FORMAT {fmt!r}")
     if src.startswith("("):
         inner = src[1:-1] if src.endswith(")") else src[1:]
-        inner = _expand_macros(inner, macros)
-        df = spark.sql(rewrite_statement(inner).sql)
+        df, _ = _prepare_query(spark, inner, vars_, macros)
     else:
         df = spark.table(src)
     writer = df.coalesce(1).write.mode("overwrite")
@@ -2369,17 +2337,14 @@ def _run_query(
         # DuckDB's EXPLAIN shape: (explain_key, explain_value) — one
         # row with the plan tree (r11; Spark returns a single 'plan'
         # column).  The plan TEXT is engine-specific by nature.
-        from .rewrite import rewrite_statement as _rw
-
         body = re.sub(
-            r"^EXPLAIN\s+(ANALYZE\s+)?", "",
-            vars_.substitute(sql_string).strip(),
+            r"^EXPLAIN\s+(ANALYZE\s+)?", "", sql_string.strip(),
             flags=re.IGNORECASE,
         ).rstrip(";")
         analyze = bool(
             re.match(r"EXPLAIN\s+ANALYZE\b", upper)
         )
-        inner = spark.sql(_rw(body).sql)
+        inner, _ = _prepare_query(spark, body, vars_, macros)
         plan = inner._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -2424,18 +2389,15 @@ def _run_query(
         # DuckDB's DESCRIBE shape: (column_name, column_type, null,
         # key, default, extra) with DuckDB type spellings — pasted
         # dashboards key on those names (r11; Spark's native DESC
-        # returns col_name/data_type/comment).  rewrite_statement is
-        # the module-level import — a local import here would shadow
-        # it for the whole function scope.
+        # returns col_name/data_type/comment).
         from .udfs import _duckdb_typename
 
         body = re.sub(
-            r"^(?:DESCRIBE|DESC)\s+", "",
-            vars_.substitute(sql_string).strip(),
+            r"^(?:DESCRIBE|DESC)\s+", "", sql_string.strip(),
             flags=re.IGNORECASE,
         ).rstrip(";").strip()
-        if re.match(r"(?:SELECT|WITH|FROM|VALUES)\b", body, re.IGNORECASE):
-            schema = spark.sql(rewrite_statement(body).sql).schema
+        if _PLAIN_QUERY_HEAD_RE.match(body):
+            schema = _prepare_query(spark, body, vars_, macros)[0].schema
         else:
             schema = spark.table(body).schema
         cols = [
@@ -2522,7 +2484,7 @@ def _run_query(
         # to a single stream, then move the part file) because task
         # scripts feed the path to downstream consumers. A distributed
         # multi-file export is CREATE TABLE AS / EXPORT DATABASE.
-        return _run_copy_to(spark, vars_.substitute(sql_string), macros)
+        return _run_copy_to(spark, sql_string, vars_, macros)
     if upper.startswith(("EXPORT DATABASE", "IMPORT DATABASE")):
         # DuckDB snapshot statements (reference snapshots.go:233 issues
         # EXPORT DATABASE '<s3>' (FORMAT parquet, ...); restore.go runs
@@ -2705,16 +2667,40 @@ def _run_query(
                 Column(name=n, nullable=False, spark_type="bigint")
                 for n in names
             ], rows
-    if upper.startswith("SUMMARIZE"):
-        df = _run_summarize(spark, vars_.substitute(sql_string))
-        tags: dict[int, str] = {}
-    elif upper.startswith("PIVOT") and (
-        df := _run_duck_pivot(spark, vars_.substitute(sql_string))
-    ) is not None:
-        tags = {}
-    else:
-        df, tags = _prepare_query(spark, sql_string, vars_, macros)
+    df, tags = _prepare_query(spark, sql_string, vars_, macros)
     return _collect_query(df, tags, max_rows)
+
+
+# The head of a statement that wraps one query: ``CREATE [OR REPLACE]
+# [TEMP] TABLE|VIEW [IF NOT EXISTS] name [(cols)] AS <q>`` and ``INSERT
+# INTO|OVERWRITE [TABLE] name [(cols)] <q>``. A parenthesized source
+# query is not a column list.
+_NAME_PART = r'(?:[A-Za-z_][\w$]*|`[^`]+`|"[^"]+")'
+_NAME = rf"{_NAME_PART}(?:\s*\.\s*{_NAME_PART})*"
+_COLUMN_LIST = r"(?:\((?!\s*(?:SELECT|WITH|FROM|VALUES|TABLE)\b)[^()]*\)\s*)?"
+_QUERY_HEAD_RE = re.compile(
+    r"\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?(?:TABLE|VIEW)\s+"
+    rf"(?:IF\s+NOT\s+EXISTS\s+)?{_NAME}\s*{_COLUMN_LIST}AS\b\s*"
+    rf"|INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?{_NAME}\s*{_COLUMN_LIST})",
+    re.IGNORECASE,
+)
+
+# The relation expanders, in order. Each rewrites the query body and
+# returns ``(sql, bypass)``: ``bypass`` means the result reads state
+# that changes per call (registered temp views, file reads, sequence
+# values), so the statement skips the analyzed-plan cache.
+_RELATION_EXPANDERS = (
+    expand_table_functions,
+    expand_information_schema,
+    expand_file_functions,
+    _expand_positional_joins,
+    expand_sequence_calls,
+    _expand_nested_pivots,
+    _expand_union_by_name,
+    _expand_columns_macro,
+    _expand_star_replace_ordered,
+    _expand_recursive_unnest,
+)
 
 
 def _prepare_query(
@@ -2723,56 +2709,36 @@ def _prepare_query(
     vars_: _VarState,
     macros: dict[str, _Macro],
 ) -> tuple[DataFrame, dict[int, str]]:
-    """Text stage and analysis of a plain query: variables, macros, the
-    expanders, ``rewrite_statement`` and the plan cache. Returns the
-    analyzed DataFrame and its column tags; nothing is collected. Every
-    read-only statement takes this path: rendered, exported or sent to
-    an ad-hoc route. The expanders register temp views and bump the
-    plan cache, so callers prepare a script's statements in script
-    order."""
-    sub = vars_.substitute(sql_string)
-    sub = _expand_macros(sub, macros)
-    from .enums import expand_enum_surface
-
+    """The text stage and analysis of one statement: variables, macros,
+    the expanders, ``rewrite_statement`` and the plan cache. Returns the
+    analyzed DataFrame and its column tags; nothing is collected. This
+    is the only place DuckDB query text becomes Spark SQL: statements
+    that wrap a query (EXPLAIN, DESCRIBE, COPY, SET VARIABLE, SUMMARIZE)
+    prepare just that query here. The expanders register temp views and
+    bump the plan cache, so callers prepare a script's statements in
+    script order."""
+    if sql_string.lstrip().upper().startswith("SUMMARIZE"):
+        target = sql_string.strip()[len("SUMMARIZE"):].strip().rstrip(";")
+        if not _PLAIN_QUERY_HEAD_RE.match(target):
+            target = "FROM " + target
+        df, _ = _prepare_query(spark, target, vars_, macros)
+        return _run_summarize(spark, df), {}
+    sub = _expand_macros(vars_.substitute(sql_string), macros)
+    if sub.lstrip().upper().startswith("PIVOT") and (
+        df := _run_duck_pivot(spark, sub)
+    ) is not None:
+        return df, {}
+    # enum types map CREATE TABLE columns and guard INSERT values, so
+    # they see the whole statement; the relation expanders see only the
+    # query body
     sub = expand_enum_surface(spark, sub)
-    from .filefuncs import expand_file_functions
-    from .tablefuncs import (
-        expand_information_schema,
-        expand_table_functions,
-    )
-
-    sub, used_tablefuncs = expand_table_functions(spark, sub)
-    sub, used_infoschema = expand_information_schema(spark, sub)
-    used_tablefuncs = used_tablefuncs or used_infoschema
-    sub, used_filefuncs = expand_file_functions(spark, sub)
-    sub, used_posjoin = _expand_positional_joins(spark, sub)
-    used_filefuncs = used_filefuncs or used_posjoin
-    # nextval/currval deal MUTABLE registry state per evaluation —
-    # the used flag bypasses analysis memoization like file reads
-    from .sequences import expand_sequence_calls
-
-    sub, used_seq = expand_sequence_calls(spark, sub)
-    used_filefuncs = used_filefuncs or used_seq
-    # DuckDB PIVOT sugar inside a CTE body or derived table:
-    # materialize each "(PIVOT …)" group as a temp view so the
-    # enclosing query reads it like any other relation (DuckDB
-    # expands the same sugar to a macro before binding).
-    sub, used_pivot = _expand_nested_pivots(spark, sub)
-    sub, used_ubn = _expand_union_by_name(spark, sub)
-    sub, used_colmacro = _expand_columns_macro(spark, sub)
-    sub, used_replace = _expand_star_replace_ordered(spark, sub)
-    sub, used_runnest = _expand_recursive_unnest(spark, sub)
-    used_tablefuncs = (
-        used_tablefuncs
-        or used_pivot
-        or used_ubn
-        or used_colmacro
-        or used_replace
-        or used_runnest
-    )
-    sub = _reject_unsupported_duckisms(sub)
-    used_tablefuncs = used_tablefuncs or used_filefuncs
-    rw = rewrite_statement(sub)
+    m = _QUERY_HEAD_RE.match(sub)
+    head, body = (sub[: m.end()], sub[m.end() :]) if m else ("", sub)
+    bypass = False
+    for expand in _RELATION_EXPANDERS:
+        body, used = expand(spark, body)
+        bypass = bypass or used
+    rw = rewrite_statement(_reject_unsupported_duckisms(head + body))
     if rw.asof_joins:
         _asof_quadratic_guard(spark, rw, vars_)
     # Memoized analysis: dashboards re-serve identical statement
@@ -2781,39 +2747,22 @@ def _prepare_query(
     # every mutation path bump()s it. ONLY read-only statements are
     # cacheable — Spark runs commands (INSERT/CREATE/…, which tasks
     # route through here) eagerly inside spark.sql(), so a cache
-    # hit would silently skip re-executing them — and duckdb_*()
-    # catalog snapshots re-materialize per call, so they bypass the
-    # cache too. See plancache.
+    # hit would silently skip re-executing them. A search path makes
+    # resolution depend on session state the cache key does not
+    # carry, so it bypasses the cache too. See plancache.
     from .plancache import analyzed, bump, plan_is_command
 
-    head = rw.sql.lstrip("( \n\t").split(None, 1)
-    readonly_head = bool(head) and head[0].upper() in _READONLY_HEADS
-    if vars_.search_path:
-        # resolution depends on session state the cache key doesn't
-        # carry — bypass the cache while a search path is active
-        df = _sql_with_search_path(spark, rw.sql, vars_.search_path)
-        if not readonly_head or (
-            head[0].upper() == "WITH" and plan_is_command(df)
-        ):
-            bump()  # command executed eagerly under the search path
-    elif used_tablefuncs:
-        df = spark.sql(rw.sql)
-        if not readonly_head or (
-            head[0].upper() == "WITH" and plan_is_command(df)
-        ):
-            bump()
-    elif readonly_head:
+    words = rw.sql.lstrip("( \n\t").split(None, 1)
+    readonly = bool(words) and words[0].upper() in _READONLY_HEADS
+    if readonly and not bypass and not vars_.search_path:
         df = analyzed(spark, rw.sql)
-        # 'WITH cte AS (...) INSERT/MERGE ...' is valid SQL whose
-        # leading keyword looks read-only: the analyzer is the
-        # authority. analyzed() never memoizes command plans (each
-        # call re-executes), but the mutation must still flush
-        # previously cached plans.
-        if head[0].upper() == "WITH" and plan_is_command(df):
-            bump()
     else:
-        df = spark.sql(rw.sql)
-        bump()  # command statement: executed eagerly, mutates state
+        df = _sql_with_search_path(spark, rw.sql, vars_.search_path)
+    # 'WITH cte AS (...) INSERT/MERGE ...' is valid SQL whose leading
+    # keyword looks read-only: the analyzer is the authority. A
+    # command executed eagerly and mutated state, so flush.
+    if not readonly or (words[0].upper() == "WITH" and plan_is_command(df)):
+        bump()
     return df, rw.column_tags
 
 

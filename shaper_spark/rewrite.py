@@ -50,31 +50,22 @@ class RewriteResult:
 # Quote-aware scanning helpers
 # ---------------------------------------------------------------------------
 
+# A quoted span: a string literal, a double-quoted or a backquoted
+# identifier. A doubled quote char inside is an escaped one; an
+# unterminated span runs to the end of the text.
+_QUOTED_SPAN_RE = re.compile(
+    r"'(?:[^']|'')*'?|\"(?:[^\"]|\"\")*\"?|`(?:[^`]|``)*`?"
+)
+_QUOTE_STATE = {"'": 1, '"': 2, "`": 3}
+
+
 def _scan_states(sql: str) -> list[int]:
-    """Per-character state: 0 = code, 1 = in single quote, 2 = in double."""
+    """Per-character state: 0 = code, 1 = in single quote, 2 = in
+    double quote, 3 = in backquotes (the quote chars included)."""
     states = [0] * len(sql)
-    in_s = in_d = False
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'" and not in_d:
-            if in_s and i + 1 < n and sql[i + 1] == "'":
-                states[i] = states[i + 1] = 1
-                i += 2
-                continue
-            in_s = not in_s
-            states[i] = 1
-        elif c == '"' and not in_s:
-            if in_d and i + 1 < n and sql[i + 1] == '"':
-                states[i] = states[i + 1] = 2
-                i += 2
-                continue
-            in_d = not in_d
-            states[i] = 2
-        else:
-            states[i] = 1 if in_s else (2 if in_d else 0)
-        i += 1
+    for m in _QUOTED_SPAN_RE.finditer(sql):
+        start, end = m.span()
+        states[start:end] = [_QUOTE_STATE[sql[start]]] * (end - start)
     return states
 
 
@@ -142,9 +133,9 @@ def _operand_start(sql: str, cast_pos: int, states: list[int]) -> int:
             i -= 1
             while i >= 0 and states[i] != 0:
                 i -= 1
-        elif c == '"':
+        elif c in '"`':
             i -= 1
-            while i >= 0 and states[i] == 2:
+            while i >= 0 and states[i] == _QUOTE_STATE[c]:
                 i -= 1
         elif _IDENT_CHARS.match(c):
             while i >= 0 and _IDENT_CHARS.match(sql[i]):
@@ -1085,7 +1076,7 @@ def _rewrite_bracket_literals(sql: str) -> str:
             is_literal = True
             if j >= 0:
                 prev = sql[j]
-                if prev in (")", "]") or (states[j] == 2 and prev == '"'):
+                if prev in (")", "]") or (prev in '"`' and states[j] != 0):
                     is_literal = False
                 elif _IDENT_CHARS.match(prev):
                     # Take the whole previous word; keywords → literal.
@@ -1520,31 +1511,6 @@ _INT_LIT_RE = re.compile(r"^-?\d+$")
 _MAP_CALL_RE = re.compile(r"(?<![\w.])map\s*\(", re.IGNORECASE)
 
 
-def _split_top_args(s: str) -> list[str] | None:
-    """Split a call-argument string on top-level commas (quote- and
-    paren-aware); None when unbalanced."""
-    states = _scan_states(s)
-    parts: list[str] = []
-    depth = 0
-    last = 0
-    for i, c in enumerate(s):
-        if states[i] != 0:
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-            if depth < 0:
-                return None
-        elif c == "," and depth == 0:
-            parts.append(s[last:i])
-            last = i + 1
-    if depth != 0:
-        return None
-    parts.append(s[last:])
-    return parts
-
-
 def _call_end(sql: str, states: list[int], open_paren: int) -> int | None:
     """Index of the ')' matching ``sql[open_paren]`` ('('), or None."""
     depth = 0
@@ -1580,12 +1546,8 @@ def _rewrite_map_two_arrays(sql: str) -> str:
         end = _call_end(out, states, open_paren)
         if end is None:
             return out
-        args = _split_top_args(out[open_paren + 1 : end])
-        if (
-            args is not None
-            and len(args) == 2
-            and all(a.strip().lower().startswith("array(") for a in args)
-        ):
+        args = _split_top_level_args(out[open_paren + 1 : end])
+        if len(args) == 2 and all(a.lower().startswith("array(") for a in args):
             out = (
                 out[: m.start()]
                 + "map_from_arrays("
@@ -1821,13 +1783,13 @@ def _rewrite_list_aggregate(sql: str) -> str:
             end = _call_end(sql, states, open_paren)
             if end is None:
                 continue
-            args = _split_top_args(sql[open_paren + 1 : end])
-            if args is None or len(args) != 2:
+            args = _split_top_level_args(sql[open_paren + 1 : end])
+            if len(args) != 2:
                 continue
-            fname = args[1].strip().strip("'\"").lower()
+            fname = args[1].strip("'\"").lower()
             if fname not in _LIST_AGG_FNS:
                 continue
-            hit = (m.start(), end, args[0].strip(), fname)
+            hit = (m.start(), end, args[0], fname)
             break
         if hit is None:
             return sql
@@ -2812,16 +2774,18 @@ def _rewrite_star_replace(sql: str) -> str:
         end = _call_end(sql, states, open_paren)
         if end is None:
             return sql
-        items = _split_top_args(sql[open_paren + 1 : end]) or []
+        items = _split_top_level_args(sql[open_paren + 1 : end])
+        if not items:
+            return sql  # an empty list is not the simple form either
         cols = []
         for it in items:
-            am = re.search(r"\bAS\s+([\w`\"]+)\s*$", it.strip(), re.IGNORECASE)
+            am = re.search(r"\bAS\s+([\w`\"]+)\s*$", it, re.IGNORECASE)
             if am is None:
                 return sql  # not the simple form; leave untouched
             cols.append(am.group(1))
         repl = (
             "* EXCEPT (" + ", ".join(cols) + "), "
-            + ", ".join(it.strip() for it in items)
+            + ", ".join(items)
         )
         sql = sql[: m.start()] + repl + sql[end + 1 :]
 
@@ -2844,10 +2808,10 @@ def _rewrite_array_slice_fn(sql: str) -> str:
             end = _call_end(sql, states, open_paren)
             if end is None:
                 continue
-            args = _split_top_args(sql[open_paren + 1 : end])
-            if args is None or len(args) != 3:
+            args = _split_top_level_args(sql[open_paren + 1 : end])
+            if len(args) != 3:
                 continue
-            hit = (m.start(), end, [a.strip() for a in args])
+            hit = (m.start(), end, args)
             break
         if hit is None:
             return sql
@@ -2877,13 +2841,13 @@ def _rewrite_trim_two_arg(sql: str) -> str:
             end = _call_end(sql, states, open_paren)
             if end is None:
                 continue
-            args = _split_top_args(sql[open_paren + 1 : end])
-            if args is None or len(args) != 2:
+            args = _split_top_level_args(sql[open_paren + 1 : end])
+            if len(args) != 2:
                 continue
             # only swap once: detect the already-swapped marker
-            if args[1].strip().endswith("/*swapped*/"):
+            if args[1].endswith("/*swapped*/"):
                 continue
-            hit = (m.start(), end, m.group(1).lower(), [a.strip() for a in args])
+            hit = (m.start(), end, m.group(1).lower(), args)
             break
         if hit is None:
             return sql.replace(" /*swapped*/", "")

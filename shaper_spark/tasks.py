@@ -38,7 +38,13 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from . import sqltool
-from .engine import _get_schedule_time, _Macro, _run_query, _VarState
+from .engine import (
+    _execute_side_effect,
+    _get_schedule_time,
+    _Macro,
+    _run_query,
+    _VarState,
+)
 from .render import Column
 
 __all__ = [
@@ -315,6 +321,21 @@ class _ScriptTxGuard:
         self.guards = []
 
 
+def _run_statement(
+    spark: SparkSession,
+    sql_string: str,
+    vars_: _VarState,
+    macros: dict[str, _Macro],
+    max_rows: int,
+) -> tuple[list[Column], list[list[Any]]]:
+    """One script statement: a side effect changes the script's state
+    and returns nothing; any other statement returns its result."""
+    if sqltool.is_side_effect(sql_string):
+        _execute_side_effect(spark, sql_string, vars_, macros)
+        return [], []
+    return _run_query(spark, sql_string, vars_, macros, max_rows)
+
+
 def execute_task(
     spark: SparkSession,
     content: str,
@@ -364,14 +385,7 @@ def execute_task(
 
         start = time.monotonic()
         try:
-            if sqltool.is_side_effect(sql_string):
-                from .engine import _execute_side_effect
-
-                _execute_side_effect(spark, sql_string, vars_, macros)
-                columns: list[Column] = []
-                rows: list[list[Any]] = []
-            else:
-                columns, rows = _run_query(spark, sql_string, vars_, macros, max_rows)
+            columns, rows = _run_statement(spark, sql_string, vars_, macros, max_rows)
         except Exception as e:  # surface engine errors per-query, stop the task
             qres.duration_ms = int((time.monotonic() - start) * 1000)
             qres.error = str(e)
@@ -875,12 +889,13 @@ def run_init_sql(
     init_sql: str,
     env: dict[str, str] | None = None,
 ) -> None:
-    """Run startup SQL once per session. ``getenv('X')`` and ``${X}``
-    become string literals from the environment — the reference registers
-    a getenv() scalar UDF gated to init-time only (duckdb.go:14-57);
-    resolving at substitution time gives the same gate for free."""
-    from .rewrite import rewrite_statement
-
+    """Run startup SQL once per session, statement by statement as a
+    task runs them (the task dialect: CREATE TYPE, CREATE SEQUENCE,
+    COPY, …; variables and macros last for this script only).
+    ``getenv('X')`` and ``${X}`` become string literals from the
+    environment — the reference registers a getenv() scalar UDF gated
+    to init-time only (duckdb.go:14-57); resolving at substitution time
+    gives the same gate for free."""
     lookup = dict(os.environ)
     if env:
         lookup.update(env)
@@ -890,13 +905,9 @@ def run_init_sql(
 
     substituted = _GETENV_RE.sub(lambda m: env_literal(m.group(1)), init_sql)
     substituted = _ENVVAR_RE.sub(lambda m: env_literal(m.group(1))[1:-1], substituted)
-    ran_any = False
+    vars_ = _VarState()
+    macros: dict[str, _Macro] = {}
     for statement in sqltool.split_sql_queries(sqltool.strip_sql_comments(substituted)):
         statement = statement.strip()
         if statement:
-            spark.sql(rewrite_statement(statement).sql)
-            ran_any = True
-    if ran_any:
-        from .plancache import bump
-
-        bump()  # init SQL is DDL by nature: flush memoized plans
+            _run_statement(spark, statement, vars_, macros, TASK_MAX_ROWS)

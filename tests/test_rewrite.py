@@ -2799,3 +2799,46 @@ class TestWindowExclude:
                 "FROM t WINDOW w AS (ORDER BY y ROWS 1 PRECEDING "
                 "EXCLUDE CURRENT ROW)"
             )
+
+
+class TestBackquotedIdentifiers:
+    """Backquoted identifiers are quoted text to every pass and splitter."""
+
+    def test_splitter_keeps_backquoted_comma(self):
+        from shaper_spark.rewrite import _split_top_level_args
+
+        assert _split_top_level_args("`a,b` = 1, c = 2") == [
+            "`a,b` = 1",
+            "c = 2",
+        ]
+
+    def test_quote_inside_backquotes_does_not_open_a_string(self):
+        r = rewrite_statement("SELECT 1 AS `it's`, [1, 2] AS l")
+        assert r.sql == "SELECT 1 AS `it's`, array(1, 2) AS l"
+
+    def test_subscript_of_backquoted_column(self):
+        r = rewrite_statement("SELECT `l`[1] AS x FROM t")
+        assert r.sql == "SELECT try_element_at(`l`, 1) AS x FROM t"
+
+    def test_scan_states(self):
+        from shaper_spark.rewrite import _scan_states
+
+        assert _scan_states("a `b``c` 'd'") == [0, 0] + [3] * 6 + [0] + [1] * 3
+
+
+def test_folded_splitter_keeps_empty_and_unbalanced_calls():
+    """The passes that used their own splitter leave empty and unclosed
+    argument lists alone."""
+    for sql in (
+        "SELECT map() AS m",
+        "SELECT list_aggregate() AS a",
+        "SELECT * REPLACE () FROM t",
+        "SELECT array_slice() AS s",
+        "SELECT trim() AS t",
+        "SELECT trim(s, 'ab' FROM t",
+        "SELECT * REPLACE (a + 1 AS a FROM t",
+    ):
+        assert rewrite_statement(sql).sql == sql
+    assert rewrite_statement("SELECT btrim(s, 'a,b') FROM t").sql == (
+        "SELECT trim('a,b', s) FROM t"
+    )

@@ -315,6 +315,30 @@ class TestInitSQL:
         )
         assert spark.table("init_env2").collect()[0].a == ""
 
+    def test_enum_type_in_init_sql(self, spark):
+        run_init_sql(
+            spark,
+            "DROP TYPE IF EXISTS init_mood;"
+            "CREATE TYPE init_mood AS ENUM ('sad', 'ok');",
+        )
+        try:
+            r = execute_task(spark, "SELECT enum_last(NULL::init_mood) AS l;")
+            assert r.success and r.queries[0].result_rows == [["ok"]]
+        finally:
+            execute_task(spark, "DROP TYPE IF EXISTS init_mood;")
+
+    def test_sequence_in_init_sql(self, spark):
+        run_init_sql(
+            spark,
+            "DROP SEQUENCE IF EXISTS init_seq;"
+            "CREATE SEQUENCE init_seq START 5;",
+        )
+        try:
+            r = execute_task(spark, "SELECT nextval('init_seq') AS v;")
+            assert r.success and r.queries[0].result_rows == [[5]]
+        finally:
+            execute_task(spark, "DROP SEQUENCE IF EXISTS init_seq;")
+
 
 class TestMultiInstanceDedupe:
     """All instances schedule every task; a shared-metastore claim with
