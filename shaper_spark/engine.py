@@ -29,12 +29,12 @@ from collections import OrderedDict
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import sqltool
-from .enums import expand_enum_surface
+from .enums import expand_enum_surface, try_execute_type_ddl
 from .filefuncs import expand_file_functions
 from .normalize import map_wire_type, normalize_rows
 from .render import (
@@ -52,8 +52,13 @@ from .render import (
     is_section_title,
     map_tag,
 )
-from .rewrite import _GETVAR_RE, find_variable_refs, rewrite_statement
-from .sequences import expand_sequence_calls
+from .rewrite import (
+    _GETVAR_RE,
+    find_variable_refs,
+    lower_from_first,
+    rewrite_statement,
+)
+from .sequences import expand_sequence_calls, try_execute_sequence_ddl
 from .tablefuncs import expand_information_schema, expand_table_functions
 
 __all__ = ["query_dashboard", "GetResult", "Section", "Query", "QUERY_MAX_ROWS"]
@@ -67,16 +72,9 @@ _SET_VARIABLE_RE = re.compile(
 _RESET_VARIABLE_RE = re.compile(
     r"^\s*RESET\s+VARIABLE\s+(?:\"([^\"]+)\"|(\w+))\s*$", re.IGNORECASE
 )
-# DuckDB-style session search path (reference: app.go:560 prepends
-# SET search_path = 'main,"<internal>".main,system' to every query)
-_SET_SEARCH_PATH_RE = re.compile(
-    r"^\s*SET\s+search_path\s*=\s*'([^']*)'\s*;?\s*$", re.IGNORECASE
-)
-_RESET_SEARCH_PATH_RE = re.compile(
-    r"^\s*RESET\s+search_path\s*;?\s*$", re.IGNORECASE
-)
-# TEMP is optional (batch-26: tasks may CREATE MACRO without it — the
-# dashboard gate still admits only the TEMP forms, like the reference)
+# TEMP is optional: tasks may CREATE MACRO without it (the macro row of
+# _STATEMENT_KINDS matches both); the dashboard gate still admits only
+# the TEMP forms, like the reference
 _CREATE_MACRO_RE = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:(?:TEMP|TEMPORARY)\s+)?"
     r"(?:MACRO|FUNCTION)\s+"
@@ -1157,10 +1155,6 @@ class _VarState:
     def __init__(self, protected: dict[str, Any] | None = None):
         self.raw: dict[str, str] = {}
         self.lists: dict[str, list[str]] = {}
-        # DuckDB-style schema search path ("main,\"db\".main,system"),
-        # consulted when an unqualified table fails to resolve in the
-        # current namespace (reference: app.go:546-561)
-        self.search_path: list[str] = []
         self.protected: set[str] = set(protected or {})
         for k, v in (protected or {}).items():
             if isinstance(v, str):
@@ -1175,7 +1169,6 @@ class _VarState:
         out = _VarState()
         out.raw = dict(self.raw)
         out.lists = {k: list(v) for k, v in self.lists.items()}
-        out.search_path = list(self.search_path)
         out.protected = set(self.protected)
         return out
 
@@ -1414,8 +1407,8 @@ _HEADER_RENDER_TYPES = frozenset(
     {"dropdown", "dropdownMulti", "button", "datepicker", "daterangePicker", "input"}
 )
 
-# Leading keywords of statements that take _run_query's plain query path
-# (no EXPLAIN / DESCRIBE / SHOW / SUMMARIZE / PIVOT / COPY / DDL branch).
+# Leading keywords of plain queries (SUMMARIZE and PIVOT are not, and no
+# row of _STATEMENT_KINDS matches one).
 _PLAIN_QUERY_HEAD_RE = re.compile(
     r"\(*\s*(SELECT|WITH|FROM|VALUES)\b", re.IGNORECASE
 )
@@ -1453,18 +1446,18 @@ class _Statement:
 
 def _classify(index: int, sql: str) -> _Statement:
     allowed = sqltool.is_allowed_statement(sql)
-    side_effect = sqltool.is_side_effect(sql)
+    kind = _statement_kind(sql)
     m = _SET_VARIABLE_RE.match(sql)
     return _Statement(
         index=index,
         sql=sql,
         allowed=allowed,
-        side_effect=side_effect,
+        side_effect=kind is not None and kind.side_effect,
         refs=tuple(find_variable_refs(sql)),
         sets_var=(m.group(1) or m.group(2)) if m else None,
         prefetchable=(
             allowed
-            and not side_effect
+            and kind is None
             and _PLAIN_QUERY_HEAD_RE.match(sql) is not None
             and _SEQUENCE_CALL_RE.search(sql) is None
         ),
@@ -1806,9 +1799,10 @@ def _query_dashboard_loop(
             next_is_download = False
             continue
         if st.side_effect:
-            _execute_side_effect(
-                spark, sql_string, vars_, macros, created_views
-            )
+            vm = _TEMP_VIEW_NAME_RE.match(sql_string)
+            if vm:
+                created_views.append(vm.group(1).strip('"`'))
+            _run_query(spark, sql_string, vars_, macros, max_rows)
             continue
         if hide_next_content_section and not can_start_section(sql_string):
             continue
@@ -2022,152 +2016,262 @@ _TEMP_VIEW_NAME_RE = re.compile(
     re.IGNORECASE,
 )
 
+# ---------------------------------------------------------------------------
+# Statement kinds. Every handler takes (spark, sql, vars_, macros,
+# max_rows) and returns (columns, rows); side effects return ([], []).
+# A handler that declines a statement runs the plain query path itself.
+# ---------------------------------------------------------------------------
 
-def _execute_side_effect(
+
+def _run_plain(
     spark: SparkSession,
-    sql_string: str,
+    sql: str,
     vars_: _VarState,
     macros: dict[str, _Macro],
-    created_views: list[str] | None = None,
-) -> None:
-    if created_views is not None:
-        vm = _TEMP_VIEW_NAME_RE.match(sql_string.strip())
-        if vm:
-            created_views.append(vm.group(1).strip('"`'))
-    upper = sql_string.upper().strip()
-    m = _SET_SEARCH_PATH_RE.match(sql_string)
-    if m:
-        vars_.search_path = _parse_search_path(m.group(1))
-        return
-    if _RESET_SEARCH_PATH_RE.match(sql_string):
-        vars_.search_path = []
-        return
-    m = _SET_VARIABLE_RE.match(sql_string)
-    if m:
-        name = m.group(1) or m.group(2)
-        df, _ = _prepare_query(spark, "SELECT " + m.group(3).strip(), vars_, macros)
-        rows = df.limit(1).collect()
-        value = rows[0][0] if rows else None
-        if isinstance(value, list):
-            vars_.lists[name] = [str(v) for v in value]
-            vars_.raw.pop(name, None)
-        elif isinstance(value, str):
-            vars_.raw[name] = "'" + sqltool.escape_sql_string(value) + "'"
-            vars_.lists.pop(name, None)
-        elif isinstance(value, bool):
-            vars_.raw[name] = "TRUE" if value else "FALSE"
-        elif isinstance(value, (int, float)):
-            vars_.raw[name] = repr(value)
-            vars_.lists.pop(name, None)
-        elif isinstance(value, dt.datetime):
-            vars_.raw[name] = "TIMESTAMP '" + value.strftime("%Y-%m-%d %H:%M:%S.%f") + "'"
-        elif isinstance(value, dt.date):
-            vars_.raw[name] = "DATE '" + value.strftime("%Y-%m-%d") + "'"
-        elif value is None:
-            vars_.raw[name] = "NULL"
-        return
-    m = _RESET_VARIABLE_RE.match(sql_string)
-    if m:
-        name = m.group(1) or m.group(2)
-        vars_.raw.pop(name, None)
-        vars_.lists.pop(name, None)
-        return
-    macro = _parse_macro(sql_string)
-    if macro:
-        macros[macro.name] = macro
-        return
-    if "SECRET" in upper.split(None, 5)[:5]:
-        from .secrets import try_execute_secret
+    max_rows: int,
+) -> tuple[list[Column], list[list[Any]]]:
+    return _collect_query(*_prepare_query(spark, sql, vars_, macros), max_rows)
 
-        if try_execute_secret(spark, vars_.substitute(sql_string)):
-            return
-    if upper.startswith(("BEGIN", "COMMIT", "ROLLBACK", "ABORT")):
-        return  # no transactions on Spark; per-statement atomicity only
-    # USE / CALL / CREATE TEMP VIEW / CREATE TEMP TABLE. Spark has no
-    # temp tables — a temp view gives the same statement-scoped
-    # namespace (lazily recomputed; CACHE TABLE would materialize it if
-    # a dashboard needs it hot). _prepare_query runs the command and
-    # flushes memoized analyzed plans.
+
+def _run_command(spark, sql, vars_, macros, max_rows):
+    """USE / CALL / CREATE TEMP VIEW / CREATE TEMP TABLE. Spark has no
+    temp tables — a temp view gives the same statement-scoped namespace
+    (lazily recomputed; CACHE TABLE would materialize it if a dashboard
+    needs it hot). _prepare_query runs the command and flushes memoized
+    analyzed plans."""
     _prepare_query(
         spark,
-        _CREATE_TEMP_TABLE_RE.sub("CREATE OR REPLACE TEMPORARY VIEW ", sql_string),
+        _CREATE_TEMP_TABLE_RE.sub("CREATE OR REPLACE TEMPORARY VIEW ", sql),
         vars_,
         macros,
     )
+    return [], []
 
 
-def _parse_search_path(raw: str) -> list[str]:
-    """'main,"mydb".main,system' → Spark database candidates in order.
-    DuckDB's ``main`` = the current namespace (kept as the sentinel
-    ``None`` meaning "no switch"), ``system`` has no Spark counterpart
-    (dropped), and ``"db".main`` / ``db.main`` / ``db`` all name the
-    Spark database ``db``."""
-    out: list[str] = []
-    for entry in raw.split(","):
-        e = entry.strip()
-        if not e:
-            continue
-        if e.lower() in ("main", "system"):
-            continue
-        first = e.split(".", 1)[0].strip().strip('"')
-        if first and first not in out:
-            out.append(first)
-    return out
+def _set_variable(spark, sql, vars_, macros, max_rows):
+    m = _SET_VARIABLE_RE.match(sql)
+    if not m:
+        return _run_command(spark, sql, vars_, macros, max_rows)
+    name = m.group(1) or m.group(2)
+    df, _ = _prepare_query(spark, "SELECT " + m.group(3).strip(), vars_, macros)
+    rows = df.limit(1).collect()
+    value = rows[0][0] if rows else None
+    if isinstance(value, list):
+        vars_.lists[name] = [str(v) for v in value]
+        vars_.raw.pop(name, None)
+    elif isinstance(value, str):
+        vars_.raw[name] = "'" + sqltool.escape_sql_string(value) + "'"
+        vars_.lists.pop(name, None)
+    elif isinstance(value, bool):
+        vars_.raw[name] = "TRUE" if value else "FALSE"
+    elif isinstance(value, (int, float)):
+        vars_.raw[name] = repr(value)
+        vars_.lists.pop(name, None)
+    elif isinstance(value, dt.datetime):
+        vars_.raw[name] = "TIMESTAMP '" + value.strftime("%Y-%m-%d %H:%M:%S.%f") + "'"
+    elif isinstance(value, dt.date):
+        vars_.raw[name] = "DATE '" + value.strftime("%Y-%m-%d") + "'"
+    elif value is None:
+        vars_.raw[name] = "NULL"
+    return [], []
 
 
-def _sql_with_search_path(spark: SparkSession, sql: str, path: list[str]):
-    """Run ``sql``; when an unqualified table fails to resolve, retry
-    the analysis with each search-path database as the current
-    namespace, in order — first schema that resolves wins (the DuckDB
-    search_path rule at schema granularity).  The current database is
-    always restored."""
-    try:
-        return spark.sql(sql)
-    except Exception as e:
-        if "TABLE_OR_VIEW_NOT_FOUND" not in str(e) or not path:
-            raise
-        current = spark.catalog.currentDatabase()
-        for db in path:
-            if db == current or not spark.catalog.databaseExists(db):
-                continue
-            try:
-                spark.catalog.setCurrentDatabase(db)
-                return spark.sql(sql)
-            except Exception:
-                continue
-            finally:
-                spark.catalog.setCurrentDatabase(current)
-        raise
+def _reset_variable(spark, sql, vars_, macros, max_rows):
+    m = _RESET_VARIABLE_RE.match(sql)
+    if not m:
+        return _run_command(spark, sql, vars_, macros, max_rows)
+    name = m.group(1) or m.group(2)
+    vars_.raw.pop(name, None)
+    vars_.lists.pop(name, None)
+    return [], []
+
+
+def _create_macro(spark, sql, vars_, macros, max_rows):
+    macro = _parse_macro(sql)
+    if macro is None:
+        return _run_command(spark, sql, vars_, macros, max_rows)
+    macros[macro.name] = macro
+    return [], []
+
+
+def _run_secret(spark, sql, vars_, macros, max_rows):
+    from .secrets import try_execute_secret
+
+    if try_execute_secret(spark, vars_.substitute(sql)):
+        return [], []
+    return _run_command(spark, sql, vars_, macros, max_rows)
+
+
+def _no_op(spark, sql, vars_, macros, max_rows):
+    """BEGIN / COMMIT / ROLLBACK / ABORT: no transactions on Spark,
+    per-statement atomicity only. CHECKPOINT: DuckDB flushes the WAL
+    into the single database file (reference restore.go:229 issues it
+    after IMPORT); a Spark warehouse has no WAL — storage hygiene is
+    COMPACT TABLE — so it succeeds as a no-op for script parity."""
+    return [], []
+
+
+def _run_attach(spark, sql, vars_, macros, max_rows):
+    """Tasks run ATTACH/DETACH as ordinary statements with empty results
+    (reference run_task.go:51 marks them no-tx and executes them
+    directly)."""
+    from .attach import try_execute_attach
+
+    if not try_execute_attach(spark, vars_.substitute(sql)):
+        raise ValueError(f"Unsupported ATTACH/DETACH syntax: {sql!r}")
+    return [], []
+
+
+def _run_type_ddl(spark, sql, vars_, macros, max_rows):
+    """DuckDB user types: ENUMs are emulated via the warehouse registry
+    (enums.py; reference duckdb_schema.go:124-161); task scripts create
+    them, dashboards only consume them."""
+    if not try_execute_type_ddl(spark, vars_.substitute(sql)):
+        raise ValueError(f"Unsupported type DDL: {sql!r}")
+    return [], []
+
+
+def _run_sequence_ddl(spark, sql, vars_, macros, max_rows):
+    """DuckDB sequences: warehouse-registry emulation (sequences.py);
+    task scripts create them, nextval/currval deal from the registry
+    under a file lock."""
+    if not try_execute_sequence_ddl(spark, vars_.substitute(sql)):
+        raise ValueError(f"Unsupported sequence DDL: {sql!r}")
+    return [], []
+
+
+def _run_explain(spark, sql, vars_, macros, max_rows):
+    """DuckDB's EXPLAIN shape: (explain_key, explain_value) — one row
+    with the plan tree (Spark returns a single 'plan' column). The plan
+    TEXT is engine-specific by nature."""
+    m = re.match(r"\s*EXPLAIN\b\s*(ANALYZE\b\s*)?", sql, re.IGNORECASE)
+    inner, _ = _prepare_query(spark, sql[m.end():].rstrip().rstrip(";"), vars_, macros)
+    plan = inner._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    if m.group(1):
+        # Execute like DuckDB's ANALYZE but never materialize the result
+        # on the driver (a full collect() here was an unbounded
+        # driver-side sink reachable from any dashboard). The noop sink
+        # runs the whole plan executor-side and discards rows; count()
+        # is the fallback (also executor-side, one long to the driver).
+        try:
+            inner.write.format("noop").mode("overwrite").save()
+        except Exception:
+            inner.count()
+    key = "analyzed_plan" if m.group(1) else "physical_plan"
+    return [
+        Column(name="explain_key", nullable=False, spark_type="string"),
+        Column(name="explain_value", nullable=False, spark_type="string"),
+    ], [[key, plan]]
+
+
+def _show_tables(spark, sql, vars_, macros, max_rows):
+    """DuckDB's SHOW TABLES shape: one 'name' column, sorted (Spark's is
+    namespace/tableName/isTemporary)."""
+    names = sorted(r.tableName for r in spark.sql("SHOW TABLES").collect())
+    return [Column(name="name", nullable=False, spark_type="string")], [
+        [n] for n in names
+    ]
+
+
+def _describe(spark, sql, vars_, macros, max_rows):
+    """DuckDB's DESCRIBE shape: (column_name, column_type, null, key,
+    default, extra) with DuckDB type spellings — pasted dashboards key
+    on those names (Spark's native DESC returns
+    col_name/data_type/comment)."""
+    from .udfs import _duckdb_typename
+
+    body = re.sub(
+        r"^\s*DESC(?:RIBE)?\s+", "", sql, flags=re.IGNORECASE
+    ).rstrip().rstrip(";").strip()
+    if _PLAIN_QUERY_HEAD_RE.match(body):
+        schema = _prepare_query(spark, body, vars_, macros)[0].schema
+    else:
+        schema = spark.table(body).schema
+    cols = [
+        Column(name=n, nullable=True, spark_type="string")
+        for n in ("column_name", "column_type", "null", "key", "default", "extra")
+    ]
+    rows = [
+        [
+            f.name,
+            _duckdb_typename(f.dataType.simpleString()),
+            "YES" if f.nullable else "NO",
+            None,
+            None,
+            None,
+        ]
+        for f in schema.fields
+    ]
+    return cols, rows
+
+
+def _compact_table(spark, sql, vars_, macros, max_rows):
+    """Dialect extension (documented in MIGRATION.md): the small-files
+    maintenance the reference never needs (single DuckDB file) but a
+    parquet warehouse does. Task-scope only — the read-only dashboard
+    gate does not allow it."""
+    from .compaction import compact_table
+
+    target = re.sub(
+        r"^\s*COMPACT\s+TABLE\s+", "", vars_.substitute(sql), flags=re.IGNORECASE
+    ).rstrip().rstrip(";").strip()
+    # optional clustering clause: COMPACT TABLE t ORDER BY a, b
+    sort_by = None
+    m_order = re.search(r"\sORDER\s+BY\s+(.+)$", target, re.IGNORECASE)
+    if m_order:
+        sort_by = [c.strip() for c in m_order.group(1).split(",") if c.strip()]
+        target = target[: m_order.start()].strip()
+    report = compact_table(spark, target, sort_by=sort_by)
+    names_types = [
+        ("compacted", "boolean"),
+        ("n_files_before", "bigint"),
+        ("n_files_after", "bigint"),
+        ("total_bytes", "bigint"),
+        ("n_target_files", "bigint"),
+    ]
+    return [
+        Column(name=n, nullable=False, spark_type=t) for n, t in names_types
+    ], [
+        [
+            report["compacted"],
+            report["n_files"],
+            report["after"]["n_files"],
+            report["total_bytes"],
+            report["n_target_files"],
+        ]
+    ]
 
 
 _COPY_RE = re.compile(
     r"^\s*COPY\s+(.*?)\s+TO\s+'((?:[^']|'')*)'\s*(?:\(([^)]*)\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-
+_COPY_FROM_RE = re.compile(
+    r"^\s*COPY\s+([\w.`\"]+)\s+FROM\s+'((?:[^']|'')*)'\s*"
+    r"(?:\(([^)]*)\))?\s*;?\s*$",
+    re.IGNORECASE,
+)
 _COPY_EXT_FMT = {"parquet": "parquet", "csv": "csv", "json": "json",
                  "jsonl": "json", "ndjson": "json"}
 
 
-def _run_copy_to(
-    spark: SparkSession, text: str, vars_: _VarState, macros: dict[str, _Macro]
-) -> tuple[list[Column], list[list[Any]]]:
-    """COPY <table|(query)> TO '<path>' (FORMAT …, HEADER …, DELIMITER
-    …, COMPRESSION …) — single-file semantics like DuckDB (the path IS
-    the file). Returns the written row count as ``Count``."""
-    import os
-    import shutil
+def _copy_count(n: int) -> tuple[list[Column], list[list[Any]]]:
+    return [Column(name="Count", nullable=False, spark_type="bigint")], [[n]]
 
-    m = _COPY_RE.match(text)
-    if not m:
-        raise DashboardError(
-            "COPY syntax: COPY <table|(query)> TO '<path>' [(options)]"
-        )
-    src = m.group(1).strip()
-    path = m.group(2).replace("''", "'")
-    opt_text = m.group(3) or ""
+
+def _copy_options(
+    path: str, opt_text: str | None
+) -> tuple[str, dict[str, str], str | None]:
+    """COPY's ``(FORMAT …, HEADER …, DELIMITER …, COMPRESSION …)`` list:
+    the format (FORMAT, else the path's extension, else parquet), the
+    csv header/separator as Spark reader and writer options, and the
+    compression."""
     opts: dict[str, str] = {}
-    for part in re.split(r",", opt_text):
+    for part in (opt_text or "").split(","):
         part = part.strip()
         if not part:
             continue
@@ -2179,23 +2283,44 @@ def _run_copy_to(
     fmt = opts.get("format", _COPY_EXT_FMT.get(ext, "parquet")).lower()
     if fmt not in ("parquet", "csv", "json"):
         raise DashboardError(f"COPY: unsupported FORMAT {fmt!r}")
+    csv_opts: dict[str, str] = {}
+    if fmt == "csv":
+        header = opts.get("header", "true").lower() not in ("false", "0")
+        csv_opts["header"] = str(header).lower()
+        delim = opts.get("delimiter") or opts.get("delim") or opts.get("sep")
+        if delim:
+            csv_opts["sep"] = delim
+    compression = opts.get("compression")
+    return fmt, csv_opts, compression.lower() if compression else None
+
+
+def _run_copy_to(spark, sql, vars_, macros, max_rows):
+    """COPY <table|(query)> TO '<path>' (FORMAT …, HEADER …, DELIMITER
+    …, COMPRESSION …) — the workhorse of reference task scripts (the task
+    gate is a deny-list; dashboards reject COPY via the allow-list).
+    DuckDB writes ONE file at the exact path and task scripts feed the
+    path to downstream consumers, so the result is coalesced to a single
+    stream and its part file moved there. Returns the written row count
+    as ``Count``."""
+    import os
+    import shutil
+
+    m = _COPY_RE.match(sql)
+    if not m:
+        raise DashboardError(
+            "COPY syntax: COPY <table|(query)> TO '<path>' [(options)]"
+        )
+    src = m.group(1).strip()
+    path = m.group(2).replace("''", "'")
+    fmt, csv_opts, compression = _copy_options(path, m.group(3))
     if src.startswith("("):
         inner = src[1:-1] if src.endswith(")") else src[1:]
         df, _ = _prepare_query(spark, inner, vars_, macros)
     else:
         df = spark.table(src)
-    writer = df.coalesce(1).write.mode("overwrite")
-    read_opts: dict[str, str] = {}
-    if fmt == "csv":
-        header = opts.get("header", "true").lower() not in ("false", "0")
-        writer = writer.option("header", str(header).lower())
-        read_opts["header"] = str(header).lower()
-        delim = opts.get("delimiter") or opts.get("delim") or opts.get("sep")
-        if delim:
-            writer = writer.option("sep", delim)
-            read_opts["sep"] = delim
-    if "compression" in opts:
-        writer = writer.option("compression", opts["compression"].lower())
+    writer = df.coalesce(1).write.mode("overwrite").options(**csv_opts)
+    if compression:
+        writer = writer.option("compression", compression)
     tmp_dir = path + ".__copy_tmp__"
     getattr(writer, fmt)(tmp_dir)
     part = next(
@@ -2206,82 +2331,272 @@ def _run_copy_to(
         os.remove(path) if os.path.isfile(path) else shutil.rmtree(path)
     shutil.move(os.path.join(tmp_dir, part), path)
     shutil.rmtree(tmp_dir, ignore_errors=True)
-    reader = spark.read
-    for k, v in read_opts.items():
-        reader = reader.option(k, v)
+    reader = spark.read.options(**csv_opts)
     if fmt == "csv":
         reader = reader.option("inferSchema", "false")
-    n = getattr(reader, fmt)(path).count()
-    return [
-        Column(name="Count", nullable=False, spark_type="bigint")
-    ], [[n]]
+    return _copy_count(getattr(reader, fmt)(path).count())
 
 
-_COPY_FROM_RE = re.compile(
-    r"^\s*COPY\s+([\w.`\"]+)\s+FROM\s+'((?:[^']|'')*)'\s*"
-    r"(?:\(([^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-def _run_copy_from(
-    spark: SparkSession, text: str
-) -> tuple[list[Column], list[list[Any]]]:
+def _run_copy_from(spark, sql, vars_, macros, max_rows):
     """COPY <table> FROM '<path>' (FORMAT …, HEADER …, DELIMITER …) —
-    append the file's rows into the table (DuckDB's load half).
-    Columns are matched BY NAME against the target table (the file
-    must carry them: parquet/json always do, csv needs HEADER), then
-    cast to the table's types by position via insertInto."""
-    m = _COPY_FROM_RE.match(text)
+    append the file's rows into the table (DuckDB's load half). Columns
+    are matched BY NAME against the target table (the file must carry
+    them: parquet/json always do, csv needs HEADER), then cast to the
+    table's types by position via insertInto."""
+    m = _COPY_FROM_RE.match(vars_.substitute(sql))
     if not m:
         raise DashboardError(
             "COPY syntax: COPY <table> FROM '<path>' [(options)]"
         )
     table = m.group(1).strip().strip('`"')
     path = m.group(2).replace("''", "'")
-    opts: dict[str, str] = {}
-    for part in (m.group(3) or "").split(","):
-        part = part.strip()
-        if not part:
-            continue
-        bits = part.split(None, 1)
-        opts[bits[0].lower()] = (
-            bits[1].strip().strip("'\"") if len(bits) > 1 else "true"
+    fmt, csv_opts, _ = _copy_options(path, m.group(3))
+    if csv_opts.get("header") == "false":
+        raise DashboardError(
+            "COPY FROM csv requires HEADER (columns match by name)"
         )
-    ext = path.rsplit(".", 1)[-1].lower() if "." in path else ""
-    fmt = opts.get("format", _COPY_EXT_FMT.get(ext, "parquet")).lower()
-    if fmt not in ("parquet", "csv", "json"):
-        raise DashboardError(f"COPY: unsupported FORMAT {fmt!r}")
-    reader = spark.read
+    reader = spark.read.options(**csv_opts)
     if fmt == "csv":
-        header = opts.get("header", "true").lower() not in ("false", "0")
-        if not header:
-            raise DashboardError(
-                "COPY FROM csv requires HEADER (columns match by name)"
-            )
-        reader = reader.option("header", "true").option(
-            "inferSchema", "true"
-        )
-        delim = opts.get("delimiter") or opts.get("delim") or opts.get("sep")
-        if delim:
-            reader = reader.option("sep", delim)
+        reader = reader.option("inferSchema", "true")
     df = getattr(reader, fmt)(path)
     target_cols = spark.table(table).columns
     missing = [c for c in target_cols if c not in df.columns]
     if missing:
-        raise DashboardError(
-            f"COPY FROM: file lacks target columns {missing}"
-        )
+        raise DashboardError(f"COPY FROM: file lacks target columns {missing}")
     df = df.select(*target_cols)
     n = df.count()
     df.write.mode("append").insertInto(table)
     spark.catalog.refreshTable(table)
-    from .plancache import bump
+    return _copy_count(n)
 
-    bump()
-    return [
-        Column(name="Count", nullable=False, spark_type="bigint")
-    ], [[n]]
+
+def _export_import_database(spark, sql, vars_, macros, max_rows):
+    """DuckDB snapshot statements (reference snapshots.go:233 issues
+    EXPORT DATABASE '<s3>' (FORMAT parquet, ...); restore.go runs IMPORT
+    DATABASE) — task scripts written for the reference run unchanged.
+    Options in a trailing parenthesized list are accepted; only
+    compression is meaningful for a parquet warehouse (FORMAT is always
+    parquet here)."""
+    from .snapshots import export_database, restore_database
+
+    text = vars_.substitute(sql).strip().rstrip(";").strip()
+    m_path = re.search(r"'((?:[^']|'')*)'", text)
+    if not m_path:
+        raise DashboardError("EXPORT/IMPORT DATABASE needs a quoted target path")
+    path = m_path.group(1).replace("''", "'")
+    if text.upper().startswith("EXPORT"):
+        m_comp = re.search(r"COMPRESSION\s+'?(\w+)'?", text, re.IGNORECASE)
+        compression = m_comp.group(1).lower() if m_comp else "zstd"
+        tables = export_database(spark, path, compression=compression)
+    else:
+        tables = restore_database(spark, path, overwrite=True)
+    return [Column(name="table_name", nullable=False, spark_type="string")], [
+        [t] for t in tables
+    ]
+
+
+def _refuse_insert_or_replace(spark, sql, vars_, macros, max_rows):
+    raise ValueError(
+        "INSERT OR REPLACE/IGNORE needs enforced keys, which parquet "
+        "tables do not have; run a DELETE for the keys followed by a "
+        "plain INSERT instead"
+    )
+
+
+def _insert_returning(spark, sql, vars_, macros, max_rows):
+    """DuckDB INSERT … RETURNING: run the insert, then evaluate the
+    RETURNING projection over the just-inserted source rows (aliased to
+    the target's column names)."""
+    rm = re.match(
+        r"(.*)\bRETURNING\s+(.+?)\s*;?\s*$", sql, re.IGNORECASE | re.DOTALL
+    )
+    im = re.match(
+        r"\s*INSERT\s+INTO\s+(`[^`]+`|[A-Za-z_][\w.]*)\s*"
+        r"(\(([^)]*)\))?\s*(.*)$",
+        rm.group(1),
+        re.IGNORECASE | re.DOTALL,
+    )
+    if im is None or re.match(r"\s*BY\s+NAME\b", im.group(4) or "", re.IGNORECASE):
+        raise ValueError(
+            "unsupported INSERT … RETURNING form (BY NAME with "
+            "RETURNING is not supported; split the statements)"
+        )
+    target, collist, source = im.group(1), im.group(3), im.group(4)
+    _run_query(spark, rm.group(1), vars_, macros, max_rows)
+    if collist:
+        names = [c.strip().strip("`") for c in collist.split(",")]
+    else:
+        names = spark.table(target).columns
+    alias_cols = ", ".join(f"`{n}`" for n in names)
+    return _run_query(
+        spark,
+        f"SELECT {rm.group(2)} FROM ({source}) AS __inserted({alias_cols})",
+        vars_,
+        macros,
+        max_rows,
+    )
+
+
+def _create_or_replace_table(spark, sql, vars_, macros, max_rows):
+    """Spark's parquet catalog tables reject the v2 REPLACE op: DuckDB
+    semantics are drop-then-create, so do exactly that."""
+    import os
+    import shutil
+    from urllib.parse import urlparse
+
+    crm = re.match(
+        r"\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+(`[^`]+`|[A-Za-z_][\w.]*)",
+        sql,
+        re.IGNORECASE,
+    )
+    if not crm:
+        return _run_plain(spark, sql, vars_, macros, max_rows)
+    name = crm.group(1)
+    # resolve the managed location from the CATALOG before the drop —
+    # deriving a path from the name text can hit a different table's
+    # directory (db.t → default.t) or, for a hostile backticked name,
+    # escape the warehouse
+    loc = None
+    try:
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect():
+            if (r[0] or "").strip().lower() == "location":
+                loc = r[1]
+                break
+    except Exception:
+        loc = None
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    # the in-memory catalog resets per session while managed files
+    # persist: REPLACE semantics mean any stale directory from a
+    # previous session goes too — but only ever delete a path proven to
+    # sit INSIDE the warehouse
+    wh = os.path.realpath(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    target_path = None
+    if loc:
+        target_path = os.path.realpath(urlparse(loc).path)
+    else:
+        # unknown to this session: reconstruct the managed path only for
+        # simple (optionally db-qualified) identifiers; anything else
+        # skips the cleanup
+        raw = name.strip("`") if name.startswith("`") else name
+        parts = raw.lower().split(".") if not name.startswith("`") else [raw.lower()]
+        if len(parts) <= 2 and all(
+            re.fullmatch(r"[a-z_][a-z0-9_]*", p) for p in parts
+        ):
+            if len(parts) == 2:
+                db, tbl = parts
+            else:
+                db, tbl = spark.catalog.currentDatabase().lower(), parts[0]
+            rel = tbl if db == "default" else f"{db}.db/{tbl}"
+            target_path = os.path.realpath(os.path.join(wh, rel))
+    if target_path and target_path.startswith(wh + os.sep):
+        shutil.rmtree(target_path, ignore_errors=True)
+    return _run_plain(
+        spark,
+        re.sub(r"^\s*CREATE\s+OR\s+REPLACE\s+TABLE\b", "CREATE TABLE", sql,
+               flags=re.IGNORECASE),
+        vars_,
+        macros,
+        max_rows,
+    )
+
+
+def _truncate(spark, sql, vars_, macros, max_rows):
+    """DuckDB allows TRUNCATE <name> without the TABLE keyword."""
+    return _run_plain(
+        spark,
+        re.sub(r"^\s*TRUNCATE\b", "TRUNCATE TABLE", sql, flags=re.IGNORECASE),
+        vars_,
+        macros,
+        max_rows,
+    )
+
+
+def _rename_column(spark, sql, vars_, macros, max_rows):
+    """v1 parquet tables don't support RENAME COLUMN: copy-on-write."""
+    from .dml import alter_rename_column
+
+    alter_rename_column(spark, sql)
+    return [Column(name="Success", nullable=False, spark_type="boolean")], [[True]]
+
+
+def _run_dml(spark, sql, vars_, macros, max_rows):
+    """Task DML on warehouse tables — copy-on-write rewrite (the
+    statement gate confines these to tasks; reference tasks run
+    arbitrary DML, run_task.go:67-258). The SET and WHERE expressions
+    are DuckDB dialect like any other statement's."""
+    from .dml import try_execute_dml
+
+    result = try_execute_dml(spark, rewrite_statement(vars_.substitute(sql)).sql)
+    if result is None:
+        return _run_plain(spark, sql, vars_, macros, max_rows)
+    names, rows = result
+    return [Column(name=n, nullable=False, spark_type="bigint") for n in names], rows
+
+
+@dataclass(frozen=True)
+class _StatementKind:
+    head: re.Pattern[str]  # matched at the start of the statement
+    handler: Callable[..., tuple[list[Column], list[list[Any]]]]
+    side_effect: bool = False  # changes script state, shows no result
+    bumps: bool = False  # mutates what cached plans read: flush them
+
+
+def _kind(
+    head: str, handler, side_effect: bool = False, bumps: bool = False
+) -> _StatementKind:
+    return _StatementKind(
+        re.compile(r"\s*" + head, re.IGNORECASE | re.DOTALL),
+        handler, side_effect, bumps,
+    )
+
+
+# Every statement kind that is not a plain query, first match wins. A
+# statement no row matches runs the plain query path (_run_plain).
+_STATEMENT_KINDS = (
+    _kind(r"SET\s+VARIABLE\b", _set_variable, side_effect=True),
+    _kind(r"RESET\s+VARIABLE\b", _reset_variable, side_effect=True),
+    _kind(
+        r"CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?(?:MACRO|FUNCTION)\b",
+        _create_macro, side_effect=True,
+    ),
+    _kind(
+        r"(?:CREATE(?:\s+OR\s+REPLACE)?|DROP)\s+(?:(?:PERSISTENT|TEMP(?:ORARY)?)\s+)?"
+        r"SECRET\b",
+        _run_secret, side_effect=True,
+    ),
+    _kind(r"(?:BEGIN|COMMIT|ROLLBACK|ABORT)\b", _no_op, side_effect=True),
+    _kind(
+        r"(?:USE|CALL|CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+(?:TABLE|VIEW))\b",
+        _run_command, side_effect=True,
+    ),
+    _kind(r"(?:ATTACH|DETACH)\b", _run_attach, bumps=True),
+    _kind(r"(?:CREATE\s+(?:OR\s+REPLACE\s+)?|DROP\s+)TYPE\b", _run_type_ddl, bumps=True),
+    _kind(
+        r"(?:CREATE\s+(?:OR\s+REPLACE\s+)?|DROP\s+)SEQUENCE\b",
+        _run_sequence_ddl, bumps=True,
+    ),
+    _kind(r"EXPLAIN\b", _run_explain),
+    _kind(r"SHOW\s+(?:ALL\s+)?TABLES\s*;?\s*$", _show_tables),
+    _kind(r"DESC(?:RIBE)?\s", _describe),
+    _kind(r"CHECKPOINT\b", _no_op),
+    _kind(r"COMPACT\s+TABLE\b", _compact_table),
+    _kind(r"COPY\s+[\w.`\"]+\s+FROM\s+'", _run_copy_from, bumps=True),
+    _kind(r"COPY\b", _run_copy_to),
+    _kind(r"(?:EXPORT|IMPORT)\s+DATABASE\b", _export_import_database),
+    _kind(r"INSERT\s+OR\s+(?:REPLACE|IGNORE)\b", _refuse_insert_or_replace),
+    _kind(r"INSERT\b.*\bRETURNING\s+\S", _insert_returning),
+    _kind(r"CREATE\s+OR\s+REPLACE\s+TABLE\b", _create_or_replace_table),
+    _kind(r"TRUNCATE\b(?!\s+TABLE\b)", _truncate),
+    _kind(
+        r"ALTER\s+TABLE\s+(?:`[^`]+`|[A-Za-z_][\w.]*)\s+RENAME\s+COLUMN\b",
+        _rename_column,
+    ),
+    _kind(r"(?:UPDATE|DELETE)\b", _run_dml),
+)
+
+
+def _statement_kind(sql: str) -> _StatementKind | None:
+    return next((k for k in _STATEMENT_KINDS if k.head.match(sql)), None)
 
 
 def _run_query(
@@ -2291,384 +2606,17 @@ def _run_query(
     macros: dict[str, _Macro],
     max_rows: int,
 ) -> tuple[list[Column], list[list[Any]]]:
-    upper = sql_string.upper().strip()
-    if upper.startswith(("ATTACH", "DETACH")):
-        # Tasks run ATTACH/DETACH as ordinary statements with empty
-        # results (reference run_task.go:51 marks them no-tx and
-        # executes them directly).
-        from .attach import try_execute_attach
-        from .plancache import bump as _bump_attach
+    """Run one statement of any kind: the handler of its row in
+    ``_STATEMENT_KINDS``, else the plain query path."""
+    kind = _statement_kind(sql_string)
+    if kind is None:
+        return _run_plain(spark, sql_string, vars_, macros, max_rows)
+    result = kind.handler(spark, sql_string, vars_, macros, max_rows)
+    if kind.bumps:
+        from .plancache import bump
 
-        if try_execute_attach(spark, vars_.substitute(sql_string)):
-            _bump_attach()
-            return [], []
-        raise ValueError(f"Unsupported ATTACH/DETACH syntax: {sql_string!r}")
-    if re.match(
-        r"\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?TYPE|DROP\s+TYPE)\b",
-        sql_string,
-        re.IGNORECASE,
-    ):
-        # DuckDB user types: ENUMs are emulated via the warehouse
-        # registry (enums.py; reference duckdb_schema.go:124-161);
-        # task scripts create them, dashboards only consume them.
-        from .enums import try_execute_type_ddl
-        from .plancache import bump as _bump_type
-
-        if try_execute_type_ddl(spark, vars_.substitute(sql_string)):
-            _bump_type()
-            return [], []
-        raise ValueError(f"Unsupported type DDL: {sql_string!r}")
-    if re.match(
-        r"\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?SEQUENCE|DROP\s+SEQUENCE)\b",
-        sql_string,
-        re.IGNORECASE,
-    ):
-        # DuckDB sequences: warehouse-registry emulation (sequences.py,
-        # r13 — the enums.py pattern); task scripts create them,
-        # nextval/currval deal from the registry under a file lock.
-        from .plancache import bump as _bump_seq
-        from .sequences import try_execute_sequence_ddl
-
-        if try_execute_sequence_ddl(spark, vars_.substitute(sql_string)):
-            _bump_seq()
-            return [], []
-        raise ValueError(f"Unsupported sequence DDL: {sql_string!r}")
-    if upper.startswith("EXPLAIN"):
-        # DuckDB's EXPLAIN shape: (explain_key, explain_value) — one
-        # row with the plan tree (r11; Spark returns a single 'plan'
-        # column).  The plan TEXT is engine-specific by nature.
-        body = re.sub(
-            r"^EXPLAIN\s+(ANALYZE\s+)?", "", sql_string.strip(),
-            flags=re.IGNORECASE,
-        ).rstrip(";")
-        analyze = bool(
-            re.match(r"EXPLAIN\s+ANALYZE\b", upper)
-        )
-        inner, _ = _prepare_query(spark, body, vars_, macros)
-        plan = inner._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        if analyze:
-            # Execute like DuckDB's ANALYZE but never materialize the
-            # result on the driver (r11 verdict: a full collect() here
-            # was an unbounded driver-side sink reachable from any
-            # dashboard).  The noop sink runs the whole plan
-            # executor-side and discards rows; count() is the fallback
-            # (also executor-side, one long to the driver).
-            try:
-                inner.write.format("noop").mode("overwrite").save()
-            except Exception:
-                inner.count()
-        key = "analyzed_plan" if analyze else "physical_plan"
-        return (
-            [
-                Column(
-                    name="explain_key", nullable=False,
-                    spark_type="string",
-                ),
-                Column(
-                    name="explain_value", nullable=False,
-                    spark_type="string",
-                ),
-            ],
-            [[key, plan]],
-        )
-    if re.fullmatch(r"SHOW\s+(?:ALL\s+)?TABLES\s*;?", upper):
-        # DuckDB's SHOW TABLES shape: one 'name' column, sorted
-        # (Spark's is namespace/tableName/isTemporary — r11)
-        names = sorted(
-            r.tableName for r in spark.sql("SHOW TABLES").collect()
-        )
-        return (
-            [Column(name="name", nullable=False, spark_type="string")],
-            [[n] for n in names],
-        )
-    if upper.startswith(("DESCRIBE ", "DESC ")):
-        # DuckDB's DESCRIBE shape: (column_name, column_type, null,
-        # key, default, extra) with DuckDB type spellings — pasted
-        # dashboards key on those names (r11; Spark's native DESC
-        # returns col_name/data_type/comment).
-        from .udfs import _duckdb_typename
-
-        body = re.sub(
-            r"^(?:DESCRIBE|DESC)\s+", "", sql_string.strip(),
-            flags=re.IGNORECASE,
-        ).rstrip(";").strip()
-        if _PLAIN_QUERY_HEAD_RE.match(body):
-            schema = _prepare_query(spark, body, vars_, macros)[0].schema
-        else:
-            schema = spark.table(body).schema
-        cols = [
-            Column(name=n, nullable=True, spark_type="string")
-            for n in (
-                "column_name", "column_type", "null", "key",
-                "default", "extra",
-            )
-        ]
-        rows = [
-            [
-                f.name,
-                _duckdb_typename(f.dataType.simpleString()),
-                "YES" if f.nullable else "NO",
-                None,
-                None,
-                None,
-            ]
-            for f in schema.fields
-        ]
-        return cols, rows
-    if upper.startswith("CHECKPOINT"):
-        # DuckDB CHECKPOINT flushes the WAL into the single database
-        # file (reference restore.go:229 issues it after IMPORT).  A
-        # Spark warehouse has no WAL; storage hygiene is explicit
-        # compaction (COMPACT TABLE below) — bare CHECKPOINT succeeds
-        # as a no-op for script parity.
-        return [], []
-    if upper.startswith("COMPACT TABLE"):
-        # Dialect extension (documented in MIGRATION.md): the
-        # small-files maintenance the reference never needs (single
-        # DuckDB file) but a parquet warehouse does.  Task-scope only —
-        # the read-only dashboard gate does not allow it.
-        from .compaction import compact_table
-
-        target = (
-            vars_.substitute(sql_string)
-            .strip()[len("COMPACT TABLE"):]
-            .strip()
-            .rstrip(";")
-            .strip()
-        )
-        # optional clustering clause: COMPACT TABLE t ORDER BY a, b
-        sort_by = None
-        m_order = re.search(r"\sORDER\s+BY\s+(.+)$", target, re.IGNORECASE)
-        if m_order:
-            sort_by = [
-                c.strip() for c in m_order.group(1).split(",") if c.strip()
-            ]
-            target = target[: m_order.start()].strip()
-        report = compact_table(spark, target, sort_by=sort_by)
-        names_types = [
-            ("compacted", "boolean"),
-            ("n_files_before", "bigint"),
-            ("n_files_after", "bigint"),
-            ("total_bytes", "bigint"),
-            ("n_target_files", "bigint"),
-        ]
-        return [
-            Column(name=n, nullable=False, spark_type=t)
-            for n, t in names_types
-        ], [
-            [
-                report["compacted"],
-                report["n_files"],
-                report["after"]["n_files"],
-                report["total_bytes"],
-                report["n_target_files"],
-            ]
-        ]
-    if upper.startswith("COPY") and re.search(
-        r"\bFROM\s+'", sql_string, re.IGNORECASE
-    ):
-        # COPY <table> FROM '<path>' (options) — the file-load half.
-        return _run_copy_from(spark, vars_.substitute(sql_string))
-    if upper.startswith("COPY") and re.search(
-        r"\bTO\s+'", sql_string, re.IGNORECASE
-    ):
-        # DuckDB COPY <table|(query)> TO '<path>' (FORMAT …) — the
-        # workhorse of reference task scripts (the task gate is a
-        # deny-list, so DuckDB admits COPY in tasks; dashboards reject
-        # it via the allow-list, matching sql_validation.go). DuckDB
-        # writes ONE file at the exact path; we mirror that (coalesce
-        # to a single stream, then move the part file) because task
-        # scripts feed the path to downstream consumers. A distributed
-        # multi-file export is CREATE TABLE AS / EXPORT DATABASE.
-        return _run_copy_to(spark, sql_string, vars_, macros)
-    if upper.startswith(("EXPORT DATABASE", "IMPORT DATABASE")):
-        # DuckDB snapshot statements (reference snapshots.go:233 issues
-        # EXPORT DATABASE '<s3>' (FORMAT parquet, ...); restore.go runs
-        # IMPORT DATABASE) — task scripts written for the reference run
-        # unchanged.  Options in a trailing parenthesized list are
-        # accepted; only compression is meaningful for a parquet
-        # warehouse (FORMAT is always parquet here).
-        from .snapshots import export_database, restore_database
-
-        text = vars_.substitute(sql_string).strip().rstrip(";").strip()
-        is_export = upper.startswith("EXPORT")
-        m_path = re.search(r"'((?:[^']|'')*)'", text)
-        if not m_path:
-            raise DashboardError(
-                "EXPORT/IMPORT DATABASE needs a quoted target path"
-            )
-        path = m_path.group(1).replace("''", "'")
-        if is_export:
-            compression = "zstd"
-            m_comp = re.search(
-                r"COMPRESSION\s+'?(\w+)'?", text, re.IGNORECASE
-            )
-            if m_comp:
-                compression = m_comp.group(1).lower()
-            tables = export_database(spark, path, compression=compression)
-        else:
-            tables = restore_database(spark, path, overwrite=True)
-        return [
-            Column(name="table_name", nullable=False, spark_type="string")
-        ], [[t] for t in tables]
-    if upper.startswith(("INSERT OR REPLACE", "INSERT OR IGNORE")):
-        raise ValueError(
-            "INSERT OR REPLACE/IGNORE needs enforced keys, which "
-            "parquet tables do not have; run a DELETE for the keys "
-            "followed by a plain INSERT instead"
-        )
-    if upper.startswith("INSERT") and (
-        rm := re.match(
-            r"(.*)\bRETURNING\s+(.+?)\s*;?\s*$",
-            sql_string,
-            re.IGNORECASE | re.DOTALL,
-        )
-    ):
-        # DuckDB INSERT … RETURNING: run the insert, then evaluate the
-        # RETURNING projection over the just-inserted source rows
-        # (aliased to the target's column names)
-        im = re.match(
-            r"\s*INSERT\s+INTO\s+(`[^`]+`|[A-Za-z_][\w.]*)\s*"
-            r"(\(([^)]*)\))?\s*(.*)$",
-            rm.group(1),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if im is None or re.match(
-            r"\s*BY\s+NAME\b", im.group(4) or "", re.IGNORECASE
-        ):
-            raise ValueError(
-                "unsupported INSERT … RETURNING form (BY NAME with "
-                "RETURNING is not supported; split the statements)"
-            )
-        target, collist, source = im.group(1), im.group(3), im.group(4)
-        _run_query(spark, rm.group(1), vars_, macros, max_rows)
-        if collist:
-            names = [c.strip().strip("`") for c in collist.split(",")]
-        else:
-            names = spark.table(target).columns
-        alias_cols = ", ".join(f"`{n}`" for n in names)
-        return _run_query(
-            spark,
-            f"SELECT {rm.group(2)} FROM ({source}) AS "
-            f"__inserted({alias_cols})",
-            vars_,
-            macros,
-            max_rows,
-        )
-    if upper.startswith("CREATE OR REPLACE TABLE"):
-        # Spark's parquet catalog tables reject the v2 REPLACE op:
-        # DuckDB semantics are drop-then-create, so do exactly that
-        crm = re.match(
-            r"CREATE\s+OR\s+REPLACE\s+TABLE\s+(`[^`]+`|[A-Za-z_][\w.]*)",
-            sql_string.strip(),
-            re.IGNORECASE,
-        )
-        if crm:
-            import os
-            import shutil
-            from urllib.parse import urlparse
-
-            name = crm.group(1)
-            # resolve the managed location from the CATALOG before the
-            # drop — deriving a path from the name text can hit a
-            # different table's directory (db.t → default.t) or, for a
-            # hostile backticked name, escape the warehouse (r11
-            # ADVICE)
-            loc = None
-            try:
-                for r in spark.sql(
-                    f"DESCRIBE TABLE EXTENDED {name}"
-                ).collect():
-                    if (r[0] or "").strip().lower() == "location":
-                        loc = r[1]
-                        break
-            except Exception:
-                loc = None
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            # the in-memory catalog resets per session while managed
-            # files persist: REPLACE semantics mean any stale
-            # directory from a previous session goes too — but only
-            # ever delete a path proven to sit INSIDE the warehouse
-            wh = os.path.realpath(
-                urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-            )
-            target_path = None
-            if loc:
-                target_path = os.path.realpath(urlparse(loc).path)
-            else:
-                # unknown to this session: reconstruct the managed
-                # path only for simple (optionally db-qualified)
-                # identifiers; anything else skips the cleanup
-                raw = name.strip("`") if name.startswith("`") else name
-                parts = raw.lower().split(".") if not name.startswith(
-                    "`"
-                ) else [raw.lower()]
-                if len(parts) <= 2 and all(
-                    re.fullmatch(r"[a-z_][a-z0-9_]*", p) for p in parts
-                ):
-                    if len(parts) == 2:
-                        db, tbl = parts
-                    else:
-                        db, tbl = (
-                            spark.catalog.currentDatabase().lower(),
-                            parts[0],
-                        )
-                    rel = tbl if db == "default" else f"{db}.db/{tbl}"
-                    target_path = os.path.realpath(
-                        os.path.join(wh, rel)
-                    )
-            if target_path and target_path.startswith(wh + os.sep):
-                shutil.rmtree(target_path, ignore_errors=True)
-            sql_string = re.sub(
-                r"^\s*CREATE\s+OR\s+REPLACE\s+TABLE\b",
-                "CREATE TABLE",
-                sql_string,
-                flags=re.IGNORECASE,
-            )
-            upper = sql_string.strip().upper()
-    if upper.startswith("TRUNCATE") and not upper.startswith(
-        "TRUNCATE TABLE"
-    ):
-        # DuckDB allows TRUNCATE <name> without the TABLE keyword
-        sql_string = re.sub(
-            r"^\s*TRUNCATE\b", "TRUNCATE TABLE", sql_string,
-            flags=re.IGNORECASE,
-        )
-        upper = sql_string.strip().upper()
-    if re.match(
-        r"\s*ALTER\s+TABLE\s+(`[^`]+`|[A-Za-z_][\w.]*)\s+RENAME\s+COLUMN\b",
-        sql_string,
-        re.IGNORECASE,
-    ):
-        # v1 parquet tables don't support RENAME COLUMN: copy-on-write
-        from .dml import alter_rename_column
-
-        alter_rename_column(spark, sql_string)
-        return [
-            Column(name="Success", nullable=False, spark_type="boolean")
-        ], [[True]]
-    if upper.startswith(("UPDATE", "DELETE")):
-        # Task DML on warehouse tables — copy-on-write rewrite (the
-        # statement gate already confines these to tasks; reference
-        # tasks run arbitrary DML, run_task.go:67-258). The SET and WHERE
-        # expressions are DuckDB dialect like any other statement's.
-        from .dml import try_execute_dml
-
-        dml_result = try_execute_dml(
-            spark, rewrite_statement(vars_.substitute(sql_string)).sql
-        )
-        if dml_result is not None:
-            names, rows = dml_result
-            return [
-                Column(name=n, nullable=False, spark_type="bigint")
-                for n in names
-            ], rows
-    df, tags = _prepare_query(spark, sql_string, vars_, macros)
-    return _collect_query(df, tags, max_rows)
+        bump()
+    return result
 
 
 # The head of a statement that wraps one query: ``CREATE [OR REPLACE]
@@ -2738,7 +2686,9 @@ def _prepare_query(
     for expand in _RELATION_EXPANDERS:
         body, used = expand(spark, body)
         bypass = bypass or used
-    rw = rewrite_statement(_reject_unsupported_duckisms(head + body))
+    rw = rewrite_statement(
+        _reject_unsupported_duckisms(head + lower_from_first(body))
+    )
     if rw.asof_joins:
         _asof_quadratic_guard(spark, rw, vars_)
     # Memoized analysis: dashboards re-serve identical statement
@@ -2747,17 +2697,15 @@ def _prepare_query(
     # every mutation path bump()s it. ONLY read-only statements are
     # cacheable — Spark runs commands (INSERT/CREATE/…, which tasks
     # route through here) eagerly inside spark.sql(), so a cache
-    # hit would silently skip re-executing them. A search path makes
-    # resolution depend on session state the cache key does not
-    # carry, so it bypasses the cache too. See plancache.
+    # hit would silently skip re-executing them. See plancache.
     from .plancache import analyzed, bump, plan_is_command
 
     words = rw.sql.lstrip("( \n\t").split(None, 1)
     readonly = bool(words) and words[0].upper() in _READONLY_HEADS
-    if readonly and not bypass and not vars_.search_path:
+    if readonly and not bypass:
         df = analyzed(spark, rw.sql)
     else:
-        df = _sql_with_search_path(spark, rw.sql, vars_.search_path)
+        df = spark.sql(rw.sql)
     # 'WITH cte AS (...) INSERT/MERGE ...' is valid SQL whose leading
     # keyword looks read-only: the analyzer is the authority. A
     # command executed eagerly and mutated state, so flush.

@@ -112,11 +112,6 @@ def _chart_type(spark_type: str) -> str:
     return "duration" if s.startswith("interval") else "number"
 
 
-def _looks_like_boxplot_struct(spark_type: str) -> bool:
-    s = spark_type.replace(" ", "").lower()
-    return s.startswith("struct<max:") and "q1:" in s and "outliers:" in s
-
-
 def map_wire_type(col: Column, rows: list, index: int) -> str:
     """Spark result type (+custom tag) → wire type vocabulary:
     boolean | string | number | date | timestamp/hour/month/year/time |

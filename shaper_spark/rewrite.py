@@ -29,7 +29,9 @@ from dataclasses import dataclass, field
 from .custom_types import CUSTOM_TYPE_NAMES
 from .sqltool import SqlSplitError, escape_sql_string, split_with_statement
 
-__all__ = ["rewrite_statement", "RewriteResult", "substitute_variables"]
+__all__ = [
+    "lower_from_first", "rewrite_statement", "RewriteResult", "substitute_variables"
+]
 
 
 @dataclass
@@ -98,58 +100,6 @@ def _find_matching_close(sql: str, open_pos: int, states: list[int]) -> int:
 
 
 _IDENT_CHARS = re.compile(r"[A-Za-z0-9_$]")
-
-
-def _operand_start(sql: str, cast_pos: int, states: list[int]) -> int:
-    """Find the start of the expression that a ``::`` cast applies to.
-
-    Walks left over an operand: identifier / quoted identifier / string
-    literal / number / parenthesized or call expression / array index,
-    including dotted chains like ``t.col`` or ``f(x).g(y)``.
-    """
-    i = cast_pos - 1
-    while True:
-        while i >= 0 and sql[i].isspace():
-            i -= 1
-        if i < 0:
-            return 0
-        c = sql[i]
-        if c == ")" or c == "]":
-            opener = "(" if c == ")" else "["
-            depth = 0
-            while i >= 0:
-                if states[i] == 0 and sql[i] == c:
-                    depth += 1
-                elif states[i] == 0 and sql[i] == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i -= 1
-            i -= 1
-            # A call like  f(...)  → include the function name.
-            while i >= 0 and _IDENT_CHARS.match(sql[i]):
-                i -= 1
-        elif c == "'" and states[i] != 0:
-            i -= 1
-            while i >= 0 and states[i] != 0:
-                i -= 1
-        elif c in '"`':
-            i -= 1
-            while i >= 0 and states[i] == _QUOTE_STATE[c]:
-                i -= 1
-        elif _IDENT_CHARS.match(c):
-            while i >= 0 and _IDENT_CHARS.match(sql[i]):
-                i -= 1
-        else:
-            return i + 1
-        # Dotted member access continues the operand leftward.
-        j = i
-        while j >= 0 and sql[j].isspace():
-            j -= 1
-        if j >= 0 and sql[j] == ".":
-            i = j - 1
-            continue
-        return i + 1
 
 
 # ---------------------------------------------------------------------------
@@ -6327,36 +6277,36 @@ def substitute_variables(
 # Entry point
 # ---------------------------------------------------------------------------
 
+def lower_from_first(sql: str) -> str:
+    """DuckDB's FROM-first sugar → a SELECT query. DuckDB admits both the
+    bare form (``FROM t [WHERE …]`` ≡ ``SELECT * FROM t …``) and the
+    projected form (``FROM t SELECT cols [WHERE …]`` ≡ ``SELECT cols
+    FROM t …`` — the table ref is everything between FROM and the first
+    top-level SELECT; trailing clauses stay in normal order). Any other
+    query comes back stripped and otherwise unchanged."""
+    sql = sql.strip()
+    if sql[:4].upper() != "FROM":
+        return sql
+    sel = _depth0_matches(sql, re.compile(r"\bSELECT\b", re.IGNORECASE))
+    if not sel:
+        return "SELECT * " + sql
+    table_ref = sql[4 : sel[0].start()].strip().rstrip(";")
+    sql = sql[sel[0].start() :].rstrip("; \n\t")
+    first_kw = _depth0_matches(
+        sql,
+        re.compile(
+            r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|WINDOW|"
+            r"QUALIFY|UNION|INTERSECT|EXCEPT)\b",
+            re.IGNORECASE,
+        ),
+    )
+    cut = first_kw[0].start() if first_kw else len(sql)
+    return (sql[:cut].rstrip() + f" FROM {table_ref} " + sql[cut:]).rstrip()
+
+
 def rewrite_statement(sql: str) -> RewriteResult:
     """Rewrite one DuckDB-dialect statement into Spark SQL + column tags."""
-    sql = sql.strip()
-
-    # FROM-first sugar. DuckDB admits both the bare form (``FROM t
-    # [WHERE …]`` ≡ ``SELECT * FROM t …``) and the projected form
-    # (``FROM t SELECT cols [WHERE …]`` ≡ ``SELECT cols FROM t …`` —
-    # the table ref is everything between FROM and the first top-level
-    # SELECT; trailing clauses stay in normal order).
-    if sql.upper().startswith("FROM"):
-        sel = _depth0_matches(
-            sql, re.compile(r"\bSELECT\b", re.IGNORECASE)
-        )
-        if sel:
-            table_ref = sql[4 : sel[0].start()].strip().rstrip(";")
-            sql = sql[sel[0].start() :].rstrip("; \n\t")
-            first_kw = _depth0_matches(
-                sql,
-                re.compile(
-                    r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|WINDOW|"
-                    r"QUALIFY|UNION|INTERSECT|EXCEPT)\b",
-                    re.IGNORECASE,
-                ),
-            )
-            cut = first_kw[0].start() if first_kw else len(sql)
-            sql = (
-                sql[:cut].rstrip() + f" FROM {table_ref} " + sql[cut:]
-            ).rstrip()
-        else:
-            sql = "SELECT * " + sql
+    sql = lower_from_first(sql)
 
     # DuckDB's SHOW ALL TABLES (sql_validation.go:52) — Spark's SHOW
     # TABLES is the all-tables form already.

@@ -38,13 +38,7 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from . import sqltool
-from .engine import (
-    _execute_side_effect,
-    _get_schedule_time,
-    _Macro,
-    _run_query,
-    _VarState,
-)
+from .engine import _get_schedule_time, _Macro, _run_query, _VarState
 from .render import Column
 
 __all__ = [
@@ -321,21 +315,6 @@ class _ScriptTxGuard:
         self.guards = []
 
 
-def _run_statement(
-    spark: SparkSession,
-    sql_string: str,
-    vars_: _VarState,
-    macros: dict[str, _Macro],
-    max_rows: int,
-) -> tuple[list[Column], list[list[Any]]]:
-    """One script statement: a side effect changes the script's state
-    and returns nothing; any other statement returns its result."""
-    if sqltool.is_side_effect(sql_string):
-        _execute_side_effect(spark, sql_string, vars_, macros)
-        return [], []
-    return _run_query(spark, sql_string, vars_, macros, max_rows)
-
-
 def execute_task(
     spark: SparkSession,
     content: str,
@@ -385,7 +364,7 @@ def execute_task(
 
         start = time.monotonic()
         try:
-            columns, rows = _run_statement(spark, sql_string, vars_, macros, max_rows)
+            columns, rows = _run_query(spark, sql_string, vars_, macros, max_rows)
         except Exception as e:  # surface engine errors per-query, stop the task
             qres.duration_ms = int((time.monotonic() - start) * 1000)
             qres.error = str(e)
@@ -910,4 +889,4 @@ def run_init_sql(
     for statement in sqltool.split_sql_queries(sqltool.strip_sql_comments(substituted)):
         statement = statement.strip()
         if statement:
-            _run_statement(spark, statement, vars_, macros, TASK_MAX_ROWS)
+            _run_query(spark, statement, vars_, macros, TASK_MAX_ROWS)

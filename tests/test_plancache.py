@@ -176,45 +176,25 @@ class TestEngineIntegration:
         assert rows[0][0] == 2
         spark.sql("DROP TABLE pc_cte_dml")
 
-    def test_with_headed_insert_bumps_under_search_path(self, spark):
-        # r6 advice: in the search-path branch readonly_head is True for
-        # WITH, so a CTE-headed INSERT executed there must still flush
-        # previously cached plans (same rule as the plain branch).
-        spark.sql("DROP TABLE IF EXISTS pc_cte_sp")
-        spark.sql("CREATE TABLE pc_cte_sp (v INT) USING parquet")
-        sel = "SELECT count(*) AS n FROM pc_cte_sp"
-        _, rows = _run_query(spark, sel, _vars(), {}, 100)
-        assert rows[0][0] == 0
-        v = _vars()
-        v.search_path = ["default"]
-        ins = (
-            "WITH c AS (SELECT 7 AS v) "
-            "INSERT INTO pc_cte_sp SELECT v FROM c"
-        )
-        _run_query(spark, ins, v, {}, 100)
-        _, rows = _run_query(spark, sel, _vars(), {}, 100)
-        assert rows[0][0] == 1
-        spark.sql("DROP TABLE pc_cte_sp")
-
     def test_create_temp_view_invalidates_cached_select(self, spark):
-        from shaper_spark.engine import _execute_side_effect
-
         spark.range(2).createOrReplaceTempView("pc_view_src")
-        _execute_side_effect(
+        _run_query(
             spark,
             "CREATE OR REPLACE TEMP VIEW pc_v AS SELECT * FROM pc_view_src",
             _vars(),
             {},
+            100,
         )
         sel = "SELECT count(*) AS n FROM pc_v"
         _, rows = _run_query(spark, sel, _vars(), {}, 100)
         assert rows[0][0] == 2
         spark.range(5).createOrReplaceTempView("pc_view_src")
-        _execute_side_effect(
+        _run_query(
             spark,
             "CREATE OR REPLACE TEMP VIEW pc_v AS SELECT * FROM pc_view_src",
             _vars(),
             {},
+            100,
         )
         _, rows = _run_query(spark, sel, _vars(), {}, 100)
         assert rows[0][0] == 5

@@ -9,6 +9,7 @@ import time
 
 import pytest
 
+from shaper_spark.sqltool import is_allowed_statement
 from shaper_spark.tasks import (
     TaskScheduler,
     execute_task,
@@ -76,6 +77,14 @@ class TestExecuteTask:
         assert r.queries[-1].result_rows == [[2]]
         assert r.queries[-1].result_columns == ["n"]
         assert r.queries[-1].duration_ms >= 0
+
+    def test_macro_without_temp(self, spark):
+        # tasks take CREATE MACRO without TEMP; dashboards do not
+        macro = "CREATE MACRO sm(a, b) AS a + b"
+        r = execute_task(spark, f"{macro}; SELECT sm(1, 2) AS x")
+        assert r.success, [q.error for q in r.queries]
+        assert r.queries[-1].result_rows == [[3]]
+        assert not is_allowed_statement(macro)
 
     def test_early_stop_on_false(self, spark):
         # run_task.go:195-199: a 1×1 boolean false stops execution

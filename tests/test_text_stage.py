@@ -55,33 +55,33 @@ def plain(spark):
     return {name: _render(spark, q) for name, (q, _) in QUERIES.items()}
 
 
-def _temp_view(spark, q, name, tmp_path):
+def _temp_view(spark, q, empty, tmp_path):
     rows, _ = _render(
         spark, f"CREATE TEMP VIEW ts_v AS {q}; SELECT count(*) AS n FROM ts_v;"
     )
     return rows[0][0]
 
 
-def _explain(spark, q, name, tmp_path):
+def _explain(spark, q, empty, tmp_path):
     rows, cols = _render(spark, f"EXPLAIN {q}")
     assert cols == ["explain_key", "explain_value"]
     assert rows[0][0] == "physical_plan" and "Physical Plan" in rows[0][1]
     return None
 
 
-def _describe(spark, q, name, tmp_path):
+def _describe(spark, q, empty, tmp_path):
     rows, _ = _render(spark, f"DESCRIBE {q}")
     return [r[0] for r in rows]
 
 
-def _summarize(spark, q, name, tmp_path):
+def _summarize(spark, q, empty, tmp_path):
     rows, cols = _render(spark, f"SUMMARIZE {q}")
     count = cols.index("count")
     assert len({r[count] for r in rows}) == 1
     return rows[0][count]
 
 
-def _set_variable(spark, q, name, tmp_path):
+def _set_variable(spark, q, empty, tmp_path):
     rows, _ = _render(
         spark,
         f"SET VARIABLE ts_k = (SELECT count(*) FROM ({q}));"
@@ -90,7 +90,7 @@ def _set_variable(spark, q, name, tmp_path):
     return rows[0][0]
 
 
-def _copy_to(spark, q, name, tmp_path):
+def _copy_to(spark, q, empty, tmp_path):
     path = str(tmp_path / "q.csv")
     (copy,) = _task(spark, f"COPY ({q}) TO '{path}' (HEADER);")
     with open(path) as f:
@@ -98,14 +98,14 @@ def _copy_to(spark, q, name, tmp_path):
     return copy.result_rows[0][0]
 
 
-def _temp_table(spark, q, name, tmp_path):
+def _temp_table(spark, q, empty, tmp_path):
     _, select = _task(
         spark, f"CREATE TEMP TABLE ts_t AS {q}; SELECT count(*) AS n FROM ts_t;"
     )
     return select.result_rows[0][0]
 
 
-def _ctas(spark, q, name, tmp_path):
+def _ctas(spark, q, empty, tmp_path):
     _fresh(spark, "ts_ctas")
     try:
         (ctas,) = _task(spark, f"CREATE TABLE ts_ctas AS {q};")
@@ -115,17 +115,17 @@ def _ctas(spark, q, name, tmp_path):
         _fresh(spark, "ts_ctas")
 
 
-def _insert(spark, q, name, tmp_path):
+def _insert(spark, q, empty, tmp_path):
     _fresh(spark, "ts_ins")
     try:
-        _task(spark, f"CREATE TABLE ts_ins AS {QUERIES[name][1]};")
+        _task(spark, f"CREATE TABLE ts_ins AS {empty};")
         _task(spark, f"INSERT INTO ts_ins {q};")
         return spark.table("ts_ins").count()
     finally:
         _fresh(spark, "ts_ins")
 
 
-def _init_ctas(spark, q, name, tmp_path):
+def _init_ctas(spark, q, empty, tmp_path):
     _fresh(spark, "ts_init")
     try:
         run_init_sql(spark, f"CREATE TABLE ts_init AS {q};")
@@ -153,8 +153,8 @@ FORMS = {
 @pytest.mark.parametrize("form", sorted(FORMS))
 def test_wrapped_query_matches_plain(spark, plain, tmp_path, form, query):
     run, want = FORMS[form]
-    q, _ = QUERIES[query]
-    got = run(spark, q, query, tmp_path)
+    q, empty = QUERIES[query]
+    got = run(spark, q, empty, tmp_path)
     rows, columns = plain[query]
     expected = {"count": len(rows), "columns": columns, None: None}[want]
     assert got == expected
@@ -163,6 +163,28 @@ def test_wrapped_query_matches_plain(spark, plain, tmp_path, form, query):
 def test_plain_queries(plain):
     assert len(plain["by_name"][0]) == 10
     assert plain["columns"][1] == ["r_regionkey", "r_name"]
+
+
+# DuckDB's FROM-first query as the wrapped body: the bare form with a
+# clause after the table, and the projected form. Region keys are 0-4.
+FROM_FIRST = {
+    "bare": ("FROM region WHERE r_regionkey > 1", "SELECT * FROM region WHERE 1 = 0"),
+    "projected": (
+        "FROM region SELECT r_regionkey, r_name WHERE r_regionkey > 1",
+        "SELECT r_regionkey, r_name FROM region WHERE 1 = 0",
+    ),
+}
+
+
+@pytest.mark.parametrize("query", sorted(FROM_FIRST))
+@pytest.mark.parametrize(
+    "form",
+    ["dashboard_temp_view", "task_temp_table", "task_ctas", "task_insert", "init_ctas"],
+)
+def test_from_first_body_is_lowered(spark, tmp_path, form, query):
+    run, _ = FORMS[form]
+    q, empty = FROM_FIRST[query]
+    assert run(spark, q, empty, tmp_path) == 3
 
 
 # ---------------------------------------------------------------------------
