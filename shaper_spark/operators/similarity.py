@@ -648,9 +648,10 @@ def _sweep_local(
     import pandas as pd
 
     C = np.vstack(cpdf[vec_col].to_numpy()).astype(np.float64)
-    cids = cpdf[id_col].to_numpy()
+    # ids of any orderable type (integer or string) — kept as values
+    cids = np.asarray(cpdf[id_col].tolist())
     Q = np.vstack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    qids = qpdf[id_col].to_numpy()
+    qids = np.asarray(qpdf[id_col].tolist())
     planes = hypers[0].shape[0]
     max_t = len(hypers)
     H = np.vstack([np.asarray(h, dtype=np.float64) for h in hypers])
@@ -683,13 +684,13 @@ def _sweep_local(
 
     exact_by_q: dict = {}
     for q, n in exact_pairs:
-        exact_by_q.setdefault(int(q), set()).add(int(n))
+        exact_by_q.setdefault(q, set()).add(n)
     rows = []
     for L in settings:
         sel = np.nonzero(mt < L)[0]
         by_query: dict = {}
         for idx in sel:
-            by_query.setdefault(int(qids[jj[idx]]), []).append(idx)
+            by_query.setdefault(qids[jj[idx]].item(), []).append(idx)
         for qid in sorted(exact_by_q):
             ex = exact_by_q[qid]
             cand = by_query.get(qid, [])
@@ -698,7 +699,7 @@ def _sweep_local(
                 order = np.lexsort(
                     (cids[ii[cand]], order_key[cand])
                 )[:k]
-                approx_ids = {int(cids[ii[cand[o]]]) for o in order}
+                approx_ids = {cids[ii[cand[o]]].item() for o in order}
             else:
                 approx_ids = set()
             rows.append(

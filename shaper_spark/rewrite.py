@@ -1,30 +1,46 @@
 """DuckDB-dialect → Spark SQL rewriter.
 
 The reference sends dashboard SQL verbatim to DuckDB (reference:
-server/core/get_dashboard.go:2213-2220); the dialect deltas we must absorb
-before calling ``spark.sql`` are:
+server/core/get_dashboard.go:2213-2220); :func:`rewrite_statement` turns
+one such statement into Spark SQL plus the render tags its custom-type
+casts carried. Every step is a string-level, quote-aware rewrite: we
+control the only SQL entry points, Catalyst does the actual planning.
 
-  * ``expr::CUSTOMTYPE`` and ``CAST(expr AS CUSTOMTYPE)`` for the 61
-    render types (reference: server/core/custom_types.go:22-83) — removed
-    from the SQL and recorded as (select-item index → tag),
-  * ``count()``           → ``count(*)``      (reference README.md:16),
-  * ``FROM``-first SQL    → ``SELECT * FROM …``,
-  * ``getvariable('k')``  → inlined literal (reference:
-    server/core/get_dashboard.go:26, app.go:574-595),
-  * DuckDB function names → Spark equivalents (quantile_cont → percentile,
-    list → collect_list, …),
-  * ``BOXPLOT(val [, outlier_info := e])`` macro expansion (reference:
-    server/core/custom_types.go:102-129),
-  * ``FETCH FIRST n ROWS`` → ``LIMIT n``.
+Pass order (each pass sees the output of the ones before it):
 
-Everything is a string-level, quote-aware rewrite: we control the only SQL
-entry points, Catalyst does the actual planning.
+  1. FROM-first queries → SELECT (the statement and every ``(FROM …)``
+     body); ``expr::CUSTOMTYPE`` / ``CAST(expr AS CUSTOMTYPE)`` casts
+     → select-item tags (reference: server/core/custom_types.go:22-83).
+  2. Literal and subscript syntax: ``count()``, ``query_table``, list
+     comprehensions, ``{…}`` struct/MAP literals, ``[…]`` lists,
+     ``x[i]`` / ``x[a:b]``, integer-cast rounding.
+  3. Operators and clauses: quantified comparisons, ``IN (VALUES …)``,
+     ``^ ** // % ~ -> ->>``, ``DISTINCT ON``, ``USING SAMPLE``,
+     ``* REPLACE``, ``SIMILAR TO``, FILTER / window EXCLUDE, ``= ANY``,
+     inline aggregate ``ORDER BY``, ``FETCH``, FROM-position
+     ``range``/``generate_series``, ``* EXCLUDE``, unordered rank
+     windows, 1-based lambda indexes.
+  4. Calls: :func:`_rewrite_calls` rewrites every call of a name in
+     ``_CALL_FIXERS`` (one row per DuckDB call form; aliases share a
+     row). Each call is visited once, after its arguments, and its
+     fixer gets the rewritten argument texts; the fixer's output is not
+     walked again — a fixer whose output needs another row calls that
+     row's fixer itself.
+  5. ASOF JOIN → LATERAL top-1, QUALIFY → subquery filter, the
+     ``_FN_RENAMES`` name-for-name renames, decimal literals in ``*``
+     and ``/``, ``NULLS LAST`` defaults, strftime codes, ``::BIT``,
+     type names, LIKE and string-literal backslashes.
+
+``getvariable('k')`` is inlined as a literal before any of this by
+:func:`substitute_variables` (reference: server/core/app.go:574-595).
 """
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass, field
+from typing import Callable, NamedTuple
 
 from .custom_types import CUSTOM_TYPE_NAMES
 from .sqltool import SqlSplitError, escape_sql_string, split_with_statement
@@ -214,6 +230,11 @@ def _outer_select_item_spans(sql: str) -> list[tuple[int, int]] | None:
 # Function-level rewrites
 # ---------------------------------------------------------------------------
 
+# A pass that writes a Spark call whose name is also a DuckDB name in
+# _CALL_FIXERS writes it ``name /*as-is*/(…)`` so the call walk leaves
+# it; _rewrite_calls drops the marker.
+_AS_IS = " /*as-is*/"
+
 # DuckDB → Spark function renames (whole-word, code regions only).
 _FN_RENAMES = {
     "quantile_cont": "percentile",
@@ -221,6 +242,8 @@ _FN_RENAMES = {
     "quantile": "percentile_approx",  # DuckDB: quantile == quantile_disc
     "list_max": "array_max",
     "list_min": "array_min",
+    # NB: DuckDB's element order is unspecified (hash-based); Spark's
+    # is first-occurrence. Set-equal, order may differ.
     "list_distinct": "array_distinct",
     "list_transform": "transform",
     "list_filter": "filter",
@@ -298,8 +321,6 @@ _FN_RENAMES = {
     "datepart": "date_part",
     "array_to_string": "array_join",
     "regexp_matches": "rlike",
-    "json_extract_string": "json_extract_text",
-    "to_timestamp": "timestamp_seconds",
     "arg_max": "max_by",
     "arg_min": "min_by",
     # editdist3 is DuckDB's Levenshtein alias; substring_grapheme
@@ -321,10 +342,6 @@ _FN_RENAMES = {
     "string_agg": "listagg",
     "unnest": "explode",
     "printf": "format_string",
-    "list_sort": "array_sort",
-    # NB: DuckDB's element order is unspecified (hash-based); Spark's
-    # is first-occurrence. Set-equal, order may differ.
-    "list_distinct": "array_distinct",
     "array_length": "size",
     "list_count": "size",
     "string_split_regex": "split",
@@ -383,7 +400,6 @@ _STRFTIME_CODES = {
 _DATE_FORMAT_CALL_RE = re.compile(
     r"\b(date_format|to_timestamp|try_to_timestamp)\s*\(", re.IGNORECASE
 )
-_REGEXP_REPLACE_CALL_RE = re.compile(r"\bregexp_replace\s*\(", re.IGNORECASE)
 
 # parse-direction overrides: Java's padded two-letter patterns demand
 # exactly that many digits when PARSING where DuckDB accepts unpadded
@@ -462,7 +478,7 @@ def _convert_strftime_literals(sql: str) -> str:
         pos = m.start() + len(name) + 1
 
 
-def _fix_regexp_replace_semantics(sql: str) -> str:
+def _fix_regexp_replace(args: list[str]) -> str | None:
     """DuckDB ``regexp_replace`` replaces only the FIRST match unless the
     ``'g'`` flag is given; Spark always replaces all (batch-22 — silent
     wrong answers for plain 3-arg calls).
@@ -474,62 +490,41 @@ def _fix_regexp_replace_semantics(sql: str) -> str:
       replace inside the prefix of ``s`` ending at the first match's end
       (which contains exactly one match), concat the untouched tail.
       Backreferences in the replacement survive because the real
-      ``regexp_replace`` still performs the substitution.  The source
-      expression is repeated 5×, so deeply nested non-g calls grow the
-      text multiplicatively — correct, and bounded in practice.
+      ``regexp_replace`` still performs the substitution. The splice
+      reads ``s`` and the pattern several times, so all three arguments
+      are bound once, as the fields of a one-element array's struct
+      that a lambda reads: the output is linear in the argument texts,
+      and nested non-g calls grow the statement linearly too.
     * Unknown flag letters or a non-literal flags argument: left
       untouched (Spark's 4th arg is a position integer — a loud type
       error, not a silent divergence)."""
-    guard = 0
-    while guard < 512:
-        guard += 1
-        states = _scan_states(sql)
-        hit = None
-        for m in _REGEXP_REPLACE_CALL_RE.finditer(sql):
-            if states[m.start()] != 0:
-                continue
-            close = _find_matching_close(sql, m.end() - 1, states)
-            if close == -1:
-                continue
-            args = _split_top_level_args(sql[m.end() : close])
-            if args and args[0].rstrip().endswith("/*RR*/"):
-                continue
-            if len(args) == 3:
-                flags = ""
-            elif len(args) == 4:
-                f4 = args[3].strip()
-                if not (
-                    f4.startswith("'")
-                    and f4.endswith("'")
-                    and set(f4[1:-1].lower()) <= set("gic")
-                ):
-                    continue
-                flags = f4[1:-1].lower()
-            else:
-                continue
-            hit = (m, close, args, flags)
-            break
-        if hit is None:
-            break
-        m, close, args, flags = hit
-        s = args[0].strip()
-        p = args[1].strip()
-        r = args[2].strip()
-        if "i" in flags:
-            p = f"concat('(?i)', {p})"
-        if "g" in flags:
-            new = f"regexp_replace({s} /*RR*/, {p}, {r})"
-        else:
-            first = f"regexp_instr({s}, {p})"
-            end = f"({first} + length(regexp_extract({s}, {p}, 0)))"
-            new = (
-                f"(CASE WHEN {first} = 0 THEN {s} "
-                f"ELSE concat(regexp_replace("
-                f"substr({s}, 1, {end} - 1) /*RR*/, {p}, {r}), "
-                f"substr({s}, {end})) END)"
-            )
-        sql = sql[: m.start()] + new + sql[close + 1 :]
-    return sql.replace(" /*RR*/", "")
+    if len(args) == 3:
+        flags = ""
+    elif len(args) == 4:
+        f4 = args[3].strip()
+        if not (
+            f4.startswith("'")
+            and f4.endswith("'")
+            and set(f4[1:-1].lower()) <= set("gic")
+        ):
+            return None
+        flags = f4[1:-1].lower()
+    else:
+        return None
+    s, p, r = (a.strip() for a in args[:3])
+    if "i" in flags:
+        p = f"concat('(?i)', {p})"
+    if "g" in flags:
+        return f"regexp_replace({s}, {p}, {r})"
+    first = "regexp_instr(__rr.s, __rr.p)"
+    end = f"({first} + length(regexp_extract(__rr.s, __rr.p, 0)))"
+    return (
+        f"element_at(transform(array(named_struct('s', {s}, 'p', {p}, "
+        f"'r', {r})), __rr -> CASE WHEN {first} = 0 THEN __rr.s "
+        f"ELSE concat(regexp_replace(substr(__rr.s, 1, {end} - 1), "
+        f"__rr.p, __rr.r), substr(__rr.s, {end})) END), 1)"
+    )
+
 
 _COUNT_EMPTY_RE = re.compile(r"\bcount\s*\(\s*\)", re.IGNORECASE)
 # DuckDB's query_table('t') TVF (used by the reference's ingest path,
@@ -1108,15 +1103,8 @@ def _rename_functions(sql: str) -> str:
     for m in pattern.finditer(sql):
         if states[m.start()] != 0:
             continue
-        name = m.group(1).lower()
-        if name == "to_timestamp":
-            # DuckDB to_timestamp(sec) == Spark timestamp_seconds(sec);
-            # Spark's own to_timestamp(str) must be left alone — only
-            # rewrite when the arg is numeric-looking. Keep it simple:
-            # leave to_timestamp untouched.
-            continue
         out.append(sql[last : m.start()])
-        out.append(_FN_RENAMES[name])
+        out.append(_FN_RENAMES[m.group(1).lower()])
         out.append(sql[m.start() + len(m.group(1)) : m.end()])
         last = m.end()
     out.append(sql[last:])
@@ -1160,9 +1148,6 @@ def _boxplot_expansion(val: str, outlier_info: str | None) -> str:
         f"'q2', CAST(percentile({val}, 0.5D) AS DOUBLE), "
         f"'q3', CAST({q3} AS DOUBLE))"
     )
-
-
-_BOXPLOT_RE = re.compile(r"\bBOXPLOT\s*\(", re.IGNORECASE)
 
 
 _ASOF_RE = re.compile(
@@ -1634,9 +1619,9 @@ def _rewrite_agg_order_by(sql: str) -> str:
                 key = (
                     f"CASE WHEN ({head}) IS NOT NULL THEN {key} END"
                 )
-            # /*AM*/ keeps the batch-27 arg_max NULL-skip fixer off
-            # these emissions: duck first/last KEEP NULL values
-            repl = f"{pick}({head} /*AM*/, {key})"
+            # as-is: the arg_max NULL-skip fixer stays off these
+            # emissions — duck first/last KEEP NULL values
+            repl = f"{pick}{_AS_IS}({head}, {key})"
             if fn == "last" and len(keys) == 1:
                 # duck's default NULLS-LAST ordering puts NULL keys at
                 # the END in both directions, so last() returns a
@@ -1668,11 +1653,6 @@ def _rewrite_agg_order_by(sql: str) -> str:
                 repl = f"reverse({base})" if direction == "DESC" else base
         sql = sql[: m.start()] + repl + sql[end + 1 :]
 
-
-_LIST_AGGREGATE_RE = re.compile(
-    r"\b(list_aggregate|array_aggregate|list_aggr|array_aggr)\s*\(",
-    re.IGNORECASE
-)
 
 _LIST_AGG_FNS = {
     "sum": "aggregate({l}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)",
@@ -1720,35 +1700,15 @@ _LIST_AGG_FNS = {
 }
 
 
-def _rewrite_list_aggregate(sql: str) -> str:
-    """DuckDB ``list_aggregate(l, 'name')`` → the matching Spark array
-    expression for the common reducers (sum/avg/min/max/count)."""
-    while True:
-        states = _scan_states(sql)
-        hit = None
-        for m in _LIST_AGGREGATE_RE.finditer(sql):
-            if states[m.start()] != 0:
-                continue
-            open_paren = sql.index("(", m.start())
-            end = _call_end(sql, states, open_paren)
-            if end is None:
-                continue
-            args = _split_top_level_args(sql[open_paren + 1 : end])
-            if len(args) != 2:
-                continue
-            fname = args[1].strip("'\"").lower()
-            if fname not in _LIST_AGG_FNS:
-                continue
-            hit = (m.start(), end, args[0], fname)
-            break
-        if hit is None:
-            return sql
-        start, end, lst, fname = hit
-        sql = (
-            sql[:start]
-            + "(" + _LIST_AGG_FNS[fname].format(l=lst) + ")"
-            + sql[end + 1 :]
-        )
+def _fix_list_aggregate(args: list[str]) -> str | None:
+    # DuckDB list_aggregate(l, 'name') → the matching Spark array
+    # expression for the reducers in _LIST_AGG_FNS
+    if len(args) != 2:
+        return None
+    fname = args[1].strip("'\"").lower()
+    if fname not in _LIST_AGG_FNS:
+        return None
+    return "(" + _LIST_AGG_FNS[fname].format(l=args[0]) + ")"
 
 
 _LIST_COMPREHENSION_RE = re.compile(
@@ -2740,75 +2700,27 @@ def _rewrite_star_replace(sql: str) -> str:
         sql = sql[: m.start()] + repl + sql[end + 1 :]
 
 
-_ARRAY_SLICE_FN_RE = re.compile(
-    r"\b(array_slice|list_slice)\s*\(", re.IGNORECASE
-)
+def _fix_array_slice(args: list[str]) -> str | None:
+    # DuckDB array_slice(l, begin, end) (1-based INCLUSIVE end) →
+    # Spark slice(l, begin, end-begin+1) (start + LENGTH)
+    if len(args) != 3:
+        return None
+    l, a, b = args
+    return f"slice({l}, {a}, ({b}) - ({a}) + 1)"
 
 
-def _rewrite_array_slice_fn(sql: str) -> str:
-    """DuckDB ``array_slice(l, begin, end)`` (1-based INCLUSIVE end) →
-    Spark ``slice(l, begin, end-begin+1)`` (start + LENGTH)."""
-    while True:
-        states = _scan_states(sql)
-        hit = None
-        for m in _ARRAY_SLICE_FN_RE.finditer(sql):
-            if states[m.start()] != 0:
-                continue
-            open_paren = sql.index("(", m.start())
-            end = _call_end(sql, states, open_paren)
-            if end is None:
-                continue
-            args = _split_top_level_args(sql[open_paren + 1 : end])
-            if len(args) != 3:
-                continue
-            hit = (m.start(), end, args)
-            break
-        if hit is None:
-            return sql
-        start, end, (l, a, b) = hit
-        sql = (
-            sql[:start]
-            + f"slice({l}, {a}, ({b}) - ({a}) + 1)"
-            + sql[end + 1 :]
-        )
+def _mk_trim2(fn: str):
+    # DuckDB ltrim/rtrim/trim/btrim(str, chars) → Spark's argument
+    # order is REVERSED (trim(trimStr, str)) — a silent wrong answer,
+    # not an error (r10: plain trim was missed when the r9 sweep fixed
+    # ltrim/rtrim).  One-arg forms pass through.
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 2:
+            return None
+        s, chars = args
+        return f"{fn}({chars}, {s})"
 
-
-_TRIM2_RE = re.compile(r"\b(ltrim|rtrim|trim|btrim)\s*\(", re.IGNORECASE)
-
-
-def _rewrite_trim_two_arg(sql: str) -> str:
-    """DuckDB ``ltrim/rtrim/trim/btrim(str, chars)`` → Spark's
-    argument order is REVERSED (``trim(trimStr, str)``) — a silent
-    wrong answer, not an error (r10: plain ``trim`` was missed when
-    the r9 sweep fixed ltrim/rtrim).  One-arg forms pass through."""
-    while True:
-        states = _scan_states(sql)
-        hit = None
-        for m in _TRIM2_RE.finditer(sql):
-            if states[m.start()] != 0:
-                continue
-            open_paren = sql.index("(", m.start())
-            end = _call_end(sql, states, open_paren)
-            if end is None:
-                continue
-            args = _split_top_level_args(sql[open_paren + 1 : end])
-            if len(args) != 2:
-                continue
-            # only swap once: detect the already-swapped marker
-            if args[1].endswith("/*swapped*/"):
-                continue
-            hit = (m.start(), end, m.group(1).lower(), args)
-            break
-        if hit is None:
-            return sql.replace(" /*swapped*/", "")
-        start, end, fn, (s, chars) = hit
-        if fn == "btrim":  # DuckDB's both-sides alias
-            fn = "trim"
-        sql = (
-            sql[:start]
-            + f"{fn}({chars}, {s} /*swapped*/)"
-            + sql[end + 1 :]
-        )
+    return fix
 
 
 _BARE_FILTER_RE = re.compile(r"\bFILTER\s*\(", re.IGNORECASE)
@@ -3340,12 +3252,12 @@ def _rewrite_any_all_array(sql: str) -> str:
             op = m.group(1)
             kind = m.group(2).upper()
             if op == "=" and kind == "ANY":
-                # /*LC*/ marker: DuckDB's `= ANY(arr)` keeps SQL
-                # quantified NULL semantics (absent + NULL element →
-                # NULL) — exactly Spark's raw array_contains — so the
+                # as-is: DuckDB's `= ANY(arr)` keeps SQL quantified
+                # NULL semantics (absent + NULL element → NULL) —
+                # exactly Spark's raw array_contains — so the
                 # array_contains alias fixer (which imposes DuckDB's
                 # list_contains absent→FALSE) must skip this emission.
-                repl = f"array_contains /*LC*/({inner}, {left})"
+                repl = f"array_contains{_AS_IS}({inner}, {left})"
             else:
                 hof = "exists" if kind == "ANY" else "forall"
                 repl = f"{hof}({inner}, __e -> {left} {op} __e)"
@@ -3438,10 +3350,6 @@ def _escape_backslashes_in_literals(sql: str) -> str:
     )
 
 
-_DATE_ADD_RE = re.compile(r"\bdate_add\s*\(", re.IGNORECASE)
-
-_REGEXP_EXTRACT_RE = re.compile(r"\bregexp_extract\s*\(", re.IGNORECASE)
-
 _RANK_OVER_EMPTY_RE = re.compile(
     r"\b(row_number|rank|dense_rank|percent_rank|cume_dist|ntile)"
     r"(\s*\([^()]*\)\s+OVER\s*\()\s*(\))",
@@ -3517,38 +3425,12 @@ def _rewrite_lambda_index_base(sql: str) -> str:
     return sql
 
 
-def _rewrite_misc_calls(sql: str) -> str:
-    """Small per-call fixups:
-
-    * ``date_add(x, INTERVAL …)`` (DuckDB's interval form) →
-      ``(x + INTERVAL …)``; Spark's own 2-arg day form passes through.
-    * 2-arg ``regexp_extract(s, p)`` → group 0 appended — DuckDB's
-      default is the WHOLE MATCH, Spark's is group 1.
-    * rank-family ``OVER ()`` → ``OVER (ORDER BY (SELECT NULL))`` —
-      DuckDB allows unordered ranking windows, Spark requires an
-      ORDER BY (aggregates over ``OVER ()`` are legal Spark and are
-      left alone: adding an ORDER BY would shrink their frame)."""
-    for regex, fixer in (
-        (_DATE_ADD_RE, _fix_date_add),
-        (_REGEXP_EXTRACT_RE, _fix_regexp_extract),
-    ):
-        while True:
-            states = _scan_states(sql)
-            changed = False
-            for m in regex.finditer(sql):
-                if states[m.start()] != 0:
-                    continue
-                close = _find_matching_close(sql, m.end() - 1, states)
-                if close == -1:
-                    break
-                new = fixer(_split_top_level_args(sql[m.end() : close]))
-                if new is None:
-                    continue
-                sql = sql[: m.start()] + new + sql[close + 1 :]
-                changed = True
-                break
-            if not changed:
-                break
+def _order_rank_windows(sql: str) -> str:
+    """rank-family ``OVER ()`` and ``OVER (PARTITION BY …)`` without an
+    ORDER BY get ``ORDER BY (SELECT NULL)`` — DuckDB allows unordered
+    ranking windows, Spark requires an ORDER BY (aggregates over
+    ``OVER ()`` are legal Spark and are left alone: adding an ORDER BY
+    would shrink their frame)."""
     states = _scan_states(sql)
     sql = _RANK_OVER_EMPTY_RE.sub(
         lambda m: m.group(0)
@@ -3577,14 +3459,16 @@ _INTERVAL_PRODUCER_RE = re.compile(
 
 
 def _fix_date_add(args: list[str]) -> str | None:
-    # interval 2nd arg (literal or producer call, batch-26) → '+';
-    # Spark's own integer-day form passes through
+    # DuckDB's interval form date_add(x, INTERVAL …): an interval 2nd
+    # arg (literal or producer call, batch-26) → '+'; Spark's own
+    # integer-day form passes through
     if len(args) != 2 or not _INTERVAL_PRODUCER_RE.match(args[1].strip()):
         return None
     return f"({args[0].strip()} + {args[1].strip()})"
 
 
 def _fix_regexp_extract(args: list[str]) -> str | None:
+    # 2-arg: DuckDB's default group is the WHOLE MATCH, Spark's is 1
     if len(args) == 2:
         return f"regexp_extract({args[0].strip()}, {args[1].strip()}, 0)"
     if len(args) == 3:
@@ -3627,7 +3511,7 @@ _TIME_BUCKET_ORIGIN = 946857600
 
 
 _EXTRACT_COMPAT_RE = re.compile(
-    r"\bextract\s*\(\s*(epoch|dow|isodow|microseconds?|milliseconds?"
+    r"(epoch|dow|isodow|microseconds?|milliseconds?"
     r"|decades?|century|centuries|millenniums?|millennia|millennium"
     r"|seconds?|secs?|us|ms|s)\s+FROM\b",
     re.IGNORECASE,
@@ -3709,2104 +3593,1704 @@ def _rewrite_bit_casts(sql: str) -> str:
         sql = sql[:start] + _bit_cast_guard(operand) + sql[m.end() :]
 
 
-def _rewrite_fn_compat2(sql: str) -> str:
-    """Round-9 differential-sweep fixups (each form verified against
-    DuckDB):
+# ---------------------------------------------------------------------------
+# Call fixers: one function per DuckDB call form, keyed by name in
+# _CALL_FIXERS.  A fixer gets the call's argument texts (already
+# rewritten) and returns the Spark replacement, or None to keep the call.
+# ---------------------------------------------------------------------------
 
-    * sample-statistics corrections — DuckDB's ``skewness``/
-      ``kurtosis`` are bias-corrected SAMPLE statistics, Spark's are
-      population: G1 = g1·√(n(n−1))/(n−2) and
-      G2 = (n−1)/((n−2)(n−3))·((n+1)·g2 + 6) splice in the correction
-      (silent numeric divergence before).
-    * ``extract(epoch|dow|isodow FROM e)`` — epoch → fractional
-      seconds via unix_micros; DuckDB's dow is 0=Sunday (Spark's is
-      1=Sunday), isodow is 1=Monday.
-    * 3-arg ``date_sub('part', a, b)`` → ``timestampdiff`` (complete
-      units, signed; Spark's own 2-arg date_sub passes through).
-    * ``time_bucket(INTERVAL n unit, ts)`` (fixed-width units) →
-      epoch arithmetic aligned to the 2000-01-03 origin (TimescaleDB
-      semantics; month-width buckets pass through).
-    * 2-arg ``regexp_extract_all`` → group 0 (DuckDB's whole-match
-      default; Spark's default group 1 errors on group-less patterns).
-    * ``format('{} …', args…)`` (plain ``{}`` slots only) →
-      ``format_string('%s …')``; ``to_base(a, b)`` → ``conv(a, 10, b)``.
-    """
-
-    def _fix_skew(args: list[str]) -> str | None:
-        # try_divide: n ≤ 2 is NULL in DuckDB where a bare '/' would
-        # raise ANSI DIVIDE_BY_ZERO (r11 aggregate fuzzer)
-        if len(args) != 1 or args[0].rstrip().endswith("/*G1*/"):
-            return None
-        e = args[0].strip()
-        n = f"count({e})"
-        return (
-            f"try_divide(skewness({e} /*G1*/) * sqrt({n} * ({n} - 1)), "
-            f"{n} - 2)"
-        )
-
-    def _fix_kurt(args: list[str]) -> str | None:
-        if len(args) != 1 or args[0].rstrip().endswith("/*G2*/"):
-            return None
-        e = args[0].strip()
-        n = f"count({e})"
-        return (
-            f"(try_divide({n} - 1, ({n} - 2) * ({n} - 3)) * "
-            f"(({n} + 1) * kurtosis({e} /*G2*/) + 6))"
-        )
-
-    def _fix_date_sub3(args: list[str]) -> str | None:
-        if len(args) != 3:
-            return None
-        part = args[0].strip()
-        if not (part.startswith("'") and part.endswith("'")):
-            return None
-        return (
-            f"timestampdiff({part[1:-1].upper()}, {args[1].strip()}, "
-            f"{args[2].strip()})"
-        )
-
-    def _fix_time_bucket(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        m = _INTERVAL_LIT_RE.match(args[0].strip())
-        if m is None:
-            return None
-        secs = int(m.group(1)) * _UNIT_SECONDS[m.group(2).upper()]
-        if secs <= 0:
-            return None
-        ts = args[1].strip()
-        o = _TIME_BUCKET_ORIGIN
-        # pmod, not DIV: DIV truncates toward zero, so timestamps
-        # BEFORE the 2000-01-03 origin rounded toward the origin
-        # instead of flooring to the bucket start (r12 temporal fuzz
-        # find: 1969-07-20 20:17:40 bucketed to 20:20 instead of
-        # 20:15).  pmod's non-negative remainder floors for any sign.
-        return (
-            f"timestamp_seconds(unix_timestamp({ts}) - "
-            f"pmod(unix_timestamp({ts}) - {o}, {secs}))"
-        )
-
-    def _fix_rex_all(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        return (
-            f"regexp_extract_all({args[0].strip()}, {args[1].strip()}, 0)"
-        )
-
-    # ---- batch-22 fixers (r11 third probe, 212 cases) ----
-
-    def _fix_log(args: list[str]) -> str | None:
-        # DuckDB's 1-arg log() is LOG BASE 10; Spark's is ln —
-        # a silent numeric wrong answer.  2-arg log(b, x) agrees.
-        if len(args) != 1:
-            return None
-        return f"log10({args[0].strip()})"
-
-    def _fix_list_contains(args: list[str]) -> str | None:
-        # DuckDB: FALSE when absent even if the list has NULLs (Spark's
-        # array_contains yields NULL there); NULL when either the list
-        # or the needle is NULL.  Null-safe-equality exists() instead
-        # of array_contains: the lambda's <=> coerces an untyped NULL
-        # literal needle (array_contains rejects it at analysis) and
-        # NULL elements compare FALSE, matching DuckDB's absent→FALSE.
-        if len(args) != 2:
-            return None
-        l, v = args[0].strip(), args[1].strip()
-        return (
-            f"(CASE WHEN ({l}) IS NULL OR ({v}) IS NULL THEN "
-            f"CAST(NULL AS BOOLEAN) "
-            f"ELSE exists({l}, __lc_e -> __lc_e <=> ({v})) END)"
-        )
-
-    def _fix_sha256(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"sha2({args[0].strip()}, 256)"
-
-    def _fix_age(args: list[str]) -> str | None:
-        # DuckDB age(): symbolic year/month/day interval — lowered
-        # onto the duckdb_age compat UDF which renders DuckDB's
-        # VARCHAR form (r12; divergence: VARCHAR, not INTERVAL).  The
-        # 1-arg form measures from the current timestamp (DuckDB uses
-        # the transaction timestamp, not current_date).
-        if len(args) == 1:
-            return (
-                f"duckdb_age(CAST(now() AS TIMESTAMP), "
-                f"CAST({args[0].strip()} AS TIMESTAMP))"
-            )
-        if len(args) == 2:
-            return (
-                f"duckdb_age(CAST({args[0].strip()} AS TIMESTAMP), "
-                f"CAST({args[1].strip()} AS TIMESTAMP))"
-            )
+def _fix_skew(args: list[str]) -> str | None:
+    # DuckDB's skewness/kurtosis are bias-corrected SAMPLE statistics,
+    # Spark's are population: G1 = g1·√(n(n−1))/(n−2) here and
+    # G2 = (n−1)/((n−2)(n−3))·((n+1)·g2 + 6) in _fix_kurt.
+    # try_divide: n ≤ 2 is NULL in DuckDB where a bare '/' would
+    # raise ANSI DIVIDE_BY_ZERO (r11 aggregate fuzzer)
+    if len(args) != 1:
         return None
-
-    def _fix_struct_insert(args: list[str]) -> str | None:
-        # struct_insert(s, n := e, …): append fields to a struct.  Two
-        # statically-resolvable shapes (r12): an identifier/field-path
-        # base expands via Spark's struct-star (`struct(s.*, e AS n)`),
-        # a named_struct(…) literal base merges textually.  Anything
-        # else passes through to a loud Spark error (documented).
-        # Divergence: DuckDB raises on a duplicate field name; the
-        # star expansion would emit a duplicate-named field instead.
-        if len(args) < 2:
-            return None
-        base = args[0].strip()
-        fields = []
-        for a in args[1:]:
-            mm = re.match(
-                r'^\s*([A-Za-z_][A-Za-z0-9_]*|"[^"]+")\s*:=\s*(.+)$',
-                a.strip(),
-                re.DOTALL,
-            )
-            if not mm:
-                return None
-            fields.append((mm.group(1).strip('"'), mm.group(2).strip()))
-        if re.match(
-            r'^(?:[A-Za-z_][A-Za-z0-9_]*|"[^"]+")'
-            r'(?:\.(?:[A-Za-z_][A-Za-z0-9_]*|"[^"]+"))*$',
-            base,
-        ):
-            tail = ", ".join(f"{e} AS `{n}`" for n, e in fields)
-            return f"struct({base}.*, {tail})"
-        if re.match(r"named_struct\s*\(", base, re.IGNORECASE) and (
-            base.endswith(")")
-        ):
-            inner = base[base.index("(") + 1 : -1].strip()
-            tail = ", ".join(f"'{n}', {e}" for n, e in fields)
-            return (
-                f"named_struct({inner}, {tail})"
-                if inner
-                else f"named_struct({tail})"
-            )
-        return None
-
-    def _fix_favg(args: list[str]) -> str | None:
-        # Kahan-compensated forms return DOUBLE in DuckDB regardless of
-        # input type (avg over DECIMAL stays DECIMAL in Spark)
-        if len(args) != 1:
-            return None
-        return f"avg(CAST({args[0].strip()} AS DOUBLE))"
-
-    def _fix_fsum(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"sum(CAST({args[0].strip()} AS DOUBLE))"
-
-    def _fix_kurtosis_pop(args: list[str]) -> str | None:
-        # DuckDB kurtosis_pop = population excess kurtosis = Spark's
-        # kurtosis exactly (the /*G2*/ tag stops the sample-correction
-        # fixer from re-correcting it)
-        if len(args) != 1 or args[0].rstrip().endswith("/*G2*/"):
-            return None
-        return f"kurtosis({args[0].strip()} /*G2*/)"
-
-    def _fix_timezone_fn(args: list[str]) -> str | None:
-        # timezone(tz, ts): interpret the naive ts in tz, render in the
-        # session zone (UTC) — to_utc_timestamp semantics
-        if len(args) != 2:
-            return None
-        return (
-            f"to_utc_timestamp({args[1].strip()}, {args[0].strip()})"
-        )
-
-    def _fix_epoch_fn(args: list[str]) -> str | None:
-        # DuckDB epoch(ts) → DOUBLE seconds WITH the fraction
-        # (unix_timestamp truncates — r12 temporal fuzz find).
-        if len(args) != 1:
-            return None
-        a = args[0].strip()
-        return f"(unix_micros(CAST(({a}) AS TIMESTAMP)) / 1000000.0)"
-
-    def _fix_epoch_ms_poly(args: list[str]) -> str | None:
-        # epoch_ms is overloaded: BIGINT → TIMESTAMP, TIMESTAMP →
-        # BIGINT ms.  Integer literals dispatch statically; everything
-        # else is treated as a timestamp, CAST first so DATE-typed
-        # operands (date_trunc('month', …) returns DATE, r11) resolve
-        # (r12 temporal fuzz find).
-        if len(args) != 1:
-            return None
-        a = args[0].strip()
-        if re.fullmatch(r"-?\d+", a):
-            return f"timestamp_millis({a})"
-        return f"unix_millis(CAST(({a}) AS TIMESTAMP))"
-
-    def _fix_epoch_us_poly(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        a = args[0].strip()
-        if re.fullmatch(r"-?\d+", a):
-            return f"timestamp_micros({a})"
-        return f"unix_micros(CAST(({a}) AS TIMESTAMP))"
-
-    def _fix_hash_fn(args: list[str]) -> str | None:
-        # DuckDB hash() returns UBIGINT (non-negative); Spark's hash()
-        # is 32-bit.  Values are engine-specific either way (nobody
-        # gets cross-engine hash equality) — what code relies on is
-        # hash(x) % N staying non-negative and 64-bit-distributed.
-        if not args or args[0].rstrip().endswith("/*HH*/"):
-            return None
-        inner = ", ".join(a.strip() for a in args)
-        return f"(xxhash64({inner} /*HH*/) & 9223372036854775807)"
-
-    def _fix_typeof(args: list[str]) -> str | None:
-        # Spark type names → DuckDB spellings via the compat UDF
-        if len(args) != 1 or args[0].rstrip().endswith("/*TY*/"):
-            return None
-        return f"duckdb_typename(typeof({args[0].strip()} /*TY*/))"
-
-    def _fix_strftime_computed(args: list[str]) -> str | None:
-        # %V/%G/%u/%w/%U/%W/%n have no Spark pattern letters (week-
-        # based Java fields are disabled in Spark 3+) — split the
-        # format into date_format chunks + computed expressions,
-        # concat'd back together (batch-25)
-        if len(args) != 2:
-            return None
-        e = args[0].strip()
-        fmt = args[1].strip()
-        if not (fmt.startswith("'") and fmt.endswith("'")):
-            return None
-        inner = fmt[1:-1]
-        computed = {
-            "%V": f"lpad(CAST(weekofyear({e}) AS STRING), 2, '0')",
-            "%G": f"CAST(extract(YEAROFWEEK FROM {e}) AS STRING)",
-            "%u": f"CAST(weekday({e}) + 1 AS STRING)",
-            "%w": f"CAST(dayofweek({e}) - 1 AS STRING)",
-            "%U": (
-                f"lpad(CAST((dayofyear({e}) + 6 - (dayofweek({e}) - 1))"
-                f" DIV 7 AS STRING), 2, '0')"
-            ),
-            "%W": (
-                f"lpad(CAST((dayofyear({e}) + 6 - weekday({e}))"
-                f" DIV 7 AS STRING), 2, '0')"
-            ),
-            "%n": (
-                f"lpad(CAST(pmod(unix_micros(CAST({e} AS TIMESTAMP)), "
-                f"1000000) * 1000 AS STRING), 9, '0')"
-            ),
-        }
-        if not any(c in inner for c in computed):
-            return None
-        parts: list[str] = []
-        buf = ""
-        i = 0
-        while i < len(inner):
-            two = inner[i : i + 2]
-            if two in computed:
-                if buf:
-                    parts.append(
-                        f"date_format({e}, '{buf}')"
-                        if "%" in buf
-                        else f"'{buf}'"
-                    )
-                    buf = ""
-                parts.append(computed[two])
-                i += 2
-            elif two == "%%":
-                buf += "%%"
-                i += 2
-            else:
-                buf += inner[i]
-                i += 1
-        if buf:
-            parts.append(
-                f"date_format({e}, '{buf}')" if "%" in buf else f"'{buf}'"
-            )
-        return "concat(" + ", ".join(parts) + ")"
-
-    def _fix_strptime_list(args: list[str]) -> str | None:
-        # strptime(s, [f1, f2, …]): DuckDB tries each format in order
-        # (batch-25) → coalesce of try_to_timestamp attempts; a
-        # no-format-matches input is NULL here vs DuckDB's error
-        # (documented)
-        if len(args) != 2:
-            return None
-        am = re.match(
-            r"^(?:\[|array\s*\()(.*?)[\])]$",
-            args[1].strip(),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if am is None:
-            return None
-        fmts = [f.strip() for f in _split_top_level_args(am.group(1))]
-        if not fmts or not all(
-            f.startswith("'") and f.endswith("'") for f in fmts
-        ):
-            return None
-        s = args[0].strip()
-        attempts = ", ".join(
-            f"try_to_timestamp({s}, {f})" for f in fmts
-        )
-        return f"coalesce({attempts})"
-
-    # ---- batch-26 alias-audit fixers (duckdb_functions() diff) ----
-
-    def _mk_argminmax(pick: str):
-        # DuckDB arg_max/max_by SKIP rows whose ARG is NULL (and rows
-        # whose key is NULL); Spark's max_by returns the NULL arg
-        # (r11 aggregate fuzzer) — NULLing the key on NULL args makes
-        # Spark skip them the same way
-        def fix(args: list[str]) -> str | None:
-            if len(args) != 2 or args[0].rstrip().endswith("/*AM*/"):
-                return None
-            a, v = args[0].strip(), args[1].strip()
-            return (
-                f"{pick}({a} /*AM*/, "
-                f"CASE WHEN ({a}) IS NOT NULL THEN {v} END)"
-            )
-
-        return fix
-
-    def _fix_date_trunc_type(args: list[str]) -> str | None:
-        # DuckDB's date_trunc returns DATE (not midnight TIMESTAMP)
-        # for day-or-coarser parts — statically known from the part
-        # literal (r11 date fuzzer)
-        if len(args) != 2 or args[0].rstrip().endswith("/*DT*/"):
-            return None
-        p = args[0].strip()
-        if not (p.startswith("'") and p.endswith("'")):
-            return None
-        if p[1:-1].lower() not in (
-            "day", "week", "month", "quarter", "year", "decade",
-            "century", "millennium", "isoyear",
-        ):
-            return None
-        return (
-            f"CAST(date_trunc({p} /*DT*/, {args[1].strip()}) AS DATE)"
-        )
-
-    def _fix_count_star(args: list[str]) -> str | None:
-        if args and any(a.strip() for a in args):
-            return None
-        return "count(*)"
-
-    def _fix_sem(args: list[str]) -> str | None:
-        # standard error of the mean — DuckDB uses the POPULATION
-        # stddev over √n (pinned: sem([1,2,4]) = 0.720082…)
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return f"(stddev_pop({e}) / sqrt(count({e})))"
-
-    def _fix_constant_or_null(args: list[str]) -> str | None:
-        # constant_or_null(v, x): v unless x IS NULL
-        if len(args) != 2:
-            return None
-        v, x = args[0].strip(), args[1].strip()
-        return f"(CASE WHEN ({x}) IS NULL THEN NULL ELSE ({v}) END)"
-
-    def _fix_reservoir_quantile(args: list[str]) -> str | None:
-        # approximate by contract — percentile_approx, sample-size
-        # argument dropped
-        if len(args) not in (2, 3):
-            return None
-        return (
-            f"percentile_approx({args[0].strip()}, {args[1].strip()})"
-        )
-
-    def _fix_julian(args: list[str]) -> str | None:
-        # julian day number: unix days + 2440588 (midnight = .0,
-        # pinned against DuckDB 1.0)
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"(unix_micros(CAST({e} AS TIMESTAMP)) / 86400000000.0 "
-            f"+ 2440588.0)"
-        )
-
-    def _fix_epoch_ns(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"(unix_micros({args[0].strip()}) * 1000)"
-
-    def _fix_era(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"(CASE WHEN year({args[0].strip()}) > 0 THEN 1 ELSE 0 END)"
-
-    def _mk_const_fn(value: str):
-        # functions that are a session constant here (tz pinned UTC)
-        def fix(args: list[str]) -> str | None:
-            return value if len(args) == 1 else None
-
-        return fix
-
-    def _fix_decade_fn(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"(year({args[0].strip()}) DIV 10)"
-
-    def _fix_millennium_fn(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"(((year({args[0].strip()}) - 1) DIV 1000) + 1)"
-
-    def _fix_microsecond_fn(args: list[str]) -> str | None:
-        # µs within the MINUTE, like date_part('microseconds')
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return f"pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000)"
-
-    def _fix_millisecond_fn(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"(pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000) "
-            f"DIV 1000)"
-        )
-
-    def _fix_divide_fn(args: list[str]) -> str | None:
-        # DuckDB's divide(a, b) is the // operator (integer DIV on
-        # integers), not float division
-        if len(args) != 2:
-            return None
-        a, b = args[0].strip(), args[1].strip()
-        return (
-            f"(CASE WHEN ({b}) = 0 THEN NULL ELSE ({a}) DIV ({b}) END)"
-        )
-
-    def _mk_binop_fn(op: str):
-        def fix(args: list[str]) -> str | None:
-            if len(args) != 2:
-                return None
-            return f"(({args[0].strip()}) {op} ({args[1].strip()}))"
-
-        return fix
-
-    def _fix_grouping_multi(args: list[str]) -> str | None:
-        # DuckDB's grouping(a, b, …) returns the combined bitmask;
-        # Spark splits that into grouping_id(a, b, …) (batch-24,
-        # same bit order — high bit = first argument)
-        if len(args) < 2:
-            return None
-        return f"grouping_id({', '.join(a.strip() for a in args)})"
-
-    def _fix_printf_args(args: list[str]) -> str | None:
-        # Spark's format_string/printf rejects DECIMAL for %f/%d and
-        # bare decimal literals parse as DECIMAL — suffix them to
-        # DOUBLE (batch-22; expression-nested literals are covered by
-        # the division pass, bare value args were not)
-        changed = False
-        out = [args[0].strip()] if args else []
-        for a in args[1:]:
-            a = a.strip()
-            if re.fullmatch(r"-?\d+\.\d+", a):
-                out.append(a + "D")
-                changed = True
-            else:
-                out.append(a)
-        if not changed:
-            return None
-        return f"format_string({', '.join(out)})"
-
-    def _fix_format(args: list[str]) -> str | None:
-        if not args:
-            return None
-        fmt = args[0].strip()
-        if not (fmt.startswith("'") and fmt.endswith("'")):
-            return None
-        inner = fmt[1:-1]
-        if "%" in inner:
-            return None  # printf-style text: not the brace form
-        # fmt-style slots → printf: '{}' → %s, '{:.2f}' → %.2f,
-        # '{:d}' → %d, '{:>8}'-style alignment unsupported (r11
-        # batch-16 extends the r9 plain-{} subset)
-        out_parts: list[str] = []
-        slots: list[str] = []  # per-slot cast ('' = none)
-        pos = 0
-        ok = True
-        for sm in re.finditer(r"\{([^{}]*)\}", inner):
-            out_parts.append(inner[pos : sm.start()])
-            spec = sm.group(1)
-            if spec == "":
-                out_parts.append("%s")
-                slots.append("")
-                pos = sm.end()
-                continue
-            # ':[0][width][.prec][,][dfxXos]' (batch-22 widens the
-            # batch-16 subset; alignment/fill specs still bail)
-            gm = re.fullmatch(
-                r":(0?)(\d*)(?:\.(\d+))?(,?)([dfxXos]?)", spec
-            )
-            if gm is None:
-                ok = False
-                break
-            zero, width, prec, comma, conv = gm.groups()
-            if comma and conv in ("", "d"):
-                # '{:,}' → Java's grouped decimal
-                out_parts.append(f"%{zero}{width},d")
-                slots.append("BIGINT")
-            elif conv == "d" or (conv == "" and (zero or width)):
-                out_parts.append(f"%{zero}{width}d")
-                slots.append("BIGINT")
-            elif conv == "f":
-                out_parts.append(
-                    f"%{zero}{width}.{prec if prec else '6'}f"
-                )
-                slots.append("DOUBLE")
-            elif conv in ("x", "X", "o"):
-                out_parts.append(f"%{zero}{width}{conv}")
-                slots.append("BIGINT")
-            elif conv == "s" or conv == "":
-                if prec or comma:
-                    ok = False
-                    break
-                # fmt left-aligns strings by default; Java '%Ns'
-                # right-aligns — '-' flips it
-                out_parts.append(f"%-{width}s" if width else "%s")
-                slots.append("")
-            else:
-                ok = False
-                break
-            pos = sm.end()
-        if not ok:
-            return None
-        out_parts.append(inner[pos:])
-        converted = "".join(out_parts)
-        if re.search(r"\{|\}", converted):
-            return None  # stray braces: leave for the user to see
-        vals = [a.strip() for a in args[1:]]
-        cast_vals = [
-            f"CAST({v} AS {t})" if t and i < len(slots) else v
-            for i, (v, t) in enumerate(
-                zip(vals, slots + [""] * len(vals))
-            )
-        ]
-        rest = ", ".join(cast_vals)
-        return (
-            f"format_string('{converted}'"
-            + (f", {rest}" if rest else "")
-            + ")"
-        )
-
-    def _fix_to_base(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        return f"conv({args[0].strip()}, 10, {args[1].strip()})"
-
-    def _fix_dayname(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"date_format({args[0].strip()}, 'EEEE')"
-
-    def _fix_monthname(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"date_format({args[0].strip()}, 'MMMM')"
-
-    def _fix_yearweek(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        # DuckDB: ISO year*100 + ISO week
-        return f"(extract(YEAROFWEEK FROM {e}) * 100 + weekofyear({e}))"
-
-    def _fix_list_has_all(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        l, sub = args[0].strip(), args[1].strip()
-        return f"(size(array_except({sub}, {l})) = 0)"
-
-    def _fix_struct_pack(args: list[str]) -> str | None:
-        pairs = []
-        for a in args:
-            pm = re.match(r"\s*(\w+)\s*:=\s*(.+)$", a, re.DOTALL)
-            if pm is None:
-                return None
-            pairs.append(f"'{pm.group(1)}', {pm.group(2).strip()}")
-        return "named_struct(" + ", ".join(pairs) + ")" if pairs else None
-
-    def _fix_struct_extract(args: list[str]) -> str | None:
-        if len(args) != 2 or not args[1].strip().startswith("'"):
-            return None
-        return f"({args[0].strip()})[{args[1].strip()}]"
-
-    def _fix_entropy(args: list[str]) -> str | None:
-        # DuckDB entropy(x): base-2 Shannon entropy of the value
-        # distribution in the group, NULLs excluded.  Emulated over
-        # collect_list via the identity H = log2(n) − Σ c·log2(c) / n
-        # (Spark dedups the identical collect_list agg expressions, so
-        # the group is buffered once; the HOFs are interpreted —
-        # dashboard-scale groups, not the corpus hot path).
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if e.endswith("/*H*/"):
-            return None
-        L = f"collect_list({e} /*H*/)"
-        return (
-            f"(CASE WHEN size({L}) = 0 THEN NULL ELSE "
-            f"log2(CAST(size({L}) AS DOUBLE)) - try_divide(aggregate("
-            f"transform(array_distinct({L}), v -> "
-            f"size(filter({L}, y -> y <=> v))), CAST(0 AS DOUBLE), "
-            f"(acc, c) -> acc + c * log2(CAST(c AS DOUBLE))), "
-            f"size({L})) END)"
-        )
-
-    def _fix_histogram(args: list[str]) -> str | None:
-        # DuckDB histogram(x): MAP(value → count), keys sorted, NULLs
-        # excluded.  Same collect_list emulation as entropy.
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if e.endswith("/*H*/"):
-            return None
-        L = f"collect_list({e} /*H*/)"
-        return (
-            f"map_from_entries(transform(array_sort(array_distinct({L})), "
-            f"v -> struct(v, CAST(size(filter({L}, y -> y <=> v)) "
-            f"AS BIGINT))))"
-        )
-
-    def _fix_scalar_range(args: list[str]) -> str | None:
-        # DuckDB's SCALAR range(): list with EXCLUSIVE end (Spark's
-        # sequence() is inclusive).  FROM-position range() is handled
-        # earlier by the table-function pass / Spark's own TVF — the
-        # dispatch loop below skips those via the FROM/JOIN guard.
-        if len(args) == 1:
-            n = f"CAST({args[0].strip()} AS BIGINT)"
-            return (
-                f"slice(sequence(0, greatest({n} - 1, 0)), 1, "
-                f"greatest({n}, 0))"
-            )
-        if len(args) == 2:
-            a = f"CAST({args[0].strip()} AS BIGINT)"
-            b = f"CAST({args[1].strip()} AS BIGINT)"
-            return (
-                f"slice(sequence({a}, greatest({b} - 1, {a})), 1, "
-                f"greatest({b} - {a}, 0))"
-            )
-        if len(args) == 3:
-            # 3-arg with signed step (batch-22): exclusive stop via a
-            # filter; a direction/step mismatch is [] in DuckDB where
-            # sequence() raises — guard it (step 0 still raises, loud
-            # on both engines)
-            a = f"CAST({args[0].strip()} AS BIGINT)"
-            b = f"CAST({args[1].strip()} AS BIGINT)"
-            s = f"CAST({args[2].strip()} AS BIGINT)"
-            return (
-                f"(CASE WHEN (({s}) > 0 AND ({a}) >= ({b})) "
-                f"OR (({s}) < 0 AND ({a}) <= ({b})) "
-                f"THEN array() "
-                f"ELSE filter(sequence({a}, {b}, {s}), "
-                f"__rg -> CASE WHEN ({s}) > 0 THEN __rg < ({b}) "
-                f"ELSE __rg > ({b}) END) END)"
-            )
-        return None
-
-    def _fix_scalar_series(args: list[str]) -> str | None:
-        # scalar generate_series(): INCLUSIVE end — sequence()
-        # exactly; 3-arg adds DuckDB's empty-list-on-mismatch (Spark
-        # raises; batch-22).  Interval steps pass through unguarded
-        # (the numeric comparison below would not type-check).
-        if len(args) == 2:
-            return f"sequence({args[0].strip()}, {args[1].strip()})"
-        if len(args) == 3:
-            a, b, s = (x.strip() for x in args)
-            if re.search(r"\bINTERVAL\b", s, re.IGNORECASE):
-                return f"sequence({a}, {b}, {s})"
-            return (
-                f"(CASE WHEN (({s}) > 0 AND ({a}) > ({b})) "
-                f"OR (({s}) < 0 AND ({a}) < ({b})) "
-                f"THEN array() "
-                f"ELSE sequence({a}, {b}, {s}) END)"
-            )
-        if len(args) == 1:
-            return f"sequence(0, CAST({args[0].strip()} AS BIGINT))"
-        return None
-
-    _fix_scalar_range.expr_position_only = True
-    _fix_scalar_series.expr_position_only = True
-
-    def _fix_xor(args: list[str]) -> str | None:
-        # scalar xor(); cannot emit '^' — the POWER pass would read it
-        # as an exponent downstream
-        if len(args) != 2:
-            return None
-        a, b = args[0].strip(), args[1].strip()
-        return f"((({a}) | ({b})) & ~(({a}) & ({b})))"
-
-    def _fix_product(args: list[str]) -> str | None:
-        # product() aggregate over collect_list (exp(sum(ln)) breaks
-        # on zeros/negatives)
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if e.endswith("/*P*/"):
-            return None
-        return (
-            f"aggregate(collect_list({e} /*P*/), CAST(1 AS DOUBLE), "
-            f"(s, v) -> s * v)"
-        )
-
-    def _fix_json_valid(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"(({e}) IS NOT NULL AND "
-            f"get_json_object({e}, '$') IS NOT NULL)"
-        )
-
-    def _mk_codec1(fn_name: str):
-        # DuckDB's 1-arg encode/decode are UTF-8 blob conversions;
-        # Spark's equivalents take an explicit charset
-        def fix(args: list[str]) -> str | None:
-            if len(args) != 1:
-                return None
-            return f"{fn_name}({args[0].strip()}, 'UTF-8')"
-
-        return fix
-
-    def _fix_format_bytes(args: list[str]) -> str | None:
-        # binary units with one decimal, like DuckDB
-        if len(args) != 1:
-            return None
-        n = f"CAST({args[0].strip()} AS DOUBLE)"
-        return (
-            f"(CASE WHEN {n} < 1024 THEN concat(CAST(CAST({n} AS BIGINT) AS STRING), ' bytes')"
-            f" WHEN {n} < 1048576 THEN concat(format_string('%.1f', {n} / 1024), ' KiB')"
-            f" WHEN {n} < 1073741824 THEN concat(format_string('%.1f', {n} / 1048576), ' MiB')"
-            f" WHEN {n} < 1099511627776 THEN concat(format_string('%.1f', {n} / 1073741824), ' GiB')"
-            f" ELSE concat(format_string('%.1f', {n} / 1099511627776), ' TiB') END)"
-        )
-
-    _NONNEG_INT_RE = re.compile(r"\+?\d+$")
-
-    def _fix_left_neg(args: list[str]) -> str | None:
-        # DuckDB left(s, -n) = all but the LAST n chars; Spark returns
-        # '' (r11 batch-16). Non-negative integer literals (the common
-        # form) pass through untouched.
-        if len(args) != 2:
-            return None
-        s, n = args[0].strip(), args[1].strip()
-        if _NONNEG_INT_RE.fullmatch(n):
-            return None
-        return (
-            f"IF(({n}) IS NULL, NULL, substr({s}, 1, "
-            f"CASE WHEN ({n}) >= 0 THEN CAST({n} AS INT) "
-            f"ELSE greatest(CAST(length({s}) + ({n}) AS INT), 0) END))"
-        )
-
-    def _fix_right_neg(args: list[str]) -> str | None:
-        # DuckDB right(s, -n) = all but the FIRST n chars
-        if len(args) != 2:
-            return None
-        s, n = args[0].strip(), args[1].strip()
-        if _NONNEG_INT_RE.fullmatch(n):
-            return None
-        return (
-            f"IF(({n}) IS NULL, NULL, "
-            f"CASE WHEN ({n}) >= length({s}) THEN ({s}) "
-            f"WHEN ({n}) > 0 THEN substr({s}, -CAST({n} AS INT)) "
-            f"WHEN ({n}) < 0 THEN substr({s}, CAST(1 - ({n}) AS INT)) "
-            f"ELSE '' END)"
-        )
-
-    def _fix_substring_window(args: list[str]) -> str | None:
-        # DuckDB 3-arg substring: negative start counts from the END
-        # (start' = len+start+1), then the Postgres window clip applies
-        # — substring('abcde', 0, 3) = 'ab' (the window [0,3) shows 2
-        # chars) where Spark returns 'abc' (r11 batch-16).  Positive
-        # integer-literal starts (the common form) are already
-        # identical and pass through.
-        if len(args) != 3:
-            return None
-        s, st, ln = (a.strip() for a in args)
-        neg_len = re.fullmatch(r"-\d+", ln) is not None
-        if (
-            re.fullmatch(r"\+?[1-9]\d*", st) and not neg_len
-        ) or s.endswith("/*DW*/"):
-            return None
-        nst = (
-            f"(CASE WHEN ({st}) < 0 THEN length({s}) + ({st}) + 1 "
-            f"ELSE ({st}) END)"
-        )
-        # negative length opens the window BACKWARD from start
-        # (batch-25): unified window [min(st, st+len), max(st, st+len))
-        lo = f"least({nst}, {nst} + ({ln}))"
-        hi = f"greatest({nst}, {nst} + ({ln}))"
-        return (
-            f"substr({s} /*DW*/, greatest({lo}, 1), "
-            f"greatest({hi} - greatest({lo}, 1), 0))"
-        )
-
-    def _fix_trunc1(args: list[str]) -> str | None:
-        # numeric 1-arg trunc (toward zero); Spark's trunc is the
-        # 2-arg DATE form, so the 1-arg call never collides
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"(CASE WHEN ({e}) >= 0 THEN floor({e}) ELSE ceil({e}) END)"
-        )
-
-    def _fix_list_slice(args: list[str]) -> str | None:
-        # DuckDB list_slice(l, a, b[, step]): 1-based INCLUSIVE bounds,
-        # negatives count from the end. 2-arg list_slice does not
-        # exist in DuckDB 1.0; the bracket l[a:b] form has its own
-        # pass.
-        if len(args) not in (3, 4):
-            return None
-        l = args[0].strip()
-        a, b = args[1].strip(), args[2].strip()
-        na = f"(CASE WHEN ({a}) < 0 THEN size({l}) + ({a}) + 1 ELSE ({a}) END)"
-        nb = (
-            f"least(CASE WHEN ({b}) < 0 THEN size({l}) + ({b}) + 1 "
-            f"ELSE ({b}) END, size({l}))"
-        )
-        if len(args) == 3:
-            return (
-                f"slice({l}, greatest({na}, 1), "
-                f"greatest({nb} - greatest({na}, 1) + 1, 0))"
-            )
-        step = args[3].strip()
-        return (
-            f"transform(sequence(greatest({na}, 1), {nb}, {step}), "
-            f"__li -> element_at({l}, __li))"
-        )
-
-    def _fix_md5_number_half(upper: bool):
-        # DuckDB md5_number_lower/_upper: the md5 digest's second/
-        # first 8 BYTES as a little-endian unsigned 64-bit integer —
-        # byte-pair-reversed hex through conv(…,16,10), surfaced as
-        # DECIMAL(20,0) (Spark has no unsigned BIGINT)
-        off = 1 if upper else 17
-
-        def fix(args: list[str]) -> str | None:
-            if len(args) != 1:
-                return None
-            e = args[0].strip()
-            # md5() inlined per pair — Spark's subexpression
-            # elimination collapses the duplicates inside one project
-            pairs = "||".join(
-                f"substr(md5({e}), {off + 2 * i}, 2)"
-                for i in reversed(range(8))
-            )
-            return f"CAST(conv({pairs}, 16, 10) AS DECIMAL(20,0))"
-
-        return fix
-
-    def _fix_geomean(args: list[str]) -> str | None:
-        # DuckDB geomean/geometric_mean: exp of the mean log —
-        # NULLs skipped by avg on both sides (r11 batch-16 probe)
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return f"exp(avg(ln(CAST({e} AS DOUBLE))))"
-
-    def _jsonify(e: str) -> str:
-        # any scalar/complex value → its JSON text, NULL → 'null':
-        # to_json needs a struct wrapper; the value is the fixed-offset
-        # slice of '{"v":X}' (prefix 5 chars, suffix 1 — no regex)
-        tj = f"to_json(named_struct('v', {e}))"
-        return (
-            f"CASE WHEN ({e}) IS NULL THEN 'null' "
-            f"ELSE substr({tj}, 6, length({tj}) - 6) END"
-        )
-
-    def _json_path(p: str) -> str:
-        # a path literal: '$'-prefixed passes through, bare key gets it
-        if p.startswith("'") and not p[1:].startswith("$"):
-            return "'$." + p[1:]
-        return p
-
-    def _fix_list_resize(args: list[str]) -> str | None:
-        # duck list_resize(l, n[, fill]): truncate or pad; default pad
-        # is a typed NULL (try_element_at(l, 0) — index 0 is invalid,
-        # the try_ form yields NULL of the ELEMENT type)
-        if len(args) not in (2, 3):
-            return None
-        l, n = args[0].strip(), args[1].strip()
-        # default pad = a typed NULL: a never-taken CASE branch types
-        # the NULL as the element type (try_element_at(l, 0) raises —
-        # index 0 is invalid even in the try_ form)
-        fill = (
-            args[2].strip() if len(args) == 3
-            else f"CASE WHEN false THEN try_element_at({l}, 1) END"
-        )
-        return (
-            f"CASE WHEN size({l}) >= ({n}) THEN slice({l}, 1, {n}) "
-            f"ELSE concat({l} /*ARR*/, transform(sequence(1, ({n}) - "
-            f"size({l})), __lr -> {fill})) END"
-        )
-
-    def _fix_pop_front(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        l = args[0].strip()
-        return f"slice({l}, 2, greatest(size({l}) - 1, 0))"
-
-    def _fix_pop_back(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        l = args[0].strip()
-        return f"slice({l}, 1, greatest(size({l}) - 1, 0))"
-
-    def _fix_list_any_value(args: list[str]) -> str | None:
-        # first non-NULL element (duck list_any_value); empty/all-NULL
-        # input → NULL via the try_ form
-        if len(args) != 1:
-            return None
-        return f"try_element_at(array_compact({args[0].strip()}), 1)"
-
-    _ARRAY_HEADS = re.compile(
-        r"\s*(\[|array\s*\(|array_|split\s*\(|sequence\s*\(|"
-        r"collect_list\s*\(|collect_set\s*\(|transform\s*\(|"
-        r"filter\s*\(|flatten\s*\(|slice\s*\(|map_keys\s*\(|"
-        r"map_values\s*\(|string_split|string_to_array|"
-        r"regexp_split_to_array\s*\(|str_split|"
-        r"regexp_extract_all\s*\(|list_)",
-        re.IGNORECASE,
+    e = args[0].strip()
+    n = f"count({e})"
+    return (
+        f"try_divide(skewness({e}) * sqrt({n} * ({n} - 1)), "
+        f"{n} - 2)"
     )
 
-    def _fix_len(args: list[str]) -> str | None:
-        # duck len() is polymorphic (strings AND lists); Spark splits
-        # it into length()/size() with no common spelling.  Textual
-        # heuristic: an argument that SYNTACTICALLY produces an array
-        # (list literal, array_*/split/sequence/transform/… head) →
-        # size(); anything else (columns included) → length().
-        # Documented limit: a list-typed COLUMN passed to len() still
-        # becomes length() — use array_length/size for those.
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if _ARRAY_HEADS.match(e):
-            return f"size({e})"
-        return f"length({e})"
 
-    def _fix_regexp_full_match(args: list[str]) -> str | None:
-        # duck regexp_full_match = anchored match of the WHOLE string
-        if len(args) != 2:
-            return None
-        s, p = args[0].strip(), args[1].strip()
-        return f"({s} RLIKE ('^(?:' || ({p}) || ')$'))"
-
-    def _mk_like_escape(op: str, neg: bool):
-        # duck like_escape/ilike_escape/not_*_escape scalar forms →
-        # the LIKE … ESCAPE clause (ILIKE via lower() on both sides —
-        # the escape char is a symbol, unaffected)
-        def fix(args: list[str]) -> str | None:
-            if len(args) != 3:
-                return None
-            s, p, e = (a.strip() for a in args)
-            if op == "ilike":
-                s, p = f"lower({s})", f"lower({p})"
-            n = "NOT " if neg else ""
-            return f"({s} {n}LIKE {p} ESCAPE {e})"
-
-        return fix
-
-    def _fix_array_concat(args: list[str]) -> str | None:
-        # list_concat/array_concat/array_cat → Spark's array concat,
-        # /*ARR*/-marked so the varchar NULL-skip pass below leaves it
-        if not args or args[0].rstrip().endswith("/*ARR*/"):
-            return None
-        rest = ", ".join(a.strip() for a in args[1:])
-        return (
-            f"concat({args[0].strip()} /*ARR*/"
-            + (f", {rest}" if rest else "")
-            + ")"
-        )
-
-    def _fix_concat_nullskip(args: list[str]) -> str | None:
-        # DuckDB concat() is VARCHAR-only and SKIPS NULL arguments
-        # (concat('a', NULL) = 'a', lists stringify); Spark's concat
-        # NULL-propagates and doubles as array concat — silent wrong
-        # (r11 batch-19).  Args are cast to STRING and joined with
-        # concat_ws('') (which skips NULLs).  /*ARR*/-marked calls
-        # (our own array-concat emissions) and syntactically-array
-        # args stay native Spark array concat — DuckDB users
-        # concatenating list-PRODUCING expressions through concat()
-        # get Spark array semantics instead of DuckDB's stringify
-        # (documented).
-        if not args:
-            return None
-        if any("/*ARR*/" in a for a in args):
-            return None
-        if any(_ARRAY_HEADS.match(a.strip()) for a in args):
-            return None
-        casted = ", ".join(
-            f"CAST({a.strip()} AS STRING)" for a in args
-        )
-        return f"concat_ws('', {casted})"
-
-    def _fix_json_quote(args: list[str]) -> str | None:
-        # duck json_quote: value → JSON text, SQL NULL → NULL (not
-        # 'null' — unlike elements inside json_array)
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        tj = f"to_json(named_struct('v', {e}))"
-        return (
-            f"CASE WHEN ({e}) IS NULL THEN NULL "
-            f"ELSE substr({tj}, 6, length({tj}) - 6) END"
-        )
-
-    def _fix_json_array_ctor(args: list[str]) -> str | None:
-        elems = ", ".join(_jsonify(a.strip()) for a in args)
-        return f"concat('[', concat_ws(',', {elems}), ']')"
-
-    def _fix_json_object_ctor(args: list[str]) -> str | None:
-        if len(args) % 2 != 0:
-            return None
-        pairs = ", ".join(
-            f"concat({_jsonify(args[i].strip())}, ':', "
-            f"{_jsonify(args[i + 1].strip())})"
-            for i in range(0, len(args), 2)
-        )
-        return f"concat('{{', concat_ws(',', {pairs}), '}}')"
-
-    def _fix_json_group_array(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return (
-            f"concat('[', concat_ws(',', "
-            f"collect_list({_jsonify(args[0].strip())})), ']')"
-        )
-
-    def _fix_json_group_object(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        k, v = args[0].strip(), args[1].strip()
-        return (
-            f"concat('{{', concat_ws(',', collect_list(concat("
-            f"{_jsonify(k)}, ':', {_jsonify(v)}))), '}}')"
-        )
-
-    # ---- r13 bitstring family (BIT emulated as a '0'/'1' string;
-    # every behavior pinned vs DuckDB 1.0 live — see test_rewrite
-    # TestBitstrings).  Functions run BEFORE the ::BIT cast pass, so
-    # the textual '::BIT' marker still distinguishes BIT operands of
-    # the polymorphic bit_count/bit_length/octet_length. ----
-
-    def _is_bit_marked(a: str) -> bool:
-        u = re.sub(r"\s+", "", a.upper())
-        return "::BIT" in u or "ASBIT)" in u or "BITSTRING(" in u
-
-    def _fix_bitstring(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        s, n = args[0].strip(), args[1].strip()
-        return (
-            f"(CASE WHEN length({s}) > ({n}) THEN "
-            f"raise_error('Invalid Input Error: Length must be equal "
-            f"or larger than input string') "
-            f"ELSE lpad({_bit_cast_guard(s)}, ({n}), '0') END)"
-        )
-
-    def _fix_get_bit(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        b, i = args[0].strip(), args[1].strip()
-        oob = (
-            f"raise_error(concat('Out of Range Error: bit index ', "
-            f"CAST(({i}) AS STRING), ' out of valid range (0..', "
-            f"CAST(length({b}) - 1 AS STRING), ')'))"
-        )
-        return (
-            f"(CASE WHEN ({i}) < 0 OR ({i}) >= length({b}) THEN "
-            f"CAST({oob} AS INT) "
-            f"ELSE CAST(substring({b}, ({i}) + 1, 1) AS INT) END)"
-        )
-
-    def _fix_set_bit(args: list[str]) -> str | None:
-        if len(args) != 3:
-            return None
-        b, i, v = (a.strip() for a in args)
-        oob = (
-            f"raise_error(concat('Out of Range Error: bit index ', "
-            f"CAST(({i}) AS STRING), ' out of valid range (0..', "
-            f"CAST(length({b}) - 1 AS STRING), ')'))"
-        )
-        return (
-            f"(CASE WHEN ({v}) NOT IN (0, 1) THEN "
-            f"raise_error('Invalid Input Error: The new bit must be "
-            f"1 or 0') "
-            f"WHEN ({i}) < 0 OR ({i}) >= length({b}) THEN "
-            f"CAST({oob} AS STRING) "
-            f"ELSE concat(substring({b}, 1, ({i})), "
-            f"CAST(({v}) AS STRING), substring({b}, ({i}) + 2)) END)"
-        )
-
-    def _fix_bit_position(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        sub, hay = args[0].strip(), args[1].strip()
-        return f"CAST(instr({hay}, {sub}) AS INT)"
-
-    def _fix_bit_count(args: list[str]) -> str | None:
-        # BIT operand (textual marker) → count of '1' chars; integer
-        # operand keeps Spark's builtin popcount (identical to duck)
-        if len(args) != 1 or not _is_bit_marked(args[0]):
-            return None
-        a = args[0].strip()
-        return (
-            f"CAST(length({a}) - length(replace({a}, '1', '')) "
-            f"AS BIGINT)"
-        )
-
-    def _fix_bit_length(args: list[str]) -> str | None:
-        if len(args) != 1 or not _is_bit_marked(args[0]):
-            return None
-        return f"CAST(length({args[0].strip()}) AS BIGINT)"
-
-    def _fix_octet_length(args: list[str]) -> str | None:
-        if len(args) != 1 or not _is_bit_marked(args[0]):
-            return None
-        a = args[0].strip()
-        return f"CAST((length({a}) + 7) DIV 8 AS BIGINT)"
-
-    def _fix_json_type(args: list[str]) -> str | None:
-        # 1-arg → the compat UDF; 2-arg → the path-walking UDF, which
-        # keeps DuckDB's JSON-null-at-path = 'NULL' vs missing-path =
-        # SQL NULL distinction (r13 fuzz find — get_json_object
-        # erases it)
-        if len(args) == 2:
-            return (
-                f"json_type2({args[0].strip()}, "
-                f"{_json_path(args[1].strip())})"
-            )
+def _fix_kurt(args: list[str]) -> str | None:
+    if len(args) != 1:
         return None
+    e = args[0].strip()
+    n = f"count({e})"
+    return (
+        f"(try_divide({n} - 1, ({n} - 2) * ({n} - 3)) * "
+        f"(({n} + 1) * kurtosis({e}) + 6))"
+    )
 
-    def _fix_json_array_length2(args: list[str]) -> str | None:
-        # DuckDB returns 0 for any EXISTING non-array value where
-        # Spark returns NULL (r12 JSON fuzz); SQL-NULL input and a
-        # missing path stay NULL.  Residual corner (documented): a
-        # JSON null AT the path is 0 in DuckDB but indistinguishable
-        # from a missing path through get_json_object, so it stays
-        # NULL here.  The /*JA*/ marker blocks fixer re-entry.
-        if len(args) == 1:
-            a = args[0].strip()
-            if a.rstrip().endswith("/*JA*/"):
-                return None
-            return (
-                f"(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS INT) "
-                f"ELSE coalesce(json_array_length({a} /*JA*/), 0) END)"
-            )
-        if len(args) != 2:
-            return None
-        x, p = args[0].strip(), _json_path(args[1].strip())
-        g = f"get_json_object({x}, {p})"
-        return (
-            f"(CASE WHEN ({x}) IS NULL OR {g} IS NULL "
-            f"THEN CAST(NULL AS INT) "
-            f"ELSE coalesce(json_array_length({g} /*JA*/), 0) END)"
-        )
 
-    def _duck_structure_to_ddl(spec) -> str | None:
-        scalar = {
-            "UBIGINT": "BIGINT", "BIGINT": "BIGINT",
-            "UINTEGER": "BIGINT", "INTEGER": "INT",
-            "VARCHAR": "STRING", "DOUBLE": "DOUBLE",
-            "FLOAT": "FLOAT", "BOOLEAN": "BOOLEAN",
-            "HUGEINT": "DECIMAL(38,0)", "NULL": "STRING",
-            "JSON": "STRING",
-        }
-        if isinstance(spec, str):
-            return scalar.get(spec.upper())
-        if isinstance(spec, list) and len(spec) == 1:
-            inner = _duck_structure_to_ddl(spec[0])
-            return f"ARRAY<{inner}>" if inner else None
-        if isinstance(spec, dict):
-            fields = []
-            for k, v in spec.items():
-                inner = _duck_structure_to_ddl(v)
-                if inner is None:
-                    return None
-                fields.append(f"`{k}`: {inner}")
-            return "STRUCT<" + ", ".join(fields) + ">"
+def _fix_date_sub3(args: list[str]) -> str | None:
+    # 3-arg date_sub('part', a, b) → timestampdiff (complete units,
+    # signed); Spark's own 2-arg date_sub passes through
+    if len(args) != 3:
         return None
-
-    def _fix_from_json_structure(args: list[str]) -> str | None:
-        # duck from_json/json_transform take a JSON type-structure
-        # literal; Spark's native from_json wants a DDL schema —
-        # convert literal structures at rewrite time, pass everything
-        # else through (a DDL string second arg is already Spark form)
-        if len(args) != 2:
-            return None
-        spec = args[1].strip()
-        if not (spec.startswith("'") and spec.endswith("'")):
-            return None
-        import json as _json
-
-        try:
-            parsed = _json.loads(spec[1:-1])
-        except ValueError:
-            return None
-        ddl = _duck_structure_to_ddl(parsed)
-        if ddl is None:
-            return None
-        return f"from_json({args[0].strip()}, '{ddl}')"
-
-    def _fix_json_merge_variadic(args: list[str]) -> str | None:
-        # DuckDB json_merge_patch is variadic; the compat UDF takes 2
-        # args — fold left: (a,b,c) → jmp(jmp(a,b),c).  2-arg calls
-        # pass through untouched (fixer output contains only 2-arg
-        # calls, so the pass is idempotent).
-        if len(args) <= 2:
-            return None
-        out = args[0].strip()
-        for a in args[1:]:
-            out = f"json_merge_patch({out}, {a.strip()})"
-        return out
-
-    def _fix_list_sum(args: list[str]) -> str | None:
-        # the old rename emitted a placeholder name (broken); sum/avg
-        # over an array are HOF reductions.  DuckDB SKIPS NULL
-        # elements like the sum aggregate (list_sum([1,NULL,3]) = 4)
-        # and returns NULL for empty / all-NULL / NULL input —
-        # aggregate over array_compact, NULL-gated on compact size
-        # (r11 ADVICE: the old form NULL-propagated through the
-        # lambda).
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"CASE WHEN size(array_compact({e})) > 0 THEN "
-            f"aggregate(array_compact({e}), CAST(0 AS DOUBLE), "
-            f"(s, v) -> s + v) END"
-        )
-
-    def _fix_list_avg(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"try_divide(aggregate(array_compact({e}), "
-            f"CAST(0 AS DOUBLE), (s, v) -> s + v), "
-            f"size(array_compact({e})))"
-        )
-
-    def _fix_isoyear(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"extract(YEAROFWEEK FROM {args[0].strip()})"
-
-    def _fix_century(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return (
-            f"CAST(ceil(year({args[0].strip()}) / 100.0) AS BIGINT)"
-        )
-
-    def _chars(e: str) -> str:
-        # character array of a string (drop split()'s empty artifacts)
-        return f"filter(split({e}, ''), c -> c <> '')"
-
-    def _fix_jaccard_str(args: list[str]) -> str | None:
-        # DuckDB jaccard(s1, s2): Jaccard similarity of the CHARACTER
-        # SETS — the quick fuzzy-match scalar
-        if len(args) != 2:
-            return None
-        a, b = _chars(args[0].strip()), _chars(args[1].strip())
-        return (
-            f"try_divide(CAST(size(array_intersect({a}, {b})) AS "
-            f"DOUBLE), size(array_union({a}, {b})))"
-        )
-
-    def _fix_hamming(args: list[str]) -> str | None:
-        # positionwise mismatch count over the character arrays
-        if len(args) != 2:
-            return None
-        a, b = _chars(args[0].strip()), _chars(args[1].strip())
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> CASE WHEN "
-            f"x <=> y THEN 0 ELSE 1 END), 0, (s, v) -> s + v)"
-        )
-
-    def _fix_even(args: list[str]) -> str | None:
-        # round away from zero to the next EVEN number
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"(sign({e}) * ceil(abs(CAST({e} AS DOUBLE)) / 2) * 2)"
-        )
-
-    def _fix_isinf(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return (
-            f"(abs(CAST({args[0].strip()} AS DOUBLE)) = "
-            f"CAST('Infinity' AS DOUBLE))"
-        )
-
-    def _fix_isfinite(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        e = f"CAST({args[0].strip()} AS DOUBLE)"
-        return (
-            f"(NOT isnan({e}) AND abs({e}) <> "
-            f"CAST('Infinity' AS DOUBLE))"
-        )
-
-    def _fix_list_reduce(args: list[str]) -> str | None:
-        # DuckDB list_reduce starts from the FIRST element (no init)
-        if len(args) != 2:
-            return None
-        l_, lam = args[0].strip(), args[1].strip()
-        return (
-            f"aggregate(slice({l_}, 2, greatest(size({l_}) - 1, 0)), "
-            f"try_element_at({l_}, 1), {lam})"
-        )
-
-    def _fix_list_where(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        l_, m_ = args[0].strip(), args[1].strip()
-        return (
-            f"transform(filter(zip_with({l_}, {m_}, "
-            f"(x, m) -> struct(x AS x, m AS m)), s -> s.m), s -> s.x)"
-        )
-
-    def _fix_list_select(args: list[str]) -> str | None:
-        # 1-based index selection, like DuckDB's try-semantics
-        if len(args) != 2:
-            return None
-        l_, ix = args[0].strip(), args[1].strip()
-        return (
-            f"transform({ix}, i -> try_element_at({l_}, CAST(i AS INT)))"
-        )
-
-    def _fix_list_grade_up(args: list[str]) -> str | None:
-        # positions each sorted element came from
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"transform(array_sort(zip_with({e}, sequence(1, size({e})), "
-            f"(v, i) -> struct(v AS v, i AS i))), s -> s.i)"
-        )
-
-    def _fix_dayofweek0(args: list[str]) -> str | None:
-        # DuckDB dayofweek/weekday: 0 = Sunday; Spark dayofweek is
-        # 1 = Sunday (and Spark weekday is 0 = Monday) — silent
-        # off-by-one both ways
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if e.endswith("/*d0*/"):
-            return None
-        return f"(dayofweek({e} /*d0*/) - 1)"
-
-    def _fix_isodow_fn(args: list[str]) -> str | None:
-        # ISO day number, 1 = Monday … 7 = Sunday
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if e.endswith("/*d0*/"):
-            return None
-        return f"(pmod(dayofweek({e} /*d0*/) + 5, 7) + 1)"
-
-    def _fix_string_agg1(args: list[str]) -> str | None:
-        # DuckDB's default separator is ',' — Spark listagg's is ''
-        if len(args) != 1:
-            return None
-        return f"listagg({args[0].strip()}, ',')"
-
-    def _fix_array_agg_nulls(args: list[str]) -> str | None:
-        # DuckDB array_agg KEEPS NULL elements; collect_list drops
-        # them — wrap in a struct (never NULL) and unwrap after
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        if e.endswith("/*AG*/"):
-            return None
-        return (
-            f"transform(collect_list(struct(({e} /*AG*/) AS v)), "
-            f"s -> s.v)"
-        )
-
-    def _fix_any_value(args: list[str]) -> str | None:
-        # DuckDB any_value returns the first NON-NULL value
-        if len(args) != 1:
-            return None
-        return f"any_value({args[0].strip()}, true)"
-
-    def _mk_to_unit(unit_expr: str):
-        def fix(args: list[str]) -> str | None:
-            if len(args) != 1:
-                return None
-            return unit_expr.format(n=args[0].strip())
-
-        return fix
-
-    def _fix_literal_split(args: list[str]) -> str | None:
-        # DuckDB string_split/str_split/string_to_array take a LITERAL
-        # delimiter; Spark's split() is regex — '.' or '|' silently
-        # split every character.  Literal delimiters regex-escape
-        # inline; dynamic ones wrap in \\Q…\\E.
-        if len(args) != 2:
-            return None
-        src, d = args[0].strip(), args[1].strip()
-        if (
-            len(d) >= 2
-            and d.startswith("'")
-            and d.endswith("'")
-            and "'" not in d[1:-1]
-        ):
-            esc = re.sub(r"([.^$*+?()\[\]{}|\\])", r"\\\1", d[1:-1])
-            return f"split({src}, '{esc}')"
-        return f"split({src}, concat('\\Q', {d}, '\\E'))"
-
-    def _fix_list_unique(args: list[str]) -> str | None:
-        # DuckDB list_unique/array_unique COUNT distinct non-NULL
-        # elements (BIGINT) — array_distinct alone silently returned
-        # an array
-        if len(args) != 1:
-            return None
-        e = args[0].strip()
-        return (
-            f"CAST(size(array_distinct(array_compact({e}))) AS BIGINT)"
-        )
-
-    def _fix_list_sort_dir(args: list[str]) -> str | None:
-        # list_sort(l, 'DESC' [, 'NULLS …']) → sort_array; the 1-arg
-        # form falls through to the array_sort rename
-        if len(args) not in (2, 3):
-            return None
-        d = args[1].strip().strip("'").upper()
-        if d not in ("ASC", "DESC"):
-            return None
-        return f"sort_array({args[0].strip()}, {str(d == 'ASC').lower()})"
-
-    def _fix_list_reverse_sort(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        return f"sort_array({args[0].strip()}, false)"
-
-    def _fix_regexp_matches3(args: list[str]) -> str | None:
-        # 3-arg regexp_matches: DuckDB inline flags → (?flags) prefix
-        if len(args) != 3:
-            return None
-        f3 = args[2].strip()
-        if f3.startswith("'") and f3.endswith("'"):
-            flags = f3[1:-1].replace("g", "")
-            if not flags:
-                return f"rlike({args[0].strip()}, {args[1].strip()})"
-            return (
-                f"rlike({args[0].strip()}, concat('(?{flags})', "
-                f"{args[1].strip()}))"
-            )
+    part = args[0].strip()
+    if not (part.startswith("'") and part.endswith("'")):
         return None
+    return (
+        f"timestampdiff({part[1:-1].upper()}, {args[1].strip()}, "
+        f"{args[2].strip()})"
+    )
 
-    def _fix_date_part_list(args: list[str]) -> str | None:
-        # date_part(['year','month'], d) → STRUCT of the parts;
-        # scalar fields Spark's extract lacks or counts differently
-        # (batch-22): dow 0=Sunday, isodow 1=Monday, epoch fractional
-        # seconds, micro/milliseconds of the minute, decade/century/
-        # millennium.
-        if len(args) != 2:
-            return None
-        f0 = args[0].strip()
-        if f0.startswith("'") and f0.endswith("'"):
-            field = f0[1:-1].lower()
-            # DuckDB accepts singular and abbreviated part spellings
-            field = _EXTRACT_FIELD_ALIASES.get(field, field)
-            e = args[1].strip()
-            us = f"pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000)"
-            special = {
-                "dow": f"(dayofweek({e}) - 1)",
-                "isodow": f"(weekday({e}) + 1)",
-                "epoch": (
-                    f"(unix_micros(CAST({e} AS TIMESTAMP)) / 1000000.0)"
-                ),
-                "microseconds": us,
-                "milliseconds": f"({us} DIV 1000)",
-                # DuckDB's second part is a whole BIGINT; Spark's
-                # extract(SECOND) keeps the fraction as DECIMAL(8,6)
-                # (r12 temporal fuzz find)
-                "second": f"({us} DIV 1000000)",
-                "decade": f"(year({e}) DIV 10)",
-                "century": f"(((year({e}) - 1) DIV 100) + 1)",
-                "millennium": f"(((year({e}) - 1) DIV 1000) + 1)",
-            }
-            return special.get(field)
-        am = re.match(
-            r"^array\s*\((.*)\)$", f0, re.IGNORECASE | re.DOTALL
-        )
-        if am is None:
-            return None
-        parts = [p.strip() for p in _split_top_level_args(am.group(1))]
-        if not all(p.startswith("'") and p.endswith("'") for p in parts):
-            return None
-        d = args[1].strip()
-        fields = ", ".join(
-            f"{p}, date_part({p}, {d})" for p in parts
-        )
-        return f"named_struct({fields})"
 
-    def _fix_map_extract(args: list[str]) -> str | None:
-        # DuckDB map_extract returns [v] or [] — never bare v
-        if len(args) != 2:
-            return None
-        m_, k_ = args[0].strip(), args[1].strip()
+def _fix_time_bucket(args: list[str]) -> str | None:
+    # time_bucket(INTERVAL n unit, ts), fixed-width units → epoch
+    # arithmetic aligned to the 2000-01-03 origin (TimescaleDB
+    # semantics); month-width buckets pass through
+    if len(args) != 2:
+        return None
+    m = _INTERVAL_LIT_RE.match(args[0].strip())
+    if m is None:
+        return None
+    secs = int(m.group(1)) * _UNIT_SECONDS[m.group(2).upper()]
+    if secs <= 0:
+        return None
+    ts = args[1].strip()
+    o = _TIME_BUCKET_ORIGIN
+    # pmod, not DIV: DIV truncates toward zero, so timestamps
+    # BEFORE the 2000-01-03 origin rounded toward the origin
+    # instead of flooring to the bucket start (r12 temporal fuzz
+    # find: 1969-07-20 20:17:40 bucketed to 20:20 instead of
+    # 20:15).  pmod's non-negative remainder floors for any sign.
+    return (
+        f"timestamp_seconds(unix_timestamp({ts}) - "
+        f"pmod(unix_timestamp({ts}) - {o}, {secs}))"
+    )
+
+
+def _fix_rex_all(args: list[str]) -> str | None:
+    # 2-arg: DuckDB's default group is the whole match; Spark's
+    # group 1 errors on group-less patterns
+    if len(args) != 2:
+        return None
+    return (
+        f"regexp_extract_all({args[0].strip()}, {args[1].strip()}, 0)"
+    )
+
+# ---- batch-22 fixers (r11 third probe, 212 cases) ----
+
+
+def _fix_log(args: list[str]) -> str | None:
+    # DuckDB's 1-arg log() is LOG BASE 10; Spark's is ln —
+    # a silent numeric wrong answer.  2-arg log(b, x) agrees.
+    if len(args) != 1:
+        return None
+    return f"log10({args[0].strip()})"
+
+
+def _fix_list_contains(args: list[str]) -> str | None:
+    # DuckDB: FALSE when absent even if the list has NULLs (Spark's
+    # array_contains yields NULL there); NULL when either the list
+    # or the needle is NULL.  Null-safe-equality exists() instead
+    # of array_contains: the lambda's <=> coerces an untyped NULL
+    # literal needle (array_contains rejects it at analysis) and
+    # NULL elements compare FALSE, matching DuckDB's absent→FALSE.
+    if len(args) != 2:
+        return None
+    l, v = args[0].strip(), args[1].strip()
+    return (
+        f"(CASE WHEN ({l}) IS NULL OR ({v}) IS NULL THEN "
+        f"CAST(NULL AS BOOLEAN) "
+        f"ELSE exists({l}, __lc_e -> __lc_e <=> ({v})) END)"
+    )
+
+
+def _fix_sha256(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"sha2({args[0].strip()}, 256)"
+
+
+def _fix_age(args: list[str]) -> str | None:
+    # DuckDB age(): symbolic year/month/day interval — lowered
+    # onto the duckdb_age compat UDF which renders DuckDB's
+    # VARCHAR form (r12; divergence: VARCHAR, not INTERVAL).  The
+    # 1-arg form measures from the current timestamp (DuckDB uses
+    # the transaction timestamp, not current_date).
+    if len(args) == 1:
         return (
-            f"(CASE WHEN map_contains_key({m_}, {k_}) THEN "
-            f"array(element_at({m_}, {k_})) ELSE array() END)"
+            f"duckdb_age(CAST(now() AS TIMESTAMP), "
+            f"CAST({args[0].strip()} AS TIMESTAMP))"
         )
-
-    def _dot(a: str, b: str) -> str:
+    if len(args) == 2:
         return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            f"CAST(0 AS DOUBLE), (s, v) -> s + v)"
+            f"duckdb_age(CAST({args[0].strip()} AS TIMESTAMP), "
+            f"CAST({args[1].strip()} AS TIMESTAMP))"
         )
+    return None
 
-    def _fix_array_cosine(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        a, b = args[0].strip(), args[1].strip()
-        sq = "aggregate(transform({0}, x -> x * x), CAST(0 AS DOUBLE), (s, v) -> s + v)"
-        return (
-            f"({_dot(a, b)} / (sqrt({sq.format(a)}) * "
-            f"sqrt({sq.format(b)})))"
+
+def _fix_struct_insert(args: list[str]) -> str | None:
+    # struct_insert(s, n := e, …): append fields to a struct.  Two
+    # statically-resolvable shapes (r12): an identifier/field-path
+    # base expands via Spark's struct-star (`struct(s.*, e AS n)`),
+    # a named_struct(…) literal base merges textually.  Anything
+    # else passes through to a loud Spark error (documented).
+    # Divergence: DuckDB raises on a duplicate field name; the
+    # star expansion would emit a duplicate-named field instead.
+    if len(args) < 2:
+        return None
+    base = args[0].strip()
+    fields = []
+    for a in args[1:]:
+        mm = re.match(
+            r'^\s*([A-Za-z_][A-Za-z0-9_]*|"[^"]+")\s*:=\s*(.+)$',
+            a.strip(),
+            re.DOTALL,
         )
-
-    def _fix_array_inner(args: list[str]) -> str | None:
-        if len(args) != 2:
+        if not mm:
             return None
-        return f"({_dot(args[0].strip(), args[1].strip())})"
-
-    def _fix_array_distance(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        a, b = args[0].strip(), args[1].strip()
-        return (
-            f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"(x - y) * (x - y)), CAST(0 AS DOUBLE), (s, v) -> s + v))"
-        )
-
-    for regex, fixer in (
-        (re.compile(r"\bentropy\s*\(", re.IGNORECASE), _fix_entropy),
-        (re.compile(r"\bxor\s*\(", re.IGNORECASE), _fix_xor),
-        (
-            re.compile(
-                r"\b(?:string_agg|group_concat)\s*\(", re.IGNORECASE
-            ),
-            _fix_string_agg1,
-        ),
-        (
-            re.compile(r"\b(?:array_agg|list)\s*\(", re.IGNORECASE),
-            _fix_array_agg_nulls,
-        ),
-        (
-            re.compile(r"\bany_value\s*\(", re.IGNORECASE),
-            _fix_any_value,
-        ),
-        (
-            re.compile(r"\b(?:list|array)_reduce\s*\(", re.IGNORECASE),
-            _fix_list_reduce,
-        ),
-        (
-            re.compile(r"\b(?:list|array)_where\s*\(", re.IGNORECASE),
-            _fix_list_where,
-        ),
-        (
-            re.compile(r"\b(?:list|array)_select\s*\(", re.IGNORECASE),
-            _fix_list_select,
-        ),
-        (
-            re.compile(r"\b(?:list_|array_)?grade_up\s*\(", re.IGNORECASE),
-            _fix_list_grade_up,
-        ),
-        (
-            re.compile(
-                r"\b(?:dayofweek|weekday)\s*\(", re.IGNORECASE
-            ),
-            _fix_dayofweek0,
-        ),
-        (re.compile(r"\bisodow\s*\(", re.IGNORECASE), _fix_isodow_fn),
-        (re.compile(r"\bjaccard\s*\(", re.IGNORECASE), _fix_jaccard_str),
-        (re.compile(r"\bhamming\s*\(", re.IGNORECASE), _fix_hamming),
-        (re.compile(r"\bmismatches\s*\(", re.IGNORECASE), _fix_hamming),
-        (re.compile(r"\beven\s*\(", re.IGNORECASE), _fix_even),
-        (re.compile(r"\bisinf\s*\(", re.IGNORECASE), _fix_isinf),
-        (re.compile(r"\bisfinite\s*\(", re.IGNORECASE), _fix_isfinite),
-        (re.compile(r"\blist_sum\s*\(", re.IGNORECASE), _fix_list_sum),
-        (re.compile(r"\blist_avg\s*\(", re.IGNORECASE), _fix_list_avg),
-        (re.compile(r"\bisoyear\s*\(", re.IGNORECASE), _fix_isoyear),
-        (re.compile(r"\bcentury\s*\(", re.IGNORECASE), _fix_century),
-        (re.compile(r"\bproduct\s*\(", re.IGNORECASE), _fix_product),
-        (re.compile(r"\bjson_valid\s*\(", re.IGNORECASE), _fix_json_valid),
-        (re.compile(r"\bencode\s*\(", re.IGNORECASE), _mk_codec1("encode")),
-        (re.compile(r"\bdecode\s*\(", re.IGNORECASE), _mk_codec1("decode")),
-        (
-            re.compile(r"\bformat_bytes\s*\(", re.IGNORECASE),
-            _fix_format_bytes,
-        ),
-        (
-            re.compile(r"\bto_seconds\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval(0, 0, 0, {n})"),
-        ),
-        (
-            re.compile(r"\bto_minutes\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval(0, 0, {n}, 0)"),
-        ),
-        (
-            re.compile(r"\bto_hours\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval(0, {n}, 0, 0)"),
-        ),
-        (
-            re.compile(r"\bto_days\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval({n}, 0, 0, 0)"),
-        ),
-        (
-            re.compile(r"\bto_months\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_ym_interval(0, {n})"),
-        ),
-        (
-            re.compile(r"\bto_years\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_ym_interval({n}, 0)"),
-        ),
-        # batch-26: the rest of the to_* interval makers
-        (
-            re.compile(r"\bto_weeks\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval(({n}) * 7, 0, 0, 0)"),
-        ),
-        (
-            re.compile(r"\bto_quarters\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_ym_interval(0, ({n}) * 3)"),
-        ),
-        (
-            re.compile(r"\bto_decades\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_ym_interval(({n}) * 10, 0)"),
-        ),
-        (
-            re.compile(r"\bto_centuries\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_ym_interval(({n}) * 100, 0)"),
-        ),
-        (
-            re.compile(r"\bto_millennia\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_ym_interval(({n}) * 1000, 0)"),
-        ),
-        (
-            re.compile(r"\bto_milliseconds\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval(0, 0, 0, ({n}) / 1000.0)"),
-        ),
-        (
-            re.compile(r"\bto_microseconds\s*\(", re.IGNORECASE),
-            _mk_to_unit("make_dt_interval(0, 0, 0, ({n}) / 1000000.0)"),
-        ),
-        (re.compile(r"\bhistogram\s*\(", re.IGNORECASE), _fix_histogram),
-        (
-            re.compile(r"\bjson_merge_patch\s*\(", re.IGNORECASE),
-            _fix_json_merge_variadic,
-        ),
-        (
-            re.compile(r"\bjson_quote\s*\(", re.IGNORECASE),
-            _fix_json_quote,
-        ),
-        (
-            re.compile(
-                r"\b(?:list_concat|array_concat|array_cat|list_cat)\s*\(",
-                re.IGNORECASE,
-            ),
-            _fix_array_concat,
-        ),
-        (
-            re.compile(r"\bregexp_full_match\s*\(", re.IGNORECASE),
-            _fix_regexp_full_match,
-        ),
-        (
-            re.compile(r"\blike_escape\s*\(", re.IGNORECASE),
-            _mk_like_escape("like", neg=False),
-        ),
-        (
-            re.compile(r"\bilike_escape\s*\(", re.IGNORECASE),
-            _mk_like_escape("ilike", neg=False),
-        ),
-        (
-            re.compile(r"\bnot_like_escape\s*\(", re.IGNORECASE),
-            _mk_like_escape("like", neg=True),
-        ),
-        (
-            re.compile(r"\bnot_ilike_escape\s*\(", re.IGNORECASE),
-            _mk_like_escape("ilike", neg=True),
-        ),
-        (
-            re.compile(r"\bconcat\s*\(", re.IGNORECASE),
-            _fix_concat_nullskip,
-        ),
-        (
-            re.compile(r"\b(?:list|array)_resize\s*\(", re.IGNORECASE),
-            _fix_list_resize,
-        ),
-        (
-            re.compile(
-                r"\b(?:array|list)_pop_front\s*\(", re.IGNORECASE
-            ),
-            _fix_pop_front,
-        ),
-        (
-            re.compile(
-                r"\b(?:array|list)_pop_back\s*\(", re.IGNORECASE
-            ),
-            _fix_pop_back,
-        ),
-        (
-            re.compile(r"\blist_any_value\s*\(", re.IGNORECASE),
-            _fix_list_any_value,
-        ),
-        (re.compile(r"\blen\s*\(", re.IGNORECASE), _fix_len),
-        (
-            re.compile(r"\bjson_array\s*\(", re.IGNORECASE),
-            _fix_json_array_ctor,
-        ),
-        (
-            re.compile(r"\bjson_object\s*\(", re.IGNORECASE),
-            _fix_json_object_ctor,
-        ),
-        (
-            re.compile(r"\bjson_group_array\s*\(", re.IGNORECASE),
-            _fix_json_group_array,
-        ),
-        (
-            re.compile(r"\bjson_group_object\s*\(", re.IGNORECASE),
-            _fix_json_group_object,
-        ),
-        (
-            re.compile(r"\bjson_type\s*\(", re.IGNORECASE),
-            _fix_json_type,
-        ),
-        (
-            re.compile(r"\bbitstring\s*\(", re.IGNORECASE),
-            _fix_bitstring,
-        ),
-        (re.compile(r"\bget_bit\s*\(", re.IGNORECASE), _fix_get_bit),
-        (re.compile(r"\bset_bit\s*\(", re.IGNORECASE), _fix_set_bit),
-        (
-            re.compile(r"\bbit_position\s*\(", re.IGNORECASE),
-            _fix_bit_position,
-        ),
-        (
-            re.compile(r"\bbit_count\s*\(", re.IGNORECASE),
-            _fix_bit_count,
-        ),
-        (
-            re.compile(r"\bbit_length\s*\(", re.IGNORECASE),
-            _fix_bit_length,
-        ),
-        (
-            re.compile(r"\boctet_length\s*\(", re.IGNORECASE),
-            _fix_octet_length,
-        ),
-        (
-            re.compile(r"\bjson_array_length\s*\(", re.IGNORECASE),
-            _fix_json_array_length2,
-        ),
-        (
-            re.compile(
-                r"\b(?:from_json|from_json_strict|json_transform|json_transform_strict)\s*\(", re.IGNORECASE
-            ),
-            _fix_from_json_structure,
-        ),
-        (
-            re.compile(
-                r"\b(?:geomean|geometric_mean)\s*\(", re.IGNORECASE
-            ),
-            _fix_geomean,
-        ),
-        (re.compile(r"\bleft\s*\(", re.IGNORECASE), _fix_left_neg),
-        (re.compile(r"\bright\s*\(", re.IGNORECASE), _fix_right_neg),
-        (
-            re.compile(r"\bsubstr(?:ing)?\s*\(", re.IGNORECASE),
-            _fix_substring_window,
-        ),
-        (re.compile(r"\btrunc\s*\(", re.IGNORECASE), _fix_trunc1),
-        (
-            re.compile(r"\blist_slice\s*\(", re.IGNORECASE),
-            _fix_list_slice,
-        ),
-        (
-            re.compile(r"\bmd5_number_lower\s*\(", re.IGNORECASE),
-            _fix_md5_number_half(upper=False),
-        ),
-        (
-            re.compile(r"\bmd5_number_upper\s*\(", re.IGNORECASE),
-            _fix_md5_number_half(upper=True),
-        ),
-        (
-            re.compile(
-                r"\b(?:string_split|str_split|string_to_array)\s*\(",
-                re.IGNORECASE,
-            ),
-            _fix_literal_split,
-        ),
-        (
-            re.compile(
-                r"\b(?:list_unique|array_unique)\s*\(", re.IGNORECASE
-            ),
-            _fix_list_unique,
-        ),
-        (
-            re.compile(r"\blist_sort\s*\(", re.IGNORECASE),
-            _fix_list_sort_dir,
-        ),
-        (
-            re.compile(r"\b(?:list|array)_reverse_sort\s*\(", re.IGNORECASE),
-            _fix_list_reverse_sort,
-        ),
-        (
-            re.compile(r"\bregexp_matches\s*\(", re.IGNORECASE),
-            _fix_regexp_matches3,
-        ),
-        (
-            re.compile(r"\bdate_part\s*\(", re.IGNORECASE),
-            _fix_date_part_list,
-        ),
-        (
-            re.compile(r"\bmap_extract\s*\(", re.IGNORECASE),
-            _fix_map_extract,
-        ),
-        (
-            re.compile(
-                r"\b(?:array|list)_cosine_similarity\s*\(", re.IGNORECASE
-            ),
-            _fix_array_cosine,
-        ),
-        (
-            re.compile(
-                r"\b(?:array|list)_(?:inner|dot)_product\s*\(",
-                re.IGNORECASE
-            ),
-            _fix_array_inner,
-        ),
-        (
-            re.compile(
-                r"\b(?:array|list)_distance\s*\(", re.IGNORECASE
-            ),
-            _fix_array_distance,
-        ),
-        (
-            re.compile(r"(?<![\w.])range\s*\(", re.IGNORECASE),
-            _fix_scalar_range,
-        ),
-        (
-            re.compile(
-                r"(?<![\w.])generate_series\s*\(", re.IGNORECASE
-            ),
-            _fix_scalar_series,
-        ),
-        (re.compile(r"\bskewness\s*\(", re.IGNORECASE), _fix_skew),
-        (
-            re.compile(r"\bkurtosis_pop\s*\(", re.IGNORECASE),
-            _fix_kurtosis_pop,
-        ),
-        (re.compile(r"\bkurtosis\s*\(", re.IGNORECASE), _fix_kurt),
-        (re.compile(r"(?<![\w.])log\s*\(", re.IGNORECASE), _fix_log),
-        (
-            re.compile(
-                r"\b(?:list_contains|list_has|array_has"
-                r"|array_contains)\s*\(",
-                re.IGNORECASE,
-            ),
-            _fix_list_contains,
-        ),
-        (re.compile(r"\bsha256\s*\(", re.IGNORECASE), _fix_sha256),
-        (re.compile(r"(?<![\w.])age\s*\(", re.IGNORECASE), _fix_age),
-        (
-            re.compile(r"\bstruct_insert\s*\(", re.IGNORECASE),
-            _fix_struct_insert,
-        ),
-        (re.compile(r"\bfavg\s*\(", re.IGNORECASE), _fix_favg),
-        (re.compile(r"\b(?:fsum|kahan_sum|sumkahan)\s*\(", re.IGNORECASE), _fix_fsum),
-        (
-            re.compile(r"(?<![\w.])timezone\s*\(", re.IGNORECASE),
-            _fix_timezone_fn,
-        ),
-        (
-            re.compile(r"\bepoch_ms\s*\(", re.IGNORECASE),
-            _fix_epoch_ms_poly,
-        ),
-        (
-            re.compile(r"\bepoch_us\s*\(", re.IGNORECASE),
-            _fix_epoch_us_poly,
-        ),
-        (re.compile(r"(?<![\w.])hash\s*\(", re.IGNORECASE), _fix_hash_fn),
-        (re.compile(r"\btypeof\s*\(", re.IGNORECASE), _fix_typeof),
-        (
-            re.compile(r"(?<![\w.])grouping\s*\(", re.IGNORECASE),
-            _fix_grouping_multi,
-        ),
-        (re.compile(r"\bcount_star\s*\(", re.IGNORECASE), _fix_count_star),
-        (
-            re.compile(r"\bdate_trunc\s*\(", re.IGNORECASE),
-            _fix_date_trunc_type,
-        ),
-        (
-            re.compile(r"\b(?:arg_max|argmax|max_by)\s*\(", re.IGNORECASE),
-            _mk_argminmax("max_by"),
-        ),
-        (
-            re.compile(r"\b(?:arg_min|argmin|min_by)\s*\(", re.IGNORECASE),
-            _mk_argminmax("min_by"),
-        ),
-        (re.compile(r"(?<![\w.])sem\s*\(", re.IGNORECASE), _fix_sem),
-        (
-            re.compile(r"\bconstant_or_null\s*\(", re.IGNORECASE),
-            _fix_constant_or_null,
-        ),
-        (
-            re.compile(r"\breservoir_quantile\s*\(", re.IGNORECASE),
-            _fix_reservoir_quantile,
-        ),
-        (re.compile(r"(?<![\w.])julian\s*\(", re.IGNORECASE), _fix_julian),
-        (re.compile(r"\bepoch_ns\s*\(", re.IGNORECASE), _fix_epoch_ns),
-        (
-            re.compile(r"(?<![\w.])epoch\s*\(", re.IGNORECASE),
-            _fix_epoch_fn,
-        ),
-        (re.compile(r"(?<![\w.])era\s*\(", re.IGNORECASE), _fix_era),
-        (
-            re.compile(r"\btimezone_hour\s*\(", re.IGNORECASE),
-            _mk_const_fn("0"),
-        ),
-        (
-            re.compile(r"\btimezone_minute\s*\(", re.IGNORECASE),
-            _mk_const_fn("0"),
-        ),
-        (
-            re.compile(r"(?<![\w.])decade\s*\(", re.IGNORECASE),
-            _fix_decade_fn,
-        ),
-        (
-            re.compile(r"\bmillennium\s*\(", re.IGNORECASE),
-            _fix_millennium_fn,
-        ),
-        (
-            re.compile(r"\bmicrosecond\s*\(", re.IGNORECASE),
-            _fix_microsecond_fn,
-        ),
-        (
-            re.compile(r"\bmillisecond\s*\(", re.IGNORECASE),
-            _fix_millisecond_fn,
-        ),
-        (
-            re.compile(r"(?<![\w.])divide\s*\(", re.IGNORECASE),
-            _fix_divide_fn,
-        ),
-        (
-            re.compile(r"(?<![\w.])multiply\s*\(", re.IGNORECASE),
-            _mk_binop_fn("*"),
-        ),
-        (
-            re.compile(r"(?<![\w.])add\s*\(", re.IGNORECASE),
-            _mk_binop_fn("+"),
-        ),
-        (
-            re.compile(r"(?<![\w.])subtract\s*\(", re.IGNORECASE),
-            _mk_binop_fn("-"),
-        ),
-        (
-            re.compile(r"\bstrftime\s*\(", re.IGNORECASE),
-            _fix_strftime_computed,
-        ),
-        (
-            re.compile(r"\bstrptime\s*\(", re.IGNORECASE),
-            _fix_strptime_list,
-        ),
-        (
-            re.compile(
-                r"\b(?:printf|format_string)\s*\(", re.IGNORECASE
-            ),
-            _fix_printf_args,
-        ),
-        (re.compile(r"\b(?:date_sub|datesub)\s*\(", re.IGNORECASE), _fix_date_sub3),
-        (re.compile(r"\btime_bucket\s*\(", re.IGNORECASE), _fix_time_bucket),
-        (
-            re.compile(r"\bregexp_extract_all\s*\(", re.IGNORECASE),
-            _fix_rex_all,
-        ),
-        (re.compile(r"\bformat\s*\(", re.IGNORECASE), _fix_format),
-        (re.compile(r"\bto_base\s*\(", re.IGNORECASE), _fix_to_base),
-        (re.compile(r"\bdayname\s*\(", re.IGNORECASE), _fix_dayname),
-        (re.compile(r"\bmonthname\s*\(", re.IGNORECASE), _fix_monthname),
-        (re.compile(r"\byearweek\s*\(", re.IGNORECASE), _fix_yearweek),
-        (
-            re.compile(r"\b(?:list|array)_has_all\s*\(", re.IGNORECASE),
-            _fix_list_has_all,
-        ),
-        (re.compile(r"\bstruct_pack\s*\(", re.IGNORECASE), _fix_struct_pack),
-        (
-            re.compile(r"\bstruct_extract\s*\(", re.IGNORECASE),
-            _fix_struct_extract,
-        ),
+        fields.append((mm.group(1).strip('"'), mm.group(2).strip()))
+    if re.match(
+        r'^(?:[A-Za-z_][A-Za-z0-9_]*|"[^"]+")'
+        r'(?:\.(?:[A-Za-z_][A-Za-z0-9_]*|"[^"]+"))*$',
+        base,
     ):
-        while True:
-            states = _scan_states(sql)
-            changed = False
-            for m in regex.finditer(sql):
-                if states[m.start()] != 0:
-                    continue
-                if getattr(fixer, "expr_position_only", False):
-                    # FROM/JOIN-position calls are table functions
-                    # (handled earlier / natively) — leave them alone
-                    prev = sql[: m.start()].rstrip().rsplit(None, 1)
-                    if prev and prev[-1].upper() in ("FROM", "JOIN"):
-                        continue
-                close = _find_matching_close(sql, m.end() - 1, states)
-                if close == -1:
-                    break
-                new = fixer(_split_top_level_args(sql[m.end() : close]))
-                if new is None:
-                    continue
-                sql = sql[: m.start()] + new + sql[close + 1 :]
-                changed = True
-                break
-            if not changed:
-                break
-    sql = (
-        sql.replace(" /*G1*/", "")
-        .replace(" /*G2*/", "")
-        .replace(" /*H*/", "")
-        .replace(" /*P*/", "")
-        .replace(" /*d0*/", "")
-        .replace(" /*AG*/", "")
-        .replace(" /*HH*/", "")
-        .replace(" /*TY*/", "")
-        .replace(" /*AM*/", "")
-        .replace(" /*DT*/", "")
-        .replace(" /*LC*/", "")
-        .replace(" /*JA*/", "")
+        tail = ", ".join(f"{e} AS `{n}`" for n, e in fields)
+        return f"struct({base}.*, {tail})"
+    if re.match(r"named_struct\s*\(", base, re.IGNORECASE) and (
+        base.endswith(")")
+    ):
+        inner = base[base.index("(") + 1 : -1].strip()
+        tail = ", ".join(f"'{n}', {e}" for n, e in fields)
+        return (
+            f"named_struct({inner}, {tail})"
+            if inner
+            else f"named_struct({tail})"
+        )
+    return None
+
+
+def _fix_favg(args: list[str]) -> str | None:
+    # Kahan-compensated forms return DOUBLE in DuckDB regardless of
+    # input type (avg over DECIMAL stays DECIMAL in Spark)
+    if len(args) != 1:
+        return None
+    return f"avg(CAST({args[0].strip()} AS DOUBLE))"
+
+
+def _fix_fsum(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"sum(CAST({args[0].strip()} AS DOUBLE))"
+
+
+def _fix_kurtosis_pop(args: list[str]) -> str | None:
+    # DuckDB kurtosis_pop = population excess kurtosis = Spark's
+    # kurtosis exactly
+    if len(args) != 1:
+        return None
+    return f"kurtosis({args[0].strip()})"
+
+
+def _fix_timezone_fn(args: list[str]) -> str | None:
+    # timezone(tz, ts): interpret the naive ts in tz, render in the
+    # session zone (UTC) — to_utc_timestamp semantics
+    if len(args) != 2:
+        return None
+    return (
+        f"to_utc_timestamp({args[1].strip()}, {args[0].strip()})"
     )
 
-    # extract(epoch|dow|isodow FROM e)
-    while True:
-        states = _scan_states(sql)
-        m = next(
-            (
-                m
-                for m in _EXTRACT_COMPAT_RE.finditer(sql)
-                if states[m.start()] == 0
-            ),
-            None,
+
+def _fix_epoch_fn(args: list[str]) -> str | None:
+    # DuckDB epoch(ts) → DOUBLE seconds WITH the fraction
+    # (unix_timestamp truncates — r12 temporal fuzz find).
+    if len(args) != 1:
+        return None
+    a = args[0].strip()
+    return f"(unix_micros(CAST(({a}) AS TIMESTAMP)) / 1000000.0)"
+
+
+def _fix_epoch_ms_poly(args: list[str]) -> str | None:
+    # epoch_ms is overloaded: BIGINT → TIMESTAMP, TIMESTAMP →
+    # BIGINT ms.  Integer literals dispatch statically; everything
+    # else is treated as a timestamp, CAST first so DATE-typed
+    # operands (date_trunc('month', …) returns DATE, r11) resolve
+    # (r12 temporal fuzz find).
+    if len(args) != 1:
+        return None
+    a = args[0].strip()
+    if re.fullmatch(r"-?\d+", a):
+        return f"timestamp_millis({a})"
+    return f"unix_millis(CAST(({a}) AS TIMESTAMP))"
+
+
+def _fix_epoch_us_poly(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    a = args[0].strip()
+    if re.fullmatch(r"-?\d+", a):
+        return f"timestamp_micros({a})"
+    return f"unix_micros(CAST(({a}) AS TIMESTAMP))"
+
+
+def _fix_hash_fn(args: list[str]) -> str | None:
+    # DuckDB hash() returns UBIGINT (non-negative); Spark's hash()
+    # is 32-bit.  Values are engine-specific either way (nobody
+    # gets cross-engine hash equality) — what code relies on is
+    # hash(x) % N staying non-negative and 64-bit-distributed.
+    if not args:
+        return None
+    inner = ", ".join(a.strip() for a in args)
+    return f"(xxhash64({inner}) & 9223372036854775807)"
+
+
+def _fix_typeof(args: list[str]) -> str | None:
+    # Spark type names → DuckDB spellings via the compat UDF
+    if len(args) != 1:
+        return None
+    return f"duckdb_typename(typeof({args[0].strip()}))"
+
+
+def _fix_strftime_computed(args: list[str]) -> str | None:
+    # %V/%G/%u/%w/%U/%W/%n have no Spark pattern letters (week-
+    # based Java fields are disabled in Spark 3+) — split the
+    # format into date_format chunks + computed expressions,
+    # concat'd back together (batch-25)
+    if len(args) != 2:
+        return None
+    e = args[0].strip()
+    fmt = args[1].strip()
+    if not (fmt.startswith("'") and fmt.endswith("'")):
+        return None
+    inner = fmt[1:-1]
+    computed = {
+        "%V": f"lpad(CAST(weekofyear({e}) AS STRING), 2, '0')",
+        "%G": f"CAST(extract(YEAROFWEEK FROM {e}) AS STRING)",
+        "%u": f"CAST(weekday({e}) + 1 AS STRING)",
+        "%w": f"CAST(dayofweek({e}) - 1 AS STRING)",
+        "%U": (
+            f"lpad(CAST((dayofyear({e}) + 6 - (dayofweek({e}) - 1))"
+            f" DIV 7 AS STRING), 2, '0')"
+        ),
+        "%W": (
+            f"lpad(CAST((dayofyear({e}) + 6 - weekday({e}))"
+            f" DIV 7 AS STRING), 2, '0')"
+        ),
+        "%n": (
+            f"lpad(CAST(pmod(unix_micros(CAST({e} AS TIMESTAMP)), "
+            f"1000000) * 1000 AS STRING), 9, '0')"
+        ),
+    }
+    if not any(c in inner for c in computed):
+        return None
+    parts: list[str] = []
+    buf = ""
+    i = 0
+    while i < len(inner):
+        two = inner[i : i + 2]
+        if two in computed:
+            if buf:
+                parts.append(
+                    f"date_format({e}, '{buf}')"
+                    if "%" in buf
+                    else f"'{buf}'"
+                )
+                buf = ""
+            parts.append(computed[two])
+            i += 2
+        elif two == "%%":
+            buf += "%%"
+            i += 2
+        else:
+            buf += inner[i]
+            i += 1
+    if buf:
+        parts.append(
+            f"date_format({e}, '{buf}')" if "%" in buf else f"'{buf}'"
         )
-        if m is None:
-            return sql
-        open_paren = sql.index("(", m.start())
-        close = _find_matching_close(sql, open_paren, states)
-        if close == -1:
-            return sql
-        e = sql[m.end() : close].strip()
-        field = m.group(1).lower()
+    return "concat(" + ", ".join(parts) + ")"
+
+
+def _fix_strptime_list(args: list[str]) -> str | None:
+    # strptime(s, [f1, f2, …]): DuckDB tries each format in order
+    # (batch-25) → coalesce of try_to_timestamp attempts; a
+    # no-format-matches input is NULL here vs DuckDB's error
+    # (documented)
+    if len(args) != 2:
+        return None
+    am = re.match(
+        r"^(?:\[|array\s*\()(.*?)[\])]$",
+        args[1].strip(),
+        re.IGNORECASE | re.DOTALL,
+    )
+    if am is None:
+        return None
+    fmts = [f.strip() for f in _split_top_level_args(am.group(1))]
+    if not fmts or not all(
+        f.startswith("'") and f.endswith("'") for f in fmts
+    ):
+        return None
+    s = args[0].strip()
+    attempts = ", ".join(
+        f"try_to_timestamp({s}, {f})" for f in fmts
+    )
+    return f"coalesce({attempts})"
+
+# ---- batch-26 alias-audit fixers (duckdb_functions() diff) ----
+
+
+def _mk_argminmax(pick: str):
+    # DuckDB arg_max/max_by SKIP rows whose ARG is NULL (and rows
+    # whose key is NULL); Spark's max_by returns the NULL arg
+    # (r11 aggregate fuzzer) — NULLing the key on NULL args makes
+    # Spark skip them the same way
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 2:
+            return None
+        a, v = args[0].strip(), args[1].strip()
+        return (
+            f"{pick}({a}, "
+            f"CASE WHEN ({a}) IS NOT NULL THEN {v} END)"
+        )
+
+    return fix
+
+
+def _fix_date_trunc_type(args: list[str]) -> str | None:
+    # DuckDB's date_trunc returns DATE (not midnight TIMESTAMP)
+    # for day-or-coarser parts — statically known from the part
+    # literal (r11 date fuzzer)
+    if len(args) != 2:
+        return None
+    p = args[0].strip()
+    if not (p.startswith("'") and p.endswith("'")):
+        return None
+    if p[1:-1].lower() not in (
+        "day", "week", "month", "quarter", "year", "decade",
+        "century", "millennium", "isoyear",
+    ):
+        return None
+    return (
+        f"CAST(date_trunc({p}, {args[1].strip()}) AS DATE)"
+    )
+
+
+def _fix_count_star(args: list[str]) -> str | None:
+    if args and any(a.strip() for a in args):
+        return None
+    return "count(*)"
+
+
+def _fix_sem(args: list[str]) -> str | None:
+    # standard error of the mean — DuckDB uses the POPULATION
+    # stddev over √n (pinned: sem([1,2,4]) = 0.720082…)
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return f"(stddev_pop({e}) / sqrt(count({e})))"
+
+
+def _fix_constant_or_null(args: list[str]) -> str | None:
+    # constant_or_null(v, x): v unless x IS NULL
+    if len(args) != 2:
+        return None
+    v, x = args[0].strip(), args[1].strip()
+    return f"(CASE WHEN ({x}) IS NULL THEN NULL ELSE ({v}) END)"
+
+
+def _fix_reservoir_quantile(args: list[str]) -> str | None:
+    # approximate by contract — percentile_approx, sample-size
+    # argument dropped
+    if len(args) not in (2, 3):
+        return None
+    return (
+        f"percentile_approx({args[0].strip()}, {args[1].strip()})"
+    )
+
+
+def _fix_julian(args: list[str]) -> str | None:
+    # julian day number: unix days + 2440588 (midnight = .0,
+    # pinned against DuckDB 1.0)
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"(unix_micros(CAST({e} AS TIMESTAMP)) / 86400000000.0 "
+        f"+ 2440588.0)"
+    )
+
+
+def _fix_epoch_ns(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"(unix_micros({args[0].strip()}) * 1000)"
+
+
+def _fix_era(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"(CASE WHEN year({args[0].strip()}) > 0 THEN 1 ELSE 0 END)"
+
+
+def _mk_const_fn(value: str):
+    # functions that are a session constant here (tz pinned UTC)
+    def fix(args: list[str]) -> str | None:
+        return value if len(args) == 1 else None
+
+    return fix
+
+
+def _fix_decade_fn(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"(year({args[0].strip()}) DIV 10)"
+
+
+def _fix_millennium_fn(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"(((year({args[0].strip()}) - 1) DIV 1000) + 1)"
+
+
+def _fix_microsecond_fn(args: list[str]) -> str | None:
+    # µs within the MINUTE, like date_part('microseconds')
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return f"pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000)"
+
+
+def _fix_millisecond_fn(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"(pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000) "
+        f"DIV 1000)"
+    )
+
+
+def _fix_divide_fn(args: list[str]) -> str | None:
+    # DuckDB's divide(a, b) is the // operator (integer DIV on
+    # integers), not float division
+    if len(args) != 2:
+        return None
+    a, b = args[0].strip(), args[1].strip()
+    return (
+        f"(CASE WHEN ({b}) = 0 THEN NULL ELSE ({a}) DIV ({b}) END)"
+    )
+
+
+def _mk_binop_fn(op: str):
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 2:
+            return None
+        return f"(({args[0].strip()}) {op} ({args[1].strip()}))"
+
+    return fix
+
+
+def _fix_grouping_multi(args: list[str]) -> str | None:
+    # DuckDB's grouping(a, b, …) returns the combined bitmask;
+    # Spark splits that into grouping_id(a, b, …) (batch-24,
+    # same bit order — high bit = first argument)
+    if len(args) < 2:
+        return None
+    return f"grouping_id({', '.join(a.strip() for a in args)})"
+
+
+def _fix_printf_args(args: list[str]) -> str | None:
+    # Spark's format_string/printf rejects DECIMAL for %f/%d and
+    # bare decimal literals parse as DECIMAL — suffix them to
+    # DOUBLE (batch-22; expression-nested literals are covered by
+    # the division pass, bare value args were not)
+    changed = False
+    out = [args[0].strip()] if args else []
+    for a in args[1:]:
+        a = a.strip()
+        if re.fullmatch(r"-?\d+\.\d+", a):
+            out.append(a + "D")
+            changed = True
+        else:
+            out.append(a)
+    if not changed:
+        return None
+    return f"format_string({', '.join(out)})"
+
+
+def _fix_format(args: list[str]) -> str | None:
+    # fmt-style format('{} …', args…) → format_string('%s …', …)
+    if not args:
+        return None
+    fmt = args[0].strip()
+    if not (fmt.startswith("'") and fmt.endswith("'")):
+        return None
+    inner = fmt[1:-1]
+    if "%" in inner:
+        return None  # printf-style text: not the brace form
+    # fmt-style slots → printf: '{}' → %s, '{:.2f}' → %.2f,
+    # '{:d}' → %d, '{:>8}'-style alignment unsupported (r11
+    # batch-16 extends the r9 plain-{} subset)
+    out_parts: list[str] = []
+    slots: list[str] = []  # per-slot cast ('' = none)
+    pos = 0
+    ok = True
+    for sm in re.finditer(r"\{([^{}]*)\}", inner):
+        out_parts.append(inner[pos : sm.start()])
+        spec = sm.group(1)
+        if spec == "":
+            out_parts.append("%s")
+            slots.append("")
+            pos = sm.end()
+            continue
+        # ':[0][width][.prec][,][dfxXos]' (batch-22 widens the
+        # batch-16 subset; alignment/fill specs still bail)
+        gm = re.fullmatch(
+            r":(0?)(\d*)(?:\.(\d+))?(,?)([dfxXos]?)", spec
+        )
+        if gm is None:
+            ok = False
+            break
+        zero, width, prec, comma, conv = gm.groups()
+        if comma and conv in ("", "d"):
+            # '{:,}' → Java's grouped decimal
+            out_parts.append(f"%{zero}{width},d")
+            slots.append("BIGINT")
+        elif conv == "d" or (conv == "" and (zero or width)):
+            out_parts.append(f"%{zero}{width}d")
+            slots.append("BIGINT")
+        elif conv == "f":
+            out_parts.append(
+                f"%{zero}{width}.{prec if prec else '6'}f"
+            )
+            slots.append("DOUBLE")
+        elif conv in ("x", "X", "o"):
+            out_parts.append(f"%{zero}{width}{conv}")
+            slots.append("BIGINT")
+        elif conv == "s" or conv == "":
+            if prec or comma:
+                ok = False
+                break
+            # fmt left-aligns strings by default; Java '%Ns'
+            # right-aligns — '-' flips it
+            out_parts.append(f"%-{width}s" if width else "%s")
+            slots.append("")
+        else:
+            ok = False
+            break
+        pos = sm.end()
+    if not ok:
+        return None
+    out_parts.append(inner[pos:])
+    converted = "".join(out_parts)
+    if re.search(r"\{|\}", converted):
+        return None  # stray braces: leave for the user to see
+    vals = [a.strip() for a in args[1:]]
+    cast_vals = [
+        f"CAST({v} AS {t})" if t and i < len(slots) else v
+        for i, (v, t) in enumerate(
+            zip(vals, slots + [""] * len(vals))
+        )
+    ]
+    rest = ", ".join(cast_vals)
+    return (
+        f"format_string('{converted}'"
+        + (f", {rest}" if rest else "")
+        + ")"
+    )
+
+
+def _fix_to_base(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    return f"conv({args[0].strip()}, 10, {args[1].strip()})"
+
+
+def _fix_dayname(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"date_format({args[0].strip()}, 'EEEE')"
+
+
+def _fix_monthname(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"date_format({args[0].strip()}, 'MMMM')"
+
+
+def _fix_yearweek(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    # DuckDB: ISO year*100 + ISO week
+    return f"(extract(YEAROFWEEK FROM {e}) * 100 + weekofyear({e}))"
+
+
+def _fix_list_has_all(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    l, sub = args[0].strip(), args[1].strip()
+    return f"(size(array_except({sub}, {l})) = 0)"
+
+
+def _fix_struct_pack(args: list[str]) -> str | None:
+    pairs = []
+    for a in args:
+        pm = re.match(r"\s*(\w+)\s*:=\s*(.+)$", a, re.DOTALL)
+        if pm is None:
+            return None
+        pairs.append(f"'{pm.group(1)}', {pm.group(2).strip()}")
+    return "named_struct(" + ", ".join(pairs) + ")" if pairs else None
+
+
+def _fix_struct_extract(args: list[str]) -> str | None:
+    if len(args) != 2 or not args[1].strip().startswith("'"):
+        return None
+    return f"({args[0].strip()})[{args[1].strip()}]"
+
+
+def _fix_entropy(args: list[str]) -> str | None:
+    # DuckDB entropy(x): base-2 Shannon entropy of the value
+    # distribution in the group, NULLs excluded.  Emulated over
+    # collect_list via the identity H = log2(n) − Σ c·log2(c) / n
+    # (Spark dedups the identical collect_list agg expressions, so
+    # the group is buffered once; the HOFs are interpreted —
+    # dashboard-scale groups, not the corpus hot path).
+    if len(args) != 1:
+        return None
+    L = f"collect_list({args[0].strip()})"
+    return (
+        f"(CASE WHEN size({L}) = 0 THEN NULL ELSE "
+        f"log2(CAST(size({L}) AS DOUBLE)) - try_divide(aggregate("
+        f"transform(array_distinct({L}), v -> "
+        f"size(filter({L}, y -> y <=> v))), CAST(0 AS DOUBLE), "
+        f"(acc, c) -> acc + c * log2(CAST(c AS DOUBLE))), "
+        f"size({L})) END)"
+    )
+
+
+def _fix_histogram(args: list[str]) -> str | None:
+    # DuckDB histogram(x): MAP(value → count), keys sorted, NULLs
+    # excluded.  Same collect_list emulation as entropy.
+    if len(args) != 1:
+        return None
+    L = f"collect_list({args[0].strip()})"
+    return (
+        f"map_from_entries(transform(array_sort(array_distinct({L})), "
+        f"v -> struct(v, CAST(size(filter({L}, y -> y <=> v)) "
+        f"AS BIGINT))))"
+    )
+
+
+def _fix_scalar_range(args: list[str]) -> str | None:
+    # DuckDB's SCALAR range(): list with EXCLUSIVE end (Spark's
+    # sequence() is inclusive).  FROM-position range() is the
+    # table-function pass's / Spark's own TVF: its row is
+    # expr_position_only.
+    if len(args) == 1:
+        n = f"CAST({args[0].strip()} AS BIGINT)"
+        return (
+            f"slice(sequence(0, greatest({n} - 1, 0)), 1, "
+            f"greatest({n}, 0))"
+        )
+    if len(args) == 2:
+        a = f"CAST({args[0].strip()} AS BIGINT)"
+        b = f"CAST({args[1].strip()} AS BIGINT)"
+        return (
+            f"slice(sequence({a}, greatest({b} - 1, {a})), 1, "
+            f"greatest({b} - {a}, 0))"
+        )
+    if len(args) == 3:
+        # 3-arg with signed step (batch-22): exclusive stop via a
+        # filter; a direction/step mismatch is [] in DuckDB where
+        # sequence() raises — guard it (step 0 still raises, loud
+        # on both engines)
+        a = f"CAST({args[0].strip()} AS BIGINT)"
+        b = f"CAST({args[1].strip()} AS BIGINT)"
+        s = f"CAST({args[2].strip()} AS BIGINT)"
+        return (
+            f"(CASE WHEN (({s}) > 0 AND ({a}) >= ({b})) "
+            f"OR (({s}) < 0 AND ({a}) <= ({b})) "
+            f"THEN array() "
+            f"ELSE filter(sequence({a}, {b}, {s}), "
+            f"__rg -> CASE WHEN ({s}) > 0 THEN __rg < ({b}) "
+            f"ELSE __rg > ({b}) END) END)"
+        )
+    return None
+
+
+def _fix_scalar_series(args: list[str]) -> str | None:
+    # scalar generate_series(): INCLUSIVE end — sequence()
+    # exactly; 3-arg adds DuckDB's empty-list-on-mismatch (Spark
+    # raises; batch-22).  Interval steps pass through unguarded
+    # (the numeric comparison below would not type-check).
+    if len(args) == 2:
+        return f"sequence({args[0].strip()}, {args[1].strip()})"
+    if len(args) == 3:
+        a, b, s = (x.strip() for x in args)
+        if re.search(r"\bINTERVAL\b", s, re.IGNORECASE):
+            return f"sequence({a}, {b}, {s})"
+        return (
+            f"(CASE WHEN (({s}) > 0 AND ({a}) > ({b})) "
+            f"OR (({s}) < 0 AND ({a}) < ({b})) "
+            f"THEN array() "
+            f"ELSE sequence({a}, {b}, {s}) END)"
+        )
+    if len(args) == 1:
+        return f"sequence(0, CAST({args[0].strip()} AS BIGINT))"
+    return None
+
+
+def _fix_xor(args: list[str]) -> str | None:
+    # scalar xor(); cannot emit '^' — the POWER pass would read it
+    # as an exponent downstream
+    if len(args) != 2:
+        return None
+    a, b = args[0].strip(), args[1].strip()
+    return f"((({a}) | ({b})) & ~(({a}) & ({b})))"
+
+
+def _fix_product(args: list[str]) -> str | None:
+    # product() aggregate over collect_list (exp(sum(ln)) breaks
+    # on zeros/negatives)
+    if len(args) != 1:
+        return None
+    return (
+        f"aggregate(collect_list({args[0].strip()}), CAST(1 AS DOUBLE), "
+        f"(s, v) -> s * v)"
+    )
+
+
+def _fix_json_valid(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"(({e}) IS NOT NULL AND "
+        f"get_json_object({e}, '$') IS NOT NULL)"
+    )
+
+
+def _mk_codec1(fn_name: str):
+    # DuckDB's 1-arg encode/decode are UTF-8 blob conversions;
+    # Spark's equivalents take an explicit charset
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 1:
+            return None
+        return f"{fn_name}({args[0].strip()}, 'UTF-8')"
+
+    return fix
+
+
+def _fix_format_bytes(args: list[str]) -> str | None:
+    # binary units with one decimal, like DuckDB (its concat: the
+    # NULL-skipping concat row)
+    if len(args) != 1:
+        return None
+    n = f"CAST({args[0].strip()} AS DOUBLE)"
+
+    def shown(value: str, unit: str) -> str:
+        args = [value, f"' {unit}'"]
+        return _fix_concat_nullskip(args) or f"concat({', '.join(args)})"
+
+    def scaled(div: int) -> str:
+        return f"format_string('%.1f', {n} / {div})"
+
+    return (
+        f"(CASE WHEN {n} < 1024 THEN "
+        f"{shown(f'CAST(CAST({n} AS BIGINT) AS STRING)', 'bytes')}"
+        f" WHEN {n} < 1048576 THEN {shown(scaled(1024), 'KiB')}"
+        f" WHEN {n} < 1073741824 THEN {shown(scaled(1048576), 'MiB')}"
+        f" WHEN {n} < 1099511627776 THEN {shown(scaled(1073741824), 'GiB')}"
+        f" ELSE {shown(scaled(1099511627776), 'TiB')} END)"
+    )
+
+
+_NONNEG_INT_RE = re.compile(r"\+?\d+$")
+
+
+def _fix_left_neg(args: list[str]) -> str | None:
+    # DuckDB left(s, -n) = all but the LAST n chars; Spark returns
+    # '' (r11 batch-16). Non-negative integer literals (the common
+    # form) pass through untouched.
+    if len(args) != 2:
+        return None
+    s, n = args[0].strip(), args[1].strip()
+    if _NONNEG_INT_RE.fullmatch(n):
+        return None
+    return (
+        f"IF(({n}) IS NULL, NULL, substr({s}, 1, "
+        f"CASE WHEN ({n}) >= 0 THEN CAST({n} AS INT) "
+        f"ELSE greatest(CAST(length({s}) + ({n}) AS INT), 0) END))"
+    )
+
+
+def _fix_right_neg(args: list[str]) -> str | None:
+    # DuckDB right(s, -n) = all but the FIRST n chars
+    if len(args) != 2:
+        return None
+    s, n = args[0].strip(), args[1].strip()
+    if _NONNEG_INT_RE.fullmatch(n):
+        return None
+    return (
+        f"IF(({n}) IS NULL, NULL, "
+        f"CASE WHEN ({n}) >= length({s}) THEN ({s}) "
+        f"WHEN ({n}) > 0 THEN substr({s}, -CAST({n} AS INT)) "
+        f"WHEN ({n}) < 0 THEN substr({s}, CAST(1 - ({n}) AS INT)) "
+        f"ELSE '' END)"
+    )
+
+
+def _fix_substring_window(args: list[str]) -> str | None:
+    # DuckDB 3-arg substring: negative start counts from the END
+    # (start' = len+start+1), then the Postgres window clip applies
+    # — substring('abcde', 0, 3) = 'ab' (the window [0,3) shows 2
+    # chars) where Spark returns 'abc' (r11 batch-16).  Positive
+    # integer-literal starts (the common form) are already
+    # identical and pass through.
+    if len(args) != 3:
+        return None
+    s, st, ln = (a.strip() for a in args)
+    neg_len = re.fullmatch(r"-\d+", ln) is not None
+    if re.fullmatch(r"\+?[1-9]\d*", st) and not neg_len:
+        return None
+    nst = (
+        f"(CASE WHEN ({st}) < 0 THEN length({s}) + ({st}) + 1 "
+        f"ELSE ({st}) END)"
+    )
+    # negative length opens the window BACKWARD from start
+    # (batch-25): unified window [min(st, st+len), max(st, st+len))
+    lo = f"least({nst}, {nst} + ({ln}))"
+    hi = f"greatest({nst}, {nst} + ({ln}))"
+    return (
+        f"substr({s}, greatest({lo}, 1), "
+        f"greatest({hi} - greatest({lo}, 1), 0))"
+    )
+
+
+def _fix_trunc1(args: list[str]) -> str | None:
+    # numeric 1-arg trunc (toward zero); Spark's trunc is the
+    # 2-arg DATE form, so the 1-arg call never collides
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"(CASE WHEN ({e}) >= 0 THEN floor({e}) ELSE ceil({e}) END)"
+    )
+
+
+def _fix_list_slice(args: list[str]) -> str | None:
+    # DuckDB list_slice(l, a, b[, step]): 1-based INCLUSIVE bounds;
+    # the 4-arg step form counts negatives from the end. 2-arg
+    # list_slice does not exist in DuckDB 1.0; the bracket l[a:b]
+    # form has its own pass.
+    if len(args) == 3:
+        return _fix_array_slice(args)
+    if len(args) != 4:
+        return None
+    l = args[0].strip()
+    a, b = args[1].strip(), args[2].strip()
+    na = f"(CASE WHEN ({a}) < 0 THEN size({l}) + ({a}) + 1 ELSE ({a}) END)"
+    nb = (
+        f"least(CASE WHEN ({b}) < 0 THEN size({l}) + ({b}) + 1 "
+        f"ELSE ({b}) END, size({l}))"
+    )
+    step = args[3].strip()
+    return (
+        f"transform(sequence(greatest({na}, 1), {nb}, {step}), "
+        f"__li -> element_at({l}, __li))"
+    )
+
+
+def _fix_md5_number_half(upper: bool):
+    # DuckDB md5_number_lower/_upper: the md5 digest's second/
+    # first 8 BYTES as a little-endian unsigned 64-bit integer —
+    # byte-pair-reversed hex through conv(…,16,10), surfaced as
+    # DECIMAL(20,0) (Spark has no unsigned BIGINT)
+    off = 1 if upper else 17
+
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 1:
+            return None
+        e = args[0].strip()
+        # md5() inlined per pair — Spark's subexpression
+        # elimination collapses the duplicates inside one project
+        pairs = "||".join(
+            f"substr(md5({e}), {off + 2 * i}, 2)"
+            for i in reversed(range(8))
+        )
+        return f"CAST(conv({pairs}, 16, 10) AS DECIMAL(20,0))"
+
+    return fix
+
+
+def _fix_geomean(args: list[str]) -> str | None:
+    # DuckDB geomean/geometric_mean: exp of the mean log —
+    # NULLs skipped by avg on both sides (r11 batch-16 probe)
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return f"exp(avg(ln(CAST({e} AS DOUBLE))))"
+
+
+def _jsonify(e: str) -> str:
+    # any scalar/complex value → its JSON text, NULL → 'null':
+    # to_json needs a struct wrapper; the value is the fixed-offset
+    # slice of '{"v":X}' (prefix 5 chars, suffix 1 — no regex)
+    tj = f"to_json(named_struct('v', {e}))"
+    return (
+        f"CASE WHEN ({e}) IS NULL THEN 'null' "
+        f"ELSE substr({tj}, 6, length({tj}) - 6) END"
+    )
+
+
+def _json_path(p: str) -> str:
+    # a path literal: '$'-prefixed passes through, bare key gets it
+    if p.startswith("'") and not p[1:].startswith("$"):
+        return "'$." + p[1:]
+    return p
+
+
+def _fix_list_resize(args: list[str]) -> str | None:
+    # duck list_resize(l, n[, fill]): truncate or pad; default pad
+    # is a typed NULL (try_element_at(l, 0) — index 0 is invalid,
+    # the try_ form yields NULL of the ELEMENT type)
+    if len(args) not in (2, 3):
+        return None
+    l, n = args[0].strip(), args[1].strip()
+    # default pad = a typed NULL: a never-taken CASE branch types
+    # the NULL as the element type (try_element_at(l, 0) raises —
+    # index 0 is invalid even in the try_ form)
+    fill = (
+        args[2].strip() if len(args) == 3
+        else f"CASE WHEN false THEN try_element_at({l}, 1) END"
+    )
+    return (
+        f"CASE WHEN size({l}) >= ({n}) THEN slice({l}, 1, {n}) "
+        f"ELSE concat({l} /*ARR*/, transform(sequence(1, ({n}) - "
+        f"size({l})), __lr -> {fill})) END"
+    )
+
+
+def _fix_pop_front(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    l = args[0].strip()
+    return f"slice({l}, 2, greatest(size({l}) - 1, 0))"
+
+
+def _fix_pop_back(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    l = args[0].strip()
+    return f"slice({l}, 1, greatest(size({l}) - 1, 0))"
+
+
+def _fix_list_any_value(args: list[str]) -> str | None:
+    # first non-NULL element (duck list_any_value); empty/all-NULL
+    # input → NULL via the try_ form
+    if len(args) != 1:
+        return None
+    return f"try_element_at(array_compact({args[0].strip()}), 1)"
+
+
+_ARRAY_HEADS = re.compile(
+    r"\s*(\[|array\s*\(|array_|split\s*\(|sequence\s*\(|"
+    r"collect_list\s*\(|collect_set\s*\(|transform\s*\(|"
+    r"filter\s*\(|flatten\s*\(|slice\s*\(|map_keys\s*\(|"
+    r"map_values\s*\(|sort_array\s*\(|string_split|string_to_array|"
+    r"regexp_split_to_array\s*\(|str_split|"
+    r"regexp_extract_all\s*\(|list_)",
+    re.IGNORECASE,
+)
+
+
+def _makes_list(e: str) -> bool:
+    # an argument that SYNTACTICALLY produces an array: a list head
+    # (arguments arrive rewritten, so the Spark forms of the list
+    # fixers count) or an /*ARR*/-marked array concat inside it
+    return bool(_ARRAY_HEADS.match(e)) or "/*ARR*/" in e
+
+
+def _fix_len(args: list[str]) -> str | None:
+    # duck len() is polymorphic (strings AND lists); Spark splits
+    # it into length()/size() with no common spelling.  Textual
+    # heuristic: an argument that SYNTACTICALLY produces an array
+    # (list literal, array_*/split/sequence/transform/… head) →
+    # size(); anything else (columns included) → length().
+    # Documented limit: a list-typed COLUMN passed to len() still
+    # becomes length() — use array_length/size for those.
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    if _makes_list(e):
+        return f"size({e})"
+    return f"length({e})"
+
+
+def _fix_regexp_full_match(args: list[str]) -> str | None:
+    # duck regexp_full_match = anchored match of the WHOLE string
+    if len(args) != 2:
+        return None
+    s, p = args[0].strip(), args[1].strip()
+    return f"({s} RLIKE ('^(?:' || ({p}) || ')$'))"
+
+
+def _mk_like_escape(op: str, neg: bool):
+    # duck like_escape/ilike_escape/not_*_escape scalar forms →
+    # the LIKE … ESCAPE clause (ILIKE via lower() on both sides —
+    # the escape char is a symbol, unaffected)
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 3:
+            return None
+        s, p, e = (a.strip() for a in args)
+        if op == "ilike":
+            s, p = f"lower({s})", f"lower({p})"
+        n = "NOT " if neg else ""
+        return f"({s} {n}LIKE {p} ESCAPE {e})"
+
+    return fix
+
+
+def _fix_array_concat(args: list[str]) -> str | None:
+    # list_concat/array_concat/array_cat → Spark's array concat,
+    # /*ARR*/-marked so the varchar NULL-skip concat row (an enclosing
+    # DuckDB concat) leaves it
+    if not args:
+        return None
+    rest = ", ".join(a.strip() for a in args[1:])
+    return (
+        f"concat({args[0].strip()} /*ARR*/"
+        + (f", {rest}" if rest else "")
+        + ")"
+    )
+
+
+def _fix_concat_nullskip(args: list[str]) -> str | None:
+    # DuckDB concat() is VARCHAR-only and SKIPS NULL arguments
+    # (concat('a', NULL) = 'a', lists stringify); Spark's concat
+    # NULL-propagates and doubles as array concat — silent wrong
+    # (r11 batch-19).  Args are cast to STRING and joined with
+    # concat_ws('') (which skips NULLs).  /*ARR*/-marked calls
+    # (our own array-concat emissions) and syntactically-array
+    # args stay native Spark array concat — DuckDB users
+    # concatenating list-PRODUCING expressions through concat()
+    # get Spark array semantics instead of DuckDB's stringify
+    # (documented).
+    if not args or any(_makes_list(a.strip()) for a in args):
+        return None
+    casted = ", ".join(
+        f"CAST({a.strip()} AS STRING)" for a in args
+    )
+    return f"concat_ws('', {casted})"
+
+
+def _fix_json_quote(args: list[str]) -> str | None:
+    # duck json_quote: value → JSON text, SQL NULL → NULL (not
+    # 'null' — unlike elements inside json_array)
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    tj = f"to_json(named_struct('v', {e}))"
+    return (
+        f"CASE WHEN ({e}) IS NULL THEN NULL "
+        f"ELSE substr({tj}, 6, length({tj}) - 6) END"
+    )
+
+
+def _fix_json_array_ctor(args: list[str]) -> str | None:
+    elems = ", ".join(_jsonify(a.strip()) for a in args)
+    return f"concat('[', concat_ws(',', {elems}), ']')"
+
+
+def _fix_json_object_ctor(args: list[str]) -> str | None:
+    if len(args) % 2 != 0:
+        return None
+    pairs = ", ".join(
+        f"concat({_jsonify(args[i].strip())}, ':', "
+        f"{_jsonify(args[i + 1].strip())})"
+        for i in range(0, len(args), 2)
+    )
+    return f"concat('{{', concat_ws(',', {pairs}), '}}')"
+
+
+def _fix_json_group_array(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return (
+        f"concat('[', concat_ws(',', "
+        f"collect_list({_jsonify(args[0].strip())})), ']')"
+    )
+
+
+def _fix_json_group_object(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    k, v = args[0].strip(), args[1].strip()
+    return (
+        f"concat('{{', concat_ws(',', collect_list(concat("
+        f"{_jsonify(k)}, ':', {_jsonify(v)}))), '}}')"
+    )
+
+# ---- r13 bitstring family (BIT emulated as a '0'/'1' string;
+# every behavior pinned vs DuckDB 1.0 live — see test_rewrite
+# TestBitstrings).  Functions run BEFORE the ::BIT cast pass, so
+# the textual '::BIT' marker still distinguishes BIT operands of
+# the polymorphic bit_count/bit_length/octet_length. ----
+
+
+def _is_bit_marked(a: str) -> bool:
+    u = re.sub(r"\s+", "", a.upper())
+    return "::BIT" in u or "ASBIT)" in u or "BITSTRING(" in u
+
+
+def _fix_bitstring(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    s, n = args[0].strip(), args[1].strip()
+    return (
+        f"(CASE WHEN length({s}) > ({n}) THEN "
+        f"raise_error('Invalid Input Error: Length must be equal "
+        f"or larger than input string') "
+        f"ELSE lpad({_bit_cast_guard(s)}, ({n}), '0') END)"
+    )
+
+
+def _fix_get_bit(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    b, i = args[0].strip(), args[1].strip()
+    oob = (
+        f"raise_error(concat('Out of Range Error: bit index ', "
+        f"CAST(({i}) AS STRING), ' out of valid range (0..', "
+        f"CAST(length({b}) - 1 AS STRING), ')'))"
+    )
+    return (
+        f"(CASE WHEN ({i}) < 0 OR ({i}) >= length({b}) THEN "
+        f"CAST({oob} AS INT) "
+        f"ELSE CAST({_fix_substring_window([b, f'({i}) + 1', '1'])} AS INT) "
+        f"END)"
+    )
+
+
+def _fix_set_bit(args: list[str]) -> str | None:
+    if len(args) != 3:
+        return None
+    b, i, v = (a.strip() for a in args)
+    oob = (
+        f"raise_error(concat('Out of Range Error: bit index ', "
+        f"CAST(({i}) AS STRING), ' out of valid range (0..', "
+        f"CAST(length({b}) - 1 AS STRING), ')'))"
+    )
+    return (
+        f"(CASE WHEN ({v}) NOT IN (0, 1) THEN "
+        f"raise_error('Invalid Input Error: The new bit must be "
+        f"1 or 0') "
+        f"WHEN ({i}) < 0 OR ({i}) >= length({b}) THEN "
+        f"CAST({oob} AS STRING) "
+        f"ELSE concat(substring({b}, 1, ({i})), "
+        f"CAST(({v}) AS STRING), substring({b}, ({i}) + 2)) END)"
+    )
+
+
+def _fix_bit_position(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    sub, hay = args[0].strip(), args[1].strip()
+    return f"CAST(instr({hay}, {sub}) AS INT)"
+
+
+def _fix_bit_count(args: list[str]) -> str | None:
+    # BIT operand (textual marker) → count of '1' chars; integer
+    # operand keeps Spark's builtin popcount (identical to duck)
+    if len(args) != 1 or not _is_bit_marked(args[0]):
+        return None
+    a = args[0].strip()
+    return (
+        f"CAST(length({a}) - length(replace({a}, '1', '')) "
+        f"AS BIGINT)"
+    )
+
+
+def _fix_bit_length(args: list[str]) -> str | None:
+    if len(args) != 1 or not _is_bit_marked(args[0]):
+        return None
+    return f"CAST(length({args[0].strip()}) AS BIGINT)"
+
+
+def _fix_octet_length(args: list[str]) -> str | None:
+    if len(args) != 1 or not _is_bit_marked(args[0]):
+        return None
+    a = args[0].strip()
+    return f"CAST((length({a}) + 7) DIV 8 AS BIGINT)"
+
+
+def _fix_json_type(args: list[str]) -> str | None:
+    # 1-arg → the compat UDF; 2-arg → the path-walking UDF, which
+    # keeps DuckDB's JSON-null-at-path = 'NULL' vs missing-path =
+    # SQL NULL distinction (r13 fuzz find — get_json_object
+    # erases it)
+    if len(args) == 2:
+        return (
+            f"json_type2({args[0].strip()}, "
+            f"{_json_path(args[1].strip())})"
+        )
+    return None
+
+
+def _fix_json_array_length2(args: list[str]) -> str | None:
+    # DuckDB returns 0 for any EXISTING non-array value where
+    # Spark returns NULL (r12 JSON fuzz); SQL-NULL input and a
+    # missing path stay NULL.  Residual corner (documented): a
+    # JSON null AT the path is 0 in DuckDB but indistinguishable
+    # from a missing path through get_json_object, so it stays
+    # NULL here.
+    if len(args) == 1:
+        a = args[0].strip()
+        return (
+            f"(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS INT) "
+            f"ELSE coalesce(json_array_length({a}), 0) END)"
+        )
+    if len(args) != 2:
+        return None
+    x, p = args[0].strip(), _json_path(args[1].strip())
+    g = f"get_json_object({x}, {p})"
+    return (
+        f"(CASE WHEN ({x}) IS NULL OR {g} IS NULL "
+        f"THEN CAST(NULL AS INT) "
+        f"ELSE coalesce(json_array_length({g}), 0) END)"
+    )
+
+
+def _duck_structure_to_ddl(spec) -> str | None:
+    scalar = {
+        "UBIGINT": "BIGINT", "BIGINT": "BIGINT",
+        "UINTEGER": "BIGINT", "INTEGER": "INT",
+        "VARCHAR": "STRING", "DOUBLE": "DOUBLE",
+        "FLOAT": "FLOAT", "BOOLEAN": "BOOLEAN",
+        "HUGEINT": "DECIMAL(38,0)", "NULL": "STRING",
+        "JSON": "STRING",
+    }
+    if isinstance(spec, str):
+        return scalar.get(spec.upper())
+    if isinstance(spec, list) and len(spec) == 1:
+        inner = _duck_structure_to_ddl(spec[0])
+        return f"ARRAY<{inner}>" if inner else None
+    if isinstance(spec, dict):
+        fields = []
+        for k, v in spec.items():
+            inner = _duck_structure_to_ddl(v)
+            if inner is None:
+                return None
+            fields.append(f"`{k}`: {inner}")
+        return "STRUCT<" + ", ".join(fields) + ">"
+    return None
+
+
+def _fix_from_json_structure(args: list[str]) -> str | None:
+    # duck from_json/json_transform take a JSON type-structure
+    # literal; Spark's native from_json wants a DDL schema —
+    # convert literal structures at rewrite time, pass everything
+    # else through (a DDL string second arg is already Spark form)
+    if len(args) != 2:
+        return None
+    spec = args[1].strip()
+    if not (spec.startswith("'") and spec.endswith("'")):
+        return None
+    try:
+        parsed = json.loads(spec[1:-1])
+    except ValueError:
+        return None
+    ddl = _duck_structure_to_ddl(parsed)
+    if ddl is None:
+        return None
+    return f"from_json({args[0].strip()}, '{ddl}')"
+
+
+def _fix_json_merge_variadic(args: list[str]) -> str | None:
+    # DuckDB json_merge_patch is variadic; the compat UDF takes 2
+    # args — fold left: (a,b,c) → jmp(jmp(a,b),c).  2-arg calls
+    # pass through untouched (fixer output contains only 2-arg
+    # calls, so the pass is idempotent).
+    if len(args) <= 2:
+        return None
+    out = args[0].strip()
+    for a in args[1:]:
+        out = f"json_merge_patch({out}, {a.strip()})"
+    return out
+
+
+def _fix_list_sum(args: list[str]) -> str | None:
+    # the old rename emitted a placeholder name (broken); sum/avg
+    # over an array are HOF reductions.  DuckDB SKIPS NULL
+    # elements like the sum aggregate (list_sum([1,NULL,3]) = 4)
+    # and returns NULL for empty / all-NULL / NULL input —
+    # aggregate over array_compact, NULL-gated on compact size
+    # (r11 ADVICE: the old form NULL-propagated through the
+    # lambda).
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"CASE WHEN size(array_compact({e})) > 0 THEN "
+        f"aggregate(array_compact({e}), CAST(0 AS DOUBLE), "
+        f"(s, v) -> s + v) END"
+    )
+
+
+def _fix_list_avg(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"try_divide(aggregate(array_compact({e}), "
+        f"CAST(0 AS DOUBLE), (s, v) -> s + v), "
+        f"size(array_compact({e})))"
+    )
+
+
+def _fix_isoyear(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"extract(YEAROFWEEK FROM {args[0].strip()})"
+
+
+def _fix_century(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return (
+        f"CAST(ceil(year({args[0].strip()}) / 100.0) AS BIGINT)"
+    )
+
+
+def _chars(e: str) -> str:
+    # character array of a string (drop split()'s empty artifacts)
+    return f"filter(split({e}, ''), c -> c <> '')"
+
+
+def _fix_jaccard_str(args: list[str]) -> str | None:
+    # DuckDB jaccard(s1, s2): Jaccard similarity of the CHARACTER
+    # SETS — the quick fuzzy-match scalar
+    if len(args) != 2:
+        return None
+    a, b = _chars(args[0].strip()), _chars(args[1].strip())
+    return (
+        f"try_divide(CAST(size(array_intersect({a}, {b})) AS "
+        f"DOUBLE), size(array_union({a}, {b})))"
+    )
+
+
+def _fix_hamming(args: list[str]) -> str | None:
+    # positionwise mismatch count over the character arrays
+    if len(args) != 2:
+        return None
+    a, b = _chars(args[0].strip()), _chars(args[1].strip())
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CASE WHEN "
+        f"x <=> y THEN 0 ELSE 1 END), 0, (s, v) -> s + v)"
+    )
+
+
+def _fix_even(args: list[str]) -> str | None:
+    # round away from zero to the next EVEN number
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"(sign({e}) * ceil(abs(CAST({e} AS DOUBLE)) / 2) * 2)"
+    )
+
+
+def _fix_isinf(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return (
+        f"(abs(CAST({args[0].strip()} AS DOUBLE)) = "
+        f"CAST('Infinity' AS DOUBLE))"
+    )
+
+
+def _fix_isfinite(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    e = f"CAST({args[0].strip()} AS DOUBLE)"
+    return (
+        f"(NOT isnan({e}) AND abs({e}) <> "
+        f"CAST('Infinity' AS DOUBLE))"
+    )
+
+
+def _fix_list_reduce(args: list[str]) -> str | None:
+    # DuckDB list_reduce starts from the FIRST element (no init)
+    if len(args) != 2:
+        return None
+    l_, lam = args[0].strip(), args[1].strip()
+    return (
+        f"aggregate(slice({l_}, 2, greatest(size({l_}) - 1, 0)), "
+        f"try_element_at({l_}, 1), {lam})"
+    )
+
+
+def _fix_list_where(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    l_, m_ = args[0].strip(), args[1].strip()
+    return (
+        f"transform(filter(zip_with({l_}, {m_}, "
+        f"(x, m) -> struct(x AS x, m AS m)), s -> s.m), s -> s.x)"
+    )
+
+
+def _fix_list_select(args: list[str]) -> str | None:
+    # 1-based index selection, like DuckDB's try-semantics
+    if len(args) != 2:
+        return None
+    l_, ix = args[0].strip(), args[1].strip()
+    return (
+        f"transform({ix}, i -> try_element_at({l_}, CAST(i AS INT)))"
+    )
+
+
+def _fix_list_grade_up(args: list[str]) -> str | None:
+    # positions each sorted element came from
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"transform(array_sort(zip_with({e}, sequence(1, size({e})), "
+        f"(v, i) -> struct(v AS v, i AS i))), s -> s.i)"
+    )
+
+
+def _fix_dayofweek0(args: list[str]) -> str | None:
+    # DuckDB dayofweek/weekday: 0 = Sunday; Spark dayofweek is
+    # 1 = Sunday (and Spark weekday is 0 = Monday) — silent
+    # off-by-one both ways
+    if len(args) != 1:
+        return None
+    return f"(dayofweek({args[0].strip()}) - 1)"
+
+
+def _fix_isodow_fn(args: list[str]) -> str | None:
+    # ISO day number, 1 = Monday … 7 = Sunday
+    if len(args) != 1:
+        return None
+    return f"(pmod(dayofweek({args[0].strip()}) + 5, 7) + 1)"
+
+
+def _fix_string_agg1(args: list[str]) -> str | None:
+    # DuckDB's default separator is ',' — Spark listagg's is ''
+    if len(args) != 1:
+        return None
+    return f"listagg({args[0].strip()}, ',')"
+
+
+def _fix_array_agg_nulls(args: list[str]) -> str | None:
+    # DuckDB array_agg KEEPS NULL elements; collect_list drops
+    # them — wrap in a struct (never NULL) and unwrap after
+    if len(args) != 1:
+        return None
+    return (
+        f"transform(collect_list(struct(({args[0].strip()}) AS v)), "
+        f"s -> s.v)"
+    )
+
+
+def _fix_any_value(args: list[str]) -> str | None:
+    # DuckDB any_value returns the first NON-NULL value
+    if len(args) != 1:
+        return None
+    return f"any_value({args[0].strip()}, true)"
+
+
+def _mk_to_unit(unit_expr: str):
+    def fix(args: list[str]) -> str | None:
+        if len(args) != 1:
+            return None
+        return unit_expr.format(n=args[0].strip())
+
+    return fix
+
+
+def _fix_literal_split(args: list[str]) -> str | None:
+    # DuckDB string_split/str_split/string_to_array take a LITERAL
+    # delimiter; Spark's split() is regex — '.' or '|' silently
+    # split every character.  Literal delimiters regex-escape
+    # inline; dynamic ones wrap in \\Q…\\E.
+    if len(args) != 2:
+        return None
+    src, d = args[0].strip(), args[1].strip()
+    if (
+        len(d) >= 2
+        and d.startswith("'")
+        and d.endswith("'")
+        and "'" not in d[1:-1]
+    ):
+        esc = re.sub(r"([.^$*+?()\[\]{}|\\])", r"\\\1", d[1:-1])
+        return f"split({src}, '{esc}')"
+    return f"split({src}, concat('\\Q', {d}, '\\E'))"
+
+
+def _fix_list_unique(args: list[str]) -> str | None:
+    # DuckDB list_unique/array_unique COUNT distinct non-NULL
+    # elements (BIGINT) — array_distinct alone silently returned
+    # an array
+    if len(args) != 1:
+        return None
+    e = args[0].strip()
+    return (
+        f"CAST(size(array_distinct(array_compact({e}))) AS BIGINT)"
+    )
+
+
+def _fix_list_sort_dir(args: list[str]) -> str | None:
+    # list_sort(l, 'DESC' [, 'NULLS …']) → sort_array; the 1-arg
+    # form falls through to the array_sort rename
+    if len(args) not in (2, 3):
+        return None
+    d = args[1].strip().strip("'").upper()
+    if d not in ("ASC", "DESC"):
+        return None
+    return f"sort_array({args[0].strip()}, {str(d == 'ASC').lower()})"
+
+
+def _fix_list_reverse_sort(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    return f"sort_array({args[0].strip()}, false)"
+
+
+def _fix_regexp_matches3(args: list[str]) -> str | None:
+    # 3-arg regexp_matches: DuckDB inline flags → (?flags) prefix
+    if len(args) != 3:
+        return None
+    f3 = args[2].strip()
+    if f3.startswith("'") and f3.endswith("'"):
+        flags = f3[1:-1].replace("g", "")
+        if not flags:
+            return f"rlike({args[0].strip()}, {args[1].strip()})"
+        return (
+            f"rlike({args[0].strip()}, concat('(?{flags})', "
+            f"{args[1].strip()}))"
+        )
+    return None
+
+
+def _fix_date_part_list(args: list[str]) -> str | None:
+    # date_part(['year','month'], d) → STRUCT of the parts;
+    # scalar fields Spark's extract lacks or counts differently
+    # (batch-22): dow 0=Sunday, isodow 1=Monday, epoch fractional
+    # seconds, micro/milliseconds of the minute, decade/century/
+    # millennium.
+    if len(args) != 2:
+        return None
+    f0 = args[0].strip()
+    if f0.startswith("'") and f0.endswith("'"):
+        field = f0[1:-1].lower()
+        # DuckDB accepts singular and abbreviated part spellings
         field = _EXTRACT_FIELD_ALIASES.get(field, field)
+        e = args[1].strip()
         us = f"pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000)"
-        repl = {
-            "epoch": f"(unix_micros(CAST({e} AS TIMESTAMP)) / 1000000.0)",
+        special = {
             "dow": f"(dayofweek({e}) - 1)",
             "isodow": f"(weekday({e}) + 1)",
+            "epoch": (
+                f"(unix_micros(CAST({e} AS TIMESTAMP)) / 1000000.0)"
+            ),
             "microseconds": us,
             "milliseconds": f"({us} DIV 1000)",
+            # DuckDB's second part is a whole BIGINT; Spark's
+            # extract(SECOND) keeps the fraction as DECIMAL(8,6)
+            # (r12 temporal fuzz find)
             "second": f"({us} DIV 1000000)",
             "decade": f"(year({e}) DIV 10)",
             "century": f"(((year({e}) - 1) DIV 100) + 1)",
             "millennium": f"(((year({e}) - 1) DIV 1000) + 1)",
-        }[field]
-        sql = sql[: m.start()] + repl + sql[close + 1 :]
+        }
+        return special.get(field)
+    am = re.match(
+        r"^array\s*\((.*)\)$", f0, re.IGNORECASE | re.DOTALL
+    )
+    if am is None:
+        return None
+    parts = [p.strip() for p in _split_top_level_args(am.group(1))]
+    if not all(p.startswith("'") and p.endswith("'") for p in parts):
+        return None
+    d = args[1].strip()
+    fields = ", ".join(
+        f"{p}, {_fix_date_part_list([p, d]) or f'date_part({p}, {d})'}"
+        for p in parts
+    )
+    return f"named_struct({fields})"
+
+
+def _fix_map_extract(args: list[str]) -> str | None:
+    # DuckDB map_extract returns [v] or [] — never bare v
+    if len(args) != 2:
+        return None
+    m_, k_ = args[0].strip(), args[1].strip()
+    return (
+        f"(CASE WHEN map_contains_key({m_}, {k_}) THEN "
+        f"array(element_at({m_}, {k_})) ELSE array() END)"
+    )
+
+
+def _dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        f"CAST(0 AS DOUBLE), (s, v) -> s + v)"
+    )
+
+
+def _fix_array_cosine(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    a, b = args[0].strip(), args[1].strip()
+    sq = "aggregate(transform({0}, x -> x * x), CAST(0 AS DOUBLE), (s, v) -> s + v)"
+    return (
+        f"({_dot(a, b)} / (sqrt({sq.format(a)}) * "
+        f"sqrt({sq.format(b)})))"
+    )
+
+
+def _fix_array_inner(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    return f"({_dot(args[0].strip(), args[1].strip())})"
+
+
+def _fix_array_distance(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    a, b = args[0].strip(), args[1].strip()
+    return (
+        f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"(x - y) * (x - y)), CAST(0 AS DOUBLE), (s, v) -> s + v))"
+    )
+
+
+def _fix_extract(args: list[str]) -> str | None:
+    # extract(epoch|dow|isodow|… FROM e): epoch → fractional seconds
+    # via unix_micros; DuckDB's dow is 0=Sunday (Spark's is 1=Sunday),
+    # isodow is 1=Monday; sub-minute parts are whole numbers
+    a = ", ".join(args)
+    m = _EXTRACT_COMPAT_RE.match(a)
+    if m is None:
+        return None
+    e = a[m.end() :].strip()
+    field = m.group(1).lower()
+    field = _EXTRACT_FIELD_ALIASES.get(field, field)
+    us = f"pmod(unix_micros(CAST({e} AS TIMESTAMP)), 60000000)"
+    return {
+        "epoch": f"(unix_micros(CAST({e} AS TIMESTAMP)) / 1000000.0)",
+        "dow": f"(dayofweek({e}) - 1)",
+        "isodow": f"(weekday({e}) + 1)",
+        "microseconds": us,
+        "milliseconds": f"({us} DIV 1000)",
+        "second": f"({us} DIV 1000000)",
+        "decade": f"(year({e}) DIV 10)",
+        "century": f"(((year({e}) - 1) DIV 100) + 1)",
+        "millennium": f"(((year({e}) - 1) DIV 1000) + 1)",
+    }[field]
 
 
 def _rewrite_brace_literals(sql: str) -> str:
@@ -5871,7 +5355,6 @@ def _rewrite_brace_literals(sql: str) -> str:
 
 _EXCLUDE_RE = re.compile(r"(\*\s*)EXCLUDE(\s*\()", re.IGNORECASE)
 
-_DATE_DIFF_RE = re.compile(r"\b(date_diff|datediff)\s*\(", re.IGNORECASE)
 _INTERVAL_QUARTER_RE = re.compile(
     r"\bINTERVAL\s+'?(\d+)'?\s+QUARTERS?\b", re.IGNORECASE
 )
@@ -5914,7 +5397,7 @@ _DATE_DIFF_EPOCH_US = {
 }
 
 
-def _rewrite_date_diff(sql: str) -> str:
+def _fix_date_diff(args: list[str]) -> str | None:
     """DuckDB ``date_diff('part', a, b)`` counts partition BOUNDARIES
     crossed; Spark's ``timestampdiff(PART, a, b)`` counts COMPLETE
     elapsed units. Truncating both operands to the part first makes
@@ -5932,43 +5415,23 @@ def _rewrite_date_diff(sql: str) -> str:
     operands, identical from 1970 on.  Calls whose first argument
     isn't a recognized part literal are left untouched (Spark's own
     2-arg datediff stays valid)."""
-    while True:
-        states = _scan_states(sql)
-        hit = None
-        for m in _DATE_DIFF_RE.finditer(sql):
-            if states[m.start()] != 0:
-                continue
-            open_pos = sql.index("(", m.end() - 1)
-            close = _find_matching_close(sql, open_pos, states)
-            if close == -1:
-                return sql
-            args = _split_top_level_args(sql[open_pos + 1 : close])
-            if len(args) != 3:
-                continue
-            part = args[0].strip().strip("'\"").lower()
-            unit = _DATE_PARTS.get(part)
-            if unit is None or not re.fullmatch(
-                r"['\"]\w+['\"]", args[0].strip()
-            ):
-                continue
-            hit = (m.start(), close, unit, args[1].strip(), args[2].strip())
-            break
-        if hit is None:
-            return sql
-        start, close, unit, a, b = hit
-        us = _DATE_DIFF_EPOCH_US.get(unit)
-        if us is not None:
-            repl = (
-                f"((unix_micros(CAST(({b}) AS TIMESTAMP)) DIV {us}) - "
-                f"(unix_micros(CAST(({a}) AS TIMESTAMP)) DIV {us}))"
-            )
-        else:
-            lpart = unit.lower()
-            repl = (
-                f"timestampdiff({unit}, date_trunc('{lpart}' /*DT*/, {a}), "
-                f"date_trunc('{lpart}' /*DT*/, {b}))"
-            )
-        sql = sql[:start] + repl + sql[close + 1 :]
+    if len(args) != 3:
+        return None
+    unit = _DATE_PARTS.get(args[0].strip("'\"").lower())
+    if unit is None or not re.fullmatch(r"['\"]\w+['\"]", args[0]):
+        return None
+    a, b = args[1], args[2]
+    us = _DATE_DIFF_EPOCH_US.get(unit)
+    if us is not None:
+        return (
+            f"((unix_micros(CAST(({b}) AS TIMESTAMP)) DIV {us}) - "
+            f"(unix_micros(CAST(({a}) AS TIMESTAMP)) DIV {us}))"
+        )
+    lpart = unit.lower()
+    return (
+        f"timestampdiff({unit}, date_trunc('{lpart}', {a}), "
+        f"date_trunc('{lpart}', {b}))"
+    )
 
 
 _SERIES_TF_RE = re.compile(
@@ -6035,14 +5498,15 @@ def _rewrite_series_tablefuncs(sql: str) -> str:
         )
 
 
-def _split_top_level_args(arglist: str) -> list[str]:
-    states = _scan_states(arglist)
-    args: list[str] = []
+def _depth0_commas(sql: str, states: list[int], lo: int, hi: int) -> list[int]:
+    """Positions of the commas in ``sql[lo:hi]`` outside quotes and
+    outside any bracket opened in that range."""
+    commas: list[int] = []
     depth = 0
-    start = 0
-    for i, c in enumerate(arglist):
+    for i in range(lo, hi):
         if states[i] != 0:
             continue
+        c = sql[i]
         if c in "([{":
             # '{' counts too: DuckDB struct/map literals carry commas
             # at brace depth (r11 — unnest({'a':1,...}, recursive)
@@ -6051,43 +5515,291 @@ def _split_top_level_args(arglist: str) -> list[str]:
         elif c in ")]}":
             depth -= 1
         elif c == "," and depth == 0:
-            args.append(arglist[start:i])
-            start = i + 1
-    args.append(arglist[start:])
-    return [a.strip() for a in args if a.strip()]
+            commas.append(i)
+    return commas
 
 
-def _expand_boxplot(sql: str) -> str:
-    while True:
-        states = _scan_states(sql)
-        m = _BOXPLOT_RE.search(sql)
-        if not m or states[m.start()] != 0:
-            found = False
-            if m:
-                for m2 in _BOXPLOT_RE.finditer(sql):
-                    if states[m2.start()] == 0:
-                        m = m2
-                        found = True
-                        break
-            if not found:
-                return sql
-        open_pos = m.end() - 1
-        close_pos = _find_matching_close(sql, open_pos, states)
-        if close_pos < 0:
-            return sql
-        args = _split_top_level_args(sql[open_pos + 1 : close_pos])
-        val = args[0] if args else "NULL"
-        outlier = None
-        for a in args[1:]:
-            am = re.match(r"outlier_info\s*:=\s*(.+)$", a, re.IGNORECASE | re.DOTALL)
-            if am:
-                expr = am.group(1).strip()
-                if expr.upper() != "NULL":
-                    outlier = expr
-            else:
-                if a.strip().upper() != "NULL":
-                    outlier = a.strip()
-        sql = sql[: m.start()] + _boxplot_expansion(val, outlier) + sql[close_pos + 1 :]
+def _split_top_level_args(arglist: str) -> list[str]:
+    states = _scan_states(arglist)
+    bounds = [-1, *_depth0_commas(arglist, states, 0, len(arglist)), len(arglist)]
+    args = (arglist[a + 1 : b].strip() for a, b in zip(bounds, bounds[1:]))
+    return [a for a in args if a]
+
+
+def _fix_boxplot(args: list[str]) -> str | None:
+    # BOXPLOT(val [, outlier_info := e]) macro → _boxplot_expansion
+    val = args[0] if args else "NULL"
+    outlier = None
+    for a in args[1:]:
+        am = re.match(r"outlier_info\s*:=\s*(.+)$", a, re.IGNORECASE | re.DOTALL)
+        if am:
+            expr = am.group(1).strip()
+            if expr.upper() != "NULL":
+                outlier = expr
+        elif a.strip().upper() != "NULL":
+            outlier = a.strip()
+    return _boxplot_expansion(val, outlier)
+
+
+
+class _CallFixer(NamedTuple):
+    fix: Callable[[list[str]], str | None]
+    # `x.name(` is a field or method, not this function
+    no_dot: bool = False
+    # right after FROM/JOIN the name is a table function: the series
+    # pass or Spark handles it
+    expr_position_only: bool = False
+
+
+# lower-case function name → its fixer; aliases share a row
+_CALL_FIXERS: dict[str, _CallFixer] = {
+    name: row
+    for names, row in (
+        ("entropy", _CallFixer(_fix_entropy)),
+        ("xor", _CallFixer(_fix_xor)),
+        ("string_agg group_concat", _CallFixer(_fix_string_agg1)),
+        ("array_agg list", _CallFixer(_fix_array_agg_nulls)),
+        ("any_value", _CallFixer(_fix_any_value)),
+        ("list_reduce array_reduce", _CallFixer(_fix_list_reduce)),
+        ("list_where array_where", _CallFixer(_fix_list_where)),
+        ("list_select array_select", _CallFixer(_fix_list_select)),
+        ("list_grade_up array_grade_up grade_up", _CallFixer(_fix_list_grade_up)),
+        ("dayofweek weekday", _CallFixer(_fix_dayofweek0)),
+        ("isodow", _CallFixer(_fix_isodow_fn)),
+        ("jaccard", _CallFixer(_fix_jaccard_str)),
+        ("hamming", _CallFixer(_fix_hamming)),
+        ("mismatches", _CallFixer(_fix_hamming)),
+        ("even", _CallFixer(_fix_even)),
+        ("isinf", _CallFixer(_fix_isinf)),
+        ("isfinite", _CallFixer(_fix_isfinite)),
+        ("list_sum", _CallFixer(_fix_list_sum)),
+        ("list_avg", _CallFixer(_fix_list_avg)),
+        ("isoyear", _CallFixer(_fix_isoyear)),
+        ("century", _CallFixer(_fix_century)),
+        ("product", _CallFixer(_fix_product)),
+        ("json_valid", _CallFixer(_fix_json_valid)),
+        ("encode", _CallFixer(_mk_codec1("encode"))),
+        ("decode", _CallFixer(_mk_codec1("decode"))),
+        ("format_bytes", _CallFixer(_fix_format_bytes)),
+        ("to_seconds", _CallFixer(_mk_to_unit("make_dt_interval(0, 0, 0, {n})"))),
+        ("to_minutes", _CallFixer(_mk_to_unit("make_dt_interval(0, 0, {n}, 0)"))),
+        ("to_hours", _CallFixer(_mk_to_unit("make_dt_interval(0, {n}, 0, 0)"))),
+        ("to_days", _CallFixer(_mk_to_unit("make_dt_interval({n}, 0, 0, 0)"))),
+        ("to_months", _CallFixer(_mk_to_unit("make_ym_interval(0, {n})"))),
+        ("to_years", _CallFixer(_mk_to_unit("make_ym_interval({n}, 0)"))),
+        (
+            "to_weeks",
+            _CallFixer(_mk_to_unit("make_dt_interval(({n}) * 7, 0, 0, 0)")),
+        ),
+        ("to_quarters", _CallFixer(_mk_to_unit("make_ym_interval(0, ({n}) * 3)"))),
+        ("to_decades", _CallFixer(_mk_to_unit("make_ym_interval(({n}) * 10, 0)"))),
+        (
+            "to_centuries",
+            _CallFixer(_mk_to_unit("make_ym_interval(({n}) * 100, 0)")),
+        ),
+        (
+            "to_millennia",
+            _CallFixer(_mk_to_unit("make_ym_interval(({n}) * 1000, 0)")),
+        ),
+        (
+            "to_milliseconds",
+            _CallFixer(_mk_to_unit("make_dt_interval(0, 0, 0, ({n}) / 1000.0)")),
+        ),
+        (
+            "to_microseconds",
+            _CallFixer(_mk_to_unit("make_dt_interval(0, 0, 0, ({n}) / 1000000.0)")),
+        ),
+        ("histogram", _CallFixer(_fix_histogram)),
+        ("json_merge_patch", _CallFixer(_fix_json_merge_variadic)),
+        ("json_quote", _CallFixer(_fix_json_quote)),
+        (
+            "list_concat array_concat array_cat list_cat",
+            _CallFixer(_fix_array_concat),
+        ),
+        ("regexp_full_match", _CallFixer(_fix_regexp_full_match)),
+        ("like_escape", _CallFixer(_mk_like_escape("like", neg=False))),
+        ("ilike_escape", _CallFixer(_mk_like_escape("ilike", neg=False))),
+        ("not_like_escape", _CallFixer(_mk_like_escape("like", neg=True))),
+        ("not_ilike_escape", _CallFixer(_mk_like_escape("ilike", neg=True))),
+        ("concat", _CallFixer(_fix_concat_nullskip)),
+        ("list_resize array_resize", _CallFixer(_fix_list_resize)),
+        ("array_pop_front list_pop_front", _CallFixer(_fix_pop_front)),
+        ("array_pop_back list_pop_back", _CallFixer(_fix_pop_back)),
+        ("list_any_value", _CallFixer(_fix_list_any_value)),
+        ("len", _CallFixer(_fix_len)),
+        ("json_array", _CallFixer(_fix_json_array_ctor)),
+        ("json_object", _CallFixer(_fix_json_object_ctor)),
+        ("json_group_array", _CallFixer(_fix_json_group_array)),
+        ("json_group_object", _CallFixer(_fix_json_group_object)),
+        ("json_type", _CallFixer(_fix_json_type)),
+        ("bitstring", _CallFixer(_fix_bitstring)),
+        ("get_bit", _CallFixer(_fix_get_bit)),
+        ("set_bit", _CallFixer(_fix_set_bit)),
+        ("bit_position", _CallFixer(_fix_bit_position)),
+        ("bit_count", _CallFixer(_fix_bit_count)),
+        ("bit_length", _CallFixer(_fix_bit_length)),
+        ("octet_length", _CallFixer(_fix_octet_length)),
+        ("json_array_length", _CallFixer(_fix_json_array_length2)),
+        (
+            "from_json from_json_strict json_transform json_transform_strict",
+            _CallFixer(_fix_from_json_structure),
+        ),
+        ("geomean geometric_mean", _CallFixer(_fix_geomean)),
+        ("left", _CallFixer(_fix_left_neg)),
+        ("right", _CallFixer(_fix_right_neg)),
+        ("substring substr", _CallFixer(_fix_substring_window)),
+        ("trunc", _CallFixer(_fix_trunc1)),
+        ("list_slice", _CallFixer(_fix_list_slice)),
+        ("md5_number_lower", _CallFixer(_fix_md5_number_half(upper=False))),
+        ("md5_number_upper", _CallFixer(_fix_md5_number_half(upper=True))),
+        ("string_split str_split string_to_array", _CallFixer(_fix_literal_split)),
+        ("list_unique array_unique", _CallFixer(_fix_list_unique)),
+        ("list_sort", _CallFixer(_fix_list_sort_dir)),
+        (
+            "list_reverse_sort array_reverse_sort",
+            _CallFixer(_fix_list_reverse_sort),
+        ),
+        ("regexp_matches", _CallFixer(_fix_regexp_matches3)),
+        ("date_part", _CallFixer(_fix_date_part_list)),
+        ("map_extract", _CallFixer(_fix_map_extract)),
+        (
+            "array_cosine_similarity list_cosine_similarity",
+            _CallFixer(_fix_array_cosine),
+        ),
+        (
+            "array_inner_product array_dot_product list_inner_product list_dot_product",
+            _CallFixer(_fix_array_inner),
+        ),
+        ("array_distance list_distance", _CallFixer(_fix_array_distance)),
+        (
+            "range",
+            _CallFixer(_fix_scalar_range, no_dot=True, expr_position_only=True),
+        ),
+        (
+            "generate_series",
+            _CallFixer(_fix_scalar_series, no_dot=True, expr_position_only=True),
+        ),
+        ("skewness", _CallFixer(_fix_skew)),
+        ("kurtosis_pop", _CallFixer(_fix_kurtosis_pop)),
+        ("kurtosis", _CallFixer(_fix_kurt)),
+        ("log", _CallFixer(_fix_log, no_dot=True)),
+        (
+            "list_contains list_has array_has array_contains",
+            _CallFixer(_fix_list_contains),
+        ),
+        ("sha256", _CallFixer(_fix_sha256)),
+        ("age", _CallFixer(_fix_age, no_dot=True)),
+        ("struct_insert", _CallFixer(_fix_struct_insert)),
+        ("favg", _CallFixer(_fix_favg)),
+        ("fsum kahan_sum sumkahan", _CallFixer(_fix_fsum)),
+        ("timezone", _CallFixer(_fix_timezone_fn, no_dot=True)),
+        ("epoch_ms", _CallFixer(_fix_epoch_ms_poly)),
+        ("epoch_us", _CallFixer(_fix_epoch_us_poly)),
+        ("hash", _CallFixer(_fix_hash_fn, no_dot=True)),
+        ("typeof", _CallFixer(_fix_typeof)),
+        ("grouping", _CallFixer(_fix_grouping_multi, no_dot=True)),
+        ("count_star", _CallFixer(_fix_count_star)),
+        ("date_trunc", _CallFixer(_fix_date_trunc_type)),
+        ("arg_max argmax max_by", _CallFixer(_mk_argminmax("max_by"))),
+        ("arg_min argmin min_by", _CallFixer(_mk_argminmax("min_by"))),
+        ("sem", _CallFixer(_fix_sem, no_dot=True)),
+        ("constant_or_null", _CallFixer(_fix_constant_or_null)),
+        ("reservoir_quantile", _CallFixer(_fix_reservoir_quantile)),
+        ("julian", _CallFixer(_fix_julian, no_dot=True)),
+        ("epoch_ns", _CallFixer(_fix_epoch_ns)),
+        ("epoch", _CallFixer(_fix_epoch_fn, no_dot=True)),
+        ("era", _CallFixer(_fix_era, no_dot=True)),
+        ("timezone_hour", _CallFixer(_mk_const_fn("0"))),
+        ("timezone_minute", _CallFixer(_mk_const_fn("0"))),
+        ("decade", _CallFixer(_fix_decade_fn, no_dot=True)),
+        ("millennium", _CallFixer(_fix_millennium_fn)),
+        ("microsecond", _CallFixer(_fix_microsecond_fn)),
+        ("millisecond", _CallFixer(_fix_millisecond_fn)),
+        ("divide", _CallFixer(_fix_divide_fn, no_dot=True)),
+        ("multiply", _CallFixer(_mk_binop_fn("*"), no_dot=True)),
+        ("add", _CallFixer(_mk_binop_fn("+"), no_dot=True)),
+        ("subtract", _CallFixer(_mk_binop_fn("-"), no_dot=True)),
+        ("strftime", _CallFixer(_fix_strftime_computed)),
+        ("strptime", _CallFixer(_fix_strptime_list)),
+        ("printf format_string", _CallFixer(_fix_printf_args)),
+        ("date_sub datesub", _CallFixer(_fix_date_sub3)),
+        ("time_bucket", _CallFixer(_fix_time_bucket)),
+        ("regexp_extract_all", _CallFixer(_fix_rex_all)),
+        ("format", _CallFixer(_fix_format)),
+        ("to_base", _CallFixer(_fix_to_base)),
+        ("dayname", _CallFixer(_fix_dayname)),
+        ("monthname", _CallFixer(_fix_monthname)),
+        ("yearweek", _CallFixer(_fix_yearweek)),
+        ("list_has_all array_has_all", _CallFixer(_fix_list_has_all)),
+        ("struct_pack", _CallFixer(_fix_struct_pack)),
+        ("struct_extract", _CallFixer(_fix_struct_extract)),
+        ("date_add", _CallFixer(_fix_date_add)),
+        ("regexp_extract", _CallFixer(_fix_regexp_extract)),
+        ("array_slice", _CallFixer(_fix_array_slice)),
+        ("ltrim", _CallFixer(_mk_trim2("ltrim"))),
+        ("rtrim", _CallFixer(_mk_trim2("rtrim"))),
+        ("trim btrim", _CallFixer(_mk_trim2("trim"))),
+        (
+            "list_aggregate array_aggregate list_aggr array_aggr",
+            _CallFixer(_fix_list_aggregate),
+        ),
+        ("date_diff datediff", _CallFixer(_fix_date_diff)),
+        ("regexp_replace", _CallFixer(_fix_regexp_replace)),
+        ("boxplot", _CallFixer(_fix_boxplot)),
+        ("extract", _CallFixer(_fix_extract)),
+    )
+    for name in names.split()
+}
+
+_CALL_HEAD_RE = re.compile(
+    r"\b(" + "|".join(_CALL_FIXERS) + r")\s*\(",
+    re.IGNORECASE,
+)
+
+
+def _rewrite_calls(sql: str) -> str:
+    """Rewrite every call of a ``_CALL_FIXERS`` name: one scan finds
+    the calls, and each is visited once, after its arguments, with
+    those rewritten arguments.  A fixer's output is not walked again —
+    a fixer whose output needs another row calls that row's fixer
+    itself.  ``name /*as-is*/(`` (an earlier pass's Spark call) is not
+    a head; the marker is dropped here."""
+    states = _scan_states(sql)
+    calls = []
+    for m in _CALL_HEAD_RE.finditer(sql):
+        start = m.start()
+        row = _CALL_FIXERS[m.group(1).lower()]
+        if states[start] or (row.no_dot and sql[start - 1 : start] == "."):
+            continue
+        if row.expr_position_only:
+            prev = sql[:start].rstrip().rsplit(None, 1)
+            if prev and prev[-1].upper() in ("FROM", "JOIN"):
+                continue
+        close = _find_matching_close(sql, m.end() - 1, states)
+        if close != -1:
+            calls.append((start, m.end() - 1, close, row))
+    calls.reverse()  # pop() yields them in text order
+
+    def render(lo: int, hi: int) -> str:
+        # sql[lo:hi] with the calls that start in it rewritten
+        out = []
+        while calls and calls[-1][0] < hi:
+            start, open_, close, row = calls.pop()
+            if close >= hi:
+                continue  # unbalanced brackets cut it: leave it as text
+            cuts = [open_, *_depth0_commas(sql, states, open_ + 1, close), close]
+            pieces = []
+            for a, b in zip(cuts, cuts[1:]):  # a loop: one frame per depth
+                pieces.append(render(a + 1, b))
+            new = row.fix([p.strip() for p in pieces if p.strip()])
+            if new is None:
+                new = sql[start : open_ + 1] + ",".join(pieces) + ")"
+            out += (sql[lo:start], new)
+            lo = close + 1
+        out.append(sql[lo:hi])
+        return "".join(out)
+
+    return render(0, len(sql)).replace(_AS_IS, "")
 
 
 # ---------------------------------------------------------------------------
@@ -6277,14 +5989,50 @@ def substitute_variables(
 # Entry point
 # ---------------------------------------------------------------------------
 
+_PAREN_FROM_RE = re.compile(r"\(\s*FROM\b", re.IGNORECASE)
+# a parenthesis after one of these words (or after no word) opens a
+# query; after any other word it opens a call's arguments (trim(FROM x))
+_QUERY_PAREN_WORDS = frozenset(
+    "AS IN EXISTS FROM JOIN LATERAL ANY ALL SOME UNION INTERSECT EXCEPT "
+    "SELECT WHERE HAVING AND OR NOT ON WHEN THEN ELSE MATERIALIZED".split()
+)
+
+
+def _lower_from_first_bodies(sql: str) -> str:
+    """Lower each ``(FROM …)`` query body with :func:`lower_from_first`
+    (which recurses into the bodies nested in it)."""
+    states = _scan_states(sql)
+    out: list[str] = []
+    last = 0
+    for m in _PAREN_FROM_RE.finditer(sql):
+        open_ = m.start()
+        if open_ < last or states[open_]:
+            continue
+        tail = sql[:open_].rsplit(None, 1)
+        word = re.search(r"\w*$", tail[-1]).group() if tail else ""
+        if word and word.upper() not in _QUERY_PAREN_WORDS:
+            continue
+        close = _find_matching_close(sql, open_, states)
+        if close == -1:
+            continue
+        out += (sql[last : open_ + 1], lower_from_first(sql[open_ + 1 : close]), ")")
+        last = close + 1
+    out.append(sql[last:])
+    return "".join(out)
+
+
 def lower_from_first(sql: str) -> str:
     """DuckDB's FROM-first sugar → a SELECT query. DuckDB admits both the
     bare form (``FROM t [WHERE …]`` ≡ ``SELECT * FROM t …``) and the
     projected form (``FROM t SELECT cols [WHERE …]`` ≡ ``SELECT cols
     FROM t …`` — the table ref is everything between FROM and the first
-    top-level SELECT; trailing clauses stay in normal order). Any other
-    query comes back stripped and otherwise unchanged."""
+    top-level SELECT; trailing clauses stay in normal order). Every
+    parenthesized query that opens with FROM (a subquery or CTE body)
+    is lowered the same way. Any other query comes back stripped and
+    otherwise unchanged."""
     sql = sql.strip()
+    if _PAREN_FROM_RE.search(sql):
+        sql = _lower_from_first_bodies(sql)
     if sql[:4].upper() != "FROM":
         return sql
     sel = _depth0_matches(sql, re.compile(r"\bSELECT\b", re.IGNORECASE))
@@ -6423,11 +6171,6 @@ def rewrite_statement(sql: str) -> RewriteResult:
     # * REPLACE (expr AS col) → * EXCEPT (col), expr AS col.
     sql = _rewrite_star_replace(sql)
 
-    # array_slice(l, a, b) inclusive-end → slice(l, a, len);
-    # 2-arg ltrim/rtrim argument order.
-    sql = _rewrite_array_slice_fn(sql)
-    sql = _rewrite_trim_two_arg(sql)
-
     # x [NOT] SIMILAR TO 'p' → anchored RLIKE.
     sql = _rewrite_similar_to(sql)
 
@@ -6445,9 +6188,6 @@ def rewrite_statement(sql: str) -> RewriteResult:
     # → WITHIN GROUP / sorted collect_list (before function renames).
     sql = _rewrite_agg_order_by(sql)
 
-    # list_aggregate(l, 'sum'|'avg'|…) → Spark array expressions.
-    sql = _rewrite_list_aggregate(sql)
-
     # FETCH FIRST n ROWS ONLY → LIMIT n
     sql = _FETCH_RE.sub(lambda m: f"LIMIT {m.group(1)}", sql)
     # DuckDB/postgres accept "OFFSET m LIMIT n" (and OFFSET before
@@ -6458,9 +6198,8 @@ def rewrite_statement(sql: str) -> RewriteResult:
     # generate_series()/range() in FROM position → explode(sequence()).
     sql = _rewrite_series_tablefuncs(sql)
 
-    # * EXCLUDE (cols) → * EXCEPT (cols); boundary-counting date_diff.
+    # * EXCLUDE (cols) → * EXCEPT (cols)
     sql = _rewrite_exclude_star(sql)
-    sql = _rewrite_date_diff(sql)
 
     # INTERVAL n QUARTER → months (Spark has no QUARTER interval unit;
     # r12 temporal fuzz find)
@@ -6472,25 +6211,20 @@ def rewrite_statement(sql: str) -> RewriteResult:
         sql,
     )
 
-    # date_add interval form; 2-arg regexp_extract; rank OVER ().
-    sql = _rewrite_misc_calls(sql)
+    # rank-family OVER () / OVER (PARTITION BY …) → ORDER BY (SELECT NULL)
+    sql = _order_rank_windows(sql)
 
     # 2-param lambdas: DuckDB's index is 1-based, Spark's 0-based.
     sql = _rewrite_lambda_index_base(sql)
 
-    # sample-stat skew/kurtosis corrections; extract(epoch|dow|isodow);
-    # 3-arg date_sub; time_bucket; 2-arg regexp_extract_all; format{};
-    # to_base.
-    sql = _rewrite_fn_compat2(sql)
+    # Every DuckDB call form in _CALL_FIXERS, in one walk.
+    sql = _rewrite_calls(sql)
 
     # ASOF [LEFT] JOIN → LATERAL top-1 subquery.
     sql, asof_pairs = _rewrite_asof_join(sql)
 
     # QUALIFY → subquery filter (at every nesting depth).
     sql = _rewrite_qualify_all(sql)
-
-    # BOXPLOT macro.
-    sql = _expand_boxplot(sql)
 
     # Function renames.
     sql = _rename_functions(sql)
@@ -6504,10 +6238,8 @@ def rewrite_statement(sql: str) -> RewriteResult:
     # ORDER BYs (first/last/any_value) are already lowered.
     sql = _default_nulls_last(sql)
 
-    # strftime %-codes inside date_format literals; regexp_replace
-    # first-only default + flag embedding (batch-22).
+    # strftime %-codes inside date_format literals.
     sql = _convert_strftime_literals(sql)
-    sql = _fix_regexp_replace_semantics(sql)
 
     # ::BIT casts → validated '0'/'1' strings (r13; after the fn
     # fixers so their textual BIT markers have dispatched).

@@ -393,7 +393,7 @@ def g_temporal_query(r: random.Random) -> str:
         if unit == "week":
             # DuckDB 1.0's pre-epoch week diff is internally
             # inconsistent (documented divergence in
-            # _rewrite_date_diff) — clamp week operands to post-epoch
+            # rewrite._fix_date_diff) — clamp week operands to post-epoch
             a = f"greatest({a}, TIMESTAMP '1970-01-05 00:00:00')"
             b = f"greatest({b}, TIMESTAMP '1970-01-05 00:00:00')"
         return f"SELECT date_diff('{unit}', {a}, {b}) AS v"
@@ -740,34 +740,34 @@ def norm(rows):
     return [tuple(c(x) for x in r) for r in rows]
 
 
-def main() -> int:
-    import duckdb
-
-    from shaper_spark.rewrite import rewrite_statement
-    from shaper_spark.session import get_spark
-
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
-    seed = int(sys.argv[2]) if len(sys.argv) > 2 else 11
+def cases(n: int, seed: int):
+    """The first ``n`` generated statements for ``seed``."""
     r = random.Random(seed)
-    spark = get_spark("dialect_fuzz", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
-    con = duckdb.connect()
-
-    mismatches = 0
-    checked = 0
-    for i in range(n):
+    for _ in range(n):
         pick = r.randrange(10)
         if pick < 2:
-            sql = g_agg_query(r)
+            yield g_agg_query(r)
         elif pick == 2:
-            sql = g_window_query(r)
+            yield g_window_query(r)
         elif pick == 3:
-            sql = g_stmt_query(r)
+            yield g_stmt_query(r)
         elif pick in (4, 5):
-            sql = g_temporal_query(r)
+            yield g_temporal_query(r)
         elif pick == 6:
-            sql = g_compose_query(r)
+            yield g_compose_query(r)
         else:
-            sql = f"SELECT {g_expr(r, r.randrange(2, 5))} AS v"
+            yield f"SELECT {g_expr(r, r.randrange(2, 5))} AS v"
+
+
+def run(spark, con, n: int, seed: int) -> tuple[int, list[str]]:
+    """Run ``cases(n, seed)`` on the DuckDB connection ``con`` and,
+    rewritten, on ``spark``. Returns (statements compared, one report
+    per mismatch); statements DuckDB rejects are skipped."""
+    from shaper_spark.rewrite import rewrite_statement
+
+    mismatches: list[str] = []
+    checked = 0
+    for i, sql in enumerate(cases(n, seed)):
         try:
             cur = con.execute(sql)
             want_cols = [c[0] for c in cur.description]
@@ -786,8 +786,10 @@ def main() -> int:
             got_cols = list(df.columns)
             got = [tuple(row) for row in df.collect()]
         except Exception as e:
-            mismatches += 1
-            print(f"[{i}] SPARK-ERR {sql}\n    duck={want!r}\n    err={str(e).splitlines()[0][:120]}")
+            mismatches.append(
+                f"[{i}] SPARK-ERR {sql}\n    duck={want!r}\n"
+                f"    err={str(e).splitlines()[0][:120]}"
+            )
             continue
         checked += 1
         # column-ORDER-insensitive like the driver's correctness gate
@@ -800,9 +802,24 @@ def main() -> int:
             want = [tuple(row[j] for j in worder) for row in want]
             got = [tuple(row[j] for j in gorder) for row in got]
         if norm(want) != norm(got):
-            mismatches += 1
-            print(f"[{i}] VALUE {sql}\n    duck={want!r}\n    spark={got!r}")
-    print(f"\n{checked} compared, {mismatches} mismatches (n={n}, seed={seed})")
+            mismatches.append(
+                f"[{i}] VALUE {sql}\n    duck={want!r}\n    spark={got!r}"
+            )
+    return checked, mismatches
+
+
+def main() -> int:
+    import duckdb
+
+    from shaper_spark.session import get_spark
+
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
+    seed = int(sys.argv[2]) if len(sys.argv) > 2 else 11
+    spark = get_spark("dialect_fuzz", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    checked, mismatches = run(spark, duckdb.connect(), n, seed)
+    for report in mismatches:
+        print(report)
+    print(f"\n{checked} compared, {len(mismatches)} mismatches (n={n}, seed={seed})")
     return 1 if mismatches else 0
 
 

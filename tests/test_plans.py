@@ -264,13 +264,22 @@ class TestVectorKernelPlanShapes:
         }
         assert small == big and small
 
-    def test_ann_recall_sweep_paths_agree(self, spark, monkeypatch):
+    @pytest.mark.parametrize("id_type", ["integer", "string"])
+    def test_ann_recall_sweep_paths_agree(self, spark, monkeypatch, id_type):
         """r14 driver-local sweep replay must equal the distributed
-        plan bit-for-bit — counts AND the 6-dp recall doubles."""
+        plan bit-for-bit — counts AND the 6-dp recall doubles — for
+        integer and string ids."""
         from shaper_spark.operators import similarity as S
 
         emb = self._emb(spark)
         queries = emb.filter("vec_id < 20")
+        if id_type == "string":
+            emb, queries = (
+                df.withColumn(
+                    "vec_id", F.concat(F.lit("v"), F.col("vec_id").cast("string"))
+                )
+                for df in (emb, queries)
+            )
         local = {
             tuple(r)
             for r in S.ann_recall_sweep(

@@ -86,6 +86,32 @@ def test_from_first_subquery_select_not_split():
     assert r.sql == "SELECT * FROM (SELECT 1 AS x) sub"
 
 
+@pytest.mark.parametrize(
+    "sql,want",
+    [
+        (
+            "WITH r AS (FROM region WHERE r_regionkey > 1) "
+            "SELECT count(*) AS n FROM r",
+            "WITH r AS (SELECT * FROM region WHERE r_regionkey > 1) "
+            "SELECT count(*) AS n FROM r",
+        ),
+        (
+            "SELECT count(*) FROM (FROM region WHERE r_regionkey > 1)",
+            "SELECT count(*) FROM (SELECT * FROM region WHERE r_regionkey > 1)",
+        ),
+        (
+            "SELECT * FROM t WHERE a IN ( FROM u SELECT b WHERE EXISTS (FROM v) )",
+            "SELECT * FROM t WHERE a IN "
+            "(SELECT b FROM u WHERE EXISTS (SELECT * FROM v))",
+        ),
+        # a call's parenthesis is not a query body
+        ("SELECT trim(FROM x) FROM t", "SELECT trim(FROM x) FROM t"),
+    ],
+)
+def test_from_first_query_bodies(sql, want):
+    assert rewrite_statement(sql).sql == want
+
+
 def test_fetch_rewrite():
     r = rewrite_statement("SELECT * FROM t ORDER BY 1 FETCH FIRST 5 ROWS ONLY")
     assert "LIMIT 5" in r.sql
@@ -1385,10 +1411,10 @@ class TestBatch16Sweep:
 
     def test_substring_zero_start_window(self):
         r = rewrite_statement("SELECT substring(s, 0, 3) FROM t")
-        assert "/*DW*/" in r.sql and "greatest(" in r.sql
+        assert "substr(s, greatest(" in r.sql
         # positive literal start untouched
         r2 = rewrite_statement("SELECT substring(s, 2, 3) FROM t")
-        assert "/*DW*/" not in r2.sql
+        assert "substr(" not in r2.sql
 
     def test_trunc_one_arg(self):
         r = rewrite_statement("SELECT trunc(x) FROM t")
@@ -1661,8 +1687,9 @@ class TestBatch22Sweep:
 
     def test_regexp_replace_first_only_default(self):
         r = rewrite_statement("SELECT regexp_replace(s, 'a', 'b') FROM t")
-        assert "regexp_instr(s, 'a')" in r.sql
-        assert "regexp_extract(s, 'a', 0)" in r.sql
+        assert "named_struct('s', s, 'p', 'a', 'r', 'b')" in r.sql
+        assert "regexp_instr(__rr.s, __rr.p)" in r.sql
+        assert "regexp_extract(__rr.s, __rr.p, 0)" in r.sql
 
     def test_regexp_replace_gflag_replaces_all(self):
         r = rewrite_statement(

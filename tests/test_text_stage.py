@@ -187,6 +187,15 @@ def test_from_first_body_is_lowered(spark, tmp_path, form, query):
     assert run(spark, q, empty, tmp_path) == 3
 
 
+def test_from_first_cte_body_renders(spark):
+    rows, cols = _render(
+        spark,
+        "WITH r AS (FROM region WHERE r_regionkey > 1) "
+        "SELECT count(*) AS n FROM r;",
+    )
+    assert cols == ["n"] and rows[0][0] == 3
+
+
 # ---------------------------------------------------------------------------
 # SUMMARIZE and top-level PIVOT export what they render
 # ---------------------------------------------------------------------------
