@@ -27,7 +27,7 @@ import re
 
 from pyspark.sql import SparkSession, functions as F
 
-from .rewrite import _split_top_level_args
+from .sqltool import _depth0_matches, _split_top_level_args
 
 __all__ = ["try_execute_dml", "alter_rename_column"]
 
@@ -41,34 +41,12 @@ _UPDATE_RE = re.compile(
 )
 
 
-def _find_top_level_word(text: str, word: str) -> int:
-    """Index of a keyword at depth zero (outside strings), or -1."""
-    depth, i = 0, 0
-    in_str: str | None = None
-    upper = text.upper()
-    wlen = len(word)
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and upper.startswith(word, i)
-            and (i == 0 or not upper[i - 1].isalnum())
-            and (
-                i + wlen >= len(text) or not upper[i + wlen].isalnum()
-            )
-        ):
-            return i
-        i += 1
-    return -1
+# clause keywords; only a letter or a digit joins a word here, so
+# ``a_WHERE`` holds WHERE
+_USING_RE, _WHERE_RE, _FROM_RE = (
+    re.compile(rf"(?<![^\W_]){w}(?![^\W_])", re.IGNORECASE)
+    for w in ("USING", "WHERE", "FROM")
+)
 
 
 def _swap_in(spark: SparkSession, table: str, df) -> None:
@@ -108,17 +86,17 @@ def try_execute_dml(
         cond = None
         using = None
         if rest:
-            ui = _find_top_level_word(rest, "USING")
-            if ui == 0:
+            um = _depth0_matches(rest, _USING_RE)
+            if um and um[0].start() == 0:
                 # DELETE FROM t USING u[, v] WHERE cond — DuckDB/
                 # Postgres join-delete: drop t rows for which ANY
                 # using-row satisfies cond (EXISTS semantics)
-                tail = rest[ui + len("USING") :]
-                wi = _find_top_level_word(tail, "WHERE")
-                if wi < 0:
+                tail = rest[um[0].end() :]
+                wm = _depth0_matches(tail, _WHERE_RE)
+                if not wm:
                     return None
-                using = tail[:wi].strip()
-                cond = tail[wi + len("WHERE") :].strip()
+                using = tail[: wm[0].start()].strip()
+                cond = tail[wm[0].end() :].strip()
                 exists = f"EXISTS (SELECT 1 FROM {using} WHERE {cond})"
                 affected = spark.sql(
                     f"SELECT count(*) FROM {table} WHERE {exists}"
@@ -128,10 +106,10 @@ def try_execute_dml(
                 )
                 _swap_in(spark, table, keep)
                 return ["Count"], [[affected]]
-            wi = _find_top_level_word(rest, "WHERE")
-            if wi != 0:
+            wm = _depth0_matches(rest, _WHERE_RE)
+            if not wm or wm[0].start() != 0:
                 return None  # unsupported shape
-            cond = rest[wi + len("WHERE") :].strip()
+            cond = rest[wm[0].end() :].strip()
         src = spark.table(table)
         if cond is None:
             affected = src.count()
@@ -147,26 +125,24 @@ def try_execute_dml(
         table, rest = m.group(1), m.group(2).strip().rstrip(";").strip()
         cond = None
         from_tables = None
-        fi = _find_top_level_word(rest, "FROM")
-        if fi >= 0:
+        fm = _depth0_matches(rest, _FROM_RE)
+        if fm:
             # UPDATE t SET c = expr FROM u WHERE cond (DuckDB/
             # Postgres join-update): rows with a match take the
             # expression evaluated against a matching u-row
             # (correlated first() — an arbitrary one when several
             # match, DuckDB leaves that undefined too); others keep
             # their value
-            tail = rest[fi + len("FROM") :]
-            wi = _find_top_level_word(tail, "WHERE")
-            if wi < 0:
+            tail = rest[fm[0].end() :]
+            wm = _depth0_matches(tail, _WHERE_RE)
+            if not wm:
                 return None
-            from_tables = tail[:wi].strip()
-            cond = tail[wi + len("WHERE") :].strip()
-            rest = rest[:fi].strip()
-        else:
-            wi = _find_top_level_word(rest, "WHERE")
-            if wi >= 0:
-                cond = rest[wi + len("WHERE") :].strip()
-                rest = rest[:wi].strip()
+            from_tables = tail[: wm[0].start()].strip()
+            cond = tail[wm[0].end() :].strip()
+            rest = rest[: fm[0].start()].strip()
+        elif wm := _depth0_matches(rest, _WHERE_RE):
+            cond = rest[wm[0].end() :].strip()
+            rest = rest[: wm[0].start()].strip()
         assignments: dict[str, str] = {}
         for part in _split_top_level_args(rest):
             eq = part.find("=")

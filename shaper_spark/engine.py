@@ -59,6 +59,16 @@ from .rewrite import (
     rewrite_statement,
 )
 from .sequences import expand_sequence_calls, try_execute_sequence_ddl
+from .sqltool import (
+    _depth0_commas,
+    _depth0_matches,
+    _find_matching_close,
+    _find_matching_open,
+    _paren_depths,
+    _scan_states,
+    _split_top_level_args,
+    _sub_in_code,
+)
 from .tablefuncs import expand_information_schema, expand_table_functions
 
 __all__ = ["query_dashboard", "GetResult", "Section", "Query", "QUERY_MAX_ROWS"]
@@ -205,8 +215,6 @@ def _expand_macros(sql: str, macros: dict[str, _Macro]) -> str:
     the same effect for scalar macros)."""
     if not macros:
         return sql
-    from .rewrite import _find_matching_close, _scan_states, _split_top_level_args
-
     for _ in range(16):  # bounded nesting
         states = _scan_states(sql)
         replaced = False
@@ -281,8 +289,6 @@ def _run_duck_pivot(spark: SparkSession, sql: str):
     # USING may list several aggregates with aliases
     # ("USING count(*) AS c, max(x) AS m" → value_c, value_m columns,
     # value-major — the same naming DuckDB's macro produces)
-    from .rewrite import _split_top_level_args
-
     agg_items = []
     for item in _split_top_level_args(using):
         am = re.match(
@@ -342,8 +348,6 @@ _POSJOIN_STOP_KW = {
 def _parse_relation_forward(sql: str, i: int, states) -> int:
     """End index (exclusive) of a relation starting at ``i``:
     ``(subquery) [AS] alias [(cols)]`` or ``ident[.ident]* [alias]``."""
-    from .rewrite import _find_matching_close
-
     n = len(sql)
     while i < n and sql[i].isspace():
         i += 1
@@ -390,8 +394,6 @@ def _expand_positional_joins(spark: SparkSession, sql: str):
     are order-DEFINED operations; the zipWithIndex pass is one extra
     traversal per side and the join shuffles on the row index — the
     honest distributed cost of an order-based join."""
-    from .rewrite import _scan_states, rewrite_statement
-
     used = False
     while True:
         states = _scan_states(sql)
@@ -412,15 +414,7 @@ def _expand_positional_joins(spark: SparkSession, sql: str):
         right = sql[m.end() : rend].strip()
         # left relation: back to the governing FROM (same paren depth),
         # then the LAST top-level comma piece before the keyword
-        depth = 0
-        depths = []
-        for i, c in enumerate(sql):
-            if states[i] == 0:
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-            depths.append(depth)
+        depths = _paren_depths(sql, states)
         from_m = None
         for fm in re.finditer(r"\bFROM\b", sql[: m.start()], re.IGNORECASE):
             if states[fm.start()] == 0 and depths[fm.start()] == depths[
@@ -430,17 +424,8 @@ def _expand_positional_joins(spark: SparkSession, sql: str):
         if from_m is None:
             return sql, used
         between = sql[from_m.end() : m.start()]
-        bstates = _scan_states(between)
-        bdepth = 0
-        last_comma = -1
-        for i, c in enumerate(between):
-            if bstates[i] == 0:
-                if c == "(":
-                    bdepth += 1
-                elif c == ")":
-                    bdepth -= 1
-                elif c == "," and bdepth == 0:
-                    last_comma = i
+        commas = _depth0_commas(between, _scan_states(between), 0, len(between))
+        last_comma = commas[-1] if commas else -1
         left = between[last_comma + 1 :].strip()
         if not left:
             return sql, used
@@ -490,8 +475,6 @@ def _expand_nested_pivots(spark: SparkSession, sql: str):
     derived table) with a temp view over the executed sugar — DuckDB
     macro-expands the same form before binding, so nesting it anywhere
     a relation can appear is legal there. Returns (sql, used)."""
-    from .rewrite import _find_matching_close, _scan_states
-
     used = False
     for _ in range(16):
         states = _scan_states(sql)
@@ -539,8 +522,6 @@ def _expand_columns_macro(spark: SparkSession, sql: str):
     ``min(c1), min(c2), …``), DuckDB's macro semantics.  Single-
     relation FROM only; lambda/EXCLUDE forms are unsupported and raise
     a named error.  Returns (sql, used)."""
-    from .rewrite import _find_matching_close, _scan_states
-
     used = False
     for _ in range(32):
         states = _scan_states(sql)
@@ -636,13 +617,6 @@ def _expand_recursive_unnest(spark: SparkSession, sql: str):
     ``recursive := false`` degrades to plain unnest;
     ``max_depth :=`` raises a named error.  Returns (sql, used)."""
     from pyspark.sql.types import ArrayType, StructType
-
-    from .rewrite import (
-        _find_matching_close,
-        _scan_states,
-        _split_top_level_args,
-        rewrite_statement,
-    )
 
     def _leaves(prefix: str, dtype: StructType, out: list) -> None:
         for f in dtype.fields:
@@ -767,6 +741,8 @@ def _expand_recursive_unnest(spark: SparkSession, sql: str):
 _UNION_BY_NAME_RE = re.compile(
     r"\bUNION\s+(ALL\s+)?BY\s+NAME\b", re.IGNORECASE
 )
+# the clauses of a BY NAME union's last side that bind to the whole union
+_UNION_TAIL_RE = re.compile(r"(ORDER\s+BY|LIMIT|OFFSET|FETCH)\b", re.IGNORECASE)
 
 
 _STAR_REPLACE_ENGINE_RE = re.compile(
@@ -780,8 +756,6 @@ def _expand_star_replace_ordered(spark: SparkSession, sql: str):
     the replacement IN PLACE — DuckDB keeps the column position, and
     the text rewriter's ``* EXCEPT`` fallback (kept for join/subquery
     sources) moves it to the end.  Returns (sql, used)."""
-    from .rewrite import _call_end, _scan_states, _split_top_level_args
-
     used = False
     for _ in range(8):
         states = _scan_states(sql)
@@ -796,8 +770,8 @@ def _expand_star_replace_ordered(spark: SparkSession, sql: str):
         if m is None:
             return sql, used
         open_paren = sql.index("(", m.start())
-        end = _call_end(sql, states, open_paren)
-        if end is None:
+        end = _find_matching_close(sql, open_paren, states)
+        if end == -1:
             return sql, used
         items = _split_top_level_args(sql[open_paren + 1 : end])
         repl: dict[str, str] = {}
@@ -845,25 +819,15 @@ def _expand_star_replace_ordered(spark: SparkSession, sql: str):
     return sql, used
 
 
+_EXCLUDE_NO_OTHERS_RE = re.compile(r"\bEXCLUDE\s+NO\s+OTHERS\b", re.IGNORECASE)
+
+
 def _reject_unsupported_duckisms(sql: str) -> str:
     """Documented-divergence guard: DuckDB forms whose semantics Spark
     cannot reproduce get a NAMED error with a workaround instead of an
     opaque ParseException.  ``EXCLUDE NO OTHERS`` is the SQL default
     and is simply dropped."""
-    from .rewrite import _scan_states
-
-    states = _scan_states(sql)
-    out = []
-    last = 0
-    for m in re.finditer(
-        r"\bEXCLUDE\s+NO\s+OTHERS\b", sql, re.IGNORECASE
-    ):
-        if states[m.start()] != 0:
-            continue
-        out.append(sql[last : m.start()])
-        last = m.end()
-    out.append(sql[last:])
-    sql = "".join(out)
+    sql = _sub_in_code(_EXCLUDE_NO_OTHERS_RE, "", sql)
     # window-frame EXCLUDE CURRENT ROW/GROUP/TIES is no longer
     # rejected here: r13 implements the sum/count/avg/min/max subset
     # via _rewrite_window_exclude (rewrite.py), which raises the named
@@ -881,8 +845,6 @@ def _expand_union_by_name(spark: SparkSession, sql: str):
     parser): the depth-0 pass first, then each remaining BY NAME
     inside its innermost enclosing paren group, expanded in place —
     the ``_rewrite_qualify_all`` recursion pattern."""
-    from .rewrite import _find_matching_close, _scan_states
-
     sql, used = _expand_union_by_name_level(spark, sql)
     for _ in range(16):  # nesting bound; each pass clears one group
         states = _scan_states(sql)
@@ -890,16 +852,9 @@ def _expand_union_by_name(spark: SparkSession, sql: str):
         for m in _UNION_BY_NAME_RE.finditer(sql):
             if states[m.start()] != 0:
                 continue
-            stack: list[int] = []
-            for i in range(m.start()):
-                if states[i] != 0:
-                    continue
-                if sql[i] == "(":
-                    stack.append(i)
-                elif sql[i] == ")" and stack:
-                    stack.pop()
-            if stack:
-                target = (m, stack[-1])
+            open_pos = _find_matching_open(sql, m.start(), states)
+            if open_pos != -1:
+                target = (m, open_pos)
                 break
         if target is None:
             return sql, used
@@ -920,8 +875,6 @@ def _cte_prefix_end(sql: str, states: list[int]) -> int | None:
     """End index of a leading ``WITH [RECURSIVE]`` CTE list — the
     position where the main query begins — or None when the prefix
     doesn't parse (r13, for BY-NAME-under-WITH side replication)."""
-    from .rewrite import _find_matching_close
-
     m = re.match(r"\s*WITH\s+(?:RECURSIVE\s+)?", sql, re.IGNORECASE)
     if m is None:
         return None
@@ -955,23 +908,7 @@ def _expand_union_by_name_level(spark: SparkSession, sql: str):
     ``CAST(NULL AS <type>) AS col`` for names it lacks (DuckDB fills
     missing with NULL).  A trailing ORDER BY / LIMIT on the last side
     binds to the whole union, as in DuckDB.  Returns (sql, used)."""
-    from .rewrite import _scan_states, rewrite_statement
-
-    states = _scan_states(sql)
-    depth = 0
-    depths = {}
-    for i, c in enumerate(sql):
-        if states[i] == 0:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-        depths[i] = depth
-    cuts = [
-        m
-        for m in _UNION_BY_NAME_RE.finditer(sql)
-        if states[m.start()] == 0 and depths[m.start()] == 0
-    ]
+    cuts = _depth0_matches(sql, _UNION_BY_NAME_RE)
     if not cuts:
         return sql, False
     cte_prefix = ""
@@ -980,7 +917,7 @@ def _expand_union_by_name_level(spark: SparkSession, sql: str):
         # BY NAME union — replicate the CTE list into EACH side so the
         # sides analyze standalone (non-recursive CTEs recompute per
         # side; semantics unchanged, the CTE is a pure subquery).
-        end = _cte_prefix_end(sql, states)
+        end = _cte_prefix_end(sql, _scan_states(sql))
         if end is None:
             raise ValueError(
                 "UNION BY NAME under an unparseable WITH prefix: "
@@ -988,22 +925,7 @@ def _expand_union_by_name_level(spark: SparkSession, sql: str):
             )
         cte_prefix = sql[:end].rstrip() + " "
         sql = sql[end:]
-        # recompute scan state for the stripped text
-        states = _scan_states(sql)
-        depth = 0
-        depths = {}
-        for i, c in enumerate(sql):
-            if states[i] == 0:
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-            depths[i] = depth
-        cuts = [
-            m
-            for m in _UNION_BY_NAME_RE.finditer(sql)
-            if states[m.start()] == 0 and depths[m.start()] == 0
-        ]
+        cuts = _depth0_matches(sql, _UNION_BY_NAME_RE)
         if not cuts:
             return cte_prefix + sql, False
     distinct = any(not m.group(1) for m in cuts)
@@ -1017,23 +939,11 @@ def _expand_union_by_name_level(spark: SparkSession, sql: str):
     # the whole-union tail rides on the last side at depth 0
     tail = ""
     last_side = sides[-1]
-    ls_states = _scan_states(last_side)
-    d2 = 0
-    for i, c in enumerate(last_side):
-        if ls_states[i] != 0:
-            continue
-        if c == "(":
-            d2 += 1
-        elif c == ")":
-            d2 -= 1
-        elif d2 == 0 and re.match(
-            r"(ORDER\s+BY|LIMIT|OFFSET|FETCH)\b",
-            last_side[i:],
-            re.IGNORECASE,
-        ):
-            tail = " " + last_side[i:].strip()
-            sides[-1] = last_side[:i]
-            break
+    tail_at = _depth0_matches(last_side, _UNION_TAIL_RE)
+    if tail_at:
+        i = tail_at[0].start()
+        tail = " " + last_side[i:].strip()
+        sides[-1] = last_side[:i]
     views = []
     cols: list[tuple[str, str]] = []  # (name, spark type) first-seen
     for k, side in enumerate(sides):

@@ -40,7 +40,8 @@ import re
 from typing import Any
 from urllib.parse import urlparse
 
-from .rewrite import _find_matching_close, _scan_states
+from .rewrite import _pull_primary_left
+from .sqltool import _depth0_commas, _find_matching_close, _scan_states
 
 __all__ = [
     "try_execute_type_ddl",
@@ -277,8 +278,6 @@ def _expand_enum_functions(sql: str, enums: dict[str, list[str]]) -> str:
 
 def _expand_enum_casts(sql: str, enums: dict[str, list[str]]) -> str:
     """``expr::name`` and ``CAST(expr AS name)`` → membership guard."""
-    from .rewrite import _expr_start
-
     suffix = _cast_suffix_re(list(enums))
     # CAST(expr AS name) first — the :: scan below would not see it.
     while True:
@@ -323,17 +322,7 @@ def _expand_enum_casts(sql: str, enums: dict[str, list[str]]) -> str:
         k = m.start() - 1
         while k >= 0 and sql[k].isspace():
             k -= 1
-        if k >= 0 and sql[k] == "'" and states[k] == 1:
-            j = k - 1
-            while j >= 0 and not (
-                states[j] == 1
-                and sql[j] == "'"
-                and (j == 0 or states[j - 1] != 1)
-            ):
-                j -= 1
-            lstart = j
-        else:
-            lstart = _expr_start(sql, states, k + 1)
+        lstart = _pull_primary_left(sql, states, k) if k >= 0 else 0
         expr = sql[lstart : m.start()].strip()
         key = m.group(2).lower()
         repl = _guard(expr, key, enums[key])
@@ -362,22 +351,10 @@ def _map_create_table(sql: str, spark, data: dict[str, Any]) -> str:
     )
     out_parts: list[str] = []
     changed = False
-    depth = 0
-    last = 0
-    parts: list[str] = []
-    dstates = _scan_states(defs)
-    for i, c in enumerate(defs):
-        if dstates[i] != 0:
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(defs[last:i])
-            last = i + 1
-    parts.append(defs[last:])
-    for p in parts:
+    commas = _depth0_commas(defs, _scan_states(defs), 0, len(defs))
+    bounds = [-1, *commas, len(defs)]
+    for a, b in zip(bounds, bounds[1:]):
+        p = defs[a + 1 : b]
         tm = typ_re.match(p)
         if tm and tm.group(3).lower() in enums:
             col = tm.group(1).strip('"').strip("`").lower()

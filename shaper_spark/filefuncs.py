@@ -41,8 +41,13 @@ import re
 
 from pyspark.sql import SparkSession
 
-from .rewrite import _split_top_level_args
-from .tablefuncs import _quoted_spans
+from .sqltool import (
+    _code_matches,
+    _find_matching_close,
+    _scan_states,
+    _split_top_level_args,
+    _sub_in_code,
+)
 
 __all__ = ["expand_file_functions"]
 
@@ -129,32 +134,6 @@ def _spark_type(duck_type: str) -> str:
     return _TYPE_MAP.get(duck_type.strip().lower(), duck_type)
 
 
-def _find_close(sql: str, open_pos: int) -> int:
-    """Index of the ')' closing the '(' at open_pos (quote-aware)."""
-    depth = 0
-    i, n = open_pos, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and not (
-                    j + 1 < n and sql[j + 1] == "'"
-                ):
-                    break
-                j += 2 if sql[j] == "'" else 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise FileFunctionError("unbalanced parentheses in file function call")
-
-
 def _unquote(lit: str) -> str:
     lit = lit.strip()
     if not (lit.startswith("'") and lit.endswith("'")):
@@ -233,27 +212,19 @@ def expand_file_functions(spark: SparkSession, sql: str) -> tuple[str, bool]:
     ``used`` ⇒ bypass the analyzed-plan cache."""
     used = False
     # repeat until no calls remain (quoted spans shift after each edit)
-    while True:
-        spans = _quoted_spans(sql)
-        m = next(
-            (
-                m
-                for m in _CALL_RE.finditer(sql)
-                if not any(a <= m.start() < b for a, b in spans)
-            ),
-            None,
-        )
-        if m is None:
-            break
-        close = _find_close(sql, m.end() - 1)
+    while calls := _code_matches(sql, _CALL_RE):
+        m = calls[0]
+        close = _find_matching_close(sql, m.end() - 1, _scan_states(sql))
+        if close == -1:
+            raise FileFunctionError(
+                "unbalanced parentheses in file function call"
+            )
         fn = m.group(1).lower()
         paths, opts = _parse_call(fn, sql[m.end() : close])
         name = _materialize(spark, _FMT[fn], paths, opts)
         sql = sql[: m.start()] + name + sql[close + 1 :]
         used = True
-    # FROM 'file.ext' sugar — plain regex is safe here: the quoted path
-    # IS the match, and a path inside a longer string literal cannot be
-    # directly preceded by FROM/JOIN outside that literal.
+    # FROM 'file.ext' sugar
     def _sub(m: re.Match) -> str:
         nonlocal used
         path = m.group(2)
@@ -262,5 +233,5 @@ def expand_file_functions(spark: SparkSession, sql: str) -> tuple[str, bool]:
         used = True
         return f"{m.group(1)} {name}"
 
-    sql = _FROM_FILE_RE.sub(_sub, sql)
+    sql = _sub_in_code(_FROM_FILE_RE, _sub, sql)
     return sql, used

@@ -489,74 +489,6 @@ def _plan_is_nondeterministic(df: DataFrame) -> bool:
     return bool(_NONDET_RE.search(tree))
 
 
-def global_rank(
-    df: DataFrame,
-    order_cols: list,
-    rank_name: str = "rank",
-    rank_partitions: int | None = None,
-) -> DataFrame:
-    """Exact dense 1-based global rank by ``order_cols`` WITHOUT a
-    partitionless window — the same textbook construction as
-    curriculum_phases (range-partition sort shuffle → local row index
-    → broadcast cumulative offsets), factored out for
-    any operator that needs a total order at corpus scale (e.g. the
-    vocabulary coverage curve ranks token counts).  Nothing is
-    materialized on the driver — the offsets ride a one-plan
-    broadcast aggregate (the range exchange is AQE-reused, never
-    recomputed).
-
-    ``order_cols``: list of Column expressions (with asc/desc already
-    applied) defining the total order; make it a TOTAL order (include a
-    tiebreaker) or equal rows receive an arbitrary but deterministic
-    relative rank.  Deterministic input lineage is required only as
-    the reuse-failure fallback (see curriculum_phases' determinism
-    note); aggregated/grouped inputs — the common case — qualify."""
-    spark = df.sparkSession
-    nparts = rank_partitions or max(
-        2, spark.sparkContext.defaultParallelism
-    )
-    ranged = df.repartitionByRange(nparts, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    # one-plan offsets (r13, same construction as curriculum_phases):
-    # the cumulative offset is a triangular conditional sum over a
-    # broadcast cross join of the ≤nparts-row counts frame with
-    # itself, so the range exchange materializes once (AQE reuse) and
-    # the old collect()'s second job — which re-ran the entire
-    # upstream lineage — is gone; no SinglePartition node anywhere
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c"))
-    cb = counts.select(
-        F.col("__pid").alias("__pid_b"), F.col("__c").alias("__c_b")
-    )
-    offs = (
-        counts.crossJoin(F.broadcast(cb))
-        .groupBy("__pid")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("__pid_b") < F.col("__pid"), F.col("__c_b")
-                ).otherwise(F.lit(0))
-            ).alias("__off")
-        )
-    )
-    # local row number via monotonically_increasing_id's lower 33 bits
-    # above a sortWithinPartitions — no window, so no corpus-scale
-    # hash(__pid) exchange (the data is already partitioned by __pid
-    # by construction; see curriculum_phases for the full rationale)
-    loc = F.monotonically_increasing_id().bitwiseAND(
-        F.lit((1 << 33) - 1)
-    )
-    return (
-        ranged.sortWithinPartitions(*order_cols)
-        .withColumn("__loc", loc)
-        .join(F.broadcast(offs), "__pid")
-        .withColumn(
-            rank_name, F.col("__loc") + F.col("__off") + F.lit(1)
-        )
-        .drop("__pid", "__off", "__loc")
-    )
-
-
 def uniform_sample_exact(
     df: DataFrame, id_col: str, k: int, seed: str = "usample"
 ) -> DataFrame:

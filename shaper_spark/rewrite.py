@@ -43,7 +43,20 @@ from dataclasses import dataclass, field
 from typing import Callable, NamedTuple
 
 from .custom_types import CUSTOM_TYPE_NAMES
-from .sqltool import SqlSplitError, escape_sql_string, split_with_statement
+from .sqltool import (
+    SqlSplitError,
+    _depth0_commas,
+    _depth0_matches,
+    _find_matching_close,
+    _find_matching_open,
+    _scan_states,
+    _span_end,
+    _span_start,
+    _split_top_level_args,
+    _sub_in_code,
+    escape_sql_string,
+    split_with_statement,
+)
 
 __all__ = [
     "lower_from_first", "rewrite_statement", "RewriteResult", "substitute_variables"
@@ -62,57 +75,6 @@ class RewriteResult:
     # quadratic-plan guard probes their cardinalities before executing
     # (see engine._asof_quadratic_guard and operators/asof.py).
     asof_joins: list[tuple[str, str]] = field(default_factory=list)
-
-
-# ---------------------------------------------------------------------------
-# Quote-aware scanning helpers
-# ---------------------------------------------------------------------------
-
-# A quoted span: a string literal, a double-quoted or a backquoted
-# identifier. A doubled quote char inside is an escaped one; an
-# unterminated span runs to the end of the text.
-_QUOTED_SPAN_RE = re.compile(
-    r"'(?:[^']|'')*'?|\"(?:[^\"]|\"\")*\"?|`(?:[^`]|``)*`?"
-)
-_QUOTE_STATE = {"'": 1, '"': 2, "`": 3}
-
-
-def _scan_states(sql: str) -> list[int]:
-    """Per-character state: 0 = code, 1 = in single quote, 2 = in
-    double quote, 3 = in backquotes (the quote chars included)."""
-    states = [0] * len(sql)
-    for m in _QUOTED_SPAN_RE.finditer(sql):
-        start, end = m.span()
-        states[start:end] = [_QUOTE_STATE[sql[start]]] * (end - start)
-    return states
-
-
-def _find_matching_open(sql: str, close_pos: int, states: list[int]) -> int:
-    depth = 0
-    for i in range(close_pos, -1, -1):
-        if states[i] != 0:
-            continue
-        if sql[i] == ")":
-            depth += 1
-        elif sql[i] == "(":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
-def _find_matching_close(sql: str, open_pos: int, states: list[int]) -> int:
-    depth = 0
-    for i in range(open_pos, len(sql)):
-        if states[i] != 0:
-            continue
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
 
 
 _IDENT_CHARS = re.compile(r"[A-Za-z0-9_$]")
@@ -478,11 +440,34 @@ def _convert_strftime_literals(sql: str) -> str:
         pos = m.start() + len(name) + 1
 
 
+# the tokens of a DuckDB (RE2) replacement string that Java spells
+# differently: a \N group reference, an escaped backslash, a plain '$'
+_RE2_REWRITE_TOKEN_RE = re.compile(r"\\(\d)|\\\\|\$")
+
+
+def _java_replacement(r: str) -> str:
+    """DuckDB's replacement literal ``r`` in Java's replacement syntax:
+    ``\\N`` → ``$N``, a literal ``$`` → ``\\$``, ``\\\\`` stays. Any
+    other argument is returned as it is."""
+    if r[:1] != "'" or _span_end(_scan_states(r), 0) != len(r):
+        return r
+    return _RE2_REWRITE_TOKEN_RE.sub(
+        lambda m: "$" + m.group(1) if m.group(1)
+        else "\\$" if m.group() == "$" else m.group(),
+        r,
+    )
+
+
 def _fix_regexp_replace(args: list[str]) -> str | None:
     """DuckDB ``regexp_replace`` replaces only the FIRST match unless the
     ``'g'`` flag is given; Spark always replaces all (batch-22 — silent
     wrong answers for plain 3-arg calls).
 
+    * The replacement is DuckDB's (RE2) syntax, ``\\1`` for a group;
+      Java's is ``$1``, and a bare ``$`` is an error there. A literal
+      replacement is translated (:func:`_java_replacement`); any other
+      replacement expression is passed on as it is, so its ``\\N``
+      references and ``$`` signs keep Java's meaning.
     * 4-arg with a flags literal containing ``g`` → plain Spark
       ``regexp_replace`` (all matches); an ``i`` flag becomes a ``(?i)``
       prefix on the pattern (``c`` = case-sensitive default is dropped).
@@ -490,11 +475,14 @@ def _fix_regexp_replace(args: list[str]) -> str | None:
       replace inside the prefix of ``s`` ending at the first match's end
       (which contains exactly one match), concat the untouched tail.
       Backreferences in the replacement survive because the real
-      ``regexp_replace`` still performs the substitution. The splice
-      reads ``s`` and the pattern several times, so all three arguments
-      are bound once, as the fields of a one-element array's struct
-      that a lambda reads: the output is linear in the argument texts,
-      and nested non-g calls grow the statement linearly too.
+      ``regexp_replace`` still performs the substitution. After a
+      non-empty match Java would also replace an empty match at the
+      prefix's end (``'aaa'``, ``'a*'``); ``(?!\\z)`` keeps a match from
+      starting there. The splice reads ``s`` and the pattern several
+      times, so all three arguments are bound once, as the fields of a
+      one-element array's struct that a lambda reads: the output is
+      linear in the argument texts, and nested non-g calls grow the
+      statement linearly too.
     * Unknown flag letters or a non-literal flags argument: left
       untouched (Spark's 4th arg is a position integer — a loud type
       error, not a silent divergence)."""
@@ -512,17 +500,20 @@ def _fix_regexp_replace(args: list[str]) -> str | None:
     else:
         return None
     s, p, r = (a.strip() for a in args[:3])
+    r = _java_replacement(r)
     if "i" in flags:
         p = f"concat('(?i)', {p})"
     if "g" in flags:
         return f"regexp_replace({s}, {p}, {r})"
     first = "regexp_instr(__rr.s, __rr.p)"
-    end = f"({first} + length(regexp_extract(__rr.s, __rr.p, 0)))"
+    n = "length(regexp_extract(__rr.s, __rr.p, 0))"
+    end = f"({first} + {n})"
+    once = f"IF({n} > 0, concat('(?!\\z)(?:', __rr.p, ')'), __rr.p)"
     return (
         f"element_at(transform(array(named_struct('s', {s}, 'p', {p}, "
         f"'r', {r})), __rr -> CASE WHEN {first} = 0 THEN __rr.s "
         f"ELSE concat(regexp_replace(substr(__rr.s, 1, {end} - 1), "
-        f"__rr.p, __rr.r), substr(__rr.s, {end})) END), 1)"
+        f"{once}, __rr.r), substr(__rr.s, {end})) END), 1)"
     )
 
 
@@ -775,17 +766,7 @@ def _round_int_casts(sql: str) -> str:
                 k -= 1
             if k < 0:
                 continue
-            if sql[k] == "'" and states[k] == 1:
-                j = k - 1
-                while j >= 0 and not (
-                    states[j] == 1
-                    and sql[j] == "'"
-                    and (j == 0 or states[j - 1] != 1)
-                ):
-                    j -= 1
-                lstart = j
-            else:
-                lstart = _expr_start(sql, states, k + 1)
+            lstart = _pull_primary_left(sql, states, k)
             operand = sql[lstart : m.start()].strip()
             if (
                 not operand
@@ -946,16 +927,11 @@ def _normalize_loose_date_literals(sql: str) -> str:
 
 
 def _rename_types(sql: str) -> str:
-    states = _scan_states(sql)
-
-    def repl(m: re.Match[str]) -> str:
-        if states[m.start()] != 0:
-            return m.group(0)
-        return m.group(1) + _TYPE_RENAMES[m.group(2).upper()] + (
-            m.group(3) if m.lastindex and m.lastindex >= 3 else ""
-        )
-
-    sql = _COLONCOLON_TYPE_RE.sub(repl, sql)
+    sql = _sub_in_code(
+        _COLONCOLON_TYPE_RE,
+        lambda m: m.group(1) + _TYPE_RENAMES[m.group(2).upper()],
+        sql,
+    )
 
     # CAST(expr AS TYPE) / TRY_CAST: rename only within the cast's span.
     out = []
@@ -990,8 +966,7 @@ def _rename_types(sql: str) -> str:
     sql = "".join(out)
 
     # DuckDB array-type suffix: ::STRING[] → ::ARRAY<STRING>
-    sql = _ARRAY_SUFFIX_RE.sub(lambda m: f"{m.group(1)}ARRAY<{m.group(2)}>", sql)
-    return sql
+    return _sub_in_code(_ARRAY_SUFFIX_RE, r"\1ARRAY<\2>", sql)
 
 # Keywords after which a '[' must be a list literal, not array indexing.
 _PRE_LITERAL_KEYWORDS = frozenset(
@@ -1210,16 +1185,8 @@ def _rewrite_asof_join(sql: str) -> tuple[str, list[tuple[str, str]]]:
         r_name = ralias or right_tbl.split(".")[-1].strip('`"')
         # the ON expression runs to the next top-level clause keyword
         rest = sql[m.end() :]
-        rest_states = _scan_states(rest)
-        end = len(rest)
-        depth = 0
-        for t in _ASOF_TAIL_RE.finditer(rest):
-            if rest_states[t.start()] != 0:
-                continue
-            if rest[: t.start()].count("(") - rest[: t.start()].count(")"):
-                continue
-            end = t.start()
-            break
+        tails = _depth0_matches(rest, _ASOF_TAIL_RE)
+        end = tails[0].start() if tails else len(rest)
         cond = rest[:end].strip()
         conjuncts = re.split(r"\bAND\b", cond, flags=re.IGNORECASE)
         ineq_idx = None
@@ -1296,17 +1263,8 @@ def _expr_start(sql: str, states: list[int], bracket: int) -> int:
                         break
                 i -= 1
             continue
-        if states[i] == 2 and c == '"':
-            i -= 1
-            while i >= 0 and not (states[i] == 2 and sql[i] == '"'):
-                i -= 1
-            i -= 1
-            continue
-        if c == "`":
-            i -= 1
-            while i >= 0 and sql[i] != "`":
-                i -= 1
-            i -= 1
+        if states[i] > 1:  # a quoted identifier
+            i = _span_start(states, i) - 1
             continue
         if _IDENT_CHARS.match(c) or c == ".":
             i -= 1
@@ -1360,7 +1318,8 @@ def _rewrite_subscripts(sql: str) -> str:
                 continue
             if (
                 base.strip("`\"").upper() in _SQL_KEYWORD_TAIL
-                and base[-1] not in ")]`\""
+                and not states[i - 1]
+                and base[-1] not in ")]"
             ):
                 continue
             # find the matching ']' and any top-level ':'s
@@ -1446,21 +1405,6 @@ _INT_LIT_RE = re.compile(r"^-?\d+$")
 _MAP_CALL_RE = re.compile(r"(?<![\w.])map\s*\(", re.IGNORECASE)
 
 
-def _call_end(sql: str, states: list[int], open_paren: int) -> int | None:
-    """Index of the ')' matching ``sql[open_paren]`` ('('), or None."""
-    depth = 0
-    for j in range(open_paren, len(sql)):
-        if states[j] != 0:
-            continue
-        if sql[j] in "([":
-            depth += 1
-        elif sql[j] in ")]":
-            depth -= 1
-            if depth == 0:
-                return j
-    return None
-
-
 def _rewrite_map_two_arrays(sql: str) -> str:
     """DuckDB's two-array ``map([k…], [v…])`` → Spark
     ``map_from_arrays`` (Spark's ``map()`` is variadic key/value
@@ -1478,8 +1422,8 @@ def _rewrite_map_two_arrays(sql: str) -> str:
             pos = m.end()
             continue
         open_paren = out.index("(", m.start())
-        end = _call_end(out, states, open_paren)
-        if end is None:
+        end = _find_matching_close(out, open_paren, states)
+        if end == -1:
             return out
         args = _split_top_level_args(out[open_paren + 1 : end])
         if len(args) == 2 and all(a.lower().startswith("array(") for a in args):
@@ -1544,24 +1488,14 @@ def _rewrite_agg_order_by(sql: str) -> str:
             if states[m.start()] != 0:
                 continue
             open_paren = sql.index("(", m.start())
-            end = _call_end(sql, states, open_paren)
-            if end is None:
+            end = _find_matching_close(sql, open_paren, states)
+            if end == -1:
                 continue
             inner = sql[open_paren + 1 : end]
-            om = None
-            inner_states = _scan_states(inner)
-            depth = 0
-            for t in _ORDER_BY_TAIL_RE.finditer(inner):
-                if inner_states[t.start()] != 0:
-                    continue
-                if inner[: t.start()].count("(") - inner[: t.start()].count(
-                    ")"
-                ):
-                    continue
-                om = t
-                break
-            if om is None:
+            tails = _depth0_matches(inner, _ORDER_BY_TAIL_RE)
+            if not tails:
                 continue
+            om = tails[0]
             hit = (m, open_paren, end, inner, om)
             break
         if hit is None:
@@ -1788,44 +1722,27 @@ def _expr_end_fwd(sql: str, states: list[int], start: int) -> int:
     if i >= n:
         return i
     c = sql[i]
-    if c == "'":
-        i += 1
-        while i < n and not (states[i] == 1 and sql[i] == "'" and (i + 1 >= n or sql[i + 1] != "'")):
-            i += 1
-        return min(i + 1, n)
+    if states[i] == 1:
+        return _span_end(states, i)
     if c in "([":
-        depth = 0
-        while i < n:
-            if states[i] == 0:
-                if sql[i] in "([":
-                    depth += 1
-                elif sql[i] in ")]":
-                    depth -= 1
-                    if depth == 0:
-                        return i + 1
-            i += 1
-        return i
+        close = _find_matching_close(sql, i, states)
+        return n if close == -1 else close + 1
     if c.isdigit():
         while i < n and (sql[i].isdigit() or sql[i] in ".eE"):
             i += 1
         return i
-    if _IDENT_CHARS.match(c) or c == "`":
-        while i < n and (_IDENT_CHARS.match(sql[i]) or sql[i] in ".`"):
+    if _IDENT_CHARS.match(c) or states[i] == 3:
+        while i < n and (
+            states[i] == 3 or _IDENT_CHARS.match(sql[i]) or sql[i] == "."
+        ):
             i += 1
         j = i
         while j < n and sql[j].isspace():
             j += 1
         if j < n and sql[j] == "(":
-            depth = 0
-            while j < n:
-                if states[j] == 0:
-                    if sql[j] in "([":
-                        depth += 1
-                    elif sql[j] in ")]":
-                        depth -= 1
-                        if depth == 0:
-                            return j + 1
-                j += 1
+            close = _find_matching_close(sql, j, states)
+            if close != -1:
+                return close + 1
         return i
     return start
 
@@ -1897,33 +1814,21 @@ def _rewrite_binary_op(
                 k -= 1
             if k < 0:
                 continue
-            if sql[k] == "'" and states[k] == 1:
-                j = k - 1
-                while j >= 0 and not (
-                    states[j] == 1
-                    and sql[j] == "'"
-                    and (j == 0 or states[j - 1] != 1)
-                ):
-                    j -= 1
-                lstart = j
-            else:
-                lstart = _expr_start(sql, states, k + 1)
-                # 'INTERVAL 3 HOUR / 2': the primary scan stops at the
-                # unit keyword — absorb the whole interval literal
-                # (batch-24)
-                if _INTERVAL_UNIT_WORD_RE.fullmatch(
-                    sql[lstart : k + 1].strip()
-                ):
-                    p = lstart - 1
-                    while p >= 0 and sql[p].isspace():
-                        p -= 1
-                    if p >= 0:
-                        qs = _expr_start(sql, states, p + 1)
-                        r = qs - 1
-                        while r >= 0 and sql[r].isspace():
-                            r -= 1
-                        if r >= 7 and sql[r - 7 : r + 1].upper() == "INTERVAL":
-                            lstart = r - 7
+            lstart = _pull_primary_left(sql, states, k)
+            # 'INTERVAL 3 HOUR / 2': the primary scan stops at the
+            # unit keyword — absorb the whole interval literal
+            # (batch-24)
+            if _INTERVAL_UNIT_WORD_RE.fullmatch(sql[lstart : k + 1].strip()):
+                p = lstart - 1
+                while p >= 0 and sql[p].isspace():
+                    p -= 1
+                if p >= 0:
+                    qs = _expr_start(sql, states, p + 1)
+                    r = qs - 1
+                    while r >= 0 and sql[r].isspace():
+                        r -= 1
+                    if r >= 7 and sql[r - 7 : r + 1].upper() == "INTERVAL":
+                        lstart = r - 7
             if extend_mult_chain:
                 while True:
                     p = lstart - 1
@@ -1936,7 +1841,7 @@ def _rewrite_binary_op(
                         while q >= 0 and sql[q].isspace():
                             q -= 1
                         if q < 0 or not (
-                            sql[q].isalnum() or sql[q] in ")]'`_\""
+                            states[q] or sql[q].isalnum() or sql[q] in ")]_"
                         ):
                             lstart = p
                             continue
@@ -1955,23 +1860,12 @@ def _rewrite_binary_op(
                         q -= 1
                     if q < 0:
                         break
-                    if sql[q] == "'" and states[q] == 1:
-                        j = q - 1
-                        while j >= 0 and not (
-                            states[j] == 1
-                            and sql[j] == "'"
-                            and (j == 0 or states[j - 1] != 1)
-                        ):
-                            j -= 1
-                        new_start = j
-                    elif sql[q].isalnum() or sql[q] in ")]`_\"":
-                        new_start = _expr_start(sql, states, q + 1)
-                        tok = sql[new_start : q + 1].strip().upper()
-                        if tok in _SQL_KEYWORD_TAIL:
-                            # 'SELECT *' etc. — that '*' is a star,
-                            # not multiplication
-                            break
-                    else:
+                    if not (states[q] or sql[q].isalnum() or sql[q] in ")]_"):
+                        break
+                    new_start = _pull_primary_left(sql, states, q)
+                    if sql[new_start : q + 1].strip().upper() in _SQL_KEYWORD_TAIL:
+                        # 'SELECT *' etc. — that '*' is a star, not
+                        # multiplication
                         break
                     if new_start > q:
                         break
@@ -2084,15 +1978,8 @@ def _pull_primary_left(sql: str, states: list[int], endpos: int) -> int:
     """Start index of the primary expression whose last character is at
     ``endpos`` — like :func:`_expr_start` but also walks a single-quoted
     string literal (``'a' || x = ANY (…)`` pulls in ``'a'``)."""
-    if sql[endpos] == "'" and states[endpos] == 1:
-        j = endpos - 1
-        while j >= 0 and not (
-            states[j] == 1
-            and sql[j] == "'"
-            and (j == 0 or states[j - 1] != 1)
-        ):
-            j -= 1
-        return j
+    if states[endpos] == 1:
+        return _span_start(states, endpos)
     return _expr_start(sql, states, endpos + 1)
 
 
@@ -2377,7 +2264,7 @@ def _rewrite_postfix_factorial(sql: str) -> str:
                 k -= 1
             if k < 0 or states[k] != 0:
                 continue
-            if not (sql[k].isalnum() or sql[k] in ")]_`\""):
+            if not (sql[k].isalnum() or sql[k] in ")]_"):
                 continue
             start = _pull_primary_left(sql, states, k)
             if start > k:
@@ -2568,8 +2455,8 @@ def _rewrite_distinct_on(sql: str) -> str:
         if m is None:
             return sql
         open_paren = sql.index("(", m.start())
-        end = _call_end(sql, states, open_paren)
-        if end is None:
+        end = _find_matching_close(sql, open_paren, states)
+        if end == -1:
             return sql
         keys = sql[open_paren + 1 : end]
         # find this SELECT's ORDER BY at the same depth (may be absent)
@@ -2681,8 +2568,8 @@ def _rewrite_star_replace(sql: str) -> str:
         if m is None:
             return sql
         open_paren = sql.index("(", m.start() + 1)
-        end = _call_end(sql, states, open_paren)
-        if end is None:
+        end = _find_matching_close(sql, open_paren, states)
+        if end == -1:
             return sql
         items = _split_top_level_args(sql[open_paren + 1 : end])
         if not items:
@@ -2817,35 +2704,14 @@ _WINDOW_NO_OTHERS_RE = re.compile(
 )
 
 
-def _top_level_depths(s: str, states: list[int]) -> list[int]:
-    """Paren/bracket depth BEFORE each char (string/comment chars keep
-    the surrounding depth) — for finding top-level keywords inside an
-    already-extracted paren group."""
-    out = []
-    d = 0
-    for i, c in enumerate(s):
-        out.append(d)
-        if states[i] == 0:
-            if c in "([":
-                d += 1
-            elif c in ")]":
-                d -= 1
-    return out
-
-
 def _parse_over_spec(spec: str):
     """Split a window spec (the inside of ``OVER (...)``) into
     (partition_text, order_text, frame_mode, frame_text) — any part
     may be None.  Keyword scan is top-level only, so function calls in
     the partition/order expressions don't confuse it."""
-    states = _scan_states(spec)
-    depths = _top_level_depths(spec, states)
-
     def find(pat):
-        for m in re.finditer(pat, spec, re.IGNORECASE):
-            if states[m.start()] == 0 and depths[m.start()] == 0:
-                return m
-        return None
+        found = _depth0_matches(spec, re.compile(pat, re.IGNORECASE))
+        return found[0] if found else None
 
     pm = find(r"\bPARTITION\s+BY\b")
     om = find(r"\bORDER\s+BY\b")
@@ -3431,18 +3297,13 @@ def _order_rank_windows(sql: str) -> str:
     ranking windows, Spark requires an ORDER BY (aggregates over
     ``OVER ()`` are legal Spark and are left alone: adding an ORDER BY
     would shrink their frame)."""
-    states = _scan_states(sql)
-    sql = _RANK_OVER_EMPTY_RE.sub(
-        lambda m: m.group(0)
-        if states[m.start()] != 0
-        else f"{m.group(1)}{m.group(2)}ORDER BY (SELECT NULL){m.group(3)}",
-        sql,
+    sql = _sub_in_code(
+        _RANK_OVER_EMPTY_RE, r"\1\2ORDER BY (SELECT NULL)\3", sql
     )
-    states = _scan_states(sql)
-    return _RANK_OVER_PARTITION_RE.sub(
+    return _sub_in_code(
+        _RANK_OVER_PARTITION_RE,
         lambda m: m.group(0)
-        if states[m.start()] != 0
-        or re.search(
+        if re.search(
             r"\b(ORDER|ROWS|RANGE|GROUPS)\b", m.group(2), re.IGNORECASE
         )
         else f"{m.group(1)}{m.group(2)} ORDER BY (SELECT NULL){m.group(3)}",
@@ -5379,13 +5240,7 @@ _DATE_PARTS = {
 def _rewrite_exclude_star(sql: str) -> str:
     """DuckDB's ``SELECT * EXCLUDE (cols)`` → Spark's ``* EXCEPT``
     (same semantics, different keyword)."""
-    states = _scan_states(sql)
-    return _EXCLUDE_RE.sub(
-        lambda m: m.group(0)
-        if states[m.start()] != 0
-        else f"{m.group(1)}EXCEPT{m.group(2)}",
-        sql,
-    )
+    return _sub_in_code(_EXCLUDE_RE, r"\1EXCEPT\2", sql)
 
 
 _DATE_DIFF_EPOCH_US = {
@@ -5496,34 +5351,6 @@ def _rewrite_series_tablefuncs(sql: str) -> str:
             + f"{m.group(1)} {repl}"
             + sql[close + 1 :]
         )
-
-
-def _depth0_commas(sql: str, states: list[int], lo: int, hi: int) -> list[int]:
-    """Positions of the commas in ``sql[lo:hi]`` outside quotes and
-    outside any bracket opened in that range."""
-    commas: list[int] = []
-    depth = 0
-    for i in range(lo, hi):
-        if states[i] != 0:
-            continue
-        c = sql[i]
-        if c in "([{":
-            # '{' counts too: DuckDB struct/map literals carry commas
-            # at brace depth (r11 — unnest({'a':1,...}, recursive)
-            # used to split mid-struct)
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif c == "," and depth == 0:
-            commas.append(i)
-    return commas
-
-
-def _split_top_level_args(arglist: str) -> list[str]:
-    states = _scan_states(arglist)
-    bounds = [-1, *_depth0_commas(arglist, states, 0, len(arglist)), len(arglist)]
-    args = (arglist[a + 1 : b].strip() for a, b in zip(bounds, bounds[1:]))
-    return [a for a in args if a]
 
 
 def _fix_boxplot(args: list[str]) -> str | None:
@@ -5810,25 +5637,6 @@ _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
 _TAIL_RE = re.compile(r"\b(ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
 
 
-def _depth0_matches(sql: str, pattern: re.Pattern[str]) -> list[re.Match[str]]:
-    states = _scan_states(sql)
-    depth = 0
-    out = []
-    starts: dict[int, int] = {}
-    for i, c in enumerate(sql):
-        if states[i] != 0:
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        starts[i] = depth
-    for m in pattern.finditer(sql):
-        if states[m.start()] == 0 and starts.get(m.start(), 0) == 0:
-            out.append(m)
-    return out
-
-
 def _rewrite_qualify_all(sql: str) -> str:
     """Apply the QUALIFY rewrite at EVERY nesting depth: the outermost
     query first (the pre-r10 behavior), then each remaining QUALIFY
@@ -6077,11 +5885,13 @@ def rewrite_statement(sql: str) -> RewriteResult:
         indexed_tags.append((idx, name))
 
     # count() → count(*)
-    sql = _COUNT_EMPTY_RE.sub("count(*)", sql)
+    sql = _sub_in_code(_COUNT_EMPTY_RE, "count(*)", sql)
 
     # query_table('t') → `t`
-    sql = _QUERY_TABLE_RE.sub(
-        lambda m: "`" + "`.`".join(m.group(1).split(".")) + "`", sql
+    sql = _sub_in_code(
+        _QUERY_TABLE_RE,
+        lambda m: "`" + "`.`".join(m.group(1).split(".")) + "`",
+        sql,
     )
 
     # [expr FOR x IN l [IF cond]] comprehensions → transform/filter.
@@ -6099,7 +5909,8 @@ def rewrite_statement(sql: str) -> RewriteResult:
     # suffix ("::FLOAT[2]") as an element access on the type name.
     # The element type renames here too (VARCHAR→STRING, …): the later
     # ::TYPE pass does not look inside ARRAY<>.
-    sql = _ARRAY_SUFFIX_RE.sub(
+    sql = _sub_in_code(
+        _ARRAY_SUFFIX_RE,
         lambda m: (
             f"{m.group(1)}ARRAY<"
             f"{_TYPE_RENAMES.get(m.group(2).upper(), m.group(2))}>"
@@ -6127,11 +5938,7 @@ def rewrite_statement(sql: str) -> RewriteResult:
     # ANY/ALL/SOME quantified comparisons → IN / scalar agg subqueries
     # (batch-24); LIMIT NULL = no limit in DuckDB.
     sql = _rewrite_quantified_comparisons(sql)
-    states_ln = _scan_states(sql)
-    sql = _LIMIT_NULL_RE.sub(
-        lambda m: m.group(0) if states_ln[m.start()] != 0 else "",
-        sql,
-    )
+    sql = _sub_in_code(_LIMIT_NULL_RE, "", sql)
 
     # DuckDB operator spellings: ^/** power, / % // try-variants,
     # ~ / !~ regex match, -> / ->> JSON extraction.
@@ -6146,15 +5953,9 @@ def rewrite_statement(sql: str) -> RewriteResult:
                 "count; use USING SAMPLE n% / TABLESAMPLE (n PERCENT) "
                 "or an explicit LIMIT"
             )
-    sql = _GROUP_BY_EMPTY_RE.sub(
-        lambda m: m.group(0) if states[m.start()] != 0 else " ", sql
-    )
-    states = _scan_states(sql)
-    sql = _BOOLEAN_LITERAL_RE.sub(
-        lambda m: m.group(0)
-        if states[m.start()] != 0
-        else f"CAST('{m.group(1)}' AS BOOLEAN)",
-        sql,
+    sql = _sub_in_code(_GROUP_BY_EMPTY_RE, " ", sql)
+    sql = _sub_in_code(
+        _BOOLEAN_LITERAL_RE, lambda m: f"CAST('{m.group(1)}' AS BOOLEAN)", sql
     )
     sql = _rewrite_date_minus(sql)
     sql = _rewrite_collate_names(sql)
@@ -6189,11 +5990,11 @@ def rewrite_statement(sql: str) -> RewriteResult:
     sql = _rewrite_agg_order_by(sql)
 
     # FETCH FIRST n ROWS ONLY → LIMIT n
-    sql = _FETCH_RE.sub(lambda m: f"LIMIT {m.group(1)}", sql)
+    sql = _sub_in_code(_FETCH_RE, r"LIMIT \1", sql)
     # DuckDB/postgres accept "OFFSET m LIMIT n" (and OFFSET before
     # FETCH, which the rewrite above turns into this); Spark's grammar
     # only parses "LIMIT n OFFSET m" — swap the clause order.
-    sql = _OFFSET_LIMIT_RE.sub(lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}", sql)
+    sql = _sub_in_code(_OFFSET_LIMIT_RE, r"LIMIT \2 OFFSET \1", sql)
 
     # generate_series()/range() in FROM position → explode(sequence()).
     sql = _rewrite_series_tablefuncs(sql)
@@ -6203,11 +6004,9 @@ def rewrite_statement(sql: str) -> RewriteResult:
 
     # INTERVAL n QUARTER → months (Spark has no QUARTER interval unit;
     # r12 temporal fuzz find)
-    states_q = _scan_states(sql)
-    sql = _INTERVAL_QUARTER_RE.sub(
-        lambda m: m.group(0)
-        if states_q[m.start()] != 0
-        else f"INTERVAL {3 * int(m.group(1))} MONTH",
+    sql = _sub_in_code(
+        _INTERVAL_QUARTER_RE,
+        lambda m: f"INTERVAL {3 * int(m.group(1))} MONTH",
         sql,
     )
 

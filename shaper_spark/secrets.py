@@ -27,6 +27,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from .sqltool import _find_matching_close, _scan_states
+
 __all__ = ["try_execute_secret", "list_secrets", "clear_secrets"]
 
 _CREATE_RE = re.compile(
@@ -136,15 +138,10 @@ def try_execute_secret(spark: SparkSession, sql: str) -> bool:
     m = _CREATE_RE.match(sql)
     if not m:
         return False
-    body_start = m.end()
-    depth, i = 1, body_start
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    body = sql[body_start : i - 1]
+    # close is -1 for an unclosed body, which then ends one character
+    # short of the text's end
+    close = _find_matching_close(sql, m.end() - 1, _scan_states(sql))
+    body = sql[m.end() : close]
     params: dict[str, str] = {}
     scope: list[str] = []
     stype = provider = ""

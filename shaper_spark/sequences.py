@@ -46,7 +46,7 @@ import re
 from typing import Any
 from urllib.parse import urlparse
 
-from .rewrite import _scan_states
+from .sqltool import _scan_states
 
 __all__ = [
     "try_execute_sequence_ddl",

@@ -1,5 +1,7 @@
-"""SQL text tooling: comment stripping, statement splitting, escaping,
-and the read-only statement gate.
+"""SQL text tooling: the one scanner for what is quoted and what nests
+in DuckDB text (every text pass in the package asks it), comment
+stripping, statement splitting, escaping, and the read-only statement
+gate.
 
 Semantics mirror the reference implementation (behavior parity, new code):
   - strip comments:   /root/reference/server/util/util.go:39-94
@@ -14,6 +16,7 @@ driver for any number of dashboards without touching the cluster.
 from __future__ import annotations
 
 import re
+from itertools import accumulate
 
 __all__ = [
     "strip_sql_comments",
@@ -49,109 +52,185 @@ def escape_sql_identifier(value: str) -> str:
     return out
 
 
-def strip_sql_comments(sql: str) -> str:
-    """Remove ``--`` line comments, quote-aware.
+# ---------------------------------------------------------------------------
+# Quoting and nesting: the one scanner every SQL text pass uses
+# ---------------------------------------------------------------------------
 
-    Text inside single- or double-quoted regions is preserved verbatim,
-    including doubled-quote escapes. The newline terminating a comment is
-    kept so statement line numbers stay stable.
+# A quoted span: a string literal, a double-quoted or a backquoted
+# identifier. A doubled quote char inside is an escaped one; an
+# unclosed span runs to the end of the text.
+_SPAN = r"'[^']*(?:''[^']*)*'?|\"[^\"]*(?:\"\"[^\"]*)*\"?|`[^`]*(?:``[^`]*)*`?"
+_QUOTED_SPAN_RE = re.compile(_SPAN)
+_QUOTE_STATE = {"'": 1, '"': 2, "`": 3}
+_QUOTE_NAMES = {"'": "single quote", '"': "double quote", "`": "backquote"}
+_COMMENT_SCAN_RE = re.compile(rf"(?P<q>{_SPAN})|--[^\n]*(?P<nl>\n?)")
+_SEMICOLON_SCAN_RE = re.compile(rf"{_SPAN}|;")
+_PAREN_RE = re.compile(r"[()]")
+_PAIR_RE = {"(": _PAREN_RE, "[": re.compile(r"[\[\]]")}
+_BRACKET_RE = re.compile(r"[()\[\]{},]")
+
+
+def _scan_states(sql: str) -> list[int]:
+    """Per-character state: 0 = code, 1 = in single quote, 2 = in
+    double quote, 3 = in backquotes (the quote chars included)."""
+    states = [0] * len(sql)
+    for m in _QUOTED_SPAN_RE.finditer(sql):
+        start, end = m.span()
+        states[start:end] = [_QUOTE_STATE[sql[start]]] * (end - start)
+    return states
+
+
+def _span_start(states: list[int], pos: int) -> int:
+    """Index of the opening quote of the quoted span holding ``pos``
+    (two spans of one kind never touch: ``'a''b'`` is one span)."""
+    while pos > 0 and states[pos - 1] == states[pos]:
+        pos -= 1
+    return pos
+
+
+def _span_end(states: list[int], pos: int) -> int:
+    """End (exclusive) of the quoted span holding ``pos``."""
+    n = len(states)
+    while pos + 1 < n and states[pos + 1] == states[pos]:
+        pos += 1
+    return pos + 1
+
+
+def _find_matching_close(sql: str, open_pos: int, states: list[int]) -> int:
+    """Index of the bracket closing the ``(`` or ``[`` at ``open_pos``,
+    or -1; quoted brackets do not count."""
+    opener = "[" if sql[open_pos : open_pos + 1] == "[" else "("
+    depth = 0
+    for m in _PAIR_RE[opener].finditer(sql, open_pos):
+        i = m.start()
+        if states[i]:
+            continue
+        depth += 1 if m.group() == opener else -1
+        if depth == 0:
+            return i
+    return -1
+
+
+def _find_matching_open(sql: str, pos: int, states: list[int]) -> int:
+    """Index of the ``(`` of the innermost paren group still open at
+    ``pos`` (for a ``)`` at ``pos``: its matching ``(``), or -1."""
+    depth = 0
+    for m in reversed(list(_PAREN_RE.finditer(sql, 0, pos))):
+        i = m.start()
+        if states[i]:
+            continue
+        if m.group() == ")":
+            depth += 1
+        elif depth == 0:
+            return i
+        else:
+            depth -= 1
+    return -1
+
+
+def _paren_depths(sql: str, states: list[int]) -> list[int]:
+    """Paren depth after each character; quoted parens do not count."""
+    steps = [0] * len(sql)
+    for m in _PAREN_RE.finditer(sql):
+        if not states[m.start()]:
+            steps[m.start()] = 1 if m.group() == "(" else -1
+    return list(accumulate(steps))
+
+
+def _code_matches(sql: str, pattern: re.Pattern[str]) -> list[re.Match[str]]:
+    """Matches of ``pattern`` that start outside quoted spans."""
+    matches = list(pattern.finditer(sql))
+    if not matches:
+        return []
+    states = _scan_states(sql)
+    return [m for m in matches if not states[m.start()]]
+
+
+def _depth0_matches(
+    sql: str, pattern: re.Pattern[str]
+) -> list[re.Match[str]]:
+    """Matches of ``pattern`` that start outside quotes and parens."""
+    matches = list(pattern.finditer(sql))
+    if not matches:
+        return []
+    states = _scan_states(sql)
+    depths = _paren_depths(sql, states)
+    return [m for m in matches if not states[m.start()] and not depths[m.start()]]
+
+
+def _depth0_commas(sql: str, states: list[int], lo: int, hi: int) -> list[int]:
+    """Positions of the commas in ``sql[lo:hi]`` outside quotes and
+    outside any bracket opened in that range."""
+    commas: list[int] = []
+    depth = 0
+    for m in _BRACKET_RE.finditer(sql, lo, hi):
+        i = m.start()
+        if states[i]:
+            continue
+        c = m.group()
+        if c in "([{":
+            # '{' counts too: DuckDB struct/map literals carry commas
+            # at brace depth (unnest({'a':1,...}, recursive))
+            depth += 1
+        elif c != ",":
+            depth -= 1
+        elif depth == 0:
+            commas.append(i)
+    return commas
+
+
+def _split_top_level_args(arglist: str) -> list[str]:
+    """The non-empty, stripped top-level comma pieces of ``arglist``."""
+    states = _scan_states(arglist)
+    bounds = [-1, *_depth0_commas(arglist, states, 0, len(arglist)), len(arglist)]
+    args = (arglist[a + 1 : b].strip() for a, b in zip(bounds, bounds[1:]))
+    return [a for a in args if a]
+
+
+def _sub_in_code(pattern: re.Pattern[str], repl, sql: str) -> str:
+    """``pattern.sub(repl, sql)`` for the matches that start outside
+    quoted spans; ``repl`` is a template string or a function."""
+    if pattern.search(sql) is None:
+        return sql
+    states = _scan_states(sql)
+    fill = repl if callable(repl) else (lambda m: m.expand(repl))
+    return pattern.sub(
+        lambda m: m.group() if states[m.start()] else fill(m), sql
+    )
+
+
+def strip_sql_comments(sql: str) -> str:
+    """Remove ``--`` line comments outside quoted spans.
+
+    The newline ending a comment is kept so statement line numbers stay
+    stable.
     """
-    out: list[str] = []
-    in_single = False
-    in_double = False
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'" and not in_double:
-            if i + 1 < n and sql[i + 1] == "'":
-                out.append("''")
-                i += 2
-                continue
-            in_single = not in_single
-            out.append(c)
-            i += 1
-            continue
-        if c == '"' and not in_single:
-            if i + 1 < n and sql[i + 1] == '"':
-                out.append('""')
-                i += 2
-                continue
-            in_double = not in_double
-            out.append(c)
-            i += 1
-            continue
-        if c == "-" and not in_single and not in_double:
-            if i + 1 < n and sql[i + 1] == "-":
-                while i < n and sql[i] != "\n":
-                    i += 1
-                if i < n:
-                    out.append("\n")
-                    i += 1
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    if "--" not in sql:
+        return sql
+    return _COMMENT_SCAN_RE.sub(lambda m: m.group("q") or m.group("nl"), sql)
 
 
 def split_sql_queries(sql: str) -> list[str]:
-    """Split a script on ``;`` outside quotes; raise on unclosed quotes.
+    """Split a script on ``;`` outside quoted spans; raise on an
+    unclosed quote.
 
     Each returned statement is stripped of surrounding whitespace and its
     trailing semicolon; empty statements are dropped.
     """
     queries: list[str] = []
-    cur: list[str] = []
-    in_single = False
-    in_double = False
-    line = 1
-    quote_start_line = 0
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        cur.append(c)
-        if c == "\n":
-            line += 1
-        if c == "'" and not in_double:
-            if i + 1 < n and sql[i + 1] == "'":
-                cur.append("'")
-                i += 2
-                continue
-            if not in_single:
-                quote_start_line = line
-            in_single = not in_single
-            i += 1
-            continue
-        if c == '"' and not in_single:
-            if i + 1 < n and sql[i + 1] == '"':
-                cur.append('"')
-                i += 2
-                continue
-            if not in_double:
-                quote_start_line = line
-            in_double = not in_double
-            i += 1
-            continue
-        if c == ";" and not in_single and not in_double:
-            stmt = "".join(cur).strip()[:-1].strip()  # drop the semicolon
-            if stmt:
-                queries.append(stmt)
-            cur = []
-        i += 1
-
-    if in_single:
-        raise SqlSplitError(
-            f"unclosed single quote starting in line {quote_start_line + 1}"
-        )
-    if in_double:
-        raise SqlSplitError(
-            f"unclosed double quote starting in line {quote_start_line + 1}"
-        )
-    last = "".join(cur).strip()
-    if last:
-        queries.append(last)
-    return queries
+    last = 0
+    for m in _SEMICOLON_SCAN_RE.finditer(sql):
+        span = m.group()
+        if span == ";":
+            queries.append(sql[last : m.start()].strip())
+            last = m.end()
+        elif span.count(span[0]) % 2:  # no closing quote
+            line = sql.count("\n", 0, m.start()) + 2
+            raise SqlSplitError(
+                f"unclosed {_QUOTE_NAMES[span[0]]} starting in line {line}"
+            )
+    queries.append(sql[last:].strip())
+    return [q for q in queries if q]
 
 
 # ---------------------------------------------------------------------------
@@ -232,35 +311,6 @@ def is_side_effect(sql: str, *, memory_mode: bool = False) -> bool:
     return any(_matches_prefix(upper, s) for s in SIDE_EFFECT_STATEMENTS)
 
 
-def _find_closing_paren(sql: str, start: int) -> int:
-    in_single = False
-    in_double = False
-    depth = 0
-    i = start
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'" and not in_double:
-            if i + 1 < n and sql[i + 1] == "'":
-                i += 2
-                continue
-            in_single = not in_single
-        elif c == '"' and not in_single:
-            if i + 1 < n and sql[i + 1] == '"':
-                i += 2
-                continue
-            in_double = not in_double
-        elif not in_single and not in_double:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-        i += 1
-    raise SqlSplitError("unbalanced parentheses")
-
-
 _IDENT_RE = re.compile(r'[A-Za-z_][A-Za-z0-9_$]*|"(?:[^"]|"")+"')
 
 
@@ -284,6 +334,7 @@ def split_with_statement(sql: str) -> tuple[str, list[str]]:
 
     ctes: list[str] = []
     n = len(sql)
+    states = _scan_states(sql)
     while True:
         while pos < n and sql[pos].isspace():
             pos += 1
@@ -293,7 +344,9 @@ def split_with_statement(sql: str) -> tuple[str, list[str]]:
         while pos < n and sql[pos].isspace():
             pos += 1
         if pos < n and sql[pos] == "(":
-            pos = _find_closing_paren(sql, pos) + 1
+            pos = _find_matching_close(sql, pos, states) + 1
+            if pos == 0:
+                raise SqlSplitError("unbalanced parentheses")
         while pos < n and sql[pos].isspace():
             pos += 1
         if not sql[pos:].upper().startswith("AS"):
@@ -310,7 +363,9 @@ def split_with_statement(sql: str) -> tuple[str, list[str]]:
                 break
         if pos >= n or sql[pos] != "(":
             raise SqlSplitError("missing ( after AS in WITH clause")
-        end = _find_closing_paren(sql, pos)
+        end = _find_matching_close(sql, pos, states)
+        if end == -1:
+            raise SqlSplitError("unbalanced parentheses")
         ctes.append(sql[pos + 1 : end])
         pos = end + 1
         while pos < n and sql[pos].isspace():
@@ -327,7 +382,9 @@ def _split_parenthesized(sql: str) -> tuple[str, str]:
     sql = sql.strip()
     if not sql.startswith("("):
         raise SqlSplitError("not a parenthesized statement")
-    end = _find_closing_paren(sql, 0)
+    end = _find_matching_close(sql, 0, _scan_states(sql))
+    if end == -1:
+        raise SqlSplitError("unbalanced parentheses")
     return sql[1:end], sql[end + 1 :]
 
 

@@ -33,6 +33,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from .sqltool import _code_matches
+
 __all__ = ["expand_table_functions", "TABLE_FUNCTIONS"]
 
 TABLE_FUNCTIONS = (
@@ -65,46 +67,18 @@ _EMPTY_SCHEMAS = {
 }
 
 
-def _quoted_spans(sql: str) -> list[tuple[int, int]]:
-    """[start, end) spans of single-quoted string literals (with ''
-    escaping) — matches inside them are literal text, not calls."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, min(j + 1, n)))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
 def expand_table_functions(spark: SparkSession, sql: str) -> tuple[str, bool]:
     """Replace ``duckdb_<fn>()`` calls with freshly materialized
     ``__duckdb_<fn>`` temp views.  Returns (rewritten_sql, used) —
     ``used`` tells the caller to skip the analyzed-plan cache (the
     views are per-call snapshots).  Occurrences inside single-quoted
     string literals are left untouched (``SELECT 'duckdb_tables()'``
-    is data, not a call — r5 advice)."""
-    spans = _quoted_spans(sql)
-
-    def literal(pos: int) -> bool:
-        return any(a <= pos < b for a, b in spans)
-
+    is data, not a call — r5 advice), and so are those inside quoted
+    identifiers."""
     names: set[str] = set()
     out: list[str] = []
     last = 0
-    for m in _CALL_RE.finditer(sql):
-        if literal(m.start()):
-            continue
+    for m in _code_matches(sql, _CALL_RE):
         name = m.group(1).lower()
         names.add(name)
         out.append(sql[last : m.start()])
@@ -356,18 +330,12 @@ def expand_information_schema(
     spark: SparkSession, sql: str
 ) -> tuple[str, bool]:
     """Replace ``information_schema.<view>`` references with freshly
-    materialized ``__info_schema_<view>`` snapshot views."""
-    spans = _quoted_spans(sql)
-
-    def literal(pos: int) -> bool:
-        return any(a <= pos < b for a, b in spans)
-
+    materialized ``__info_schema_<view>`` snapshot views; references
+    inside quoted spans are text."""
     names: set[str] = set()
     out: list[str] = []
     last = 0
-    for m in _INFO_SCHEMA_RE.finditer(sql):
-        if literal(m.start()):
-            continue
+    for m in _code_matches(sql, _INFO_SCHEMA_RE):
         name = m.group(1).lower()
         names.add(name)
         out.append(sql[last : m.start()])

@@ -6,6 +6,8 @@ compared.  The systematic companion to the hand-curated probe batches
 CASE/COALESCE weaving, list pipelines).
 
 Usage: python tests/dialect_fuzz.py [n_cases] [seed]
+(runs n_cases of the expression/query families, then n_cases of the
+SQL-as-data family)
 
 Every mismatch prints the expression and both values; exit code 1 if
 any mismatch survived the documented-divergence filter.  Deterministic
@@ -716,6 +718,75 @@ def g_agg_query(r: random.Random) -> str:
     )
 
 
+# --- SQL-as-data mode --------------------------------------------------------
+# String literals whose TEXT is a construct the rewriter transforms in
+# code position: the rewriter must leave quoted text alone, so length()
+# and upper() of the literal agree on both engines. Each construct has
+# no double quote and no backslash, so it also reads unchanged inside a
+# double-quoted identifier.
+
+REWRITTEN_CONSTRUCTS = [
+    "count()",
+    "x::INT[]",
+    "x::FLOAT[2]",
+    "CAST(x AS INT[])",
+    "OFFSET 1 LIMIT 2",
+    "FETCH FIRST 3 ROWS ONLY",
+    "query_table('t')",
+    "[1, 2, 3]",
+    "l[1]",
+    "l[1:2]",
+    "{'a': 1}",
+    "[x + 1 FOR x IN l]",
+    "a ^ b",
+    "a ** 2",
+    "a // b",
+    "a % b",
+    "s ~ 'x'",
+    "j ->> 'k'",
+    "x > ANY (SELECT 1)",
+    "x IN (VALUES (1))",
+    "DISTINCT ON (a)",
+    "USING SAMPLE 10%",
+    "* REPLACE (a + 1 AS a)",
+    "* EXCLUDE (a)",
+    "s SIMILAR TO 'a.*'",
+    "QUALIFY row_number() OVER () = 1",
+    "list_value(1, 2)",
+    "regexp_replace(s, 'a', 'b')",
+    "epoch_ms(ts)",
+    "date_diff('day', a, b)",
+    "x::TIMESTAMPTZ",
+    "CAST(x AS VARCHAR)",
+    "CAST(x AS INT)",
+    "INTERVAL 2 QUARTER",
+    "LIMIT NULL",
+    "rank() OVER ()",
+    "BOOLEAN 't'",
+    "GROUP BY ()",
+    "x::XAXIS",
+    "5!",
+    "string_agg(s, ',' ORDER BY s)",
+    "(FROM t)",
+    "x ^@ 'a'",
+    "s GLOB 'a*'",
+    "map([1], [2])",
+    "x::BIT",
+]
+_DATA_GLUE = ["", " ", ", ", "; ", " -- ", '"', "`", "(", ")"]
+
+
+def sql_as_data_cases(n: int, seed: int):
+    """``n`` statements reading a string literal made of one to three
+    rewritten constructs; draws from its own ``random.Random(seed)``."""
+    r = random.Random(seed)
+    for _ in range(n):
+        parts = [r.choice(REWRITTEN_CONSTRUCTS) for _ in range(r.randrange(1, 4))]
+        text = r.choice(_DATA_GLUE).join(parts) + r.choice(_DATA_GLUE)
+        lit = "'" + text.replace("'", "''") + "'"
+        yield f"SELECT {r.choice(['length', 'upper'])}({lit}) AS v"
+
+
 # list results compare element-wise; list_distinct ORDER is unspecified
 # in DuckDB (hash-based) — sort list values before comparing
 def norm(rows):
@@ -759,15 +830,15 @@ def cases(n: int, seed: int):
             yield f"SELECT {g_expr(r, r.randrange(2, 5))} AS v"
 
 
-def run(spark, con, n: int, seed: int) -> tuple[int, list[str]]:
-    """Run ``cases(n, seed)`` on the DuckDB connection ``con`` and,
+def run(spark, con, n: int, seed: int, generate=cases) -> tuple[int, list[str]]:
+    """Run ``generate(n, seed)`` on the DuckDB connection ``con`` and,
     rewritten, on ``spark``. Returns (statements compared, one report
     per mismatch); statements DuckDB rejects are skipped."""
     from shaper_spark.rewrite import rewrite_statement
 
     mismatches: list[str] = []
     checked = 0
-    for i, sql in enumerate(cases(n, seed)):
+    for i, sql in enumerate(generate(n, seed)):
         try:
             cur = con.execute(sql)
             want_cols = [c[0] for c in cur.description]
@@ -816,11 +887,17 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 11
     spark = get_spark("dialect_fuzz", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
-    checked, mismatches = run(spark, duckdb.connect(), n, seed)
-    for report in mismatches:
-        print(report)
-    print(f"\n{checked} compared, {len(mismatches)} mismatches (n={n}, seed={seed})")
-    return 1 if mismatches else 0
+    failed = False
+    for generate in (cases, sql_as_data_cases):
+        checked, mismatches = run(spark, duckdb.connect(), n, seed, generate)
+        for report in mismatches:
+            print(report)
+        print(
+            f"\n{generate.__name__}: {checked} compared, "
+            f"{len(mismatches)} mismatches (n={n}, seed={seed})"
+        )
+        failed = failed or bool(mismatches)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

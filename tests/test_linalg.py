@@ -98,37 +98,6 @@ class TestVocabCoverageCurve:
         assert "TakeOrderedAndProject" in plan
 
 
-class TestGlobalRank:
-    def test_matches_row_number_semantics(self, spark):
-        from pyspark.sql import Window
-
-        from shaper_spark.operators.sampling import global_rank
-
-        df = spark.range(200).selectExpr(
-            "id", "cast(id % 7 as double) AS score"
-        )
-        order = [F.col("score").desc(), F.col("id").asc()]
-        got = {
-            r["id"]: r["rk"]
-            for r in global_rank(df, order, rank_name="rk").collect()
-        }
-        want = {
-            r["id"]: r["rk"]
-            for r in df.withColumn(
-                "rk", F.row_number().over(Window.orderBy(*order))
-            ).collect()
-        }
-        assert got == want
-
-    def test_empty_input(self, spark):
-        from shaper_spark.operators.sampling import global_rank
-
-        df = spark.range(0).selectExpr("id", "id AS score")
-        assert (
-            global_rank(df, [F.col("score").asc()], "rk").count() == 0
-        )
-
-
 class TestSourceOverlapMatrix:
     def test_shared_grams_counted_once_per_pair(self, spark):
         from shaper_spark.operators.decontam import source_overlap_matrix

@@ -1,3 +1,6 @@
+import os
+import sys
+
 import pytest
 
 from shaper_spark.rewrite import (
@@ -5,6 +8,10 @@ from shaper_spark.rewrite import (
     rewrite_statement,
     substitute_variables,
 )
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests.dialect_fuzz import REWRITTEN_CONSTRUCTS  # noqa: E402
 
 
 def test_coloncolon_tag_extraction():
@@ -2832,7 +2839,7 @@ class TestBackquotedIdentifiers:
     """Backquoted identifiers are quoted text to every pass and splitter."""
 
     def test_splitter_keeps_backquoted_comma(self):
-        from shaper_spark.rewrite import _split_top_level_args
+        from shaper_spark.sqltool import _split_top_level_args
 
         assert _split_top_level_args("`a,b` = 1, c = 2") == [
             "`a,b` = 1",
@@ -2848,7 +2855,7 @@ class TestBackquotedIdentifiers:
         assert r.sql == "SELECT try_element_at(`l`, 1) AS x FROM t"
 
     def test_scan_states(self):
-        from shaper_spark.rewrite import _scan_states
+        from shaper_spark.sqltool import _scan_states
 
         assert _scan_states("a `b``c` 'd'") == [0, 0] + [3] * 6 + [0] + [1] * 3
 
@@ -2869,3 +2876,39 @@ def test_folded_splitter_keeps_empty_and_unbalanced_calls():
     assert rewrite_statement("SELECT btrim(s, 'a,b') FROM t").sql == (
         "SELECT trim('a,b', s) FROM t"
     )
+
+
+@pytest.mark.parametrize("construct", REWRITTEN_CONSTRUCTS)
+@pytest.mark.parametrize("quote", ["'", '"'])
+def test_quoted_construct_is_left_alone(construct, quote):
+    """Text the rewriter transforms in code position is data inside a
+    string literal and a name inside a double-quoted identifier."""
+    if quote == "'":
+        sql = "SELECT '" + construct.replace("'", "''") + "'"
+    else:
+        sql = f'SELECT 1 AS "{construct}"'
+    assert rewrite_statement(sql).sql == sql
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        r"regexp_replace('banana', '(an)', '<\1>')",
+        r"regexp_replace('banana', '(an)', '<\1>', 'g')",
+        r"regexp_replace('aaa', 'a*', '-')",
+        r"regexp_replace('a$b', 'b', 'c$d')",
+        r"regexp_replace('a$b', 'b', 'c$d', 'g')",
+        r"regexp_replace('ab', '$', '-')",
+        r"regexp_replace('abc', 'b*', '-')",
+        r"regexp_replace('abab', '(a)(b)', '\2\1\0')",
+        r"regexp_replace('a.b', '\.', '\\')",
+    ],
+)
+def test_regexp_replace_matches_duckdb(spark, call):
+    """DuckDB's replacement syntax (``\\1`` groups, a plain ``$``) and its
+    first-match rule, on Spark through the rewriter."""
+    import duckdb
+
+    want = duckdb.sql(f"SELECT {call}").fetchall()
+    got = spark.sql(rewrite_statement(f"SELECT {call}").sql).collect()
+    assert [tuple(r) for r in got] == want

@@ -36,6 +36,16 @@ class TestSecretStatements:
         assert conf.get("fs.s3a.endpoint.region") == "eu-west-1"
         assert S.list_secrets() == [("mysec", "s3", "config", "")]
 
+    def test_paren_inside_quoted_value_does_not_end_the_body(self, spark):
+        assert S.try_execute_secret(
+            spark,
+            "CREATE SECRET s1 (TYPE s3, KEY_ID 'k', SECRET 'p)w', "
+            "REGION 'eu')",
+        )
+        conf = _hconf(spark)
+        assert conf.get("fs.s3a.secret.key") == "p)w"
+        assert conf.get("fs.s3a.endpoint.region") == "eu"
+
     def test_scoped_secret_uses_per_bucket_conf(self, spark):
         S.try_execute_secret(
             spark,

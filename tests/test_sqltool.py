@@ -40,6 +40,22 @@ def test_split_unclosed_quote():
         split_sql_queries("SELECT 'oops")
 
 
+def test_split_keeps_backquoted_semicolon():
+    assert split_sql_queries("SELECT 1 AS `a;b`; SELECT 2") == [
+        "SELECT 1 AS `a;b`",
+        "SELECT 2",
+    ]
+
+
+def test_strip_comments_keeps_backquoted_dashes():
+    assert strip_sql_comments("SELECT `a--b` -- gone") == "SELECT `a--b` "
+
+
+def test_split_unclosed_backquote():
+    with pytest.raises(SqlSplitError, match="unclosed backquote"):
+        split_sql_queries("SELECT 1; SELECT `oops")
+
+
 def test_split_empty_statements_dropped():
     assert split_sql_queries(";;  ;SELECT 1;") == ["SELECT 1"]
 

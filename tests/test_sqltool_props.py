@@ -7,6 +7,7 @@ server/util/util.go:21-165)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from shaper_spark import sqltool
@@ -50,6 +51,99 @@ class TestSplitProperties:
     def test_double_dash_inside_string_preserved(self, s):
         sql = f"SELECT '--{s}' AS v"
         assert sqltool.strip_sql_comments(sql) == sql
+
+
+# Texts made of quote, paren and separator characters: every quoting
+# and nesting rule of the scanner meets every other one.
+scanner_text = st.text(alphabet="'\"`();,-\n a", max_size=40)
+
+
+def _reference_spans(sql: str, comments: bool) -> list[str]:
+    """The quoted spans of ``sql``, found by walking it one character at
+    a time: a doubled quote char is an escaped one, an unclosed span
+    runs to the end, and (with ``comments``) a ``--`` comment outside
+    quotes hides what it holds."""
+    spans = []
+    i, n = 0, len(sql)
+    while i < n:
+        if comments and sql.startswith("--", i):
+            i = sql.find("\n", i)
+            if i == -1:
+                break
+        elif sql[i] in "'\"`":
+            j = i + 1
+            while j < n:
+                if sql[j] != sql[i]:
+                    j += 1
+                elif sql[j + 1 : j + 2] == sql[i]:
+                    j += 2
+                else:
+                    j += 1
+                    break
+            spans.append(sql[i:j])
+            i = j
+            continue
+        i += 1
+    return spans
+
+
+def _reference_close(sql: str, pos: int) -> int:
+    """The ``)`` closing the ``(`` at ``pos``, or -1, by a walk that
+    tracks quotes one character at a time."""
+    quote = None
+    depth = 0
+    i = 0
+    while i < len(sql):
+        c = sql[i]
+        if quote:
+            if c == quote:
+                if sql[i + 1 : i + 2] == quote:
+                    i += 1
+                else:
+                    quote = None
+        elif c in "'\"`":
+            quote = c
+        elif i >= pos and c in "()":
+            depth += 1 if c == "(" else -1
+            if depth == 0:
+                return i
+        i += 1
+    return -1
+
+
+class TestScannerProperties:
+    @given(scanner_text)
+    @settings(max_examples=500, deadline=None)
+    def test_strip_keeps_every_quoted_span_verbatim(self, sql):
+        stripped = sqltool.strip_sql_comments(sql)
+        assert _reference_spans(stripped, comments=True) == _reference_spans(
+            sql, comments=True
+        )
+
+    @given(scanner_text)
+    @settings(max_examples=500, deadline=None)
+    def test_split_never_cuts_inside_a_span(self, sql):
+        spans = _reference_spans(sql, comments=False)
+        if spans and spans[-1].count(spans[-1][0]) % 2:  # unclosed
+            with pytest.raises(sqltool.SqlSplitError):
+                sqltool.split_sql_queries(sql)
+            return
+        pieces = sqltool.split_sql_queries(sql)
+        assert [
+            span for p in pieces for span in _reference_spans(p, comments=False)
+        ] == spans
+
+    @given(scanner_text, st.data())
+    @settings(max_examples=500, deadline=None)
+    def test_close_paren_matches_reference(self, sql, data):
+        opens = [i for i, c in enumerate(sql) if c == "("]
+        if not opens:
+            return
+        pos = data.draw(st.sampled_from(opens))
+        states = sqltool._scan_states(sql)
+        assert sqltool._find_matching_close(sql, pos, states) == (
+            _reference_close(sql, pos)
+        )
 
 
 class TestEscapeProperties:
