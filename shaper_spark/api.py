@@ -1,45 +1,27 @@
-"""HTTP API façade: the reference's data-facing routes over the Spark
-engine, using only the Python standard library (no web framework in
-this environment).
+"""HTTP API façade: the reference's routes over the Spark engine, using
+only the Python standard library (no web framework in this
+environment).
 
-Routes re-expressed (reference server/web/routes.go:157-198):
-  GET  /health                                  → liveness
-  POST /api/sql            {"sql": "..."}       → CSV stream (single stmt)
-  POST /api/data/<table>   JSON body            → ingest buffer publish
-  GET  /api/schema                              → introspection tree JSON
-  POST /api/validate       {"sql": "..."}       → statement-gate verdict
-  POST /api/dashboards     {"id","content"}     → persist dashboard
-  GET  /api/dashboards                          → list dashboards
-  GET  /api/dashboards/<id>?vars…               → render tree JSON
-  GET  /api/dashboards/<id>/info                → metadata + content
-  POST /api/dashboards/<id>/query {"content"}   → update content
-  POST /api/dashboards/<id>/name  {"name"}      → rename
-  DELETE /api/dashboards/<id>                   → delete
-  GET  /api/dashboards/<id>/download/<file>.csv|json|xlsx → export stream
-  POST /api/download/<file>.csv|json|xlsx {"sql"} → ad-hoc SQL download
-  POST /api/tasks          {"id","content"}     → persist + schedule task
-  GET  /api/tasks                               → list tasks + last run
-  GET  /api/tasks/<id>                          → metadata + content + run
-  POST /api/tasks/<id>/content {"content"}      → update + reschedule
-  POST /api/tasks/<id>/name {"name"}            → rename
-  DELETE /api/tasks/<id>                        → delete + unschedule
-  POST /api/run/task       {"id"}               → execute now, return result
-  GET  /api/tasks/<id>/runs                     → task run results
-                                                  (?after=N&wait=S long-poll)
-  GET  /api/tasks/<id>/events                   → WebSocket result push
-                                                  (RFC6455, shaper_spark.ws)
+Every route is one row of ``_ROUTES`` — method, path regex, auth rule,
+handler — the way the reference declares each route once with its
+middleware beside it (server/web/routes.go:115-198). One dispatch,
+``Handler._dispatch``, serves GET, POST and DELETE: it takes the first
+row that matches, applies that row's auth rule, parses a POST's JSON
+body once, and calls the handler with the path groups (and the body).
+A path no row matches answers 404 whatever the credentials.
 
-Since r7 the auth surface is in scope too: session/API-key tokens
-with per-route permissions (auth.py), user/invite/key/folder
-management routes, and the JWT dashboard-embed flow — POST /api/jwt
-mints a variables-carrying HS256 token (web/handler/auth.go:163-230)
-which the render/download routes honor (claims merge over the
-constructor ``variables``; dashboardId-scoped tokens are restricted
-to that dashboard's render/download routes and never act as the
-minting user on any other route). The UI is served too — a
-self-contained vanilla-JS SPA (ui.py) re-expressing the reference's
-React app at the same routes; pixel parity with the React build is a
-documented non-goal (MIGRATION.md).
+Auth rules: ``public``; ``token`` (any valid credential); ``mgmt``
+(user sessions only: API keys never administer the instance); or a
+permission string (auth.py). Session/API-key tokens and the JWT
+dashboard-embed flow are accepted — POST /api/jwt mints a
+variables-carrying HS256 token (web/handler/auth.go:163-230) which the
+render/download routes honor (claims merge over the constructor
+``variables``; dashboardId-scoped tokens are restricted to that
+dashboard's render/download routes and never act as the minting user
+on any other route). The UI is served too — a self-contained vanilla-JS
+SPA (ui.py) re-expressing the reference's React app at the same
+routes; pixel parity with the React build is a documented non-goal
+(MIGRATION.md).
 
 Scale note: the server holds no query state — every request drives the
 shared long-lived SparkSession; exports stream via toLocalIterator so
@@ -48,27 +30,1048 @@ an unbounded download never materializes on the driver.
 
 from __future__ import annotations
 
+import hmac
 import io
 import json
+import re
+import secrets
+import select
+import struct
 import threading
 import time
+from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any
+from typing import Any, Callable
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import SparkSession
 
-from . import sqltool, ui
-from .auth import Actor, AuthError, AuthInfo, AuthService
+from . import __version__, sqltool, ui, ws
+from .auth import (
+    API_KEY_PREFIX,
+    PERMISSION_DEPLOY,
+    PERMISSION_INGEST_DATA,
+    PERMISSION_QUERY_DATA,
+    PERMISSION_READ_DASHBOARD,
+    PERMISSION_READ_METRICS,
+    PERMISSION_READ_SCHEMA,
+    SESSION_TOKEN_PREFIX,
+    Actor,
+    AuthError,
+    AuthInfo,
+    AuthService,
+)
 from .engine import _prepare_query, _VarState, query_dashboard
 from .folders import FolderService
-from .exports import stream_csv, stream_dashboard_export
-from .ingest import IngestBuffer
+from .exports import STREAMERS, stream_csv, stream_dashboard_export
+from .htmlreport import render_dashboard_html
+from .ingest import IngestBuffer, _gen_id
 from .introspect import get_schema
 from .metastore import Metastore
-from .tasks import TaskScheduler
+from .metrics import CONTENT_TYPE as METRICS_CONTENT_TYPE, render_prometheus
+from .pdfreport import render_dashboard_pdf
+from .pngreport import render_dashboard_png
+from .tasks import TaskScheduler, execute_task, push_signature
 
 __all__ = ["ShaperServer"]
+
+_CONTENT_TYPES = {
+    "csv": "text/csv",
+    "json": "application/json",
+    "xlsx": "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet",
+    "pdf": "application/pdf",
+    "png": "image/png",
+    "html": "text/html; charset=utf-8",
+}
+
+# Reference renders PDFs by driving headless Chrome over the dashboard
+# URL (server/pdf/pdf.go:33-133). No browser exists in this build, so
+# the report formats render the dashboard tree with stdlib writers:
+# real PDF bytes (vector charts, tables, the reference header/footer
+# with true page counters), a PNG snapshot (mirroring
+# StreamDashboardPng), and a printable HTML variant.
+_REPORTS = {
+    "pdf": render_dashboard_pdf,
+    "png": render_dashboard_png,
+    "html": render_dashboard_html,
+}
+
+
+class _BadRequest(ValueError):
+    """Malformed request input: the dispatch answers 400 with its text."""
+
+
+def _number(value: Any, name: str, kind: type = int) -> Any:
+    try:
+        return kind(value)
+    except (TypeError, ValueError):
+        raise _BadRequest(f"invalid {name}: {value!r}") from None
+
+
+def _parse_body(raw: bytes, kind: str) -> Any:
+    """A POST body as its row takes it: the ``raw`` bytes, any ``json``
+    value, or (most rows) a JSON ``object``. An empty body is ``{}``."""
+    if kind == "raw":
+        return raw
+    try:
+        body = json.loads(raw or b"{}")
+    except ValueError as e:
+        raise _BadRequest(f"invalid JSON body: {e}") from None
+    if kind == "object" and not isinstance(body, dict):
+        raise _BadRequest("invalid JSON body: expected an object")
+    return body
+
+
+def _app_public(app: dict) -> dict:
+    """App row with credential material stripped: the share-password
+    scrypt hash never leaves the server (reference: users.go
+    PasswordHash json:\"-\"); callers see only a hasPassword boolean."""
+    app = dict(app)
+    app["hasPassword"] = bool(app.pop("password_hash", None))
+    return app
+
+
+class Handler(BaseHTTPRequestHandler):
+    """One request; the server it answers for is ``self.shaper``."""
+
+    def log_message(self, *a):  # quiet
+        pass
+
+    @property
+    def shaper(self) -> "ShaperServer":
+        return self.server.shaper
+
+    # -- dispatch ------------------------------------------------------
+    def _dispatch(self) -> None:
+        url = urlparse(self.path)
+        self.params = {
+            k: v if len(v) > 1 else v[0] for k, v in parse_qs(url.query).items()
+        }
+        try:
+            found = _match(self.command, "/" + url.path.strip("/"))
+            if found is None:
+                return self._json(404, {"error": "not found"})
+            route, match = found
+            args: list[Any] = [unquote(g) for g in match.groups()]
+            if not self._authorize(route, args):
+                return
+            if self.command == "POST":
+                args.append(_parse_body(self._read_body(), route.body))
+            route.handler(self, *args)
+        except (_BadRequest, AuthError) as e:
+            self._json(400, {"error": str(e)})
+        except Exception as e:
+            self._json(500, {"error": str(e)})
+
+    do_GET = do_POST = do_DELETE = _dispatch
+
+    def _authorize(self, route: _Route, args: list[Any]) -> bool:
+        """Apply the row's auth rule (reference routes.go:115-133
+        JWT/session middleware + keys.go permission checks); False once
+        the refusal is sent. Until the first user exists the server runs
+        in no-auth mode (auth.go:342-346).
+
+        Besides session/API-key tokens, a signed JWT is accepted (the
+        dashboard-embed flow): a user-claim JWT acts as that user; any
+        other JWT grants dashboard:read only, and its claims (variables,
+        dashboardId) ride on ``self.jwt_claims`` for the render
+        handlers."""
+        self.info, self.jwt_claims = None, {}
+        if route.auth == "public":
+            return True
+        auth = self.shaper.auth
+        token = self._bearer()
+        claims = None
+        if token.count(".") == 2 and not token.startswith(
+            (SESSION_TOKEN_PREFIX, API_KEY_PREFIX)
+        ):
+            claims = auth.verify_jwt(token)
+        if claims is None:
+            info = auth.valid_token(token)
+        elif claims.get("userId") and not claims.get("dashboardId"):
+            info = AuthInfo(
+                valid=True,
+                is_user=True,
+                user_id=str(claims["userId"]),
+                session_id=str(claims.get("sessionId") or ""),
+            )
+        else:
+            # Embed token: render-only scope even when the claims carry
+            # a userId (minted by a user via POST /api/jwt). The
+            # reference rejects dashboardId JWTs on every non-render
+            # handler (dashboard.go:123-124, apps.go, users.go, keys.go,
+            # folders.go, schema.go); granting the minting user's full
+            # identity here would let a token handed to a third-party
+            # page manage the instance.
+            info = AuthInfo(
+                valid=True,
+                api_key_id=str(claims.get("apiKeyId") or "jwt-embed"),
+                permissions=[PERMISSION_READ_DASHBOARD],
+            )
+        if not info.valid:
+            return self._refuse(401, "unauthorized")
+        if (route.auth == "mgmt" and info.api_key_id) or (
+            route.auth not in ("token", "mgmt")
+            and not auth.has_permission(info, route.auth)
+        ):
+            return self._refuse(403, "forbidden")
+        scope = (claims or {}).get("dashboardId")
+        if scope and route.auth == PERMISSION_READ_DASHBOARD:
+            # An embed token reaches only its own dashboard's render and
+            # download; every other read 404s, and so does another
+            # dashboard's render, with the body a missing id gets and
+            # before any lookup, so probing cannot tell private from
+            # absent (dashboard.go:329-334).
+            if route.handler not in _EMBEDDABLE:
+                return self._refuse(404, "not found")
+            if args[0] != scope:
+                return self._refuse(404, f"no dashboard {args[0]}")
+        self.info, self.jwt_claims = info, claims or {}
+        return True
+
+    def _refuse(self, code: int, error: str) -> bool:
+        self._json(code, {"error": error})
+        return False
+
+    # -- helpers -------------------------------------------------------
+    def _send(
+        self,
+        code: int,
+        content_type: str,
+        body: bytes,
+        headers: dict[str, str] | None = None,
+    ) -> None:
+        self.send_response(code)
+        self.send_header("Content-Type", content_type)
+        for name, value in (headers or {}).items():
+            self.send_header(name, value)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+    def _json(self, code: int, payload: Any) -> None:
+        self._send(code, "application/json", json.dumps(payload, default=str).encode())
+
+    def _send_table(
+        self, fmt: str, write: Callable[[Any], Any], filename: str = ""
+    ) -> None:
+        """Answer with what ``write`` streams into a buffer in ``fmt``
+        (csv, json or xlsx), as an attachment when ``filename`` is set."""
+        out: Any = io.BytesIO() if fmt == "xlsx" else io.StringIO()
+        write(out)
+        data = out.getvalue()
+        headers = (
+            {"Content-Disposition": f'attachment; filename="{filename}"'}
+            if filename
+            else None
+        )
+        self._send(
+            200,
+            _CONTENT_TYPES[fmt],
+            data if isinstance(data, bytes) else data.encode(),
+            headers,
+        )
+
+    def _read_body(self) -> bytes:
+        n = _number(self.headers.get("Content-Length") or 0, "Content-Length")
+        return self.rfile.read(n) if n > 0 else b""
+
+    def _bearer(self) -> str:
+        h = self.headers.get("Authorization") or ""
+        if h.lower().startswith("bearer "):
+            return h[7:].strip()
+        return self.headers.get("X-Shaper-Token") or ""
+
+    def _actor(self) -> Actor:
+        if self.info.is_user:
+            return Actor("user", self.info.user_id)
+        if self.info.api_key_id:
+            return Actor("api_key", self.info.api_key_id)
+        return Actor("no_auth")
+
+    def _param(self, name: str, default: str = "") -> str:
+        """The first value of query parameter ``name``."""
+        value = self.params.get(name, default)
+        return value[0] if isinstance(value, list) else value
+
+    def _list_opts(self) -> dict[str, Any]:
+        """?q= &sort= &order= &limit= &offset= (list_apps.go)."""
+        opts: dict[str, Any] = {
+            "query": self._param("q"),
+            "sort": self._param("sort", "id"),
+            "order": self._param("order", "asc"),
+        }
+        for name in ("limit", "offset"):
+            if self._param(name):
+                opts[name] = _number(self._param(name), name)
+        return opts
+
+    def _jwt_variables(self) -> dict[str, Any]:
+        """Server defaults with the JWT claim variables merged over them
+        (claims written at token-mint time, web/handler/auth.go:212-220)."""
+        return {**self.shaper.variables, **(self.jwt_claims.get("variables") or {})}
+
+    # -- public and instance routes -------------------------------------
+    def _health(self):
+        self._json(200, {"status": "ok"})
+
+    def _metrics(self):
+        # Prometheus system gauges (routes.go:163 wires echoprometheus
+        # behind KeyAuth + PermissionReadMetrics)
+        self._send(200, METRICS_CONTENT_TYPE, render_prometheus())
+
+    def _favicon(self):
+        # reference routes.go:246 (moderate caching); operator-supplied
+        # bytes or the built-in icon
+        self._send(
+            200,
+            "image/x-icon",
+            self.shaper.favicon or ui.default_favicon(),
+            {"Cache-Control": "public, max-age=86400"},
+        )
+
+    def _embed_loader(self):
+        # the copy-paste script loader (reference serveEmbedJS,
+        # frontend.go:60: only shaper.js exists; base URL + custom CSS
+        # injected per request)
+        proto = self.headers.get("X-Forwarded-Proto", "http")
+        host = self.headers.get("Host", f"127.0.0.1:{self.shaper.port}")
+        self._send(
+            200,
+            "text/javascript; charset=utf-8",
+            ui.embed_loader_js(f"{proto}://{host}", self.shaper.custom_css),
+            {"Cache-Control": "public, max-age=86400"},
+        )
+
+    def _ui_shell(self):
+        # SPA fallback: the reference serves the built React bundle for
+        # every UI route (server/web/routes.go static handler); here the
+        # bundle is the self-contained ui.shell().
+        self._send(200, "text/html; charset=utf-8", ui.shell(self.shaper.custom_css))
+
+    def _auth_info(self):
+        # tells a client whether login is needed
+        self._json(200, {"loginRequired": self.shaper.auth.login_required()})
+
+    def _system_config(self):
+        # instance capabilities (system.go:12-24): the SPA reads these
+        # before any auth
+        srv = self.shaper
+        self._json(
+            200,
+            {
+                "loginRequired": srv.auth.login_required(),
+                "tasksEnabled": not srv.no_tasks,
+                "editEnabled": not srv.no_edit,
+                "publicSharingEnabled": not srv.no_public_sharing,
+                "passwordProtectedSharingEnabled": (
+                    not srv.no_password_protected_sharing
+                ),
+                "ssoLoginUrl": srv.sso_login_url,
+                # secrets here are metastore-generated, never statically
+                # configured
+                "jwtSecretStatic": False,
+            },
+        )
+
+    def _version(self):
+        self._json(200, {"version": __version__})
+
+    def _public_status(self, did: str):
+        # public share status (dashboard.go:857-880): 404 for
+        # private/unknown or when the matching sharing mode is disabled —
+        # never reveals whether the id exists
+        srv = self.shaper
+        vis = (srv.store.get_app(did) or {}).get("visibility")
+        if (
+            vis in (None, "private")
+            or (srv.no_public_sharing and vis == "public")
+            or (srv.no_password_protected_sharing and vis == "password-protected")
+        ):
+            return self._json(404, {"error": "Dashboard Not Found"})
+        self._json(200, {"visibility": vis})
+
+    def _me(self):
+        info = self.info
+        self._json(
+            200,
+            {
+                "isUser": info.is_user,
+                "userId": info.user_id,
+                "email": info.user_email,
+                "name": info.user_name,
+                "apiKeyId": info.api_key_id,
+                "apiKeyName": info.api_key_name,
+            },
+        )
+
+    def _schema(self):
+        self._json(200, get_schema(self.shaper.spark).to_dict())
+
+    # -- auth routes (setup works only while no user exists; login and
+    # claim authenticate) -------------------------------------------------
+    def _setup(self, body):
+        try:
+            uid = self.shaper.auth.create_user(
+                str(body.get("email") or ""),
+                str(body.get("password") or ""),
+                str(body.get("name") or ""),
+            )
+        except AuthError as e:
+            return self._json(409, {"error": str(e)})
+        self._json(200, {"id": uid})
+
+    def _login(self, body):
+        try:
+            token = self.shaper.auth.login(
+                str(body.get("email") or ""), str(body.get("password") or "")
+            )
+        except AuthError:
+            # uniform error: never reveal which of email/password failed
+            return self._json(401, {"error": "invalid credentials"})
+        self._json(200, {"token": token})
+
+    def _public_auth(self, body):
+        # PublicAuth (web/handler/auth.go:233-300): public and
+        # password-protected dashboards mint a dashboard-scoped embed JWT
+        # without a login
+        did = str(body.get("dashboardId") or "")
+        if not did:
+            return self._json(400, {"error": "Missing dashboardId"})
+        try:
+            token = self.shaper.auth.public_dashboard_jwt(
+                did, str(body.get("password") or "")
+            )
+        except AuthError as e:
+            msg = str(e)
+            return self._json(404 if msg == "not found" else 401, {"error": msg})
+        self._json(200, {"jwt": token})
+
+    def _claim_invite(self, body):
+        token = self.shaper.auth.claim_invite(
+            str(body.get("code") or ""),
+            str(body.get("name") or ""),
+            str(body.get("password") or ""),
+        )
+        self._json(200, {"token": token})
+
+    def _logout(self, body):
+        if self.info.session_id:
+            self.shaper.auth.logout(self.info.session_id)
+        self._json(200, {"ok": True})
+
+    def _mint_jwt(self, body):
+        # dashboard-embed token minting (web/handler/auth.go:163-230
+        # TokenAuth; API keys need the 'jwt' permission)
+        try:
+            token = self.shaper.auth.generate_dashboard_jwt(
+                self.info,
+                dashboard_id=str(body.get("dashboardId") or ""),
+                variables=body.get("variables") or {},
+                exp_s=30 * 24 * 3600 if body.get("longLived") else None,
+            )
+        except AuthError as e:
+            return self._json(403 if "permission" in str(e) else 400, {"error": str(e)})
+        self._json(200, {"jwt": token})
+
+    # -- management (users, invites, keys, folders) ---------------------
+    def _list_users(self):
+        self._json(
+            200,
+            self.shaper.auth.list_users(
+                sort=self._param("sort"),
+                order=self._param("order", "desc"),
+            ),
+        )
+
+    def _list_keys(self):
+        self._json(200, {"keys": self.shaper.auth.list_api_keys()})
+
+    def _list_folder(self):
+        self._json(200, self.shaper.folders.list_folder(self._param("path", "/")))
+
+    def _create_invite(self, body):
+        self._json(
+            200,
+            self.shaper.auth.create_invite(str(body.get("email") or ""), self._actor()),
+        )
+
+    def _update_user(self, uid: str, field_: str, body):
+        if field_ == "password":
+            self.shaper.auth.update_user_password(
+                uid,
+                str(body.get("currentPassword") or ""),
+                str(body.get("newPassword") or ""),
+                self._actor(),
+                exclude_session_id=self.info.session_id,
+            )
+        else:
+            self.shaper.auth.update_user_name(
+                uid, str(body.get("name") or ""), self._actor()
+            )
+        self._json(200, {"ok": True})
+
+    def _reset_jwt_secret(self, body):
+        # rotate the shared signing secret (auth.go:341-356): every
+        # outstanding JWT — embed tokens included — stops verifying
+        self.shaper.auth.reset_jwt_secret()
+        self._json(200, {"ok": True})
+
+    def _create_key(self, body):
+        kid, token = self.shaper.auth.create_api_key(
+            str(body.get("name") or ""),
+            list(body.get("permissions") or []),
+            self._actor(),
+        )
+        self._json(200, {"id": kid, "key": token})
+
+    def _key_permissions(self, kid: str, body):
+        self.shaper.auth.update_api_key_permissions(
+            kid, list(body.get("permissions") or []), self._actor()
+        )
+        self._json(200, {"ok": True})
+
+    def _create_folder(self, body):
+        self._json(
+            200,
+            self.shaper.folders.create_folder(
+                str(body.get("name") or ""),
+                str(body.get("path") or "/"),
+                self._actor(),
+            ),
+        )
+
+    def _rename_folder(self, fid: str, body):
+        self.shaper.folders.rename_folder(
+            fid, str(body.get("name") or ""), self._actor()
+        )
+        self._json(200, {"ok": True})
+
+    def _move(self, body):
+        self.shaper.folders.move_items(
+            list(body.get("apps") or []),
+            list(body.get("folders") or []),
+            str(body.get("path") or "/"),
+            self._actor(),
+        )
+        self._json(200, {"ok": True})
+
+    def _delete_managed(self, kind: str, item_id: str):
+        srv = self.shaper
+        delete = {
+            "users": srv.auth.delete_user,
+            "invites": srv.auth.delete_invite,
+            "keys": srv.auth.delete_api_key,
+            "folders": srv.folders.delete_folder,
+        }[kind]
+        delete(item_id, self._actor())
+        self._json(200, {"ok": True})
+
+    # -- data surface (API-key permissions) -----------------------------
+    def _adhoc_frame(self, sql: str):
+        """The DataFrame of an ad-hoc request's one read-only statement,
+        prepared as a dashboard statement is; None once a 400 or 403 is
+        answered."""
+        statements = [
+            s
+            for s in sqltool.split_sql_queries(sqltool.strip_sql_comments(sql))
+            if s.strip()
+        ]
+        if len(statements) != 1:
+            self._json(400, {"error": "exactly one SQL statement required"})
+            return None
+        if not sqltool.is_allowed_statement(statements[0]):
+            self._json(403, {"error": "statement not allowed"})
+            return None
+        df, _ = _prepare_query(self.shaper.spark, statements[0].strip(), _VarState(), {})
+        return df
+
+    def _sql(self, body):
+        """POST /api/sql: exactly one read-only statement → CSV
+        (reference server/web/handler/sql.go:44-76)."""
+        df = self._adhoc_frame(str(body.get("sql") or ""))
+        if df is not None:
+            self._send_table("csv", lambda out: stream_csv(df, out))
+
+    def _adhoc_download(self, filename: str, body):
+        """POST /api/download/<file>: one read-only statement streamed in
+        the format named by the extension (reference DownloadSQL,
+        routes.go:178)."""
+        fmt = filename.rsplit(".", 1)[-1].lower()
+        if fmt not in STREAMERS:
+            return self._json(400, {"error": f"unsupported format {fmt}"})
+        df = self._adhoc_frame(str(body.get("sql") or ""))
+        if df is not None:
+            self._send_table(fmt, lambda out: STREAMERS[fmt](df, out), filename)
+
+    def _ingest(self, table: str, body):
+        """POST /api/data/<table> (reference
+        server/web/handler/events.go:27-80): single JSON object or array
+        of objects."""
+        payloads = body if isinstance(body, list) else [body]
+        if not all(isinstance(p, dict) for p in payloads):
+            return self._json(400, {"error": "JSON object(s) required"})
+        # one WAL write+fsync for the whole array, not per row
+        self.shaper.ingest.publish_many(table, payloads)
+        self.shaper.ingest.flush()
+        self._json(200, {"ingested": len(payloads)})
+
+    def _validate(self, body):
+        """POST /api/validate: per-statement gate verdicts."""
+        try:
+            statements = sqltool.split_sql_queries(
+                sqltool.strip_sql_comments(str(body.get("sql") or ""))
+            )
+        except Exception as e:
+            return self._json(200, {"valid": False, "error": str(e)})
+        gate = (
+            sqltool.is_allowed_task_statement
+            if str(body.get("type") or "dashboard") == "task"
+            else sqltool.is_allowed_statement
+        )
+        bad = [i + 1 for i, s in enumerate(statements) if s.strip() and not gate(s)]
+        self._json(200, {"valid": not bad, "invalidStatements": bad})
+
+    def _task_result(self, raw: bytes):
+        """Push half of the cross-instance result transport.
+        Shared-metastore peers form the trust domain; membership is
+        PROVEN by an HMAC over the body with the per-metastore push
+        secret (config KV), not by the instance id — ids are broadcast
+        in the clear, so a matching id alone must not admit forged
+        results (the reference's NATS mesh is closed to non-members the
+        same way)."""
+        srv = self.shaper
+        sig = str(self.headers.get("X-Shaper-Push-Signature") or "")
+        try:
+            signed = bool(srv.db_path and sig) and hmac.compare_digest(
+                push_signature(srv.store, raw or b"{}"), sig
+            )
+        except Exception:
+            signed = False
+        if not signed:
+            return self._json(403, {"error": "forbidden"})
+        body = _parse_body(raw, "object")
+        sender = str(body.get("instance") or "")
+        if not sender or not srv.store.is_registered_instance(sender):
+            return self._json(403, {"error": "forbidden"})
+        self._json(200, {"applied": srv.scheduler.receive_push(body)})
+
+    # -- dashboard and task reads ---------------------------------------
+    def _list_apps(self, kind: str):
+        store = self.shaper.store
+        rows = [
+            {k: a[k] for k in ("id", "name", "updated_at")}
+            for a in store.list_apps(kind, **self._list_opts())
+        ]
+        if kind == "task":
+            for row in rows:
+                row["lastRun"] = store.get_task_run(row["id"])
+        self._json(200, rows)
+
+    def _dashboard_info(self, did: str):
+        app = self.shaper.store.get_app(did)
+        if app is None or app["type"] != "dashboard":
+            return self._json(404, {"error": "not found"})
+        self._json(200, _app_public(app))
+
+    def _task(self, tid: str):
+        app = self.shaper.store.get_app(tid)
+        if app is None or app["type"] != "task":
+            return self._json(404, {"error": "not found"})
+        self._json(
+            200, {**_app_public(app), "lastRun": self.shaper.store.get_task_run(tid)}
+        )
+
+    def _dashboard(self, did: str):
+        content = self.shaper._dashboard_content(did)
+        if content is None:
+            return self._json(404, {"error": f"no dashboard {did}"})
+        result = query_dashboard(
+            self.shaper.spark,
+            content,
+            params=self.params,
+            variables=self._jwt_variables(),
+            dashboard_id=did,
+        )
+        self._json(200, result.to_dict())
+
+    def _download(self, did: str, filename: str):
+        params = dict(self.params)
+        if params.pop("mode", "default") != "url":
+            return self._stream_export(did, filename, params, self._jwt_variables())
+        # keyed TTL download link (reference dashboard.go:617-661 + the
+        # DownloadsKv TTL bucket, main.go): mint an unguessable token,
+        # persist the download intent — dashboard, params, and the
+        # CALLER's JWT-scoped variables — in the shared metastore KV with
+        # an expiry, and hand back a URL a browser can GET with no auth
+        # headers (navigations can't set Authorization)
+        srv = self.shaper
+        token = secrets.token_hex(32)
+        intent = {
+            "did": did,
+            "filename": filename,
+            "params": params,
+            "variables": self._jwt_variables(),
+            "exp": time.time() + srv.downloads_ttl,
+        }
+        srv.store.config_put("download:" + token, json.dumps(intent))
+        srv.sweep_download_keys()
+        self._json(200, {"url": f"/api/download/{token}/{filename}"})
+
+    def _download_by_key(self, key: str, filename: str):
+        """GET /api/download/:key/:filename — NO auth (routes.go:198
+        mounts DownloadFileByKey with no middleware): the short-lived key
+        IS the credential; missing, expired, or filename-mismatched keys
+        answer one uniform 404."""
+        raw = self.shaper.store.config_get("download:" + key)
+        try:
+            intent = json.loads(raw) if raw else None
+        except ValueError:
+            intent = None
+        if (
+            not intent
+            or intent.get("exp", 0) < time.time()
+            or intent.get("filename") != filename
+        ):
+            return self._json(404, {"error": "Download not found or expired"})
+        self._stream_export(
+            intent["did"],
+            filename,
+            dict(intent.get("params") or {}),
+            intent.get("variables") or {},
+        )
+
+    def _stream_export(self, did: str, filename: str, params: dict, jwt_vars: dict):
+        srv = self.shaper
+        content = srv._dashboard_content(did)
+        if content is None:
+            return self._json(404, {"error": f"no dashboard {did}"})
+        fmt = filename.rsplit(".", 1)[-1].lower()
+        if fmt in _REPORTS:
+            result = query_dashboard(
+                srv.spark, content, params=params, variables=jwt_vars, dashboard_id=did
+            )
+            stem = filename.rsplit(".", 1)[0] or "dashboard"
+            report = _REPORTS[fmt](result.to_dict(), title=stem)
+            return self._send(
+                200,
+                _CONTENT_TYPES[fmt],
+                report if isinstance(report, bytes) else report.encode(),
+                {"Content-Disposition": f'inline; filename="{stem}.{fmt}"'},
+            )
+        if fmt not in STREAMERS:
+            return self._json(400, {"error": f"unsupported format {fmt}"})
+        qid = _number(params.pop("query_id", -1), "query_id")
+        self._send_table(
+            fmt,
+            lambda out: stream_dashboard_export(
+                srv.spark, content, fmt, out, query_id=qid, params=params, variables=jwt_vars
+            ),
+            filename,
+        )
+
+    def _task_events(self, tid: str):
+        """WebSocket task-result push, matching the reference's WS events
+        endpoint (server/web/handler/task.go; gobwas/ws): RFC 6455
+        upgrade + one JSON text frame per task run. Push-only: client
+        frames are only inspected for CLOSE; the connection also ends on
+        server stop. Non-upgrade requests get a pointer to the long-poll
+        runs endpoint."""
+        if not ws.is_upgrade_request(self.headers):
+            return self._json(
+                426,
+                {
+                    "error": "WebSocket upgrade required; or long-poll GET "
+                    f"/api/tasks/{tid}/runs?after=N&wait=S"
+                },
+            )
+        srv = self.shaper
+        self.send_response(101, "Switching Protocols")
+        self.send_header("Upgrade", "websocket")
+        self.send_header("Connection", "Upgrade")
+        self.send_header(
+            "Sec-WebSocket-Accept",
+            ws.accept_key(self.headers.get("Sec-WebSocket-Key") or ""),
+        )
+        self.end_headers()
+        self.wfile.flush()
+        sent = 0
+        try:
+            while not srv._flusher_stop.is_set():
+                # snapshot: the poll thread appends concurrently
+                runs = list(srv.scheduler.results.get(tid, []))
+                for run in runs[sent:]:
+                    self.wfile.write(
+                        ws.encode_text_frame(json.dumps(run.to_dict(), default=str))
+                    )
+                    self.wfile.flush()
+                sent = max(sent, len(runs))
+                readable, _, _ = select.select([self.connection], [], [], 0.2)
+                if not readable:
+                    continue
+                head = self.rfile.read(2)
+                if not head:
+                    break  # client went away
+                opcode, _, length = ws.decode_frame_header(head)
+                if opcode == ws.CLOSE_OPCODE:
+                    break
+                # drain and ignore any other client frame payload
+                # (extended length field, mask key, data)
+                if length == 126:
+                    (length,) = struct.unpack("!H", self.rfile.read(2))
+                elif length == 127:
+                    (length,) = struct.unpack("!Q", self.rfile.read(8))
+                self.rfile.read(4 + length)
+        except (BrokenPipeError, ConnectionResetError, OSError):
+            pass
+        finally:
+            self.close_connection = True
+
+    def _task_runs(self, tid: str):
+        # ?after=N&wait=S long-polls for runs beyond the first N — the
+        # polling fallback for the reference's WebSocket task events
+        # (server/web/handler/task.go).
+        results = self.shaper.scheduler.results
+        after = _number(self._param("after") or 0, "after")
+        wait = min(_number(self._param("wait") or 0, "wait", float), 30.0)
+        deadline = time.monotonic() + wait
+        runs = list(results.get(tid, []))
+        while len(runs) <= after and time.monotonic() < deadline:
+            time.sleep(0.1)
+            runs = list(results.get(tid, []))
+        self._json(200, [r.to_dict() for r in runs[after:]])
+
+    # -- dashboard and task writes (deploy) -----------------------------
+    def _create_app(self, kind: str, body):
+        srv = self.shaper
+        app_id = str(body.get("id") or "")
+        content = str(body.get("content") or "")
+        if not app_id or not content:
+            return self._json(400, {"error": "id and content required"})
+        srv.store.record(
+            f"create_{kind}", {"id": app_id, "content": content, "name": body.get("name")}
+        )
+        if kind == "dashboard":
+            return self._json(200, {"id": app_id})
+        next_run, stype = srv.scheduler.register(app_id, content)
+        self._json(200, {"id": app_id, "nextRunAt": next_run, "scheduleType": stype})
+
+    def _update_app(self, kind: str, app_id: str, field_: str, body):
+        """POST :id/query|content|name|visibility|password (reference
+        SaveDashboardQuery/SaveTaskContent/..., routes.go:192-204)."""
+        srv = self.shaper
+        app = srv.store.get_app(app_id)
+        if app is None or app["type"] != kind:
+            return self._json(404, {"error": "not found"})
+        if field_ == "name":
+            value = str(body.get("name") or "")
+            if not value:
+                return self._json(400, {"error": "name required"})
+            srv.store.record(f"update_{kind}_name", {"id": app_id, "name": value})
+        elif field_ == "visibility":
+            srv.store.record(
+                "update_dashboard_visibility",
+                {"id": app_id, "visibility": body.get("visibility")},
+            )
+        elif field_ == "password":
+            # share password for password-protected visibility (empty
+            # clears); stored as a scrypt hash
+            srv.auth.set_dashboard_password(
+                app_id, str(body.get("password") or ""), Actor("no_auth")
+            )
+        else:
+            value = str(body.get("content") or "")
+            if not value:
+                return self._json(400, {"error": "content required"})
+            srv.store.record(f"update_{kind}_content", {"id": app_id, "content": value})
+            if kind == "task":
+                srv.scheduler.register(app_id, value)
+        self._json(200, {"id": app_id})
+
+    def _delete_app(self, kind: str, app_id: str):
+        srv = self.shaper
+        if srv.store.get_app(app_id) is None:
+            return self._json(404, {"error": "not found"})
+        if kind == "task":
+            srv.scheduler.unregister(app_id)
+        srv.store.record(f"delete_{kind}", {"id": app_id})
+        self._json(200, {"id": app_id})
+
+    def _deploy(self, body):
+        """POST /api/deploy: bulk create/update/delete of dashboards and
+        tasks — the CI deployment path (reference
+        server/web/handler/deploy.go:26-131; the `path` folder field is
+        accepted but folders are descoped). Any invalid operation fails
+        the whole request with 400, matching the reference."""
+        srv = self.shaper
+        apps = body.get("apps")
+        if not isinstance(apps, list) or not apps:
+            return self._json(400, {"error": "apps array is required"})
+        results = []
+        for idx, item in enumerate(apps):
+            app_type = str(item.get("type") or "").strip().lower()
+            op = str(item.get("operation") or "").strip().lower()
+            data = item.get("data") or {}
+            if app_type not in ("dashboard", "task"):
+                return self._json(
+                    400, {"error": f"apps[{idx}]: unsupported type {app_type!r}"}
+                )
+            if op == "create":
+                name = str(data.get("name") or "").strip()
+                content = data.get("content")
+                if not name or not content:
+                    return self._json(
+                        400,
+                        {"error": f"apps[{idx}]: name and content required for create"},
+                    )
+                app_id = str(data.get("id") or "").strip() or _gen_id()
+                srv.store.record(
+                    f"create_{app_type}",
+                    {"id": app_id, "content": content, "name": name},
+                )
+                if app_type == "task":
+                    srv.scheduler.register(app_id, content)
+                status = "created"
+            elif op == "update":
+                app_id = str(data.get("id") or "").strip()
+                existing = srv.store.get_app(app_id)
+                if existing is None or existing["type"] != app_type:
+                    return self._json(
+                        400, {"error": f"apps[{idx}]: no {app_type} {app_id!r}"}
+                    )
+                if data.get("content") is not None:
+                    srv.store.record(
+                        f"update_{app_type}_content",
+                        {"id": app_id, "content": data["content"]},
+                    )
+                    if app_type == "task":
+                        srv.scheduler.register(app_id, data["content"])
+                if data.get("name"):
+                    srv.store.record(
+                        f"update_{app_type}_name", {"id": app_id, "name": data["name"]}
+                    )
+                status = "updated"
+            elif op == "delete":
+                app_id = str(data.get("id") or "").strip()
+                if srv.store.get_app(app_id) is None:
+                    return self._json(
+                        400, {"error": f"apps[{idx}]: no {app_type} {app_id!r}"}
+                    )
+                if app_type == "task":
+                    srv.scheduler.unregister(app_id)
+                srv.store.record(f"delete_{app_type}", {"id": app_id})
+                status = "deleted"
+            else:
+                return self._json(
+                    400, {"error": f"apps[{idx}]: unsupported operation {op!r}"}
+                )
+            results.append(
+                {"operation": op, "type": app_type, "id": app_id, "status": status}
+            )
+        self._json(200, {"results": results})
+
+    def _run_task(self, body):
+        srv = self.shaper
+        tid = str(body.get("id") or "")
+        app = srv.store.get_app(tid)
+        if app is None or app["type"] != "task":
+            return self._json(404, {"error": f"no task {tid}"})
+        result = execute_task(srv.spark, app["content"], variables=srv.variables)
+        # visible to GET :id/runs and its long-poll
+        with srv.scheduler._lock:
+            srv.scheduler.results.setdefault(tid, []).append(result)
+        srv.scheduler._record_run(tid, result)
+        # manual runs propagate to peers like scheduled ones (record + push)
+        srv.scheduler._broadcast_result(tid, result)
+        self._json(200, result.to_dict())
+
+
+@dataclass(frozen=True)
+class _Route:
+    method: str
+    path: re.Pattern[str]  # full match on the path; groups are handler args
+    auth: str  # "public", "token", "mgmt" or a permission
+    handler: Callable[..., None]
+    body: str = "object"  # what a POST handler gets: see _parse_body
+
+
+def _route(method: str, path: str, auth: str, handler, body: str = "object") -> _Route:
+    return _Route(method, re.compile(path), auth, handler, body)
+
+
+H = Handler
+# Rows are tried in order; the first whose method and path match serves
+# the request. Path groups are URL-decoded segments.
+_ROUTES = (
+    _route("GET", r"/health", "public", H._health),
+    _route("GET", r"/metrics", PERMISSION_READ_METRICS, H._metrics),
+    _route("GET", r"/favicon\.ico", "public", H._favicon),
+    _route("GET", r"/embed/shaper\.js", "public", H._embed_loader),
+    _route("GET", ui.UI_PATH, "public", H._ui_shell),
+    _route("GET", r"/api/auth/info", "public", H._auth_info),
+    _route("GET", r"/api/system/config", "public", H._system_config),
+    _route("GET", r"/api/version", "token", H._version),
+    _route("GET", r"/api/public/([^/]+)/status", "public", H._public_status),
+    _route("GET", r"/api/auth/me", "token", H._me),
+    _route("GET", r"/api/users", "mgmt", H._list_users),
+    _route("GET", r"/api/keys", "mgmt", H._list_keys),
+    _route("GET", r"/api/folders", "mgmt", H._list_folder),
+    _route("GET", r"/api/schema", PERMISSION_READ_SCHEMA, H._schema),
+    # the minted key is the credential (reference routes.go:198 mounts
+    # DownloadFileByKey with no middleware)
+    _route("GET", r"/api/download/([^/]+)/([^/]+)", "public", H._download_by_key),
+    _route("GET", r"/api/(dashboard|task)s", PERMISSION_READ_DASHBOARD, H._list_apps),
+    _route("GET", r"/api/dashboards/([^/]+)/info", PERMISSION_READ_DASHBOARD, H._dashboard_info),
+    _route("GET", r"/api/tasks/([^/]+)", PERMISSION_READ_DASHBOARD, H._task),
+    _route("GET", r"/api/dashboards/([^/]+)", PERMISSION_READ_DASHBOARD, H._dashboard),
+    _route(
+        "GET", r"/api/dashboards/([^/]+)/download/([^/]+)", PERMISSION_READ_DASHBOARD, H._download
+    ),
+    _route("GET", r"/api/tasks/([^/]+)/events", PERMISSION_READ_DASHBOARD, H._task_events),
+    _route("GET", r"/api/tasks/([^/]+)/runs", PERMISSION_READ_DASHBOARD, H._task_runs),
+    _route("POST", r"/api/internal/task-result", "public", H._task_result, body="raw"),
+    _route("POST", r"/api/auth/setup", "public", H._setup),
+    _route("POST", r"/api/auth/login", "public", H._login),
+    _route("POST", r"/api/auth/public", "public", H._public_auth),
+    _route("POST", r"/api/invites/claim", "public", H._claim_invite),
+    _route("POST", r"/api/auth/logout", "token", H._logout),
+    _route("POST", r"/api/invites", "mgmt", H._create_invite),
+    _route("POST", r"/api/users/([^/]+)/(password|name)", "mgmt", H._update_user),
+    _route("POST", r"/api/admin/reset-jwt-secret", "mgmt", H._reset_jwt_secret),
+    _route("POST", r"/api/keys", "mgmt", H._create_key),
+    _route("POST", r"/api/keys/([^/]+)/permissions", "mgmt", H._key_permissions),
+    _route("POST", r"/api/folders", "mgmt", H._create_folder),
+    _route("POST", r"/api/folders/([^/]+)/rename", "mgmt", H._rename_folder),
+    _route("POST", r"/api/move", "mgmt", H._move),
+    _route("POST", r"/api/jwt", "token", H._mint_jwt),
+    _route("POST", r"/api/sql", PERMISSION_QUERY_DATA, H._sql),
+    _route("POST", r"/api/data/([^/]+)", PERMISSION_INGEST_DATA, H._ingest, body="json"),
+    _route("POST", r"/api/validate", PERMISSION_QUERY_DATA, H._validate),
+    _route("POST", r"/api/download/([^/]+)", PERMISSION_QUERY_DATA, H._adhoc_download),
+    _route("POST", r"/api/(dashboard|task)s", PERMISSION_DEPLOY, H._create_app),
+    _route(
+        "POST",
+        r"/api/(dashboard)s/([^/]+)/(query|name|visibility|password)",
+        PERMISSION_DEPLOY,
+        H._update_app,
+    ),
+    _route("POST", r"/api/(task)s/([^/]+)/(content|name)", PERMISSION_DEPLOY, H._update_app),
+    _route("POST", r"/api/deploy", PERMISSION_DEPLOY, H._deploy),
+    _route("POST", r"/api/run/task", PERMISSION_DEPLOY, H._run_task),
+    _route("DELETE", r"/api/(users|invites|keys|folders)/([^/]+)", "mgmt", H._delete_managed),
+    _route("DELETE", r"/api/(dashboard|task)s/([^/]+)", PERMISSION_DEPLOY, H._delete_app),
+)
+del H
+# dashboard:read rows an embed token may reach for its own dashboard
+_EMBEDDABLE = (Handler._dashboard, Handler._download)
+
+
+def _match(method: str, path: str) -> tuple[_Route, re.Match[str]] | None:
+    """The first row serving ``method`` on ``path``, with its match."""
+    for route in _ROUTES:
+        if route.method == method and (m := route.path.fullmatch(path)):
+            return route, m
+    return None
 
 
 class ShaperServer:
@@ -153,1380 +1156,8 @@ class ShaperServer:
             result_wal_dir=(db_path + ".results-wal") if db_path else None,
         )
         self._flusher_stop = threading.Event()
-        outer = self
-
-        class Handler(BaseHTTPRequestHandler):
-            daemon_threads = True
-
-            def log_message(self, *a):  # quiet
-                pass
-
-            # -- helpers ---------------------------------------------------
-            def _json(self, code: int, payload: Any) -> None:
-                body = json.dumps(payload, default=str).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def _read_body(self) -> bytes:
-                n = int(self.headers.get("Content-Length") or 0)
-                return self.rfile.read(n) if n else b""
-
-            # -- auth middleware (reference routes.go:115-133 JWT/session
-            # middleware + keys.go permission checks) ----------------------
-            def _bearer(self) -> str:
-                h = self.headers.get("Authorization") or ""
-                if h.lower().startswith("bearer "):
-                    return h[7:].strip()
-                return self.headers.get("X-Shaper-Token") or ""
-
-            def _gate(self, permission: str | None = None):
-                """AuthInfo if the request may proceed, else respond
-                401/403 and return None. Until the first user exists
-                the server runs in no-auth mode (auth.go:342-346), so
-                pre-auth deployments keep their exact old behavior.
-
-                Besides session/API-key tokens, a signed JWT is
-                accepted (the dashboard-embed flow, routes.go:115-133):
-                a user-claim JWT acts as that user; a dashboard-scoped
-                JWT grants dashboard:read only, and its claims
-                (variables, dashboardId) ride on self._jwt_claims for
-                the render handlers."""
-                self._jwt_claims = None
-                token = self._bearer()
-                if (
-                    token.count(".") == 2
-                    and not token.startswith(
-                        ("shapersession.", "shaperkey.")
-                    )
-                ):
-                    claims = outer.auth.verify_jwt(token)
-                    if claims is not None:
-                        self._jwt_claims = claims
-                        if claims.get("dashboardId"):
-                            # Embed token: render-only scope even when
-                            # the claims carry a userId (minted by a
-                            # user via POST /api/jwt). The reference
-                            # rejects dashboardId JWTs on every
-                            # non-render handler (dashboard.go:123-124,
-                            # apps.go, users.go, keys.go, folders.go,
-                            # schema.go); granting the minting user's
-                            # full identity here would let a token
-                            # handed to a third-party page manage the
-                            # instance.
-                            info = AuthInfo(
-                                valid=True,
-                                api_key_id=str(
-                                    claims.get("apiKeyId") or "jwt-embed"
-                                ),
-                                permissions=["dashboard:read"],
-                            )
-                        elif claims.get("userId"):
-                            info = AuthInfo(
-                                valid=True,
-                                is_user=True,
-                                user_id=str(claims["userId"]),
-                                session_id=str(
-                                    claims.get("sessionId") or ""
-                                ),
-                            )
-                        else:
-                            info = AuthInfo(
-                                valid=True,
-                                api_key_id=str(
-                                    claims.get("apiKeyId") or "jwt-embed"
-                                ),
-                                permissions=["dashboard:read"],
-                            )
-                        if permission and not outer.auth.has_permission(
-                            info, permission
-                        ):
-                            self._json(403, {"error": "forbidden"})
-                            return None
-                        return info
-                info = outer.auth.valid_token(token)
-                if not info.valid:
-                    self._json(401, {"error": "unauthorized"})
-                    return None
-                if permission and not outer.auth.has_permission(
-                    info, permission
-                ):
-                    self._json(403, {"error": "forbidden"})
-                    return None
-                return info
-
-            def _mgmt(self):
-                """Management endpoints (users/invites/keys/folders):
-                user sessions only — API keys can't administer the
-                instance (reference: admin routes sit behind the user
-                session middleware)."""
-                info = self._gate()
-                if info is None:
-                    return None
-                if info.api_key_id:
-                    self._json(403, {"error": "forbidden"})
-                    return None
-                return info
-
-            def _embed_scope_blocks(self, parts) -> bool:
-                """True (404 already sent) if the request carries a
-                dashboardId-scoped embed JWT and ``parts`` is not that
-                dashboard's render or download route. Mirrors the
-                reference's per-handler dashboardId rejection
-                (dashboard.go:123-124, apps.go, users.go, keys.go,
-                folders.go, schema.go): an embed token must not list
-                dashboards, read /info SQL content, or touch tasks,
-                runs, events, or schema — private content 404s."""
-                claims = getattr(self, "_jwt_claims", None) or {}
-                scope = str(claims.get("dashboardId") or "")
-                if not scope:
-                    return False
-                # render/download pass through — _jwt_variables 403s a
-                # dashboardId mismatch there; every other read is 404
-                allowed = parts[:2] == ["api", "dashboards"] and (
-                    len(parts) == 3
-                    or (len(parts) == 5 and parts[3] == "download")
-                )
-                if allowed:
-                    return False
-                self._json(404, {"error": "not found"})
-                return True
-
-            @staticmethod
-            def _app_public(app: dict) -> dict:
-                """App row with credential material stripped: the
-                share-password scrypt hash never leaves the server
-                (reference: users.go PasswordHash json:\"-\");
-                callers see only a hasPassword boolean."""
-                app = dict(app)
-                ph = app.pop("password_hash", None)
-                app["hasPassword"] = bool(ph)
-                return app
-
-            def _actor(self, info) -> Actor:
-                if info.is_user:
-                    return Actor("user", info.user_id)
-                if info.api_key_id:
-                    return Actor("api_key", info.api_key_id)
-                return Actor("no_auth")
-
-            def _ws_task_events(self, task_id: str, _ws) -> None:
-                """RFC 6455 upgrade + one JSON text frame per task run
-                (reference: server/web/handler/task.go pushes results
-                over WS). Push-only: client frames are only inspected
-                for CLOSE; the connection also ends on server stop."""
-                key = self.headers.get("Sec-WebSocket-Key") or ""
-                self.send_response(101, "Switching Protocols")
-                self.send_header("Upgrade", "websocket")
-                self.send_header("Connection", "Upgrade")
-                self.send_header("Sec-WebSocket-Accept", _ws.accept_key(key))
-                self.end_headers()
-                self.wfile.flush()
-                import select as _select
-
-                sent = 0
-                try:
-                    while not outer._flusher_stop.is_set():
-                        # snapshot: the poll thread appends concurrently
-                        runs = list(outer.scheduler.results.get(task_id, []))
-                        while sent < len(runs):
-                            frame = _ws.encode_text_frame(
-                                json.dumps(runs[sent].to_dict(), default=str)
-                            )
-                            self.wfile.write(frame)
-                            self.wfile.flush()
-                            sent += 1
-                        readable, _, _ = _select.select(
-                            [self.connection], [], [], 0.2
-                        )
-                        if not readable:
-                            continue
-                        head = self.rfile.read(2)
-                        if not head:
-                            break  # client went away
-                        opcode, _, length = _ws.decode_frame_header(head)
-                        if opcode == _ws.CLOSE_OPCODE:
-                            break
-                        # drain and ignore any other client frame payload
-                        # (extended length field, mask key, data)
-                        if length == 126:
-                            import struct as _struct
-
-                            (length,) = _struct.unpack(
-                                "!H", self.rfile.read(2)
-                            )
-                        elif length == 127:
-                            import struct as _struct
-
-                            (length,) = _struct.unpack(
-                                "!Q", self.rfile.read(8)
-                            )
-                        self.rfile.read(4 + length)
-                except (BrokenPipeError, ConnectionResetError, OSError):
-                    pass
-                finally:
-                    self.close_connection = True
-
-            def _list_opts(self, url) -> dict[str, Any]:
-                """?q= &sort= &order= &limit= &offset= (list_apps.go)."""
-                qs = parse_qs(url.query)
-
-                def one(k, default=""):
-                    return qs.get(k, [default])[0]
-
-                opts: dict[str, Any] = {
-                    "query": one("q"),
-                    "sort": one("sort", "id"),
-                    "order": one("order", "asc"),
-                }
-                if one("limit"):
-                    opts["limit"] = int(one("limit"))
-                if one("offset"):
-                    opts["offset"] = int(one("offset"))
-                return opts
-
-            # -- routes ----------------------------------------------------
-            def do_GET(self):
-                url = urlparse(self.path)
-                parts = [unquote(p) for p in url.path.strip("/").split("/")]
-                try:
-                    if parts == ["health"]:
-                        return self._json(200, {"status": "ok"})
-                    if parts == ["metrics"]:
-                        # Prometheus system gauges behind API-key auth +
-                        # the metrics permission (routes.go:163 wires
-                        # echoprometheus behind KeyAuth +
-                        # PermissionReadMetrics). Must precede the SPA
-                        # fallback — /metrics is a top-level route.
-                        from .auth import PERMISSION_READ_METRICS
-                        from .metrics import CONTENT_TYPE, render_prometheus
-
-                        if self._gate(PERMISSION_READ_METRICS) is None:
-                            return
-                        body = render_prometheus()
-                        self.send_response(200)
-                        self.send_header("Content-Type", CONTENT_TYPE)
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
-                        return
-                    if parts == ["favicon.ico"]:
-                        # reference routes.go:246 (moderate caching);
-                        # operator-supplied bytes or the built-in icon
-                        body = outer.favicon or ui.default_favicon()
-                        self.send_response(200)
-                        self.send_header("Content-Type", "image/x-icon")
-                        self.send_header(
-                            "Cache-Control", "public, max-age=86400"
-                        )
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
-                        return
-                    if parts[:1] == ["embed"]:
-                        # GET /embed/shaper.js — the copy-paste script
-                        # loader (reference serveEmbedJS,
-                        # frontend.go:60: only shaper.js[.map] exist,
-                        # anything else 404s; base URL + custom CSS
-                        # injected per request)
-                        if parts[1:] != ["shaper.js"]:
-                            return self._json(
-                                404, {"error": "File not found"}
-                            )
-                        proto = self.headers.get(
-                            "X-Forwarded-Proto", "http"
-                        )
-                        host = self.headers.get(
-                            "Host", f"127.0.0.1:{outer.port}"
-                        )
-                        body = ui.embed_loader_js(
-                            f"{proto}://{host}", outer.custom_css
-                        )
-                        self.send_response(200)
-                        self.send_header(
-                            "Content-Type",
-                            "text/javascript; charset=utf-8",
-                        )
-                        self.send_header(
-                            "Cache-Control", "public, max-age=86400"
-                        )
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
-                        return
-                    if parts[:1] != ["api"] and ui.is_ui_path(url.path):
-                        # SPA fallback: the reference serves the built
-                        # React bundle for every non-/api route
-                        # (server/web/routes.go static handler); here
-                        # the bundle is the self-contained ui.shell().
-                        body = ui.shell(outer.custom_css)
-                        self.send_response(200)
-                        self.send_header(
-                            "Content-Type", "text/html; charset=utf-8"
-                        )
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
-                        return
-                    if parts == ["api", "auth", "info"]:
-                        # public: tells a client whether login is needed
-                        return self._json(
-                            200,
-                            {"loginRequired": outer.auth.login_required()},
-                        )
-                    if parts == ["api", "system", "config"]:
-                        # public instance capabilities
-                        # (system.go:12-24): the SPA reads these before
-                        # any auth
-                        return self._json(
-                            200,
-                            {
-                                "loginRequired": outer.auth.login_required(),
-                                "tasksEnabled": not outer.no_tasks,
-                                "editEnabled": not outer.no_edit,
-                                "publicSharingEnabled": not outer.no_public_sharing,
-                                "passwordProtectedSharingEnabled": (
-                                    not outer.no_password_protected_sharing
-                                ),
-                                "ssoLoginUrl": outer.sso_login_url,
-                                # secrets here are metastore-generated,
-                                # never statically configured
-                                "jwtSecretStatic": False,
-                            },
-                        )
-                    if parts == ["api", "version"]:
-                        from . import __version__
-
-                        if self._gate() is None:
-                            return
-                        return self._json(200, {"version": __version__})
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "public"]
-                        and parts[3] == "status"
-                    ):
-                        # public share status (dashboard.go:857-880):
-                        # 404 for private/unknown or when the matching
-                        # sharing mode is disabled — never reveals
-                        # whether the id exists
-                        app = outer.store.get_app(parts[2])
-                        vis = (app or {}).get("visibility")
-                        if (
-                            app is None
-                            or vis in (None, "private")
-                            or (outer.no_public_sharing and vis == "public")
-                            or (
-                                outer.no_password_protected_sharing
-                                and vis == "password-protected"
-                            )
-                        ):
-                            return self._json(
-                                404, {"error": "Dashboard Not Found"}
-                            )
-                        return self._json(200, {"visibility": vis})
-                    if parts == ["api", "auth", "me"]:
-                        info = self._gate()
-                        if info is None:
-                            return
-                        return self._json(
-                            200,
-                            {
-                                "isUser": info.is_user,
-                                "userId": info.user_id,
-                                "email": info.user_email,
-                                "name": info.user_name,
-                                "apiKeyId": info.api_key_id,
-                                "apiKeyName": info.api_key_name,
-                            },
-                        )
-                    if parts == ["api", "users"]:
-                        if self._mgmt() is None:
-                            return
-                        qs = parse_qs(url.query)
-                        return self._json(
-                            200,
-                            outer.auth.list_users(
-                                sort=qs.get("sort", [""])[0],
-                                order=qs.get("order", ["desc"])[0],
-                            ),
-                        )
-                    if parts == ["api", "keys"]:
-                        if self._mgmt() is None:
-                            return
-                        return self._json(
-                            200, {"keys": outer.auth.list_api_keys()}
-                        )
-                    if parts == ["api", "folders"]:
-                        if self._mgmt() is None:
-                            return
-                        path = parse_qs(url.query).get("path", ["/"])[0]
-                        return self._json(
-                            200, outer.folders.list_folder(path)
-                        )
-                    if parts == ["api", "schema"]:
-                        if self._gate("schema:read") is None:
-                            return
-                        return self._json(200, get_schema(outer.spark).to_dict())
-                    if len(parts) == 4 and parts[:2] == [
-                        "api",
-                        "download",
-                    ]:
-                        # keyed TTL download — deliberately BEFORE the
-                        # auth gate (reference routes.go:198 mounts
-                        # DownloadFileByKey with no middleware): the
-                        # minted key is the credential
-                        return self._download_by_key(parts[2], parts[3])
-                    # every remaining GET surface is dashboard/task reads
-                    if parts[:1] == ["api"] and self._gate(
-                        "dashboard:read"
-                    ) is None:
-                        return
-                    if self._embed_scope_blocks(parts):
-                        return
-                    if parts == ["api", "dashboards"]:
-                        return self._json(
-                            200,
-                            [
-                                {k: a[k] for k in ("id", "name", "updated_at")}
-                                for a in outer.store.list_apps(
-                                    "dashboard", **self._list_opts(url)
-                                )
-                            ],
-                        )
-                    if parts == ["api", "tasks"]:
-                        return self._json(
-                            200,
-                            [
-                                {
-                                    **{k: a[k] for k in ("id", "name", "updated_at")},
-                                    "lastRun": outer.store.get_task_run(a["id"]),
-                                }
-                                for a in outer.store.list_apps(
-                                    "task", **self._list_opts(url)
-                                )
-                            ],
-                        )
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "dashboards"]
-                        and parts[3] == "info"
-                    ):
-                        app = outer.store.get_app(parts[2])
-                        if app is None or app["type"] != "dashboard":
-                            return self._json(404, {"error": "not found"})
-                        return self._json(200, self._app_public(app))
-                    if (
-                        len(parts) == 3
-                        and parts[:2] == ["api", "tasks"]
-                    ):
-                        app = outer.store.get_app(parts[2])
-                        if app is None or app["type"] != "task":
-                            return self._json(404, {"error": "not found"})
-                        return self._json(
-                            200,
-                            {
-                                **self._app_public(app),
-                                "lastRun": outer.store.get_task_run(parts[2]),
-                            },
-                        )
-                    if len(parts) == 3 and parts[:2] == ["api", "dashboards"]:
-                        return self._dashboard(parts[2], url)
-                    if (
-                        len(parts) == 5
-                        and parts[:2] == ["api", "dashboards"]
-                        and parts[3] == "download"
-                    ):
-                        return self._download(parts[2], parts[4], url)
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "tasks"]
-                        and parts[3] == "events"
-                    ):
-                        # WebSocket task-result push, matching the
-                        # reference's WS events endpoint
-                        # (server/web/handler/task.go; gobwas/ws).
-                        # Non-upgrade requests get a pointer to the
-                        # long-poll runs endpoint.
-                        from . import ws as _ws
-
-                        if not _ws.is_upgrade_request(self.headers):
-                            return self._json(
-                                426,
-                                {
-                                    "error": "WebSocket upgrade required; "
-                                    "or long-poll GET "
-                                    f"/api/tasks/{parts[2]}/runs?after=N&wait=S"
-                                },
-                            )
-                        return self._ws_task_events(parts[2], _ws)
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "tasks"]
-                        and parts[3] == "runs"
-                    ):
-                        # ?after=N&wait=S long-polls for runs beyond the
-                        # first N — the polling fallback for the
-                        # reference's WebSocket task events
-                        # (server/web/handler/task.go).
-                        qs = parse_qs(url.query)
-                        after = int(qs.get("after", ["0"])[0] or 0)
-                        wait = min(float(qs.get("wait", ["0"])[0] or 0), 30.0)
-                        deadline = time.monotonic() + wait
-                        runs = list(outer.scheduler.results.get(parts[2], []))
-                        while len(runs) <= after and time.monotonic() < deadline:
-                            time.sleep(0.1)
-                            runs = list(
-                                outer.scheduler.results.get(parts[2], [])
-                            )
-                        return self._json(
-                            200, [r.to_dict() for r in runs[after:]]
-                        )
-                    self._json(404, {"error": "not found"})
-                except Exception as e:
-                    self._json(500, {"error": str(e)})
-
-            def do_POST(self):
-                url = urlparse(self.path)
-                parts = [unquote(p) for p in url.path.strip("/").split("/")]
-                try:
-                    if parts == ["api", "internal", "task-result"]:
-                        # push half of the cross-instance result
-                        # transport. Shared-metastore peers form the
-                        # trust domain; membership is PROVEN by an
-                        # HMAC over the body with the per-metastore
-                        # push secret (config KV), not by the instance
-                        # id — ids are broadcast in the clear, so a
-                        # matching id alone must not admit forged
-                        # results (the reference's NATS mesh is closed
-                        # to non-members the same way).
-                        raw = self._read_body() or b"{}"
-                        from .tasks import push_signature
-                        import hmac as _hmac
-
-                        sig = str(
-                            self.headers.get("X-Shaper-Push-Signature")
-                            or ""
-                        )
-                        if not outer.db_path or not sig:
-                            return self._json(403, {"error": "forbidden"})
-                        try:
-                            expect = push_signature(outer.store, raw)
-                        except Exception:
-                            return self._json(403, {"error": "forbidden"})
-                        if not _hmac.compare_digest(expect, sig):
-                            return self._json(403, {"error": "forbidden"})
-                        body = json.loads(raw)
-                        sender = str(body.get("instance") or "")
-                        if not sender or not (
-                            outer.store.is_registered_instance(sender)
-                        ):
-                            return self._json(403, {"error": "forbidden"})
-                        applied = outer.scheduler.receive_push(body)
-                        return self._json(200, {"applied": applied})
-                    # -- public auth endpoints (setup works only while
-                    # no user exists; login/claim authenticate) --------
-                    if parts == ["api", "auth", "setup"]:
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            uid = outer.auth.create_user(
-                                str(body.get("email") or ""),
-                                str(body.get("password") or ""),
-                                str(body.get("name") or ""),
-                            )
-                        except AuthError as e:
-                            return self._json(409, {"error": str(e)})
-                        return self._json(200, {"id": uid})
-                    if parts == ["api", "auth", "login"]:
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            token = outer.auth.login(
-                                str(body.get("email") or ""),
-                                str(body.get("password") or ""),
-                            )
-                        except AuthError:
-                            # uniform error: never reveal which of
-                            # email/password failed
-                            return self._json(
-                                401, {"error": "invalid credentials"}
-                            )
-                        return self._json(200, {"token": token})
-                    if parts == ["api", "auth", "public"]:
-                        # PublicAuth (web/handler/auth.go:233-300):
-                        # public/password-protected dashboards mint a
-                        # dashboard-scoped embed JWT without a login
-                        body = json.loads(self._read_body() or b"{}")
-                        did = str(body.get("dashboardId") or "")
-                        if not did:
-                            return self._json(
-                                400, {"error": "Missing dashboardId"}
-                            )
-                        try:
-                            token = outer.auth.public_dashboard_jwt(
-                                did, str(body.get("password") or "")
-                            )
-                        except AuthError as e:
-                            msg = str(e)
-                            code = 404 if msg == "not found" else 401
-                            return self._json(code, {"error": msg})
-                        return self._json(200, {"jwt": token})
-                    if parts == ["api", "invites", "claim"]:
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            token = outer.auth.claim_invite(
-                                str(body.get("code") or ""),
-                                str(body.get("name") or ""),
-                                str(body.get("password") or ""),
-                            )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"token": token})
-                    if parts == ["api", "auth", "logout"]:
-                        info = self._gate()
-                        if info is None:
-                            return
-                        if info.session_id:
-                            outer.auth.logout(info.session_id)
-                        return self._json(200, {"ok": True})
-                    # -- management (user sessions only) ---------------
-                    if parts == ["api", "invites"]:
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        return self._json(
-                            200,
-                            outer.auth.create_invite(
-                                str(body.get("email") or ""),
-                                self._actor(info),
-                            ),
-                        )
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "users"]
-                        and parts[3] in ("password", "name")
-                    ):
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            if parts[3] == "password":
-                                outer.auth.update_user_password(
-                                    parts[2],
-                                    str(body.get("currentPassword") or ""),
-                                    str(body.get("newPassword") or ""),
-                                    self._actor(info),
-                                    exclude_session_id=info.session_id,
-                                )
-                            else:
-                                outer.auth.update_user_name(
-                                    parts[2],
-                                    str(body.get("name") or ""),
-                                    self._actor(info),
-                                )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"ok": True})
-                    if parts == ["api", "admin", "reset-jwt-secret"]:
-                        # rotate the shared signing secret
-                        # (auth.go:341-356): every outstanding JWT —
-                        # embed tokens included — stops verifying;
-                        # user sessions only, like the reference's
-                        # dashboardId-claim rejection
-                        if self._mgmt() is None:
-                            return
-                        outer.auth.reset_jwt_secret()
-                        return self._json(200, {"ok": True})
-                    if parts == ["api", "keys"]:
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            kid, token = outer.auth.create_api_key(
-                                str(body.get("name") or ""),
-                                list(body.get("permissions") or []),
-                                self._actor(info),
-                            )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"id": kid, "key": token})
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "keys"]
-                        and parts[3] == "permissions"
-                    ):
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            outer.auth.update_api_key_permissions(
-                                parts[2],
-                                list(body.get("permissions") or []),
-                                self._actor(info),
-                            )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"ok": True})
-                    if parts == ["api", "folders"]:
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            return self._json(
-                                200,
-                                outer.folders.create_folder(
-                                    str(body.get("name") or ""),
-                                    str(body.get("path") or "/"),
-                                    self._actor(info),
-                                ),
-                            )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "folders"]
-                        and parts[3] == "rename"
-                    ):
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            outer.folders.rename_folder(
-                                parts[2],
-                                str(body.get("name") or ""),
-                                self._actor(info),
-                            )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"ok": True})
-                    if parts == ["api", "move"]:
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            outer.folders.move_items(
-                                list(body.get("apps") or []),
-                                list(body.get("folders") or []),
-                                str(body.get("path") or "/"),
-                                self._actor(info),
-                            )
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"ok": True})
-                    if parts == ["api", "jwt"]:
-                        # dashboard-embed token minting
-                        # (web/handler/auth.go:163-230 TokenAuth; API
-                        # keys need the 'jwt' permission)
-                        info = self._gate()
-                        if info is None:
-                            return
-                        body = json.loads(self._read_body() or b"{}")
-                        try:
-                            token = outer.auth.generate_dashboard_jwt(
-                                info,
-                                dashboard_id=str(
-                                    body.get("dashboardId") or ""
-                                ),
-                                variables=body.get("variables") or {},
-                                exp_s=(
-                                    30 * 24 * 3600
-                                    if body.get("longLived")
-                                    else None
-                                ),
-                            )
-                        except AuthError as e:
-                            code = (
-                                403
-                                if "permission" in str(e)
-                                else 400
-                            )
-                            return self._json(code, {"error": str(e)})
-                        return self._json(200, {"jwt": token})
-                    # -- data/deploy surface (API-key permissions) -----
-                    if parts == ["api", "sql"]:
-                        if self._gate("data:query") is None:
-                            return
-                        return self._sql()
-                    if len(parts) == 3 and parts[:2] == ["api", "data"]:
-                        if self._gate("data:ingest") is None:
-                            return
-                        return self._ingest(parts[2])
-                    if parts == ["api", "validate"]:
-                        if self._gate("data:query") is None:
-                            return
-                        return self._validate()
-                    if len(parts) == 3 and parts[:2] == ["api", "download"]:
-                        if self._gate("data:query") is None:
-                            return
-                        return self._adhoc_download(parts[2])
-                    # every remaining POST mutates dashboards/tasks
-                    if parts[:1] == ["api"] and self._gate("deploy") is None:
-                        return
-                    if parts == ["api", "dashboards"]:
-                        body = json.loads(self._read_body() or b"{}")
-                        did = str(body.get("id") or "")
-                        content = str(body.get("content") or "")
-                        if not did or not content:
-                            return self._json(400, {"error": "id and content required"})
-                        outer.store.record(
-                            "create_dashboard",
-                            {"id": did, "content": content, "name": body.get("name")},
-                        )
-                        return self._json(200, {"id": did})
-                    if parts == ["api", "tasks"]:
-                        body = json.loads(self._read_body() or b"{}")
-                        tid = str(body.get("id") or "")
-                        content = str(body.get("content") or "")
-                        if not tid or not content:
-                            return self._json(400, {"error": "id and content required"})
-                        outer.store.record(
-                            "create_task",
-                            {"id": tid, "content": content, "name": body.get("name")},
-                        )
-                        next_run, stype = outer.scheduler.register(tid, content)
-                        return self._json(
-                            200,
-                            {"id": tid, "nextRunAt": next_run, "scheduleType": stype},
-                        )
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "dashboards"]
-                        and parts[3] in ("query", "name", "visibility", "password")
-                    ):
-                        return self._update_app(
-                            "dashboard", parts[2], parts[3]
-                        )
-                    if (
-                        len(parts) == 4
-                        and parts[:2] == ["api", "tasks"]
-                        and parts[3] in ("content", "name")
-                    ):
-                        return self._update_app("task", parts[2], parts[3])
-                    if parts == ["api", "deploy"]:
-                        return self._deploy()
-                    if parts == ["api", "run", "task"]:
-                        body = json.loads(self._read_body() or b"{}")
-                        tid = str(body.get("id") or "")
-                        app = outer.store.get_app(tid)
-                        if app is None or app["type"] != "task":
-                            return self._json(404, {"error": f"no task {tid}"})
-                        from .tasks import execute_task
-
-                        result = execute_task(
-                            outer.spark, app["content"], variables=outer.variables
-                        )
-                        # visible to GET :id/runs and its long-poll
-                        with outer.scheduler._lock:
-                            outer.scheduler.results.setdefault(
-                                tid, []
-                            ).append(result)
-                        outer.scheduler._record_run(tid, result)
-                        # manual runs propagate to peers like scheduled
-                        # ones (record + push)
-                        outer.scheduler._broadcast_result(tid, result)
-                        return self._json(200, result.to_dict())
-                    self._json(404, {"error": "not found"})
-                except Exception as e:
-                    self._json(500, {"error": str(e)})
-
-            def do_DELETE(self):
-                url = urlparse(self.path)
-                parts = [unquote(p) for p in url.path.strip("/").split("/")]
-                try:
-                    if len(parts) == 3 and parts[:2] in (
-                        ["api", "users"],
-                        ["api", "invites"],
-                        ["api", "keys"],
-                        ["api", "folders"],
-                    ):
-                        info = self._mgmt()
-                        if info is None:
-                            return
-                        actor = self._actor(info)
-                        try:
-                            kind = parts[1]
-                            if kind == "users":
-                                outer.auth.delete_user(parts[2], actor)
-                            elif kind == "invites":
-                                outer.auth.delete_invite(parts[2], actor)
-                            elif kind == "keys":
-                                outer.auth.delete_api_key(parts[2], actor)
-                            else:
-                                outer.folders.delete_folder(parts[2], actor)
-                        except AuthError as e:
-                            return self._json(400, {"error": str(e)})
-                        return self._json(200, {"ok": True})
-                    if parts[:1] == ["api"] and self._gate("deploy") is None:
-                        return
-                    if len(parts) == 3 and parts[:2] == ["api", "dashboards"]:
-                        if outer.store.get_app(parts[2]) is None:
-                            return self._json(404, {"error": "not found"})
-                        outer.store.record("delete_dashboard", {"id": parts[2]})
-                        return self._json(200, {"id": parts[2]})
-                    if len(parts) == 3 and parts[:2] == ["api", "tasks"]:
-                        if outer.store.get_app(parts[2]) is None:
-                            return self._json(404, {"error": "not found"})
-                        outer.scheduler.unregister(parts[2])
-                        outer.store.record("delete_task", {"id": parts[2]})
-                        return self._json(200, {"id": parts[2]})
-                    self._json(404, {"error": "not found"})
-                except Exception as e:
-                    self._json(500, {"error": str(e)})
-
-            # -- route bodies ----------------------------------------------
-            def _update_app(self, app_type: str, app_id: str, field_: str):
-                """POST :id/query|content|name (reference
-                SaveDashboardQuery/SaveTaskContent/..., routes.go:192-204)."""
-                body = json.loads(self._read_body() or b"{}")
-                app = outer.store.get_app(app_id)
-                if app is None or app["type"] != app_type:
-                    return self._json(404, {"error": "not found"})
-                if field_ == "name":
-                    value = str(body.get("name") or "")
-                    if not value:
-                        return self._json(400, {"error": "name required"})
-                    outer.store.record(
-                        f"update_{app_type}_name", {"id": app_id, "name": value}
-                    )
-                elif field_ == "visibility":
-                    outer.store.record(
-                        "update_dashboard_visibility",
-                        {"id": app_id, "visibility": body.get("visibility")},
-                    )
-                elif field_ == "password":
-                    # share password for password-protected visibility
-                    # (empty clears); stored as a scrypt hash
-                    outer.auth.set_dashboard_password(
-                        app_id,
-                        str(body.get("password") or ""),
-                        Actor("no_auth"),
-                    )
-                else:
-                    value = str(body.get("content") or "")
-                    if not value:
-                        return self._json(400, {"error": "content required"})
-                    outer.store.record(
-                        f"update_{app_type}_content",
-                        {"id": app_id, "content": value},
-                    )
-                    if app_type == "task":
-                        outer.scheduler.register(app_id, value)
-                return self._json(200, {"id": app_id})
-
-            def _deploy(self):
-                """POST /api/deploy: bulk create/update/delete of
-                dashboards and tasks — the CI deployment path (reference
-                server/web/handler/deploy.go:26-131; the `path` folder
-                field is accepted but folders are descoped). Any invalid
-                operation fails the whole request with 400, matching the
-                reference."""
-                from .ingest import _gen_id
-
-                body = json.loads(self._read_body() or b"{}")
-                apps = body.get("apps")
-                if not isinstance(apps, list) or not apps:
-                    return self._json(400, {"error": "apps array is required"})
-                results = []
-                for idx, item in enumerate(apps):
-                    app_type = str(item.get("type") or "").strip().lower()
-                    op = str(item.get("operation") or "").strip().lower()
-                    data = item.get("data") or {}
-                    if app_type not in ("dashboard", "task"):
-                        return self._json(
-                            400,
-                            {"error": f"apps[{idx}]: unsupported type {app_type!r}"},
-                        )
-                    if op == "create":
-                        name = str(data.get("name") or "").strip()
-                        content = data.get("content")
-                        if not name or not content:
-                            return self._json(
-                                400,
-                                {
-                                    "error": f"apps[{idx}]: name and content "
-                                    "required for create"
-                                },
-                            )
-                        app_id = str(data.get("id") or "").strip() or _gen_id()
-                        outer.store.record(
-                            f"create_{app_type}",
-                            {"id": app_id, "content": content, "name": name},
-                        )
-                        if app_type == "task":
-                            outer.scheduler.register(app_id, content)
-                        status = "created"
-                    elif op == "update":
-                        app_id = str(data.get("id") or "").strip()
-                        existing = outer.store.get_app(app_id)
-                        if existing is None or existing["type"] != app_type:
-                            return self._json(
-                                400,
-                                {"error": f"apps[{idx}]: no {app_type} {app_id!r}"},
-                            )
-                        if data.get("content") is not None:
-                            outer.store.record(
-                                f"update_{app_type}_content",
-                                {"id": app_id, "content": data["content"]},
-                            )
-                            if app_type == "task":
-                                outer.scheduler.register(app_id, data["content"])
-                        if data.get("name"):
-                            outer.store.record(
-                                f"update_{app_type}_name",
-                                {"id": app_id, "name": data["name"]},
-                            )
-                        status = "updated"
-                    elif op == "delete":
-                        app_id = str(data.get("id") or "").strip()
-                        if outer.store.get_app(app_id) is None:
-                            return self._json(
-                                400,
-                                {"error": f"apps[{idx}]: no {app_type} {app_id!r}"},
-                            )
-                        if app_type == "task":
-                            outer.scheduler.unregister(app_id)
-                        outer.store.record(f"delete_{app_type}", {"id": app_id})
-                        status = "deleted"
-                    else:
-                        return self._json(
-                            400,
-                            {
-                                "error": f"apps[{idx}]: unsupported operation {op!r}"
-                            },
-                        )
-                    results.append(
-                        {
-                            "operation": op,
-                            "type": app_type,
-                            "id": app_id,
-                            "status": status,
-                        }
-                    )
-                return self._json(200, {"results": results})
-
-            def _adhoc_download(self, filename: str):
-                """POST /api/download/<file>: one read-only statement
-                streamed in the format named by the extension (reference
-                DownloadSQL, routes.go:178)."""
-                body = json.loads(self._read_body() or b"{}")
-                sql = str(body.get("sql") or "")
-                fmt = filename.rsplit(".", 1)[-1].lower()
-                if fmt not in ("csv", "json", "xlsx"):
-                    return self._json(400, {"error": f"unsupported format {fmt}"})
-                df = self._adhoc_frame(sql)
-                if df is None:
-                    return None
-                from .exports import stream_json, write_xlsx
-
-                out: Any = io.BytesIO() if fmt == "xlsx" else io.StringIO()
-                {"csv": stream_csv, "json": stream_json, "xlsx": write_xlsx}[
-                    fmt
-                ](df, out)
-                data = out.getvalue()
-                if isinstance(data, str):
-                    data = data.encode()
-                ctype = {
-                    "csv": "text/csv",
-                    "json": "application/json",
-                    "xlsx": "application/vnd.openxmlformats-officedocument"
-                    ".spreadsheetml.sheet",
-                }[fmt]
-                self.send_response(200)
-                self.send_header("Content-Type", ctype)
-                self.send_header(
-                    "Content-Disposition", f'attachment; filename="{filename}"'
-                )
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
-
-            def _adhoc_frame(self, sql: str):
-                """The DataFrame of an ad-hoc request's one read-only
-                statement, prepared as a dashboard statement is; None
-                once a 400 or 403 is answered."""
-                statements = [
-                    s
-                    for s in sqltool.split_sql_queries(
-                        sqltool.strip_sql_comments(sql)
-                    )
-                    if s.strip()
-                ]
-                if len(statements) != 1:
-                    self._json(
-                        400, {"error": "exactly one SQL statement required"}
-                    )
-                    return None
-                if not sqltool.is_allowed_statement(statements[0]):
-                    self._json(403, {"error": "statement not allowed"})
-                    return None
-                df, _ = _prepare_query(
-                    outer.spark, statements[0].strip(), _VarState(), {}
-                )
-                return df
-
-            def _sql(self):
-                """POST /api/sql: exactly one read-only statement → CSV
-                (reference server/web/handler/sql.go:44-76)."""
-                body = json.loads(self._read_body() or b"{}")
-                df = self._adhoc_frame(str(body.get("sql") or ""))
-                if df is None:
-                    return None
-                buf = io.StringIO()
-                stream_csv(df, buf)
-                data = buf.getvalue().encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "text/csv")
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
-
-            def _ingest(self, table: str):
-                """POST /api/data/<table> (reference
-                server/web/handler/events.go:27-80): single JSON object or
-                array of objects."""
-                body = json.loads(self._read_body() or b"{}")
-                payloads = body if isinstance(body, list) else [body]
-                if not all(isinstance(p, dict) for p in payloads):
-                    return self._json(400, {"error": "JSON object(s) required"})
-                # one WAL write+fsync for the whole array, not per row
-                outer.ingest.publish_many(table, payloads)
-                outer.ingest.flush()
-                return self._json(200, {"ingested": len(payloads)})
-
-            def _validate(self):
-                """POST /api/validate: per-statement gate verdicts."""
-                body = json.loads(self._read_body() or b"{}")
-                sql = str(body.get("sql") or "")
-                kind = str(body.get("type") or "dashboard")
-                try:
-                    statements = sqltool.split_sql_queries(
-                        sqltool.strip_sql_comments(sql)
-                    )
-                except Exception as e:
-                    return self._json(200, {"valid": False, "error": str(e)})
-                gate = (
-                    sqltool.is_allowed_task_statement
-                    if kind == "task"
-                    else sqltool.is_allowed_statement
-                )
-                bad = [
-                    i + 1
-                    for i, s in enumerate(statements)
-                    if s.strip() and not gate(s)
-                ]
-                return self._json(200, {"valid": not bad, "invalidStatements": bad})
-
-            def _jwt_variables(self, did: str):
-                """(variables, error_sent): merge JWT claim variables
-                over the server defaults (claims written at token-mint
-                time, web/handler/auth.go:212-220) and enforce the
-                dashboardId scope of embed tokens.  Scope mismatch
-                answers with the SAME 404 body as a missing dashboard
-                — and callers run this check BEFORE the existence
-                lookup — so a scoped token probing other ids cannot
-                distinguish private dashboards from absent ones (the
-                reference's GetDashboard rejects the claim mismatch
-                uniformly before any lookup, dashboard.go:329-334)."""
-                claims = getattr(self, "_jwt_claims", None) or {}
-                scope = claims.get("dashboardId")
-                if scope and scope != did:
-                    self._json(404, {"error": f"no dashboard {did}"})
-                    return None, True
-                merged = dict(outer.variables)
-                merged.update(claims.get("variables") or {})
-                return merged, False
-
-            def _dashboard(self, did: str, url):
-                variables, err = self._jwt_variables(did)
-                if err:
-                    return
-                content = outer._dashboard_content(did)
-                if content is None:
-                    return self._json(404, {"error": f"no dashboard {did}"})
-                params = {
-                    k: v if len(v) > 1 else v[0]
-                    for k, v in parse_qs(url.query).items()
-                }
-                result = query_dashboard(
-                    outer.spark,
-                    content,
-                    params=params,
-                    variables=variables,
-                    dashboard_id=did,
-                )
-                return self._json(200, result.to_dict())
-
-            def _download(self, did: str, filename: str, url):
-                jwt_vars, err = self._jwt_variables(did)
-                if err:
-                    return
-                params = {
-                    k: v if len(v) > 1 else v[0]
-                    for k, v in parse_qs(url.query).items()
-                }
-                mode = params.pop("mode", "default")
-                if mode == "url":
-                    # keyed TTL download link (reference
-                    # dashboard.go:617-661 + the DownloadsKv TTL
-                    # bucket, main.go): mint an unguessable token,
-                    # persist the download intent — dashboard, params,
-                    # and the CALLER's JWT-scoped variables — in the
-                    # shared metastore KV with an expiry, and hand
-                    # back a URL a browser can GET with no auth
-                    # headers (navigations can't set Authorization)
-                    import secrets as _secrets
-
-                    token = _secrets.token_hex(32)
-                    intent = {
-                        "did": did,
-                        "filename": filename,
-                        "params": params,
-                        "variables": jwt_vars,
-                        "exp": time.time() + outer.downloads_ttl,
-                    }
-                    outer.store.config_put(
-                        "download:" + token, json.dumps(intent)
-                    )
-                    outer.sweep_download_keys()
-                    return self._json(
-                        200,
-                        {"url": f"/api/download/{token}/{filename}"},
-                    )
-                return self._stream_export(
-                    did, filename, params, jwt_vars
-                )
-
-            def _download_by_key(self, key: str, filename: str):
-                """GET /api/download/:key/:filename — NO auth
-                (routes.go:198): the short-lived key IS the
-                credential; missing, expired, or filename-mismatched
-                keys answer one uniform 404."""
-                raw = outer.store.config_get("download:" + key)
-                intent = None
-                if raw:
-                    try:
-                        intent = json.loads(raw)
-                    except ValueError:
-                        intent = None
-                if (
-                    not intent
-                    or intent.get("exp", 0) < time.time()
-                    or intent.get("filename") != filename
-                ):
-                    return self._json(
-                        404,
-                        {"error": "Download not found or expired"},
-                    )
-                return self._stream_export(
-                    intent["did"],
-                    filename,
-                    dict(intent.get("params") or {}),
-                    intent.get("variables") or {},
-                )
-
-            def _stream_export(
-                self,
-                did: str,
-                filename: str,
-                params: dict,
-                jwt_vars: dict,
-            ):
-                content = outer._dashboard_content(did)
-                if content is None:
-                    return self._json(404, {"error": f"no dashboard {did}"})
-                fmt = filename.rsplit(".", 1)[-1].lower()
-                if fmt in ("pdf", "html", "png"):
-                    # Reference renders PDFs by driving headless Chrome
-                    # over the dashboard URL (server/pdf/pdf.go:33-133).
-                    # No browser exists in this build, so DOWNLOAD_PDF
-                    # serves REAL application/pdf bytes from the pure-
-                    # stdlib writer (pdfreport.py: vector charts,
-                    # tables, reference header/footer template with
-                    # true page counters); ``.png`` rasterizes the same
-                    # tree to a real image/png snapshot (pngreport.py,
-                    # mirroring StreamDashboardPng); ``.html`` keeps
-                    # the printable HTML variant (htmlreport.py).
-                    result = query_dashboard(
-                        outer.spark,
-                        content,
-                        params=params,
-                        variables=jwt_vars,
-                        dashboard_id=did,
-                    )
-                    stem = filename.rsplit(".", 1)[0] or "dashboard"
-                    if fmt == "pdf":
-                        from .pdfreport import render_dashboard_pdf
-
-                        body = render_dashboard_pdf(
-                            result.to_dict(), title=stem
-                        )
-                        ctype = "application/pdf"
-                        disp = f'inline; filename="{stem}.pdf"'
-                    elif fmt == "png":
-                        from .pngreport import render_dashboard_png
-
-                        body = render_dashboard_png(
-                            result.to_dict(), title=stem
-                        )
-                        ctype = "image/png"
-                        disp = f'inline; filename="{stem}.png"'
-                    else:
-                        from .htmlreport import render_dashboard_html
-
-                        body = render_dashboard_html(
-                            result.to_dict(), title=stem
-                        ).encode()
-                        ctype = "text/html; charset=utf-8"
-                        disp = f'inline; filename="{stem}.html"'
-                    self.send_response(200)
-                    self.send_header("Content-Type", ctype)
-                    self.send_header("Content-Disposition", disp)
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
-                    return None
-                if fmt not in ("csv", "json", "xlsx"):
-                    return self._json(400, {"error": f"unsupported format {fmt}"})
-                qid = int(params.pop("query_id", -1))
-                if fmt == "xlsx":
-                    out: Any = io.BytesIO()
-                else:
-                    out = io.StringIO()
-                stream_dashboard_export(
-                    outer.spark,
-                    content,
-                    fmt,
-                    out,
-                    query_id=qid,
-                    params=params,
-                    variables=jwt_vars,
-                )
-                data = out.getvalue()
-                if isinstance(data, str):
-                    data = data.encode()
-                ctype = {
-                    "csv": "text/csv",
-                    "json": "application/json",
-                    "xlsx": "application/vnd.openxmlformats-officedocument"
-                    ".spreadsheetml.sheet",
-                }[fmt]
-                self.send_response(200)
-                self.send_header("Content-Type", ctype)
-                self.send_header(
-                    "Content-Disposition", f'attachment; filename="{filename}"'
-                )
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
-
         self._server = ThreadingHTTPServer((host, port), Handler)
+        self._server.shaper = self
         self._thread: threading.Thread | None = None
         self._flusher_thread: threading.Thread | None = None
         # Restart recovery: stored tasks re-arm their schedules

@@ -742,7 +742,7 @@ _UNION_BY_NAME_RE = re.compile(
     r"\bUNION\s+(ALL\s+)?BY\s+NAME\b", re.IGNORECASE
 )
 # the clauses of a BY NAME union's last side that bind to the whole union
-_UNION_TAIL_RE = re.compile(r"(ORDER\s+BY|LIMIT|OFFSET|FETCH)\b", re.IGNORECASE)
+_UNION_TAIL_RE = re.compile(r"\b(ORDER\s+BY|LIMIT|OFFSET|FETCH)\b", re.IGNORECASE)
 
 
 _STAR_REPLACE_ENGINE_RE = re.compile(

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import csv
 import datetime as dt
-import io
 import json
 import math
 import re
@@ -33,6 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import sqltool
 from .engine import QUERY_MAX_ROWS, _prepare_query, _rendering, _VarState
+from .xlsx import (
+    DATETIME_STYLE,
+    DURATION_STYLE,
+    HEADER_STYLE,
+    NUMBER_STYLE,
+    TEXT_STYLE,
+    MiniWorkbook,
+)
 
 __all__ = [
     "resolve_download_query_id",
@@ -43,6 +50,7 @@ __all__ = [
     "stream_csv",
     "stream_json",
     "write_xlsx",
+    "STREAMERS",
     "stream_dashboard_export",
 ]
 
@@ -260,93 +268,8 @@ def stream_json(df: DataFrame, writer: IO[str]) -> int:
 def write_xlsx(df: DataFrame, out: IO[bytes] | str, sheet_name: str = "Sheet1") -> int:
     """Styled XLSX: bold centered header, frozen header row, autofilter,
     m/d/yy h:mm datetimes, [h]:mm:ss intervals (stored as fractional
-    days), fitted column widths (reference stream_query.go:406-651).
-
-    Uses openpyxl when available; otherwise falls back to the built-in
-    stdlib SpreadsheetML writer (shaper_spark.xlsx) with the same
-    styling."""
-    try:
-        from openpyxl import Workbook
-        from openpyxl.styles import Alignment, Font
-        from openpyxl.utils import get_column_letter
-    except ImportError:
-        return _write_xlsx_stdlib(df, out, sheet_name)
-
-    wb = Workbook(write_only=False)
-    ws = wb.active
-    ws.title = sheet_name
-
-    cols = df.columns
-    header_font = Font(bold=True)
-    header_align = Alignment(horizontal="center", vertical="center")
-    widths = [len(c) for c in cols]
-    for j, c in enumerate(cols, start=1):
-        cell = ws.cell(row=1, column=j, value=c)
-        cell.font = header_font
-        cell.alignment = header_align
-
-    n = 0
-    for row in df.toLocalIterator():
-        n += 1
-        for j, v in enumerate(row, start=1):
-            cell = ws.cell(row=n + 1, column=j)
-            if v is None:
-                continue
-            if isinstance(v, dt.timedelta):
-                cell.value = interval_to_days(v)
-                cell.number_format = "[h]:mm:ss"
-                cell.alignment = Alignment(horizontal="center")
-                text_len = 8
-            elif isinstance(v, dt.datetime):
-                cell.value = v.replace(tzinfo=None)
-                cell.number_format = "m/d/yy h:mm"
-                cell.alignment = Alignment(horizontal="center")
-                text_len = 14
-            elif isinstance(v, bool):
-                cell.value = v
-                text_len = 5
-            elif isinstance(v, (int, float, Decimal)):
-                if isinstance(v, Decimal):
-                    v = float(v)
-                if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
-                    continue
-                cell.value = v
-                cell.alignment = Alignment(horizontal="right")
-                text_len = len(str(v))
-            else:
-                s = format_value(v)
-                cell.value = s
-                cell.alignment = Alignment(horizontal="left", wrap_text=True)
-                text_len = len(s)
-            if text_len > widths[j - 1]:
-                widths[j - 1] = text_len
-    for j, width in enumerate(widths, start=1):
-        ws.column_dimensions[get_column_letter(j)].width = min(width + 2, 60)
-    ws.auto_filter.ref = f"A1:{get_column_letter(len(cols))}{n + 1}"
-    ws.freeze_panes = "A2"
-
-    if isinstance(out, str):
-        wb.save(out)
-    else:
-        buf = io.BytesIO()
-        wb.save(buf)
-        out.write(buf.getvalue())
-    return n
-
-
-def _write_xlsx_stdlib(
-    df: DataFrame, out: IO[bytes] | str, sheet_name: str = "Sheet1"
-) -> int:
-    """openpyxl-free XLSX path (shaper_spark.xlsx MiniWorkbook)."""
-    from .xlsx import (
-        DATETIME_STYLE,
-        DURATION_STYLE,
-        HEADER_STYLE,
-        NUMBER_STYLE,
-        TEXT_STYLE,
-        MiniWorkbook,
-    )
-
+    days), fitted column widths (reference stream_query.go:406-651),
+    written by the stdlib SpreadsheetML writer (shaper_spark.xlsx)."""
     wb = MiniWorkbook(sheet_name)
     cols = df.columns
     widths = [len(c) for c in cols]
@@ -388,6 +311,12 @@ def _write_xlsx_stdlib(
     return n
 
 
+_write_xlsx_stdlib = write_xlsx  # the name this path had beside openpyxl's
+
+# the row-streaming export formats, by file extension
+STREAMERS = {"csv": stream_csv, "json": stream_json, "xlsx": write_xlsx}
+
+
 # ---------------------------------------------------------------------------
 # Dashboard-level export entry point
 # ---------------------------------------------------------------------------
@@ -406,8 +335,7 @@ def stream_dashboard_export(
     script, resolve the target statement, render the statements before
     it for their variables, then prepare and stream the target while
     the temp views they created still exist. Returns row count."""
-    streamers = {"csv": stream_csv, "json": stream_json, "xlsx": write_xlsx}
-    if fmt not in streamers:
+    if fmt not in STREAMERS:
         raise ValueError(f"unsupported export format: {fmt}")
     statements = sqltool.split_sql_queries(sqltool.strip_sql_comments(content))
     if query_id == -1:
@@ -422,4 +350,4 @@ def stream_dashboard_export(
         spark, statements[:query_id], params, variables, "", QUERY_MAX_ROWS
     ) as walk:
         df, _ = _prepare_query(spark, target.strip(), walk.vars, walk.macros)
-        return streamers[fmt](df, writer)
+        return STREAMERS[fmt](df, writer)

@@ -225,7 +225,7 @@ def split_sql_queries(sql: str) -> list[str]:
             queries.append(sql[last : m.start()].strip())
             last = m.end()
         elif span.count(span[0]) % 2:  # no closing quote
-            line = sql.count("\n", 0, m.start()) + 2
+            line = sql.count("\n", 0, m.start()) + 1
             raise SqlSplitError(
                 f"unclosed {_QUOTE_NAMES[span[0]]} starting in line {line}"
             )

@@ -7,8 +7,8 @@ built bundle for every non-``/api`` path (``server/web/routes.go``).
 This container has no node toolchain, so the same surface is
 re-expressed as ONE self-contained vanilla-JS document — no build step,
 no external assets — returned by :func:`shell` for every UI route.
-``api.py`` routes any GET whose path does not start with ``/api`` here,
-exactly like the reference's static-SPA fallback.
+``api.py`` routes every GET of a UI path (``UI_PATH``) here, like the
+reference's static-SPA fallback.
 
 Route parity (reference ``ui/src/routes``):
 
@@ -42,6 +42,8 @@ same server-side middleware.
 """
 
 from __future__ import annotations
+
+import re
 
 # Render types the UI must know how to draw. test_ui.py asserts every
 # one of these literals appears in the JS so render.py can never grow a
@@ -89,13 +91,16 @@ _UI_EXACT = (
 )
 
 
+# the UI paths as one regex (api.py's route table matches it whole)
+UI_PATH = "|".join(
+    [re.escape(p) for p in _UI_EXACT]
+    + [re.escape(pre) + "(?:/.*)?" for pre in _UI_PREFIXES]
+)
+
+
 def is_ui_path(path: str) -> bool:
     p = path.split("?", 1)[0].rstrip("/") or "/"
-    if p in _UI_EXACT:
-        return True
-    return any(
-        p == pre or p.startswith(pre + "/") for pre in _UI_PREFIXES
-    )
+    return re.fullmatch(UI_PATH, p) is not None
 
 
 _CSS = """

@@ -4,8 +4,8 @@ XLSX is a ZIP of XML parts (ECMA-376 / ISO 29500 SpreadsheetML). This
 implements the subset the XLSX export needs — one worksheet, shared
 strings, number formats for datetimes (`m/d/yy h:mm`) and durations
 (`[h]:mm:ss`), bold centered header, autofilter, frozen header row,
-column widths — so the export path works in environments without
-openpyxl (which remains the preferred writer when present).
+column widths. It is the XLSX export's only writer: no third-party
+spreadsheet library is needed.
 """
 
 from __future__ import annotations

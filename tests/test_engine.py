@@ -593,6 +593,21 @@ def test_union_by_name(spark):
     assert r.sections[0].queries[0].rows == [[None, 2], [1, None]]
 
 
+@pytest.mark.parametrize("tail", ["", " ORDER BY a"])
+def test_union_by_name_last_side_name_ending_in_limit(spark, tail):
+    """A name that ends in a tail keyword (``nolimit``) is not the
+    union's LIMIT: the last side stays whole, as DuckDB reads it."""
+    import duckdb
+
+    sql = (
+        "SELECT 1 AS a, 'x' AS b UNION ALL BY NAME "
+        "SELECT nolimit AS a FROM (SELECT 2 AS nolimit)" + tail
+    )
+    r = query_dashboard(spark, sql)
+    want = [list(row) for row in duckdb.sql(sql).fetchall()]
+    assert sorted(r.sections[0].queries[0].rows, key=str) == sorted(want, key=str)
+
+
 def test_union_by_name_under_with_prefix(spark):
     """r13 (closes the r12 loud-unsupported): the CTE list replicates
     into each BY NAME side so the sides analyze standalone."""

@@ -40,6 +40,15 @@ def test_split_unclosed_quote():
         split_sql_queries("SELECT 'oops")
 
 
+@pytest.mark.parametrize(
+    "sql,line",
+    [("SELECT 'oops", 1), ("SELECT 1;\nSELECT 'oops", 2), ("SELECT 1;\n\nSELECT \"x\nyz", 3)],
+)
+def test_split_unclosed_quote_names_its_line(sql, line):
+    with pytest.raises(SqlSplitError, match=f"starting in line {line}$"):
+        split_sql_queries(sql)
+
+
 def test_split_keeps_backquoted_semicolon():
     assert split_sql_queries("SELECT 1 AS `a;b`; SELECT 2") == [
         "SELECT 1 AS `a;b`",
